@@ -218,7 +218,9 @@ def _scope(scope) -> bytes:
 
 def encode_traces_proto(document: dict) -> bytes:
     """TracesData (resource_spans=1) from the value-tree document shape
-    (the same dict tree the codec encodes/decodes)."""
+    (the same dict tree the codec encodes/decodes). Kept without a
+    pipeline caller: it is the whole-document row marshaler the column
+    marshal is pinned against (tests/test_otlp_proto.py)."""
     out = []
     for rs in document.get("resourceSpans") or []:
         resource = rs.get("resource") or {}
@@ -274,11 +276,16 @@ def _v(n: int) -> bytes:
 def _uvarint_matrix(values):
     """Vectorized unsigned LEB128: non-negative int64 array → padded
     (n, w) uint8 matrix + per-value lengths (w = widest encoding in the
-    column). The proto twin of ``varint.encode_sleb128_matrix``."""
+    column). The proto twin of ``varint.encode_sleb128_matrix``. A
+    negative value raises: the arithmetic shift below would emit it as
+    one wrong byte, not the 10-byte two's-complement varint."""
     import numpy as np
 
     v = np.ascontiguousarray(values, dtype=np.int64)
     n = v.shape[0]
+    if n and v.min() < 0:
+        raise CodecError(f"negative value {int(v.min())} in an unsigned "
+                         "varint column of the proto arm")
     k = np.ones(n, dtype=np.int64)
     for t in range(1, 9):
         k[v >= (1 << (7 * t))] = t + 1

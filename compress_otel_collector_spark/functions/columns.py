@@ -1,18 +1,13 @@
 """Reusable Column expressions for the pages pipeline.
 
-Everything here is JVM-side (``pyspark.sql.functions``) so Catalyst keeps
-whole-stage codegen and pushdown; the lone pandas UDF is an alternate parse
-path kept parity-tested against the native one (the reference's parse is a
-single regex pass — either form preserves byte-identical extraction).
+Everything here is JVM-side (``pyspark.sql.functions`` or SQL strings) so
+Catalyst keeps whole-stage codegen and pushdown.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 #: the grok/regex that recovers the page text from the html bytes.
 #: (?s) lets the text span newlines; non-greedy up to the closing tag.
@@ -25,25 +20,11 @@ def extract_text_expr(html_col: str = "html") -> Column:
     ``make_valid_utf8`` instead of strict ``decode``: at 10^12 crawled
     pages malformed UTF-8 is a certainty, and strict decode fails the
     whole TASK on one bad page (MALFORMED_CHARACTER_CODING). Invalid
-    sequences become U+FFFD — the same replacement the pandas variant's
-    ``errors="replace"`` applies — and valid input is untouched, so the
+    sequences become U+FFFD and valid input is untouched, so the
     byte-identical invariant holds everywhere it can.
     """
     return F.regexp_extract(
         F.make_valid_utf8(F.col(html_col).cast("string")), TEXT_RE, 1)
-
-
-def _extract_text_batch(html: pd.Series) -> pd.Series:
-    return (
-        html.apply(lambda b: b.decode("utf-8", errors="replace"))
-        .str.extract(r"(?s)<p>(.*?)</p>", expand=False)
-        .fillna("")
-    )
-
-
-def extract_text_pandas(html_col) -> Column:
-    """Arrow-batched parse variant: vectorized pandas .str over the batch."""
-    return pandas_udf(_extract_text_batch, StringType())(html_col)
 
 
 def host_of_url_expr(url_col: str = "url") -> Column:
@@ -81,77 +62,39 @@ def warc_day_expr(ts_col: str = "warc_ts") -> Column:
     return F.date_trunc("day", F.col(ts_col)).cast("date")
 
 
-def span_columns_sql(doc_id_col: str = "doc_id",
-                     n_chars_col: str | None = None) -> list[str]:
-    """SQL-string twin of :func:`span_columns` for ``selectExpr`` —
-    builds the IDENTICAL expression tree in ONE py4j call instead of
-    ~50 Column-API round trips (r8: driver-side construction was a
-    measurable share of every pipeline query's wall). Equivalence is
-    pinned by tests/test_plans.py (span_columns ≡ span_columns_sql).
-    Span-shape lockstep note (CLAUDE.md) applies to BOTH forms."""
-    c = doc_id_col
-    nc = (f"coalesce({n_chars_col}, CAST(0 AS BIGINT))"
-          if n_chars_col is not None
-          else "coalesce(CAST(length(text) AS BIGINT), CAST(0 AS BIGINT))")
+def span_columns_sql(n_chars_col: str) -> list[str]:
+    """The OTel-shaped span columns of a parsed page row, as ``selectExpr``
+    strings — the one span-column definition (it changes in lockstep with
+    ``plans.pipeline._encode_batches``, ``plans.pipeline.expected_roundtrip``
+    and ``plans.projector``). SQL strings build the projection in one py4j
+    call; Column-API construction (~50 round trips) was a measurable share
+    of every pipeline query's wall (r8).
+
+    Deterministic functions of (url, doc_id, warc_ts, ``n_chars_col``),
+    where ``n_chars_col`` names a precomputed ``length(text)`` long column:
+    trace_id = md5(url) (16B), span_id = first 8B, parent empty (→ null-
+    coerced), timestamps in unix-nanos (reference keeps them as integers,
+    model/trace.json:108-117). Dirty-data guards (10^12-page corpus): a
+    null warc_ts or null n_chars must not surface as a null in the codec's
+    NON-nullable startTimeUnixNano/endTimeUnixNano/n_chars fields — that
+    fails the whole task in the encoder's type check. Epoch 0 / length 0
+    are the explicit "unknown" sentinels.
+    """
+    nc = f"coalesce({n_chars_col}, CAST(0 AS BIGINT))"
     start = "coalesce(unix_micros(warc_ts) * 1000, CAST(0 AS BIGINT))"
     return [
         "unhex(md5(url)) AS trace_id",
         "unhex(substring(md5(url), 1, 16)) AS span_id",
         "unhex('') AS parent_span_id",
-        f"CASE WHEN {c} % 10 = 0 THEN 'cc=1' ELSE '' END AS trace_state",
-        f"concat('GET /p', CAST({c} % 20 AS STRING)) AS name",
-        f"CAST({c} % 6 AS BIGINT) AS kind",
+        "CASE WHEN doc_id % 10 = 0 THEN 'cc=1' ELSE '' END AS trace_state",
+        "concat('GET /p', CAST(doc_id % 20 AS STRING)) AS name",
+        "CAST(doc_id % 6 AS BIGINT) AS kind",
         f"{start} AS start_ns",
         f"{start} + {nc} * 1000000 AS end_ns",
         "CAST(0 AS BIGINT) AS dropped_attributes_count",
         "CAST(0 AS BIGINT) AS dropped_events_count",
-        f"CAST({c} % 2 AS BIGINT) AS dropped_links_count",
-        f"CASE WHEN {c} % 4 = 0 THEN 'OK' ELSE '' END AS status_message",
-        f"CAST({c} % 3 AS BIGINT) AS status_code",
+        "CAST(doc_id % 2 AS BIGINT) AS dropped_links_count",
+        "CASE WHEN doc_id % 4 = 0 THEN 'OK' ELSE '' END AS status_message",
+        "CAST(doc_id % 3 AS BIGINT) AS status_code",
         f"{nc} AS n_chars",
-    ]
-
-
-def span_columns(doc_id_col: str = "doc_id",
-                 n_chars_col: str | None = None) -> list[Column]:
-    """Synthesize the OTel-shaped span columns from a parsed page row.
-
-    Deterministic functions of (url, doc_id, warc_ts, text):
-    trace_id = md5(url) (16B), span_id = first 8B, parent empty (→ null-
-    coerced), timestamps in unix-nanos (reference keeps them as integers,
-    model/trace.json:108-117).
-
-    ``n_chars_col`` names a precomputed ``length(text)`` long column —
-    the narrow-shuffle encode path (``plans.pipeline.encode_pages``)
-    ships that 8-byte long through the exchange instead of the text
-    column, then derives everything else here post-exchange.
-    """
-    c = F.col(doc_id_col)
-    n_chars = (F.col(n_chars_col) if n_chars_col is not None
-               else F.length(F.col("text")).cast("long"))
-    # dirty-data guards (10^12-page corpus): a null warc_ts or null text
-    # must not surface as a null in the codec's NON-nullable
-    # startTimeUnixNano/endTimeUnixNano/n_chars fields — that fails the
-    # whole task in the encoder's type check. Epoch 0 / length 0 are the
-    # explicit "unknown" sentinels.
-    n_chars = F.coalesce(n_chars, F.lit(0).cast("long"))
-    start_ns = F.coalesce(F.unix_micros(F.col("warc_ts")) * 1000,
-                          F.lit(0).cast("long"))
-    return [
-        F.unhex(F.md5(F.col("url"))).alias("trace_id"),
-        F.unhex(F.substring(F.md5(F.col("url")), 1, 16)).alias("span_id"),
-        F.unhex(F.lit("")).alias("parent_span_id"),
-        F.when(c % 10 == 0, F.lit("cc=1")).otherwise(F.lit(""))
-        .alias("trace_state"),
-        F.concat(F.lit("GET /p"), (c % 20).cast("string")).alias("name"),
-        (c % 6).cast("long").alias("kind"),
-        start_ns.alias("start_ns"),
-        (start_ns + n_chars * 1000000).alias("end_ns"),
-        F.lit(0).cast("long").alias("dropped_attributes_count"),
-        F.lit(0).cast("long").alias("dropped_events_count"),
-        (c % 2).cast("long").alias("dropped_links_count"),
-        F.when(c % 4 == 0, F.lit("OK")).otherwise(F.lit(""))
-        .alias("status_message"),
-        (c % 3).cast("long").alias("status_code"),
-        n_chars.alias("n_chars"),
     ]

@@ -9,7 +9,6 @@ from .dedup import (  # noqa: F401
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_dup_groups,
     simhash_hamming_pairs,
     subdoc_dedup,
     word_shingles,
@@ -51,12 +50,9 @@ from .rangejoin import range_join  # noqa: F401
 from .curation import (  # noqa: F401
     canonical_url,
     canonical_url_sql,
-    dedup_canonical_url,
     pack_sequences,
     pii_count_expr,
     pii_count_sql,
     pii_scrub,
     pii_scrub_sql,
-    pii_stats,
-    stratified_hash_sample,
 )

@@ -1,17 +1,11 @@
 """Corpus-curation operators beyond the 50-entry driver ledger: URL
-canonicalization + canonical-URL dedup, deterministic hash-mod
-stratified sampling, fixed-length training-sequence packing, and PII
+canonicalization, fixed-length training-sequence packing, and PII
 redaction. All JVM-side expressions; the canonicalizer and the PII
 scrubber each have a DuckDB-twin emitter (``canonical_url_sql`` /
 ``pii_scrub_sql``) generated from the SAME step table, so the Spark
 expression and the oracle SQL can never drift.
 
-Scale notes: canonicalization is a narrow per-row expression;
-canonical-URL dedup is one hash-aggregate shuffle on the canonical key
-(the same 100 TB shape as ``dedup.exact_duplicates``); hash-mod sampling
-is narrow and — unlike ``df.sample`` — deterministic across retries,
-partitionings and cluster sizes, which is what a resumable training-data
-pipeline needs (a task retry must not change the sample); sequence
+Scale notes: canonicalization is a narrow per-row expression; sequence
 packing is one shard-partitioned window cumsum — no global sort, shard
 count scales with the cluster.
 """
@@ -124,51 +118,6 @@ def canonical_url_sql(expr: str) -> str:
         _assert_sql_safe(pat, rep)
         u = f"regexp_replace({u}, '{pat}', '{rep.replace('$', chr(92))}', 'g')"
     return u
-
-
-def dedup_canonical_url(df: DataFrame, url_col: str = "url",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup on the canonical URL: keep the lowest-id document per
-    canonical form. One narrow canonicalization pass + one hash-aggregate
-    shuffle (min over the canonical key) — the optimal 100 TB shape.
-
-    DuckDB twin: ``SELECT canon, min(doc_id) AS keep_id, count(*) AS n
-    FROM (SELECT <canonical_url_sql(url)>, doc_id FROM docs) GROUP BY 1``.
-    """
-    canon = canonical_url(url_col).alias("canon_url")
-    return (
-        df.select(F.col(id_col).alias("doc_id"), canon)
-        .groupBy("canon_url")
-        .agg(F.min("doc_id").alias("keep_id"),
-             F.count("*").alias("n_variants"))
-    )
-
-
-def stratified_hash_sample(df: DataFrame, fraction_pct: int,
-                           strata_col: str = "lang",
-                           id_col: str = "doc_id",
-                           seed: int = 7) -> DataFrame:
-    """Deterministic per-stratum sample: keep a row iff
-    ``pmod(xxhash64(id, seed), 100) < fraction_pct`` — the same rows on
-    every retry, partitioning and cluster size (``df.sample`` is none of
-    those). Strata are implicit (the predicate is stratum-independent and
-    id-uniform, so each stratum is sampled at ~fraction_pct% without a
-    shuffle); ``strata_col`` is kept for downstream per-stratum accounting.
-
-    DuckDB twin: ``WHERE pmod(hash(...)...)`` is NOT portable (xxhash64
-    seeds differ across engines) — the oracle-portable check is the
-    ACCOUNTING: per-stratum kept/total counts recomputed from the kept-id
-    list, which tests pin.
-    """
-    keep = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)),
-                  F.lit(100)) < fraction_pct
-    return (
-        df.where(keep)
-        .groupBy(F.col(strata_col).alias("stratum"))
-        .agg(F.count("*").alias("kept"),
-             F.min(id_col).alias("min_id"),
-             F.max(id_col).alias("max_id"))
-    )
 
 
 def pack_sequences(df: DataFrame, seq_len: int = 2048,
@@ -302,24 +251,6 @@ def pii_scrub_sql(expr: str) -> str:
         _assert_sql_safe(pat, rep)
         u = f"regexp_replace({u}, '{pat}', '{rep}', 'g')"
     return u
-
-
-def pii_stats(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """Per-doc PII accounting: redaction counts per category plus the
-    scrubbed length — what a curation report aggregates. Same narrow
-    shape as ``pii_scrub``; counts come from ``regexp_count`` on the
-    PRE-redaction text with the same step patterns applied sequentially
-    (each step counts on the previous step's output, mirroring the
-    scrub's ordering semantics exactly)."""
-    cols = [F.col(id_col).alias("doc_id")]
-    u = F.col(text_col)
-    for label, pat, rep in PII_STEPS:
-        cols.append(F.regexp_count(u, F.lit(pat)).cast("long")
-                    .alias(f"n_{label}"))
-        u = F.regexp_replace(u, pat, rep)
-    cols.append(F.length(u).cast("long").alias("scrubbed_len"))
-    return df.select(*cols)
 
 
 def pii_count_expr(text_col: str = "text") -> Column:

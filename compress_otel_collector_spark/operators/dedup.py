@@ -543,16 +543,6 @@ def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3,
     )
 
 
-def simhash_dup_groups(df: DataFrame, bits: int = 64) -> DataFrame:
-    """Documents sharing a SimHash fingerprint (candidate near-dup groups)."""
-    s = simhash(df, bits=bits)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def embedding_dup_pairs(embeddings: DataFrame,
                         threshold: float = 0.95) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold (brute-force exact)."""

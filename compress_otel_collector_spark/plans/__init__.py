@@ -1,7 +1,7 @@
 from .pipeline import (  # noqa: F401
     ENCODED_SCHEMA,
     aggregate_stage,
-    encode_stage,
+    encode_pages,
     enrich_stage,
     parse_stage,
     roundtrip_check,

@@ -5,7 +5,7 @@ batch → value-tree encode → zstd → HTTP route, SURVEY.md §3.1), recast fo
 Common-Crawl-style pages table:
 
 - **parse**: native regexp over the html bytes (Catalyst keeps codegen +
-  column pruning; a pandas-UDF variant exists parity-tested).
+  column pruning).
 - **enrich**: broadcast lang-lookup join (5-row dim — never a shuffle) +
   warc_ts day bucketing + host/route-bucket derivation.
 - **encode**: ``mapInPandas`` — one wire blob per (lang, host_bucket) group
@@ -37,6 +37,7 @@ from typing import Iterator, Optional
 
 import pandas as pd
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -53,11 +54,9 @@ from ..codec.definition import trace_model
 from ..codec.otlp_proto import spans_columns_to_proto
 from ..functions.columns import (
     extract_text_expr,
-    extract_text_pandas,
     host_bucket_expr,
     host_of_url_expr,
     salt_expr,
-    span_columns,
     span_columns_sql,
     warc_day_expr,
 )
@@ -81,22 +80,18 @@ ENCODED_SCHEMA = StructType([
 ])
 
 
-def parse_stage(pages: DataFrame, use_pandas_udf: bool = False) -> DataFrame:
+def parse_stage(pages: DataFrame) -> DataFrame:
     """Extract page text from the html bytes; keep rows that parse.
 
     The per-row invariant (BASELINE.json input_hint) is byte-identical
     extraction: ``text_extracted == text`` for every url — asserted by the
     ``parse_extract`` oracle query and tests, not silently assumed.
     """
-    extractor = (
-        extract_text_pandas(F.col("html")) if use_pandas_udf
-        else extract_text_expr("html")
-    )
     # url is the identity key of the whole pipeline (trace/span ids,
     # routing salt, dedup) — a crawl record without one is not a page.
     # null html → null extraction → dropped by the same predicate.
     return pages.where(F.col("url").isNotNull()).withColumn(
-        "text_extracted", extractor).where(
+        "text_extracted", extract_text_expr("html")).where(
         F.col("text_extracted").isNotNull()
     )
 
@@ -122,9 +117,8 @@ def span_stage(df: DataFrame) -> DataFrame:
     guaranteed non-null after ``parse_stage``)."""
     keep = ["url", "lang", "host", "host_bucket", "warc_day", "doc_id"]
     return df.withColumn(
-        "_n_chars_pre", F.length(F.col("text_extracted")).cast("long")
-    ).selectExpr(*keep,
-                 *span_columns_sql("doc_id", n_chars_col="_n_chars_pre"))
+        "n_chars_pre", F.length(F.col("text_extracted")).cast("long")
+    ).selectExpr(*keep, *span_columns_sql("n_chars_pre"))
 
 
 def _hex_column(vals, width: int):
@@ -453,33 +447,15 @@ def _encode_batches(arms: bool, events_every: int = 10,
     return fn
 
 
-def encode_stage(spans: DataFrame, n_salts: int = 16,
-                 arms: bool = True, events_every: int = 10,
-                 links_every: int = 7,
-                 shuffle_partitions: Optional[int] = None) -> DataFrame:
-    """Route-aligned repartition + vectorized encode.
-
-    The salt splits skewed (lang, host_bucket) groups across up to
-    ``n_salts`` tasks; each task still emits per-group blobs, so routing
-    purity is preserved while the mega host can't serialize the stage.
-    """
-    df = spans.withColumn("salt", salt_expr("url", n_salts))
-    if shuffle_partitions:
-        df = df.repartition(shuffle_partitions, "lang", "host_bucket", "salt")
-    else:
-        df = df.repartition("lang", "host_bucket", "salt")
-    return df.mapInPandas(_encode_batches(arms, events_every, links_every),
-                          schema=ENCODED_SCHEMA)
-
-
 def encode_pages(enriched: DataFrame, n_salts: int = 16,
                  arms: bool = True, events_every: int = 10,
                  links_every: int = 7,
                  shuffle_partitions: Optional[int] = None) -> DataFrame:
-    """Route-aligned repartition with a NARROW shuffle payload.
+    """Route-aligned repartition with a NARROW shuffle payload, then
+    vectorized encode: the pipeline's one encode path.
 
-    Same spans and routes as ``encode_stage(span_stage(enriched))`` — the
-    span columns are deterministic expressions of (url, doc_id, warc_ts,
+    The spans are those of ``span_stage(enriched)`` — the span columns
+    are deterministic expressions of (url, doc_id, warc_ts,
     length(text)) — but the exchange ships only
     ``(url, lang, host_bucket, doc_id, warc_ts, n_chars, salt)``:
     measured 31.4 B/row vs 99.0 B/row shuffle-write for the derived span
@@ -488,14 +464,16 @@ def encode_pages(enriched: DataFrame, n_salts: int = 16,
     single keyed exchange is the job's dominant IO, so payload width is
     the first-order lever; re-evaluating cheap hash/arithmetic
     expressions on the reduce side is strictly better at any cluster
-    size. The partition-local (lang, bucket, doc_id) sort below keeps
-    groups contiguous and blobs deterministic; measured net effect vs the
-    wide path at 1M pages: −44% blobs, −17% compressed bytes on the
-    telemetry-repeats shape (monotone diff deltas + better pool
+    size. The salt splits skewed (lang, host_bucket) groups across up to
+    ``n_salts`` tasks; each task still emits per-group blobs, so routing
+    purity is preserved while the mega host can't serialize the stage.
+    The partition-local (lang, bucket, doc_id) sort below keeps groups
+    contiguous and blobs deterministic; measured against the former
+    wide-exchange path at 1M pages: −44% blobs, −17% compressed bytes on
+    the telemetry-repeats shape (monotone diff deltas + better pool
     amortization), equal wall. Pinned by ``tests/test_plans.py``
-    (derivation above the exchange) and a wide≡narrow gate (same routes
-    and span counts, compressed size never worse, full-fidelity
-    roundtrip).
+    (derivation above the exchange, one shuffle) and the full-fidelity
+    roundtrip tests and gate (``scripts/roundtrip_gate.py``).
     """
     spans = _pre_encode_frame(enriched, n_salts, shuffle_partitions)
     return spans.mapInPandas(_encode_batches(arms, events_every, links_every),
@@ -523,33 +501,25 @@ def _pre_encode_frame(enriched: DataFrame, n_salts: int = 16,
     # partitions into one reduce partition, interleaving groups across the
     # 20k-row Arrow batches — which fragments blobs and costs pool
     # amortization (measured +22% zstd bytes on the telemetry-repeats
-    # shape). A cheap partition-local sort makes each group contiguous so
-    # blob count stays at the wide path's level; no extra exchange
+    # shape). A cheap partition-local sort makes each group contiguous —
+    # one blob per group per batch; no extra exchange
     # (sortWithinPartitions is narrow).
     routed = routed.sortWithinPartitions("lang", "host_bucket", "doc_id")
     return routed.selectExpr(
         "url", "lang", "host_bucket", "doc_id",
-        *span_columns_sql("doc_id", n_chars_col="n_chars_pre"))
+        *span_columns_sql("n_chars_pre"))
 
 
-def route_stage(encoded: DataFrame, out_dir: str,
-                debug_json: bool = False) -> None:
+def route_stage(encoded: DataFrame, out_dir: str) -> None:
     """Fan-out sink: one partition dir per (lang, host_bucket) route.
 
-    Blob rows double as lineage records; a route is complete iff present.
-    At cluster scale this would be an Iceberg table (atomic snapshot commit);
-    the layout and semantics are identical. ``debug_json`` adds the debug
-    route (the reference's logs path, exporter/log.go:11-23): lineage rows
-    minus the blob as JSON lines.
+    Blob rows double as lineage records; a route is complete iff present
+    (``read_routed(...).drop("blob")`` is the lineage view). At cluster
+    scale this would be an Iceberg table (atomic snapshot commit); the
+    layout and semantics are identical.
     """
-    if debug_json:
-        encoded = encoded.persist()  # two actions — don't encode twice
     (encoded.write.mode("append").partitionBy("lang", "host_bucket")
      .parquet(f"{out_dir}/routed"))
-    if debug_json:
-        (encoded.drop("blob").write.mode("append")
-         .json(f"{out_dir}/debug_json"))
-        encoded.unpersist()
 
 
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -557,12 +527,18 @@ def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def completed_sinks(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    """Distinct (lang, host_bucket) routes already materialized, or None."""
+    """Distinct (lang, host_bucket) routes already materialized, or None
+    when the sink holds no data files yet (no ``routed/`` dir, or one an
+    aborted first write left empty). Any other failure — an unreadable
+    file, a permission error — raises: treating it as "no sink" would
+    re-encode and re-append every route."""
     try:
         return read_routed(spark, out_dir).select(
             "lang", "host_bucket").distinct()
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def aggregate_stage(encoded_or_routed: DataFrame) -> DataFrame:
@@ -832,7 +808,6 @@ def run_pipeline(
     n_salts: int = 16,
     arms: bool = True,
     resume: bool = True,
-    use_pandas_udf_parse: bool = False,
 ) -> DataFrame:
     """End-to-end run; returns the per-sink aggregate DataFrame.
 
@@ -856,7 +831,7 @@ def run_pipeline(
     else:
         _write_meta(spark, meta_path, {"n_buckets": n_buckets})
 
-    parsed = parse_stage(pages, use_pandas_udf=use_pandas_udf_parse)
+    parsed = parse_stage(pages)
     enriched = enrich_stage(parsed, spark, n_buckets=n_buckets)
     if resume:
         done = completed_sinks(spark, out_dir)

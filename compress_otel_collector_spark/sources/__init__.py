@@ -3,6 +3,5 @@ from .tables import (  # noqa: F401
     lang_lookup,
     load_table,
     pages_from_documents,
-    register_views,
     synthetic_pages,
 )

@@ -59,11 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def host_expr(doc_id_col: str) -> F.Column:
     """Zipf-ish host: ~30%% of rows land on one mega host (skew fixture)."""
     c = F.col(doc_id_col)

@@ -86,6 +86,8 @@ def sessionize_stream(events: DataFrame, gap_sec: int = 3600) -> DataFrame:
     restarts (checkpointed). Event-time timeouts could close idle sessions
     via ``GroupStateTimeout.EventTimeTimeout`` + a watermark; the fixture
     stream is drained with availableNow so sessions close on gap only.
+    Kept without a pipeline caller: it is the streaming-state coverage of
+    PARITY.md §2.2 (stream ≡ batch, tests/test_stateful_streaming.py).
     """
     return (
         events.select("user_id", "ts")

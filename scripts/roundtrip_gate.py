@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """1M-page full-fidelity roundtrip gate, stall-instrumented (r6 verdict #4).
 
-encode → zstd → decode → 31-field multiset-equality gate over
+``encode_pages`` (the production encode path: narrow exchange, span
+derivation on the reduce side) → zstd → decode → 31-field
+multiset-equality gate against ``expected_roundtrip(span_stage(...))`` over
 ``$SPARK_GRAFT_BENCH_PAGES`` synthetic pages (default 1M) on
 ``local[$SPARK_GRAFT_CPUS]``, timed from the materialized parquet scan.
 Prints ONE JSON line: per-run attribution dicts ``{wall, stall, probe,
@@ -42,7 +44,7 @@ from bench import (
 
 def main() -> None:
     from compress_otel_collector_spark.plans.pipeline import (
-        encode_stage,
+        encode_pages,
         enrich_stage,
         expected_roundtrip,
         parse_stage,
@@ -57,10 +59,10 @@ def main() -> None:
     pages = spark.read.parquet(materialize_pages(spark, N_SYNTH))
 
     def gate():
-        spans = span_stage(enrich_stage(parse_stage(pages), spark))
-        encoded = encode_stage(spans, n_salts=8)
+        enriched = enrich_stage(parse_stage(pages), spark)
+        encoded = encode_pages(enriched, n_salts=8)
         return roundtrip_counts(
-            roundtrip_check(encoded), expected_roundtrip(spans)
+            roundtrip_check(encoded), expected_roundtrip(span_stage(enriched))
         ).collect()[0]
 
     gate()  # untimed warm-up (JIT, Python workers, parquet footers)

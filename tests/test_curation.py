@@ -1,5 +1,5 @@
-"""Beyond-ledger curation operators: URL canonicalization dedup and
-deterministic stratified sampling (operators/curation.py). The ledger is
+"""Beyond-ledger curation operators: URL canonicalization, sequence
+packing and PII redaction (operators/curation.py). The ledger is
 at the driver's 50-row cap, so these are proof-mapped here, including the
 DuckDB-twin parity for the canonicalizer (twin SQL emitted by
 canonical_url_sql from the same step table the Spark expression uses).
@@ -8,16 +8,12 @@ engine-portability, so every rule gets an adversarial CASES row."""
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from compress_otel_collector_spark.operators.curation import (
     TRACKING_PARAMS,
     canonical_url,
     canonical_url_sql,
-    dedup_canonical_url,
-    stratified_hash_sample,
 )
-from compress_otel_collector_spark.sources.tables import load_table
 
 CASES = [
     ("https://Example.COM/Path/Page?utm_source=x&id=5#frag",
@@ -83,58 +79,6 @@ class TestCanonicalUrl:
         oracle, not merely against the Spark expression."""
         assert _duck_canon([u for u, _ in CASES]) == \
             [want for _, want in CASES]
-
-
-class TestDedupCanonicalUrl:
-    def test_variant_urls_collapse(self, spark):
-        rows = [
-            (1, "https://a.com/x?utm_source=feed"),
-            (2, "https://A.COM/x"),
-            (3, "https://a.com/x/"),
-            (4, "https://a.com/y"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, url string")
-        out = {r["canon_url"]: (r["keep_id"], r["n_variants"])
-               for r in dedup_canonical_url(df).collect()}
-        assert out == {
-            "https://a.com/x": (1, 3),
-            "https://a.com/y": (4, 1),
-        }
-
-    def test_single_shuffle_plan(self, spark, sf_dir):
-        docs = load_table(spark, sf_dir, "documents").withColumn(
-            "url", F.concat(F.lit("https://h"),
-                            (F.col("doc_id") % 7).cast("string"),
-                            F.lit(".com/p"), F.col("doc_id").cast("string")))
-        plan = dedup_canonical_url(docs)._jdf.queryExecution() \
-            .executedPlan().toString()
-        shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-        assert shuffles == 1, plan[:2000]
-
-
-class TestStratifiedHashSample:
-    def test_deterministic_and_proportional(self, spark, sf_dir):
-        docs = load_table(spark, sf_dir, "documents")
-        a = {r["stratum"]: (r["kept"], r["min_id"], r["max_id"])
-             for r in stratified_hash_sample(docs, 20).collect()}
-        b = {r["stratum"]: (r["kept"], r["min_id"], r["max_id"])
-             for r in stratified_hash_sample(docs, 20).collect()}
-        assert a == b  # identical on re-run (df.sample is not)
-        totals = {r["lang"]: r["n"] for r in
-                  docs.groupBy(F.col("lang").alias("lang"))
-                  .agg(F.count("*").alias("n")).collect()}
-        for stratum, (kept, _, _) in a.items():
-            frac = kept / totals[stratum]
-            assert 0.05 <= frac <= 0.40, (stratum, frac)  # ~20% ± noise
-
-    def test_fraction_monotone(self, spark, sf_dir):
-        docs = load_table(spark, sf_dir, "documents")
-        k10 = sum(r["kept"] for r in
-                  stratified_hash_sample(docs, 10).collect())
-        k50 = sum(r["kept"] for r in
-                  stratified_hash_sample(docs, 50).collect())
-        n = docs.count()
-        assert k10 < k50 <= n
 
 
 class TestCanonicalUrlFuzzParity:
@@ -304,7 +248,7 @@ class TestPackSequences:
 
 
 class TestPiiScrub:
-    """PII redaction (operators/curation.py pii_scrub/pii_stats): the
+    """PII redaction (operators/curation.py pii_scrub): the
     hand-written CASES are the independent oracle; the DuckDB twin
     (emitted by pii_scrub_sql from the same step table) proves
     engine-portability on both CASES and real documents."""
@@ -373,18 +317,3 @@ class TestPiiScrub:
         assert got == duck
         assert all("<EMAIL>" in s and "<IP>" in s and "<PHONE>" in s
                    for s in got.values())
-
-    def test_pii_stats_counts(self, spark):
-        from compress_otel_collector_spark.operators.curation import (
-            pii_stats)
-        df = spark.createDataFrame(
-            [(1, "a@b.io and c@d.org from 1.2.3.4"),
-             (2, "+1 (555) 123-4567"),
-             (3, "clean")],
-            "doc_id long, text string")
-        got = {r["doc_id"]: r.asDict() for r in pii_stats(df).collect()}
-        assert got[1]["n_email"] == 2 and got[1]["n_ipv4"] == 1 \
-            and got[1]["n_phone"] == 0
-        assert got[2]["n_phone"] == 1
-        assert got[3] == {"doc_id": 3, "n_email": 0, "n_ipv4": 0,
-                          "n_phone": 0, "scrubbed_len": 5}

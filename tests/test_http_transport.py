@@ -12,18 +12,17 @@ from compress_otel_collector_spark.plans.http_transport import (
     start_test_receiver,
 )
 from compress_otel_collector_spark.plans.pipeline import (
-    encode_stage,
+    encode_pages,
     enrich_stage,
     parse_stage,
-    span_stage,
 )
 from compress_otel_collector_spark.sources.tables import synthetic_pages
 
 
 def test_post_sink_delivers_every_frame(spark):
     pages = synthetic_pages(spark, 300, partitions=3)
-    spans = span_stage(enrich_stage(parse_stage(pages), spark))
-    encoded = encode_stage(spans, n_salts=2, arms=False).cache()
+    encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
+                           n_salts=2, arms=False).cache()
     n_frames = encoded.count()
     n_spans = encoded.agg(F.sum("n_spans")).collect()[0][0]
 
@@ -39,8 +38,8 @@ def test_post_sink_delivers_every_frame(spark):
 
 def test_post_sink_raises_on_dead_endpoint(spark):
     pages = synthetic_pages(spark, 50, partitions=1)
-    spans = span_stage(enrich_stage(parse_stage(pages), spark))
-    encoded = encode_stage(spans, n_salts=1, arms=False)
+    encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
+                           n_salts=1, arms=False)
     import pytest
 
     with pytest.raises(Exception):

@@ -13,7 +13,6 @@ from compress_otel_collector_spark.operators import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
-    simhash_dup_groups,
     synthesize_media,
     token_stats,
 )
@@ -103,10 +102,6 @@ class TestSimHash:
             .where(F.col("a.simhash") != F.col("b.simhash"))
         )
         assert joined.count() == 0
-
-    def test_dup_groups_capture_planted(self, docs_with_dups):
-        groups = simhash_dup_groups(docs_with_dups)
-        assert groups.agg(F.sum("n_docs")).collect()[0][0] >= 20
 
     def test_fingerprint_uses_full_64_bits(self, docs):
         """Fingerprints must spread over the whole 64-bit space (two's

@@ -373,3 +373,41 @@ def test_columns_marshal_edge_values_equal_rows_marshal():
     want = spans_rows_to_proto(rows, resource_attrs={"service.name": "s"},
                                scope=DEFAULT_SCOPE)
     assert got == want
+
+
+def test_columns_marshal_rejects_negative_n_chars():
+    """The n_chars attribute is an unsigned varint in the column marshal;
+    a negative value must raise, never ship as one mis-encoded byte."""
+    import numpy as np
+    import pytest
+
+    from compress_otel_collector_spark.codec.batch import DEFAULT_SCOPE
+    from compress_otel_collector_spark.codec.otlp_proto import (
+        spans_columns_to_proto,
+    )
+    from compress_otel_collector_spark.codec.values import CodecError
+
+    def marshal(n_chars):
+        return spans_columns_to_proto(
+            np.array([b"\x01" * 16], dtype=object),
+            np.array([b"\x01" * 8], dtype=object),
+            np.array([""], dtype=object),
+            np.array(["GET /"], dtype=object),
+            np.array([2]),
+            np.array([10], dtype=np.int64),
+            np.array([20], dtype=np.int64),
+            np.array(["https://a.example/x"], dtype=object),
+            np.array([n_chars]),
+            np.array([None], dtype=object),
+            np.array([None], dtype=object),
+            np.array([0]),
+            np.array([""], dtype=object),
+            np.array([0]),
+            const_attrs={"http.status_code": 200},
+            resource_attrs={"service.name": "s"},
+            scope=DEFAULT_SCOPE,
+        )
+
+    assert marshal(5)
+    with pytest.raises(CodecError, match="negative"):
+        marshal(-1)

@@ -8,10 +8,9 @@ sort-merge fails loudly at sf0.001.
 from pyspark.sql import functions as F
 
 from compress_otel_collector_spark.plans.pipeline import (
-    encode_stage,
+    encode_pages,
     enrich_stage,
     parse_stage,
-    span_stage,
 )
 from compress_otel_collector_spark.sources.tables import (
     load_table,
@@ -58,17 +57,6 @@ def test_parse_stage_is_narrow(spark, sf_dir):
     parsed = parse_stage(pages_from_documents(spark, sf_dir))
     plan = plan_of(parsed)
     assert "Exchange" not in plan
-
-
-def test_encode_stage_has_exactly_one_shuffle(spark, sf_dir):
-    spans = span_stage(
-        enrich_stage(parse_stage(pages_from_documents(spark, sf_dir)),
-                     spark))
-    enc = encode_stage(spans, n_salts=4, arms=False)
-    plan = plan_of(enc)
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert shuffles == 1, f"want exactly 1 shuffle, plan:\n{plan}"
-    assert "SortMergeJoin" not in plan
 
 
 def test_tpch_q1_scan_is_pruned(spark, sf_dir):
@@ -150,39 +138,17 @@ def test_encode_pages_shuffles_narrow_payload(spark, sf_dir):
     unhex(md5(url)) id derivation has to appear ABOVE (before) the
     Exchange line, and the exchange ships only the ~60 B narrow page row
     (url, lang, host_bucket, doc_id, warc_ts, n_chars, salt) instead of
-    the ~175 B derived span row. Still exactly one shuffle."""
-    from compress_otel_collector_spark.plans.pipeline import encode_pages
-
+    the ~175 B derived span row. Exactly one shuffle, and no sort-merge
+    join."""
     enriched = enrich_stage(parse_stage(pages_from_documents(spark, sf_dir)),
                             spark)
     plan = plan_of(encode_pages(enriched, n_salts=4, arms=False))
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert shuffles == 1, f"want exactly 1 shuffle, plan:\n{plan}"
+    assert "SortMergeJoin" not in plan
     # id derivation above the exchange = computed on the reduce side
     assert "unhex" in plan
     assert plan.index("unhex") < plan.index("Exchange hashpartitioning"), (
         "trace/span id derivation ran BEFORE the exchange — the shuffle "
         f"is carrying the wide span row again:\n{plan[:3000]}"
     )
-
-
-def test_span_columns_sql_equals_column_form(spark, sf_dir):
-    """span_columns (Column API) ≡ span_columns_sql (selectExpr strings):
-    the r8 driver-overhead optimization must build the identical
-    expression tree — same schema, same rows — in both n_chars modes."""
-    from compress_otel_collector_spark.functions.columns import (
-        span_columns,
-        span_columns_sql,
-    )
-    from pyspark.sql import functions as F
-
-    pages = pages_from_documents(spark, sf_dir)
-    base = pages.withColumn(
-        "n_chars_pre", F.length(F.col("text")).cast("long"))
-    for kw in ({"n_chars_col": "n_chars_pre"}, {}):
-        via_cols = base.select("doc_id", *span_columns("doc_id", **kw))
-        via_sql = base.selectExpr("doc_id",
-                                  *span_columns_sql("doc_id", **kw))
-        assert via_cols.schema == via_sql.schema
-        assert via_cols.exceptAll(via_sql).count() == 0
-        assert via_sql.exceptAll(via_cols).count() == 0

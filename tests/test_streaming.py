@@ -41,10 +41,9 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
     its own partitions, not append duplicates (dynamic partition overwrite
     on the leading batch_id column)."""
     from compress_otel_collector_spark.plans.pipeline import (
-        encode_stage,
+        encode_pages,
         enrich_stage,
         parse_stage,
-        span_stage,
     )
     from compress_otel_collector_spark.streaming.stream import (
         route_stream_batch,
@@ -52,8 +51,8 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
     pages = synthetic_pages(spark, 120, partitions=2)
-    spans = span_stage(enrich_stage(parse_stage(pages), spark))
-    encoded = encode_stage(spans, n_salts=2, arms=False)
+    encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
+                           n_salts=2, arms=False)
 
     route_stream_batch(encoded, out_dir, batch_id=0)
     total1 = read_routed(spark, out_dir).agg(F.sum("n_spans")).collect()[0][0]
