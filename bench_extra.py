@@ -10,11 +10,14 @@ query's wall goes so optimizations target the right component:
   pre-planned frame), N runs, medians + mins. A query whose wall is
   mostly ``plan`` needs a smaller expression tree, not a better plan
   shape.
-- ``--pipeline``: stage-isolated walls for pipeline_synth at
-  $SPARK_GRAFT_BENCH_PAGES pages (default 1M): scan→narrow frame,
-  +exchange, +sort+span-derivation, +encode (arms off/on), agg collect.
 - ``--plans [suffix]``: write ``plans/r08/<q>_<suffix>.txt`` explain
   output for every bench query (default suffix: before).
+- ``--sweep``: median wall, after one warm pass, of every ``queries()``
+  entry.
+
+Per-layer pipeline walls (parse+enrich, exchange, derive, encode, route,
+aggregate) come from ``python3 perfbench/run.py --trace 1``, which cuts
+its frames from ``encode_pages``' own plan.
 
 Methodology per CLAUDE.md: warm session, warm-up pass per shape first,
 noop sink, one Spark session at a time, medians of ≥3.
@@ -30,7 +33,6 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_SYNTH = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "1000000"))
 
 BENCH_QUERIES = [
     "tpch_q1", "revenue_by_nation", "dedup_exact", "dedup_minhash_lsh",
@@ -97,79 +99,6 @@ def profile_queries(runs: int = 4):
             "exec_min": round(min(r["exec"] for r in rs), 3),
             "runs": rs,
         }
-    spark.stop()
-    print(json.dumps(out, indent=1))
-
-
-def profile_pipeline(runs: int = 3):
-    import bench
-    from pyspark.sql import functions as F
-
-    from compress_otel_collector_spark.plans.pipeline import (
-        _pre_encode_frame,
-        aggregate_stage,
-        encode_pages,
-        enrich_stage,
-        parse_stage,
-    )
-
-    spark = make_spark()
-    _warmup(spark)
-    path = bench.materialize_pages(spark, N_SYNTH)
-
-    def narrow_frame():
-        pages = spark.read.parquet(path)
-        enriched = enrich_stage(parse_stage(pages), spark)
-        from compress_otel_collector_spark.functions.columns import salt_expr
-        return enriched.select(
-            "url", "lang", "host_bucket", "doc_id", "warc_ts",
-            F.length(F.col("text_extracted")).cast("long")
-            .alias("n_chars_pre"),
-            salt_expr("url", 8).alias("salt"))
-
-    def pre_encode():
-        pages = spark.read.parquet(path)
-        return _pre_encode_frame(
-            enrich_stage(parse_stage(pages), spark), n_salts=8)
-
-    def encode(arms):
-        def f():
-            pages = spark.read.parquet(path)
-            return encode_pages(
-                enrich_stage(parse_stage(pages), spark),
-                n_salts=8, arms=arms)
-        return f
-
-    def full(arms):
-        def f():
-            dt, _, _ = bench.run_pipeline_synth(spark, N_SYNTH, arms=arms)
-            return dt
-        return f
-
-    stages = {
-        "scan_parse_enrich_narrow": lambda: _noop(
-            narrow_frame()),
-        "plus_exchange": lambda: _noop(
-            narrow_frame().repartition("lang", "host_bucket", "salt")),
-        "pre_encode_frame": lambda: _noop(pre_encode()),
-        "encode_no_arms": lambda: _noop(encode(False)()),
-        "encode_arms": lambda: _noop(encode(True)()),
-    }
-    out = {}
-    for label, fn in stages.items():
-        fn()  # warm
-        walls = []
-        for _ in range(runs):
-            t0 = time.monotonic()
-            fn()
-            walls.append(round(time.monotonic() - t0, 3))
-        out[label] = {"med": round(statistics.median(walls), 3),
-                      "min": round(min(walls), 3), "runs": walls}
-    for label, f in (("full_synth", full(False)), ("full_arms", full(True))):
-        f()
-        walls = [round(f(), 3) for _ in range(runs)]
-        out[label] = {"med": round(statistics.median(walls), 3),
-                      "min": round(min(walls), 3), "runs": walls}
     spark.stop()
     print(json.dumps(out, indent=1))
 
@@ -241,8 +170,6 @@ if __name__ == "__main__":
         sweep_all()
     elif "--queries" in sys.argv:
         profile_queries()
-    elif "--pipeline" in sys.argv:
-        profile_pipeline()
     elif "--plans" in sys.argv:
         i = sys.argv.index("--plans")
         suffix = sys.argv[i + 1] if len(sys.argv) > i + 1 else "before"

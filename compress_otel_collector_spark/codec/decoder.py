@@ -27,7 +27,6 @@ from .definition import (
     field_path_to_definition,
 )
 from .values import CodecError
-from .varint import decode_sleb128
 
 _MAGIC = b"cprval"
 _UNPACK_DOUBLE = struct.Struct("<d").unpack_from
@@ -132,31 +131,28 @@ class _Reader:
 
 
 class _Plan:
-    """Compiled decode plan for one Definition tree.
+    """Compiled decode plan for one Definition tree: the one generic
+    decoder.
 
-    ``_inner_decode`` re-resolves the schema per value: type branching,
-    ``sorted_field_names`` walks, path-string concatenation, pool-id
-    resolution — all per field per row. The plan resolves every schema
-    decision ONCE into a closure tree; decoding a value is then just the
-    reads. Semantics are pinned identical to ``_inner_decode`` (which
-    stays as the readable reference) by every roundtrip/golden/corrupt-
-    input test plus the batch≡scalar hypothesis property.
+    Every schema decision — type branching, ``sorted_field_names`` order,
+    path-string concatenation, pool-id resolution — is resolved ONCE into
+    a closure tree; decoding a value is then just the reads. The root
+    closure decodes the data region for :func:`decode`; ``pool_fn``
+    compiles (lazily, per pool id seen on the wire) the ``use_pool=False``
+    closures :func:`decode_meta` runs over pool entries. Pinned by every
+    roundtrip/golden/corrupt-input test plus the batch≡scalar hypothesis
+    property.
     """
 
-    __slots__ = ("root", "pool_fns", "definition", "token_walker",
-                 "free_map_pools", "bytes_pools")
+    __slots__ = ("root", "pool_fns", "definition", "free_map_pools",
+                 "bytes_pools")
 
     def __init__(self, definition: Definition):
-        from .tokdecode import compile_walker
-
         self.definition = definition
         self.pool_fns: dict[str, object] = {}
         self.free_map_pools: set[str] = set()
         self.bytes_pools: set[str] = set()
         self.root = _compile(definition, "", use_pool=True)
-        # vectorized data-region fast path (None when the schema has
-        # inline non-token leaves — see tokdecode.token_safe)
-        self.token_walker = compile_walker(definition)
 
     def pool_fn(self, pool_id: str):
         fn = self.pool_fns.get(pool_id)
@@ -181,7 +177,10 @@ class _Plan:
 
 
 def _compile(d: Definition, path: str, use_pool: bool):
-    """Closure tree mirroring ``_inner_decode``'s dispatch, resolved once."""
+    """Closure decoding one value of ``d`` (decode.go:12-334 dispatch,
+    resolved once): nullable flag, then INTEGER (diff-aware) / BOOLEAN /
+    DOUBLE / pool index / inline BYTES / STRING / free map / OBJECT /
+    ARRAY."""
     t = d.type
     if t == INTEGER:
         if d.diff_encode:
@@ -350,9 +349,13 @@ def decode_meta(blob: bytes, definition: Definition,
     """Decode the meta block (string pool + value pools) and verify magic.
 
     Returns ``(string_pool, value_pools, reader)`` with the reader
-    positioned at the first data-region byte — the shared prefix of
-    :func:`decode` and any specialized data-region consumer (e.g. the
-    roundtrip projector in ``plans/projector.py``).
+    positioned at the first data-region byte. It is the shared prefix of
+    the two data-region consumers: :func:`decode` (the plan's root
+    closure) and ``plans.projector.project_blob`` (the token walk the
+    roundtrip check runs). Pool entries decode through the plan's
+    ``pool_fn`` closures; pools of at least ``_FAST_POOL_MIN`` entries
+    first try the verified fast paths (string pool, BYTES pools,
+    ``tokdecode.fast_free_map_*``), each falling back to the closures.
 
     ``col_pools``: free-map pool ids whose caller consumes COLUMNS, not
     dicts — when the vectorized path succeeds for such a pool, its
@@ -413,72 +416,8 @@ def decode_meta(blob: bytes, definition: Definition,
 
 def decode(blob: bytes, definition: Definition):
     """Decode one framed blob; inverse of :func:`encoder.encode`."""
-    plan = _plan_for(definition)
     string_pool, value_pools, r = decode_meta(blob, definition)
-
-    if plan.token_walker is not None:
-        from .tokdecode import tokenize
-
-        # tokenize is total (bit-63 / corrupt runs are scalar-parsed
-        # segment-locally); the scalar path below remains only for
-        # non-token-safe schemas and is pinned ≡ via tests + fuzz
-        try:
-            return plan.token_walker(tokenize(r.data, r.pos), value_pools)
-        except IndexError:
-            # token stream exhausted mid-value — same truncation the
-            # scalar reader reports as CodecError
-            raise CodecError("truncated data region") from None
-    return plan.root(r, {}, string_pool, value_pools)
-
-
-def _inner_decode(d: Definition, path: str, status, string_pool, value_pools,
-                  r: _Reader, use_pool: bool):
-    if d.nullable and use_pool:  # pool entries carry no root null flag
-        if not r.read_bool():
-            return None
-
-    t = d.type
-    if t == INTEGER:
-        v = r.read_varint()
-        if d.diff_encode:
-            prev = status.get(path)
-            if prev is not None:
-                v += prev
-            status[path] = v
-        return v
-    if t == BOOLEAN:
-        return r.read_bool()
-    if t == DOUBLE:
-        return r.read_double()
-
-    if d.is_pool_member and use_pool:
-        pid = d.pool_id(path)
-        if pid not in value_pools:
-            raise CodecError(f"reference to missing pool {pid!r}")
-        return _pool_get(value_pools[pid], r.read_varint(), f"pool {pid!r}")
-
-    if t == BYTES:
-        return r.read_bytes(r.read_varint())
-    if t == STRING:
-        return r.read_string(r.read_varint())
-    if t == OBJECT:
-        if d.is_free_map:
-            return _free_map_decode(string_pool, r)
-        prefix = path + " " if path else ""
-        out = {}
-        for name in d.sorted_field_names:
-            out[name] = _inner_decode(d.fields[name], prefix + name, status,
-                                      string_pool, value_pools, r, True)
-        return out
-    if t == ARRAY:
-        n = r.read_varint()
-        item_path = (path + " " if path else "") + "item"
-        return [
-            _inner_decode(d.item, item_path, status, string_pool, value_pools,
-                          r, True)
-            for _ in range(n)
-        ]
-    raise CodecError(f"unknown definition type {t}")
+    return _plan_for(definition).root(r, {}, string_pool, value_pools)
 
 
 def _free_map_decode(string_pool, r: _Reader, depth: int = 0) -> dict:

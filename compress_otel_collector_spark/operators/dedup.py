@@ -159,6 +159,11 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 8,
     bit-for-bit (pinned by the unchanged DuckDB twin). The
     ≥ n-token filter is a JVM predicate BELOW the UDF (guide §4.4:
     never filter on a UDF output column).
+
+    Precondition: ``doc_id`` is unique in ``df``. The UDF emits one row
+    per input row, while the DuckDB twin aggregates by ``doc_id``, so a
+    repeated ``doc_id`` yields one signature row per copy here and one
+    merged row there.
     """
     n_md5 = (num_hashes + 3) // 4
     from pyspark.sql.functions import pandas_udf
@@ -396,7 +401,12 @@ def simhash(df: DataFrame, bits: int = 64, text_col: str = "text",
     shape makes the optimizer evaluate the UDF twice, guide §4.4).
     Fingerprints are bit-identical (same md5-nibble bits, same
     2·ones > n majority rule, same -2**63 top-bit representation —
-    pinned by the unchanged DuckDB twin and tests)."""
+    pinned by the unchanged DuckDB twin and tests).
+
+    Precondition: ``id_col`` is unique in ``df``. The UDF emits one row
+    per input row, while the DuckDB twin aggregates by ``doc_id``, so a
+    repeated id yields one fingerprint row per copy here and one merged
+    row there."""
     if bits % 4 or not 0 < bits <= 64:
         raise ValueError(f"bits must be a positive multiple of 4 <= 64, "
                          f"got {bits}")

@@ -6,8 +6,7 @@ or the wrong register).
 No external model files (sandbox contract): a word-bigram LM with
 add-one smoothing is TRAINED AT IMPORT from the same fixed deterministic
 corpus the BPE trainer uses, and its content is pinned by checksum in
-``tests/test_lm.py``. Production swaps the table via ``lm_table=`` —
-the operator is table-agnostic.
+``tests/test_lm.py``.
 
 Scale shape (the reason this lives in pure JVM expressions): the LM is
 model-parameter-sized (a few hundred bigrams), so it ships as a MAP
@@ -60,7 +59,7 @@ def _train_bigram_lm(corpus: str) -> dict[str, float]:
     }
 
 
-#: the pinned default table (checksum test guards accidental drift)
+#: the pinned table (checksum test guards accidental drift)
 LM_TABLE: dict[str, float] = _train_bigram_lm(_TRAIN_CORPUS)
 
 
@@ -74,8 +73,7 @@ def _bigram_keys(text_col: str) -> Column:
 
 
 def lm_perplexity(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  lm_table: dict[str, float] | None = None) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """Per-document LM score: ``(id, lm_bigrams, avg_logprob,
     perplexity)`` where avg_logprob is the mean log10 bigram probability
     (``_LOG_UNK`` backoff for out-of-table bigrams) and perplexity is
@@ -87,9 +85,8 @@ def lm_perplexity(df: DataFrame, text_col: str = "text",
     test), so it composes into the same narrow pass as the other
     textstats gates.
     """
-    table = LM_TABLE if lm_table is None else lm_table
     lit_map = F.create_map(
-        *[F.lit(x) for kv in sorted(table.items()) for x in kv])
+        *[F.lit(x) for kv in sorted(LM_TABLE.items()) for x in kv])
     keys = _bigram_keys(text_col)
     n_bi = F.size(keys)
     total = F.aggregate(
@@ -108,14 +105,13 @@ def lm_perplexity(df: DataFrame, text_col: str = "text",
     )
 
 
-def lm_score_py(text: str, lm_table: dict[str, float] | None = None):
+def lm_score_py(text: str):
     """Pure-Python twin of one row of :func:`lm_perplexity` — the parity
     oracle for tests (same tokenization, same backoff, same rounding)."""
-    table = LM_TABLE if lm_table is None else lm_table
     toks = [t for t in text.split(" ") if t]
     if len(toks) < 2:
         return None, None, None
-    lps = [table.get(f"{a} {b}", _LOG_UNK)
+    lps = [LM_TABLE.get(f"{a} {b}", _LOG_UNK)
            for a, b in zip(toks, toks[1:])]
     avg = round(sum(lps) / len(lps), 6)
     return len(lps), avg, round(10.0 ** -avg, 4)

@@ -60,7 +60,7 @@ from ..functions.columns import (
     span_columns_sql,
     warc_day_expr,
 )
-from ..sources.tables import lang_lookup
+from ..sources.tables import _hadoop_fs, lang_lookup
 
 ENCODED_SCHEMA = StructType([
     StructField("lang", StringType()),
@@ -761,18 +761,6 @@ def roundtrip_counts(decoded: DataFrame, expected: DataFrame,
         F.coalesce(F.sum(F.when(F.col("_d") < 0, -F.col("_d")).otherwise(0)),
                    F.lit(0)).cast("long").alias("extra"),
     )
-
-
-def _hadoop_fs(spark: SparkSession, path_str: str):
-    """(FileSystem, Path) for any URI scheme the cluster knows (file/s3/hdfs).
-
-    The resume meta marker must work on object stores too — local
-    ``os.path`` APIs silently never fire on ``s3://`` paths.
-    """
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, path, jvm
 
 
 def _read_meta(spark: SparkSession, meta_path_str: str) -> Optional[dict]:

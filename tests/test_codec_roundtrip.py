@@ -15,7 +15,7 @@ from compress_otel_collector_spark.codec import (
     topological_pool_order,
     trace_model,
 )
-from compress_otel_collector_spark.codec.decoder import _Reader
+from compress_otel_collector_spark.codec.decoder import decode_meta
 from compress_otel_collector_spark.codec.definition import (
     ARRAY,
     BYTES,
@@ -403,20 +403,5 @@ class TestSchemaValidation:
 
 
 def _extract_string_pool_entries(blob, pool_path):
-    """Walk the meta block (as decode() does) and return one pool's entries."""
-    from compress_otel_collector_spark.codec.decoder import _inner_decode
-
-    r = _Reader(blob)
-    string_pool = [r.read_string(r.read_varint())
-                   for _ in range(r.read_varint())]
-    value_pools = {}
-    for _ in range(r.read_varint()):
-        pid = r.read_string(r.read_varint())
-        d = field_path_to_definition(pid, trace_model())
-        entries = value_pools[pid] = []
-        for _ in range(r.read_varint()):
-            entries.append(_inner_decode(d, pid, None, string_pool,
-                                         value_pools, r, use_pool=False))
-        if pid == pool_path:
-            return entries
-    raise AssertionError(f"pool {pool_path!r} not found")
+    """One value pool's entries, as the meta block decodes them."""
+    return decode_meta(blob, trace_model())[1][pool_path]

@@ -45,10 +45,6 @@ class TestPyScorer:
         n, avg, p = lm.lm_score_py("a b")
         assert n == 1 and p == round(10.0 ** -avg, 4)
 
-    def test_custom_table_knob(self):
-        t = {"a b": -1.0}
-        assert lm.lm_score_py("a b", lm_table=t) == (1, -1.0, 10.0)
-
     @settings(max_examples=200, deadline=None)
     @given(st.text(alphabet="ab x", max_size=30))
     def test_scorer_is_total_and_bounded(self, s):

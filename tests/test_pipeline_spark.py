@@ -280,24 +280,19 @@ def test_pipeline_resume_probe_restores_only_victim(spark, sf_dir):
     assert row["other_routes_changed"] == 0
 
 
-class TestEncodePagesNarrow:
-    """encode_pages ships the narrow page row through the exchange and
-    derives spans after it; the decoded spans must equal
-    ``span_stage``'s, field for field."""
+def test_load_table_rereads_schema_after_rewrite(spark, tmp_path):
+    """A table rewritten in the same process with a new column is read with
+    the new schema: the schema cache must not null-fill the column."""
+    from compress_otel_collector_spark.sources.tables import load_table
 
-    def test_narrow_path_roundtrip_full_fidelity(self, spark, pages):
-        from compress_otel_collector_spark.plans.pipeline import (
-            expected_roundtrip,
-            roundtrip_counts,
-        )
-
-        enriched = enrich_stage(parse_stage(pages), spark)
-        decoded = roundtrip_check(encode_pages(enriched, n_salts=4,
-                                               arms=False))
-        row = roundtrip_counts(
-            decoded, expected_roundtrip(span_stage(enriched))).collect()[0]
-        assert row["decoded_spans"] == pages.count()
-        assert row["missing"] == 0 and row["extra"] == 0
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).write.parquet(path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    spark.range(5).selectExpr("id", "CAST(id AS STRING) AS extra") \
+        .write.mode("overwrite").parquet(path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "extra"]
+    assert df.where(F.col("extra").isNull()).count() == 0
 
 
 class TestMalformedUtf8Pages:

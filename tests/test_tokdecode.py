@@ -1,11 +1,13 @@
-"""Vectorized token-stream decode fast path (codec/tokdecode.py).
+"""Vectorized sleb128 kernels (codec/tokdecode.py) and the generic decode.
 
-The fast path must be byte-for-byte semantics-identical to the scalar
-reader: stage 1 (tokenize) against decode_sleb128 — TOTAL since r5,
-including the one wire shape the boundary scan cannot split (capped
-9-byte varints whose raw 9th byte carries bit 7 — reader.go:52-59, now
-scalar-parsed segment-locally) — and stage 2 (generated walker) against
-the closure-tree plan.
+``tokenize`` must be byte-for-byte semantics-identical to the scalar
+reader (decode_sleb128) — TOTAL since r5, including the one wire shape
+the boundary scan cannot split (capped 9-byte varints whose raw 9th byte
+carries bit 7 — reader.go:52-59, scalar-parsed segment-locally). The
+meta-block pool fast paths must equal the scalar pool loop. ``decode()``
+(the compiled closure plan) is pinned on data-region edge cases; the
+token walk that consumes ``tokenize`` is ``project_blob``, pinned against
+``project_doc(decode(...))`` in ``tests/test_projector.py``.
 """
 
 import numpy as np
@@ -16,11 +18,7 @@ from hypothesis import strategies as st
 from compress_otel_collector_spark.codec import encode, trace_model
 from compress_otel_collector_spark.codec import decoder as decoder_mod
 from compress_otel_collector_spark.codec.decoder import decode
-from compress_otel_collector_spark.codec.tokdecode import (
-    compile_walker,
-    token_safe,
-    tokenize,
-)
+from compress_otel_collector_spark.codec.tokdecode import tokenize
 from compress_otel_collector_spark.codec.values import CodecError
 from compress_otel_collector_spark.codec.varint import (
     INT64_MIN,
@@ -150,32 +148,12 @@ def _mkdoc(n: int) -> dict:
 
 
 class TestWalker:
-    def test_trace_model_is_token_safe(self):
-        # every STRING/BYTES/OBJECT leaf under resourceSpans is pooled, so
-        # the data region is pure flags+varints (the property the whole
-        # fast path rests on — if a schema change breaks it, this test
-        # flags the silent loss of the vectorized path)
-        m = trace_model()
-        assert token_safe(m)
-        assert decoder_mod._plan_for(m).token_walker is not None
-
-    @pytest.mark.parametrize("n", [0, 1, 7, 200])
-    def test_fast_equals_scalar(self, n):
-        m = trace_model()
-        blob = encode(_mkdoc(n), m)
-        plan = decoder_mod._plan_for(m)
-        fast = decode(blob, m)
-        saved = plan.token_walker
-        try:
-            plan.token_walker = None
-            scalar = decode(blob, m)
-        finally:
-            plan.token_walker = saved
-        assert fast == scalar
+    """decode() over the data region: plain Python scalars, bit-63 diff
+    deltas, truncation and pool-lookup failures."""
 
     def test_python_scalar_types(self):
-        # walker must hand back plain Python ints/bools (tolist() boundary),
-        # not numpy scalars — object-dtype pandas frames and == semantics
+        # decode must hand back plain Python ints/bools, not numpy
+        # scalars — object-dtype pandas frames and == semantics
         # downstream rely on it
         m = trace_model()
         out = decode(encode(_mkdoc(3), m), m)
@@ -185,7 +163,7 @@ class TestWalker:
 
     def test_bit63_delta_uses_fallback_and_still_decodes(self):
         # startTimeUnixNano diff delta ≤ -2^55 → 9-byte varint with bit 63
-        # set → region not tokenizable → scalar path, same result
+        # set in the raw 9th byte — the reader's capped-varint branch
         m = trace_model()
         doc = _mkdoc(2)
         spans = doc["resourceSpans"][0]["scopeSpans"][0]["spans"]
@@ -198,58 +176,42 @@ class TestWalker:
         assert got[1]["startTimeUnixNano"] == 0
 
     def test_missing_pool_and_bad_index_raise_codec_error(self):
+        from compress_otel_collector_spark.plans.projector import project_blob
+
         m = trace_model()
-        walker = decoder_mod._plan_for(m).token_walker
-        # resourceSpans present(1) count(1) → resource pool ref with no
-        # pools decoded at all
-        with pytest.raises(CodecError, match="missing pool"):
-            walker([1, 1, 0], {})
-        with pytest.raises(CodecError, match="out of range"):
-            walker([1, 1, 5], {"resourceSpans item resource": [{}]})
+        # empty string pool, no value pools, magic, then resourceSpans
+        # present(1) count(1) → a resource pool ref with no pool decoded
+        no_pools = b"\x00\x00cprval\x01\x01\x00"
+        # a real one-resource blob whose data region's resource index
+        # (third token: presence, count, index) is rewritten 0 → 5
+        blob = encode(_mkdoc(0), m)
+        at = blob.index(b"cprval") + 6 + 2
+        assert blob[at] == 0
+        bad_index = blob[:at] + b"\x05" + blob[at + 1:]
+        for fn in (decode, project_blob):
+            with pytest.raises(CodecError, match="missing pool"):
+                fn(no_pools, m)
+            with pytest.raises(CodecError, match="out of range"):
+                fn(bad_index, m)
 
     def test_token_exhaustion_raises_codec_error_via_decode(self):
         m = trace_model()
         blob = encode(_mkdoc(4), m)
-        # chop the data region mid-stream at a token boundary the scan
-        # accepts: magic + a few bytes
+        # chop the data region mid-stream: magic + a few bytes
         cut = blob[: blob.index(b"cprval") + 6 + 3]
         with pytest.raises(CodecError):
             decode(cut, m)
 
-    def test_non_token_safe_schema_has_no_walker(self):
+    def test_inline_double_schema_decodes(self):
+        # a schema with an inline DOUBLE leaf: its data region is not a
+        # pure varint stream, and decode reads it all the same
         from compress_otel_collector_spark.codec.definition import (
             DOUBLE, OBJECT, load_definition,
         )
         d = load_definition({"type": OBJECT, "fields": {
             "x": {"type": DOUBLE}}})
-        assert not token_safe(d)
-        assert compile_walker(d) is None
-        # scalar path still decodes it
         blob = encode({"x": 1.5}, d)
         assert decode(blob, d) == {"x": 1.5}
-
-    @given(st.integers(min_value=0, max_value=10 ** 6))
-    @settings(max_examples=50, deadline=None)
-    def test_fast_equals_scalar_fuzz(self, seed):
-        rng = np.random.default_rng(seed)
-        n = int(rng.integers(1, 12))
-        m = trace_model()
-        doc = _mkdoc(n)
-        spans = doc["resourceSpans"][0]["scopeSpans"][0]["spans"]
-        for sp in spans:
-            sp["startTimeUnixNano"] = int(rng.integers(0, 2 ** 62))
-            sp["endTimeUnixNano"] = int(rng.integers(0, 2 ** 62))
-            sp["kind"] = int(rng.integers(0, 5)) or None
-        blob = encode(doc, m)
-        plan = decoder_mod._plan_for(m)
-        fast = decode(blob, m)
-        saved = plan.token_walker
-        try:
-            plan.token_walker = None
-            scalar = decode(blob, m)
-        finally:
-            plan.token_walker = saved
-        assert fast == scalar
 
 
 # --------------------------------------------------------------------------
