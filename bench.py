@@ -722,11 +722,10 @@ def write_baseline_md(results, eff, pipeline_sec, pages, ratios,
     """Regenerates BENCH/BASELINE.md in full. ``notes`` is extra markdown
     (e.g. a measurement-anomaly disclosure) appended after the scaling
     table — pass it when re-emitting the file so hand annotations are not
-    silently erased by the next ``--scaling`` run. Raises if any
-    ``STANDING_SECTIONS`` heading is missing from the result."""
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(f"""# BENCH/BASELINE — measured results
+    silently erased by the next ``--scaling`` run. Raises, leaving the
+    existing file untouched, if any ``STANDING_SECTIONS`` heading is
+    missing from the result."""
+    text = f"""# BENCH/BASELINE — measured results
 
 Sandbox: local-mode Spark 4.1.2, {os.cpu_count()} host cores. Input:
 deterministic synthetic pages table (`sources.synthetic_pages`, pure column
@@ -858,15 +857,16 @@ exchange (salted against the mega-host skew) → partition-local encode →
 partition-aligned write; there is no global state, no driver-side loop, and
 the only serial work is job scheduling + the final count aggregation.
 
-""")
-    with open("BENCH/BASELINE.md") as f:
-        written = f.read()
-    missing = [s for s in STANDING_SECTIONS if s not in written]
+"""
+    missing = [s for s in STANDING_SECTIONS if s not in text]
     if missing:
         raise RuntimeError(
             f"BENCH/BASELINE.md rewrite lost standing sections {missing} — "
             "durable content must live in BENCH/NOTES.md (appended on every "
             "rewrite); refusing to ship a regeneration that destroys it")
+    os.makedirs("BENCH", exist_ok=True)
+    with open("BENCH/BASELINE.md", "w") as f:
+        f.write(text)
 
 
 def main():

@@ -1,15 +1,21 @@
 """Vectorized batch encoder: a columnar span batch → one wire-format blob.
 
 This is the hot path that runs inside Spark's ``mapInPandas``: one call per
-Arrow batch, zero per-row Python *dispatch*. The heavy lifting is columnar —
+route group, zero per-row Python *dispatch*. The heavy lifting is columnar —
 ``pandas.factorize`` builds the dictionaries (pool semantics: dedup with
 stable first-occurrence-in-column order), numpy packs all varints
 (``varint.encode_sleb128_array``), ``numpy.diff`` produces the delta series —
 and only the final byte-cell assembly walks rows (cheap bytes joins over
 precomputed pieces).
 
+One input shape: the frame ``plans.pipeline._group_spans_frame`` builds —
+``SPAN_COLUMNS`` plus typed ``attr:<key>`` span-attribute columns, encoded
+as ONE resourceSpans group under ``DEFAULT_SCOPE`` with no schemaUrl.
+General OTLP documents (several resources, other scopes, schemaUrls,
+arbitrary span attribute values) are the scalar ``encoder.encode``'s job.
+
 Wire compatibility: blobs decode with :mod:`decoder` (and semantically match
-the reference receiver, /root/reference/compress-otel-receiver/decode.go).
+the reference receiver, compress-otel-receiver/decode.go).
 Pool *index assignment* differs from the scalar encoder: the scalar encoder
 (like the reference, encode.go:191) indexes pools by row-major first
 occurrence; this encoder indexes by column-major first occurrence. The wire
@@ -58,10 +64,11 @@ DEFAULT_SCOPE = {
     "droppedAttributesCount": 0,
 }
 
-#: pdf columns consumed by :func:`encode_span_dataframe`
+#: pdf columns consumed by :func:`encode_span_dataframe` (span attributes
+#: ride separate ``attr:<key>`` columns named by its ``attributes_spec``)
 SPAN_COLUMNS = [
     "trace_id", "span_id", "parent_span_id", "trace_state", "name", "kind",
-    "start_ns", "end_ns", "attributes", "dropped_attributes_count",
+    "start_ns", "end_ns", "dropped_attributes_count",
     "events", "dropped_events_count", "links", "dropped_links_count",
     "status_message", "status_code",
 ]
@@ -87,9 +94,9 @@ class _Pools:
         short-circuits on the presence flag before touching pools).
         ``scalar=True`` skips structural freezing for string/bytes pools
         (their values are their own keys — a large hot-path win).
-        ``keys`` supplies caller-precomputed hashable keys (must be a
-        injective function of the value; used by pipeline fast paths where
-        the attribute dicts are themselves built from a few columns).
+        ``keys`` supplies caller-precomputed hashable keys (must be an
+        injective function of the value; the links-item pool keys each
+        link by the tuple of its child codes and scalars).
         """
         arr = list(values)
         pool = self.state.pools.setdefault(pool_id, {})
@@ -441,12 +448,13 @@ def _string_pool_codes(values, st: _State) -> np.ndarray:
 def _free_map_columnar_entries(spec: dict[str, str],
                                cols: dict[str, np.ndarray],
                                st: _State) -> tuple[int, bytes]:
-    """Columnar free-map entry encoder (the attributes-pool hot path).
+    """Columnar free-map entry encoder for the span-attributes pool.
 
-    ``spec`` maps attribute key → value type ('int'|'str'|'double'|'bool');
-    ``cols`` holds one value column per key (unique pool rows only). Wire
-    layout per entry matches encoder._free_map_encode with sorted keys and
-    no null values (pipeline attributes are always fully populated).
+    ``spec`` maps attribute key → value type, 'int' or 'str' (any other
+    type raises ``CodecError``); ``cols`` holds one value column per key
+    (unique pool rows only). Wire layout per entry matches
+    encoder._free_map_encode with sorted keys and no null values (every
+    span carries every key).
     Returns ``(entry_count, all entries pre-joined)`` — the whole pool is
     assembled as padded field matrices + one mask-select (zero per-entry
     Python), wire-identical to joining per-entry bytes.
@@ -474,18 +482,6 @@ def _free_map_columnar_entries(spec: dict[str, str],
                 encode_sleb128(kidx) + b"\x01\x04", m))   # tag STRING=4
             vm, vl = encode_sleb128_matrix(_string_pool_codes(cols[k], st))
             fields.append((vm, vl))
-        elif t == "double":
-            fields.append(_const_field(
-                encode_sleb128(kidx) + b"\x01\x02", m))   # tag DOUBLE=2
-            dm = np.ascontiguousarray(
-                cols[k], dtype="<f8").view(np.uint8).reshape(m, 8)
-            fields.append((dm, np.full(m, 8, dtype=np.int64)))
-        elif t == "bool":
-            fields.append(_const_field(
-                encode_sleb128(kidx) + b"\x01\x01", m))   # tag BOOLEAN=1
-            bm = np.asarray(cols[k]).astype(bool).astype(
-                np.uint8).reshape(m, 1)
-            fields.append((bm, np.ones(m, dtype=np.int64)))
         else:
             raise CodecError(f"unsupported attributes_spec type {t!r}")
     return m, _fields_blob(fields)
@@ -493,45 +489,28 @@ def _free_map_columnar_entries(spec: dict[str, str],
 
 def encode_span_dataframe(
     pdf: pd.DataFrame,
-    group_col: Optional[str] = None,
-    resource_attrs_for=None,
-    scope: Optional[dict] = None,
-    schema_url: Optional[str] = None,
-    attributes_spec: Optional[dict[str, str]] = None,
+    attributes_spec: dict[str, str],
+    resource_attrs: dict,
 ) -> bytes:
-    """Encode a pandas span batch (columns ``SPAN_COLUMNS``) into one blob.
+    """Encode a pandas span batch into one blob holding ONE resourceSpans
+    group: ``resource_attrs`` is its resource attribute free map, the
+    scope is ``DEFAULT_SCOPE`` and both schemaUrls are null.
 
-    ``group_col`` splits rows into resourceSpans groups (one resource per
-    distinct value, e.g. language); ``resource_attrs_for(key)`` returns the
-    resource attribute free-map for a group. Rows are stably reordered by
-    group; diff/pool state spans the whole blob in final document order.
+    ``pdf`` holds the ``SPAN_COLUMNS`` plus one ``attr:<key>`` column per
+    ``attributes_spec`` key; together those columns are each span's
+    attribute free map (see ``_free_map_columnar_entries`` for the value
+    types). Diff/pool state spans the whole blob in row order.
     """
     definition = trace_model()
     if len(pdf) == 0:
         # no spans → resourceSpans coerces to null; empty string pool, 0 pools
         return b"\x00\x00cprval\x00"
-    scope = scope if scope is not None else DEFAULT_SCOPE
-    if group_col is not None and len(pdf):
-        pdf = pdf.sort_values(group_col, kind="stable")
-        group_keys, group_sizes = [], []
-        for key, g in pdf.groupby(group_col, sort=False):
-            group_keys.append(key)
-            group_sizes.append(len(g))
-    else:
-        group_keys = [None]
-        group_sizes = [len(pdf)]
-    if resource_attrs_for is None:
-        resource_attrs_for = lambda key: {  # noqa: E731
-            "service.name": f"crawler-{key}" if key is not None else "crawler"
-        }
+    for c in SPAN_COLUMNS:
+        if c not in pdf.columns:
+            raise CodecError(f"missing span column {c!r}")
 
     n = len(pdf)
-    col = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS if c in pdf.columns}
-    for c in SPAN_COLUMNS:
-        if c not in col:
-            if c == "attributes" and attributes_spec is not None:
-                continue  # columnar attributes: attr:<key> columns instead
-            raise CodecError(f"missing span column {c!r}")
+    col = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS}
 
     trace_id = _coerce_bytes(col["trace_id"])
     span_id = _coerce_bytes(col["span_id"])
@@ -556,13 +535,16 @@ def encode_span_dataframe(
     # ---- build pools in topological order ----------------------------
     # (children before parents; see topological_pool_order docstring)
     attr_pool_id = _SPANS_PATH + " attributes"
-    if attributes_spec is not None:
-        # columnar fast path: attributes live in attr:<key> columns; the
-        # pool dedup key is the value tuple. Vectorized get-or-insert:
-        # factorize each column, mix the per-column codes into one int64
-        # (mixed radix), factorize the mix — same first-appearance pool
-        # order as the tuple-dict loop, no per-row Python.
-        keys_sorted = sorted(attributes_spec)
+    keys_sorted = sorted(attributes_spec)
+    if not keys_sorted:
+        # an empty free map null-coerces, as in the scalar encoder
+        span_attr_codes = np.full(n, -1, dtype=np.int64)
+    else:
+        # attributes live in attr:<key> columns; the pool dedup key is the
+        # value tuple. Vectorized get-or-insert: factorize each column,
+        # mix the per-column codes into one int64 (mixed radix), factorize
+        # the mix — same first-appearance pool order as the tuple-dict
+        # loop, no per-row Python.
         acols = {k: pdf[f"attr:{k}"].to_numpy() for k in keys_sorted}
         col_codes = []
         total_bits = 0.0
@@ -594,23 +576,6 @@ def encode_span_dataframe(
         pools.entry_blobs[attr_pool_id] = _free_map_columnar_entries(
             attributes_spec, {k: acols[k][sel] for k in keys_sorted},
             pools.state)
-        pools.uniques[attr_pool_id] = []
-    else:
-        span_attr_mask = _null_mask(col["attributes"])
-        attr_keys = None
-        if "attributes_key" in pdf.columns:
-            # caller-supplied injective keys (skips structural freeze)
-            attr_keys = [
-                None if m else k
-                for m, k in zip(span_attr_mask,
-                                pdf["attributes_key"].to_numpy())
-            ]
-        span_attr_codes = pools.build(
-            attr_pool_id,
-            [None if m else v
-             for m, v in zip(span_attr_mask, col["attributes"])],
-            keys=attr_keys,
-        )
 
     ev_attrs = [e.get("attributes") for e in flat_events]
     ev_attr_mask = _null_mask(np.array(ev_attrs, dtype=object))
@@ -736,46 +701,19 @@ def encode_span_dataframe(
         {"message": m, "code": int(c)} for m, c in status_uniq_keys
     ]
 
-    resources = [
-        {"attributes": resource_attrs_for(k), "droppedAttributesCount": 0}
-        for k in group_keys
-    ]
     # child pools of the pooled resource/scope objects must be pre-built
-    # (topological invariant — encode_entries asserts no late growth)
-    res_attrs = [r["attributes"] for r in resources]
-    pools.build(
-        "resourceSpans item resource attributes",
-        [None if (a is None or len(a) == 0) else a for a in res_attrs],
-    )
+    # (topological invariant — encode_entries asserts no late growth);
+    # DEFAULT_SCOPE's attributes are empty, so they null-coerce unpooled
+    pools.build("resourceSpans item resource attributes",
+                [resource_attrs or None])
     scope_prefix = "resourceSpans item scopeSpans item scope"
-    scope_attrs = scope.get("attributes")
-    pools.build(
-        scope_prefix + " attributes",
-        [None if not scope_attrs else scope_attrs] * len(group_keys),
-    )
-    scope_name = scope.get("name") or None
-    pools.build(scope_prefix + " name", [scope_name] * len(group_keys),
+    pools.build(scope_prefix + " name", [DEFAULT_SCOPE["name"]], scalar=True)
+    pools.build(scope_prefix + " version", [DEFAULT_SCOPE["version"]],
                 scalar=True)
-    scope_version = scope.get("version") or None
-    pools.build(scope_prefix + " version",
-                [scope_version] * len(group_keys), scalar=True)
-
-    resource_codes = pools.build("resourceSpans item resource", resources)
-    scope_codes = pools.build(scope_prefix, [scope] * len(group_keys))
-    schema_url_val = None if (schema_url is None or schema_url == "") \
-        else schema_url
-    if schema_url_val is not None:
-        rs_schema_codes = pools.build(
-            "resourceSpans item schemaUrl",
-            [schema_url_val] * len(group_keys), scalar=True
-        )
-        ss_schema_codes = pools.build(
-            "resourceSpans item scopeSpans item schemaUrl",
-            [schema_url_val] * len(group_keys), scalar=True,
-        )
-    else:
-        rs_schema_codes = np.full(len(group_keys), -1)
-        ss_schema_codes = np.full(len(group_keys), -1)
+    resource_code = pools.build(
+        "resourceSpans item resource",
+        [{"attributes": resource_attrs, "droppedAttributesCount": 0}])[0]
+    scope_code = pools.build(scope_prefix, [DEFAULT_SCOPE])[0]
 
     # ---- serialize pool entries (topological order) -------------------
     from .definition import field_path_to_definition
@@ -871,50 +809,19 @@ def encode_span_dataframe(
     fields.append(_code_matrix(trace_codes))                    # traceId
     fields.append(_nullable_code_matrix(ts_codes))              # traceState
 
-    big = np.hstack([m for m, _ in fields])
-    mask = np.hstack([
-        np.arange(m.shape[1])[None, :] < np.asarray(l, dtype=np.int64)[:, None]
-        for m, l in fields
-    ])
-    flat_spans = big[mask].tobytes()
-    row_bytes = np.sum([np.asarray(l, dtype=np.int64) for _, l in fields],
-                       axis=0)
-    row_offsets = np.concatenate(
-        [[0], np.cumsum(row_bytes, dtype=np.int64)])
-
-    # ---- data stream: root → resourceSpans → groups -------------------
-    data = bytearray()
-    if not group_keys or n == 0 and group_keys == [None]:
-        data.append(0)  # resourceSpans null (empty array coerces to null)
-    else:
-        data.append(1)
-        data += encode_sleb128(len(group_keys))
-        offset = 0
-        for gi, size in enumerate(group_sizes):
-            # resourceSpans item fields sorted: resource, schemaUrl, scopeSpans
-            data += encode_sleb128(int(resource_codes[gi]))
-            if rs_schema_codes[gi] < 0:
-                data.append(0)
-            else:
-                data.append(1)
-                data += encode_sleb128(int(rs_schema_codes[gi]))
-            data.append(1)          # scopeSpans present
-            data += encode_sleb128(1)
-            # scopeSpans item fields sorted: schemaUrl, scope, spans
-            if ss_schema_codes[gi] < 0:
-                data.append(0)
-            else:
-                data.append(1)
-                data += encode_sleb128(int(ss_schema_codes[gi]))
-            data += encode_sleb128(int(scope_codes[gi]))
-            if size == 0:
-                data.append(0)      # empty spans array coerces to null
-            else:
-                data.append(1)
-                data += encode_sleb128(size)
-                data += flat_spans[row_offsets[offset]:
-                                   row_offsets[offset + size]]
-            offset += size
+    # ---- data stream: root → the one resourceSpans group -------------
+    # resourceSpans item fields sorted: resource, schemaUrl, scopeSpans;
+    # scopeSpans item fields sorted: schemaUrl, scope, spans
+    data = bytearray(b"\x01")          # resourceSpans present
+    data += encode_sleb128(1)
+    data += encode_sleb128(int(resource_code))
+    data += b"\x00\x01"               # schemaUrl null; scopeSpans present
+    data += encode_sleb128(1)
+    data += b"\x00"                    # schemaUrl null
+    data += encode_sleb128(int(scope_code))
+    data += b"\x01"                    # spans present
+    data += encode_sleb128(n)
+    data += _fields_blob(fields)
 
     # ---- meta block + frame (same layout as encoder.encode) -----------
     st = pools.state
@@ -933,10 +840,8 @@ def encode_span_dataframe(
                 meta += raw
     present_pools = [
         pid for pid in topological_pool_order(definition)
-        # skip never-used (all-null) pools; a count-0 entry_blob (empty
-        # input with attributes_spec set) counts as never-used too, so
-        # the skip is uniform with the scalar encoder's wire bytes
-        if st.pool_entries.get(pid) or pools.entry_blobs.get(pid, (0, b""))[0]
+        # skip never-used (all-null) pools, as the scalar encoder does
+        if st.pool_entries.get(pid) or pid in pools.entry_blobs
     ]
     meta += encode_sleb128(len(present_pools))
     for pool_id in present_pools:

@@ -245,24 +245,21 @@ def encode_traces_proto(document: dict) -> bytes:
     return b"".join(out)
 
 
-def spans_rows_to_proto(rows, resource_attrs: dict, scope: dict,
-                        schema_url: str = "") -> bytes:
+def spans_rows_to_proto(rows, resource_attrs: dict, scope: dict) -> bytes:
     """TracesData for one resource group from span dict rows (the generic
     path; the encode stage's hot arm uses :func:`spans_columns_to_proto`)."""
     spans_b = b"".join(_len_delim(2, _span(sp)) for sp in rows)
-    return _wrap_resource_group(spans_b, resource_attrs, scope, schema_url)
+    return _wrap_resource_group(spans_b, resource_attrs, scope)
 
 
-def _wrap_resource_group(spans_b: bytes, resource_attrs: dict, scope: dict,
-                         schema_url: str = "") -> bytes:
+def _wrap_resource_group(spans_b: bytes, resource_attrs: dict,
+                         scope: dict) -> bytes:
+    """One resourceSpans group with one scopeSpans, no schemaUrls (the
+    shape the batch encoder writes)."""
     res_payload = _attributes(1, resource_attrs)
     scope_b = _scope(scope)
-    ss = _len_delim(2, (
-        (_len_delim(1, scope_b) if scope_b else b"")
-        + spans_b + _f_str(3, schema_url)
-    ))
-    return _len_delim(1, _len_delim(1, res_payload) + ss
-                      + _f_str(3, schema_url))
+    ss = _len_delim(2, (_len_delim(1, scope_b) if scope_b else b"") + spans_b)
+    return _len_delim(1, _len_delim(1, res_payload) + ss)
 
 
 #: precomputed small varints (proto lengths are overwhelmingly < 16384)
@@ -377,7 +374,6 @@ def spans_columns_to_proto(
     url, n_chars, events, links, dropped_links,
     status_message, status_code,
     const_attrs: dict, resource_attrs: dict, scope: dict,
-    schema_url: str = "",
 ) -> bytes:
     """Column-driven TracesData marshal for the bench comparison arm.
 
@@ -548,7 +544,7 @@ def spans_columns_to_proto(
         ap(idp); ap(tsp); ap(nmp); ap(kp); ap(tp); ap(atp)
         ap(evp); ap(lkp); ap(dlp); ap(stp)
     spans_b = b"".join(flat)
-    return _wrap_resource_group(spans_b, resource_attrs, scope, schema_url)
+    return _wrap_resource_group(spans_b, resource_attrs, scope)
 
 
 def _freeze_attrs(attrs):

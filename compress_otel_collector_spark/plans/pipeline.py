@@ -162,18 +162,10 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
         json_view = spans.assign(
             trace_id=hex_tid, span_id=hex_sid, parent_span_id="",
             links=links_view)
-        if "attributes" in json_view.columns:
-            json_view = json_view.drop(columns=["attributes"])
         return json_view.to_json(orient="records").encode()
     n = len(spans)
     cols: dict = {}
     for c in spans.columns:
-        if c == "attributes":
-            # attribute content rides the attr:* columns; a raw
-            # 'attributes' column would double-serialize it and skew
-            # json_zstd_bytes vs the proto arm (mirrors the arrow arm's
-            # exclusion list)
-            continue
         if c == "trace_id":
             cols[c] = hex_tid.tolist()
         elif c == "span_id":
@@ -260,11 +252,11 @@ def _span_links_cells(doc_ids, trace_ids, links_every: int = 7):
 
 def _group_spans_frame(g: pd.DataFrame, lang, bucket,
                        events_every: int, links_every: int):
-    """One route group → the span frame + attrs spec the codec encodes.
-
-    Shared by the hot loop (``_encode_batches``) and the arm profiler
-    (``scripts/profile_arms.py``) so the profiled path IS the shipped
-    path. Span-shape lockstep note (CLAUDE.md) applies here.
+    """One route group → (span frame, attrs spec, resource attributes):
+    the arguments of ``codec.batch.encode_span_dataframe``, also read by
+    the comparison arms. Its own function so the no-JVM tests can encode
+    exactly what ``_encode_batches`` encodes. Span-shape lockstep note
+    (CLAUDE.md) applies here.
     """
     import numpy as np
 
@@ -298,24 +290,19 @@ def _group_spans_frame(g: pd.DataFrame, lang, bucket,
         attrs_spec["lang"] = "str"
     cols["events"] = _span_events_cells(doc_ids, starts, events_every)
     cols["links"] = _span_links_cells(doc_ids, trace_ids, links_every)
+    resource = {"service.name": f"crawler-{lang}", "host.bucket": int(bucket)}
     # ONE construction (r8): the former build-then-5×__setitem__ shape
     # paid a pandas block-manager consolidation per added column
-    return pd.DataFrame(cols, copy=False), attrs_spec
+    return pd.DataFrame(cols, copy=False), attrs_spec, resource
 
 
-def _arm_sizes(spans: pd.DataFrame, lang, bucket, blob: bytes,
-               zstd, gzip, timings=None):
+def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
+               zstd, gzip):
     """Comparison-arm byte counts for one group: (gzip, proto+zstd,
-    json+zstd, arrow+zstd). ``timings`` (optional dict) accumulates
-    per-component seconds — the profiler's hook; the hot path passes
-    None and pays only a handful of perf_counter calls per group."""
-    import time as _time
-
+    json+zstd, arrow+zstd)."""
     import pyarrow as pa
 
-    t0 = _time.perf_counter()
     gz = len(gzip.compress(blob, asbytes=True))
-    t1 = _time.perf_counter()
     # protobuf arm — the reference's REAL comparison
     # (trace.go:41-67: ptrace ProtoMarshaler + zstd), full
     # fidelity incl. events/links/attributes. Column-driven
@@ -340,23 +327,16 @@ def _arm_sizes(spans: pd.DataFrame, lang, bucket, blob: bytes,
         spans["status_message"].to_numpy(),
         spans["status_code"].to_numpy(),
         const_attrs={"http.status_code": 200, **lang_attr},
-        resource_attrs={
-            "service.name": f"crawler-{lang}",
-            "host.bucket": int(bucket),
-        },
+        resource_attrs=resource,
         scope=DEFAULT_SCOPE,
     )
-    t2 = _time.perf_counter()
     pz = len(zstd.compress(proto, asbytes=True))
-    t3 = _time.perf_counter()
     # JSON marshal arm (the reference's JSONMarshaler
     # comparison, trace.go:95-105): OTLP-JSON-style hex ids;
     # attr:* columns carry the attribute content; events and
     # links serialize too (full fidelity, like the codec)
     js = _json_arm_bytes(spans)
-    t4 = _time.perf_counter()
     jz = len(zstd.compress(js, asbytes=True))
-    t5 = _time.perf_counter()
     # binary columnar arm (stand-in for the proto arm,
     # trace.go:41-47): Arrow IPC stream + zstd. Direct
     # pa.array construction — from_pandas pays index and
@@ -366,19 +346,11 @@ def _arm_sizes(spans: pd.DataFrame, lang, bucket, blob: bytes,
     tbl = pa.table({
         c: pa.array(spans[c].to_numpy())
         for c in spans.columns
-        if c not in ("attributes", "events", "links")
+        if c not in ("events", "links")
     })
     with pa.ipc.new_stream(sink, tbl.schema) as w:
         w.write_table(tbl)
-    t6 = _time.perf_counter()
     az = len(zstd.compress(sink.getvalue(), asbytes=True))
-    t7 = _time.perf_counter()
-    if timings is not None:
-        for k, v in (("gzip_blob", t1 - t0), ("proto_build", t2 - t1),
-                     ("proto_zstd", t3 - t2), ("json_build", t4 - t3),
-                     ("json_zstd", t5 - t4), ("arrow_build", t6 - t5),
-                     ("arrow_zstd", t7 - t6)):
-            timings[k] = timings.get(k, 0.0) + v
     return gz, pz, jz, az
 
 
@@ -409,20 +381,13 @@ def _encode_batches(arms: bool, events_every: int = 10,
             out = []
             for (lang, bucket), g in pdf.groupby(["lang", "host_bucket"],
                                                  sort=True, dropna=False):
-                spans, attrs_spec = _group_spans_frame(
+                spans, attrs_spec, resource = _group_spans_frame(
                     g, lang, bucket, events_every, links_every)
-                blob = encode_span_dataframe(
-                    spans,
-                    attributes_spec=attrs_spec,
-                    resource_attrs_for=lambda _k: {
-                        "service.name": f"crawler-{lang}",
-                        "host.bucket": int(bucket),
-                    },
-                )
+                blob = encode_span_dataframe(spans, attrs_spec, resource)
                 blob_z = zstd.compress(blob, asbytes=True)
                 if arms:
                     gz, pz, jz, az = _arm_sizes(
-                        spans, lang, bucket, blob, zstd, gzip)
+                        spans, lang, resource, blob, zstd, gzip)
                 else:
                     gz, jz, az, pz = -1, -1, -1, -1
                 out.append({
@@ -483,9 +448,9 @@ def encode_pages(enriched: DataFrame, n_salts: int = 16,
 def _pre_encode_frame(enriched: DataFrame, n_salts: int = 16,
                       shuffle_partitions: Optional[int] = None) -> DataFrame:
     """The frame ``encode_pages`` feeds to ``_encode_batches``: narrow
-    exchange, group-cohesion sort, span derivation. Shared with the arm
-    profiler (``scripts/profile_arms.py``) so profiled input == shipped
-    input."""
+    exchange, group-cohesion sort, span derivation. Its columns (url,
+    lang, host_bucket, doc_id and the ``span_columns_sql`` spans) are
+    what ``_group_spans_frame`` reads per route group."""
     narrow = enriched.select(
         "url", "lang", "host_bucket", "doc_id", "warc_ts",
         F.length(F.col("text_extracted")).cast("long").alias("n_chars_pre"),

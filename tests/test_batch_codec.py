@@ -2,8 +2,13 @@
 
 The batch encoder assigns pool indices column-major (the scalar/reference
 encoder row-major), so blobs differ byte-wise but MUST decode to the same
-normalized document. Also pins determinism and dictionary compression wins.
+normalized document. The batch encoder takes one input shape — span
+columns plus typed ``attr:<key>`` attribute columns, one resource — so
+these tests feed it that shape, and one test feeds it the exact frame the
+pipeline builds. Also pins determinism and dictionary compression wins.
 """
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -20,8 +25,13 @@ from compress_otel_collector_spark.codec.batch import (
     SPAN_COLUMNS,
     encode_span_dataframe,
 )
+from compress_otel_collector_spark.codec.values import CodecError
 
 T = 1_700_000_000_000_000_000
+
+#: the span-attribute columns ``make_pdf`` builds
+SPEC = {"http.url": "str", "http.status_code": "int"}
+RESOURCE = {"service.name": "crawler", "host.bucket": 3}
 
 
 def make_pdf(n=50, with_events=True, with_links=True, seed=7):
@@ -67,11 +77,8 @@ def make_pdf(n=50, with_events=True, with_links=True, seed=7):
                 "kind": i % 6,
                 "start_ns": T + int(rng.integers(0, 10_000)),
                 "end_ns": T + int(rng.integers(10_000, 20_000)),
-                "attributes": {
-                    "http.url": f"https://h{i % 9}.example.com/p{i}",
-                    "http.status_code": 200 if i % 7 else 404,
-                    "score": float(i % 3) / 2.0,
-                },
+                "attr:http.url": f"https://h{i % 9}.example.com/p{i}",
+                "attr:http.status_code": 200 if i % 7 else 404,
                 "dropped_attributes_count": 0,
                 "events": events,
                 "dropped_events_count": 0,
@@ -85,119 +92,106 @@ def make_pdf(n=50, with_events=True, with_links=True, seed=7):
     return pd.DataFrame(rows)
 
 
-def pdf_to_document(pdf, group_col=None, resource_attrs_for=None,
-                    scope=None, schema_url=None):
-    """Build the equivalent value-tree document for the scalar encoder."""
-    scope = scope if scope is not None else DEFAULT_SCOPE
-    if resource_attrs_for is None:
-        resource_attrs_for = lambda key: {  # noqa: E731
-            "service.name": f"crawler-{key}" if key is not None else "crawler"
-        }
-    if group_col is not None and len(pdf):
-        pdf = pdf.sort_values(group_col, kind="stable")
-        groups = [(k, g) for k, g in pdf.groupby(group_col, sort=False)]
+def _span(r, spec):
+    """One frame row as the scalar encoder's span object."""
+    return {
+        "traceId": bytes(r["trace_id"]),
+        "spanId": bytes(r["span_id"]),
+        "traceState": r["trace_state"],
+        "parentSpanId": bytes(r["parent_span_id"]),
+        "name": r["name"],
+        "kind": int(r["kind"]),
+        "startTimeUnixNano": int(r["start_ns"]),
+        "endTimeUnixNano": int(r["end_ns"]),
+        "attributes": {
+            k: int(r[f"attr:{k}"]) if t == "int" else r[f"attr:{k}"]
+            for k, t in spec.items()
+        },
+        "droppedAttributesCount": int(r["dropped_attributes_count"]),
+        "events": list(r["events"]),
+        "droppedEventsCount": int(r["dropped_events_count"]),
+        "links": list(r["links"]),
+        "droppedLinksCount": int(r["dropped_links_count"]),
+        "status": {
+            "message": r["status_message"],
+            "code": int(r["status_code"]),
+        },
+    }
+
+
+def pdf_to_document(pdf, spec=SPEC, resource_attrs=RESOURCE,
+                    group_col=None):
+    """The equivalent value-tree document for the scalar encoder: one
+    resourceSpans group — what ``encode_span_dataframe`` emits — or, for
+    the proto-arm tests, one group per ``group_col`` value with resource
+    ``service.name = crawler-<value>``."""
+    if group_col is None:
+        groups = [(resource_attrs, pdf)]
     else:
-        groups = [(None, pdf)]
-    resource_spans = []
-    for key, g in groups:
-        spans = []
-        for _, r in g.iterrows():
-            spans.append(
-                {
-                    "traceId": bytes(r["trace_id"]),
-                    "spanId": bytes(r["span_id"]),
-                    "traceState": r["trace_state"],
-                    "parentSpanId": bytes(r["parent_span_id"]),
-                    "name": r["name"],
-                    "kind": int(r["kind"]),
-                    "startTimeUnixNano": int(r["start_ns"]),
-                    "endTimeUnixNano": int(r["end_ns"]),
-                    "attributes": r["attributes"],
-                    "droppedAttributesCount": int(
-                        r["dropped_attributes_count"]),
-                    "events": list(r["events"]),
-                    "droppedEventsCount": int(r["dropped_events_count"]),
-                    "links": list(r["links"]),
-                    "droppedLinksCount": int(r["dropped_links_count"]),
-                    "status": {
-                        "message": r["status_message"],
-                        "code": int(r["status_code"]),
-                    },
-                }
-            )
-        resource_spans.append(
-            {
-                "resource": {
-                    "attributes": resource_attrs_for(key),
-                    "droppedAttributesCount": 0,
-                },
-                "scopeSpans": [
-                    {"scope": scope, "spans": spans,
-                     "schemaUrl": schema_url or ""}
-                ],
-                "schemaUrl": schema_url or "",
-            }
-        )
-    return {"resourceSpans": resource_spans}
+        groups = [({"service.name": f"crawler-{k}"}, g)
+                  for k, g in pdf.groupby(group_col, sort=True)]
+    return {"resourceSpans": [
+        {
+            "resource": {"attributes": attrs, "droppedAttributesCount": 0},
+            "scopeSpans": [{
+                "scope": DEFAULT_SCOPE,
+                "spans": [_span(r, spec) for _, r in g.iterrows()],
+                "schemaUrl": "",
+            }],
+            "schemaUrl": "",
+        }
+        for attrs, g in groups
+    ]}
 
 
-@pytest.mark.parametrize("group_col", [None, "lang"])
-def test_batch_matches_scalar_decoded(group_col):
+@pytest.mark.parametrize("lang_col", [None, "lang"])
+def test_batch_matches_scalar_decoded(lang_col):
+    """With and without a per-span ``lang`` attribute column — the
+    pipeline's null-lang and real-lang route groups."""
     pdf = make_pdf(60)
-    blob = encode_span_dataframe(pdf, group_col=group_col)
-    doc = pdf_to_document(pdf, group_col=group_col)
-    scalar_blob = encode(doc, trace_model())
+    spec = dict(SPEC)
+    if lang_col is not None:
+        pdf["attr:lang"] = pdf[lang_col]
+        spec["lang"] = "str"
+    blob = encode_span_dataframe(pdf, spec, RESOURCE)
+    doc = pdf_to_document(pdf, spec)
     m = trace_model()
-    assert decode(blob, m) == decode(scalar_blob, m) == normalize(doc, m)
+    assert decode(blob, m) == decode(encode(doc, m), m) == normalize(doc, m)
 
 
 def test_batch_deterministic():
     pdf = make_pdf(40)
-    assert encode_span_dataframe(pdf, group_col="lang") == \
-        encode_span_dataframe(pdf, group_col="lang")
+    assert encode_span_dataframe(pdf, SPEC, RESOURCE) == \
+        encode_span_dataframe(pdf, SPEC, RESOURCE)
 
 
 def test_batch_no_events_links():
     pdf = make_pdf(25, with_events=False, with_links=False)
-    blob = encode_span_dataframe(pdf)
+    blob = encode_span_dataframe(pdf, SPEC, RESOURCE)
     m = trace_model()
     assert decode(blob, m) == normalize(pdf_to_document(pdf), m)
 
 
 def test_batch_empty():
     pdf = make_pdf(0)
-    blob = encode_span_dataframe(pdf)
+    blob = encode_span_dataframe(pdf, SPEC, RESOURCE)
     assert decode(blob, trace_model()) == {"resourceSpans": None}
 
 
 def test_batch_single_row():
     pdf = make_pdf(1)
     m = trace_model()
-    assert decode(encode_span_dataframe(pdf), m) == normalize(
-        pdf_to_document(pdf), m
-    )
-
-
-def test_schema_url_plumbs_through():
-    pdf = make_pdf(5)
-    blob = encode_span_dataframe(
-        pdf, group_col="lang", schema_url="https://example.com/schema"
-    )
-    out = decode(blob, trace_model())
-    assert out["resourceSpans"][0]["schemaUrl"] == "https://example.com/schema"
-    assert (
-        out["resourceSpans"][0]["scopeSpans"][0]["schemaUrl"]
-        == "https://example.com/schema"
-    )
+    assert decode(encode_span_dataframe(pdf, SPEC, RESOURCE), m) == \
+        normalize(pdf_to_document(pdf), m)
 
 
 def test_dictionary_compression_wins():
     """Repetitive batches (the web-text case) must shrink via pools."""
     pdf = make_pdf(400)
-    blob = encode_span_dataframe(pdf, group_col="lang")
-    # ~25 distinct attribute dicts / ids pooled across 400 spans: the blob
-    # must be far smaller than 400 × the single-span cost.
-    single = len(encode_span_dataframe(make_pdf(1)))
+    blob = encode_span_dataframe(pdf, SPEC, RESOURCE)
+    # ids, names and statuses pooled across 400 spans: the blob must be
+    # far smaller than 400 × the single-span cost.
+    single = len(encode_span_dataframe(make_pdf(1), SPEC, RESOURCE))
     assert len(blob) < 0.25 * 400 * single
 
 
@@ -205,16 +199,109 @@ def test_all_columns_documented():
     assert set(SPAN_COLUMNS) <= set(make_pdf(1).columns)
 
 
+def test_unsupported_attribute_type_raises():
+    """The attribute columns are 'str' or 'int'; any other declared type
+    raises rather than encoding something the spec did not promise."""
+    pdf = make_pdf(3, with_events=False, with_links=False)
+    for t in ("double", "bool", "bytes"):
+        with pytest.raises(CodecError, match="unsupported attributes_spec"):
+            encode_span_dataframe(pdf, {"http.url": t}, RESOURCE)
+
+
+@pytest.mark.parametrize("lang", ["en", np.nan], ids=["en", "null"])
+def test_production_group_frame_matches_scalar(lang):
+    """batch ≡ scalar on exactly what the pipeline encodes: a frame with
+    ``_pre_encode_frame``'s columns, run through ``_group_spans_frame``
+    for a real-lang and a null-lang route group, with events (doc_id %
+    10), nested event attributes (% 20) and links (% 7) all present. The
+    expected document is written out here from the span-shape rules, not
+    from the pipeline's helpers."""
+    from compress_otel_collector_spark.plans.pipeline import (
+        _group_spans_frame,
+    )
+
+    doc_ids = np.arange(100, 160, dtype=np.int64)  # 100, 105, 140 hit all
+    urls = [f"https://h{d % 3}.example.com/p/{d}" for d in doc_ids]
+    md5 = [hashlib.md5(u.encode()).digest() for u in urls]
+    starts = T + doc_ids * 1000
+    n_chars = 100 + doc_ids % 9
+    m = trace_model()
+    nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
+    # _encode_batches' groupby(dropna=False) keys a null lang as NaN
+    g = pd.DataFrame({
+        "url": urls,
+        "lang": [None if pd.isna(lang) else lang] * len(doc_ids),
+        "host_bucket": np.full(len(doc_ids), 3, dtype=np.int32),
+        "doc_id": doc_ids,
+        "trace_id": md5,
+        "span_id": [h[:8] for h in md5],
+        "parent_span_id": [b""] * len(doc_ids),
+        "trace_state": ["cc=1" if d % 10 == 0 else "" for d in doc_ids],
+        "name": [f"GET /p{d % 20}" for d in doc_ids],
+        "kind": doc_ids % 6,
+        "start_ns": starts,
+        "end_ns": starts + n_chars * 1_000_000,
+        "dropped_attributes_count": np.zeros(len(doc_ids), np.int64),
+        "dropped_events_count": np.zeros(len(doc_ids), np.int64),
+        "dropped_links_count": doc_ids % 2,
+        "status_message": ["OK" if d % 4 == 0 else "" for d in doc_ids],
+        "status_code": doc_ids % 3,
+        "n_chars": n_chars,
+    })
+    spans, spec, resource = _group_spans_frame(g, lang, 3, 10, 7)
+    blob = encode_span_dataframe(spans, spec, resource)
+
+    lang_attr = {} if pd.isna(lang) else {"lang": lang}
+    want = []
+    for i, d in enumerate(doc_ids):
+        start = int(starts[i])
+        want.append({
+            "traceId": md5[i], "spanId": md5[i][:8],
+            "parentSpanId": b"",
+            "traceState": "cc=1" if d % 10 == 0 else "",
+            "name": f"GET /p{d % 20}", "kind": int(d % 6),
+            "startTimeUnixNano": start,
+            "endTimeUnixNano": start + int(n_chars[i]) * 1_000_000,
+            "attributes": {"http.url": urls[i], "http.status_code": 200,
+                           "n_chars": int(n_chars[i]), **lang_attr},
+            "droppedAttributesCount": 0,
+            "events": [{
+                "timeUnixNano": start + 1_000_000, "name": "fetch",
+                "attributes": nested if d % 20 == 0 else {},
+                "droppedAttributesCount": 0,
+            }] if d % 10 == 0 else [],
+            "droppedEventsCount": 0,
+            "links": [{
+                "traceId": md5[i], "spanId": md5[i][8:],
+                "traceState": "", "attributes": {"rel": "prev"},
+                "droppedAttributesCount": 0,
+            }] if d % 7 == 0 else [],
+            "droppedLinksCount": int(d % 2),
+            "status": {"message": "OK" if d % 4 == 0 else "",
+                       "code": int(d % 3)},
+        })
+    doc = {"resourceSpans": [{
+        "resource": {
+            # a null-lang group's service.name reads "crawler-nan"
+            "attributes": {"service.name": f"crawler-{lang}",
+                           "host.bucket": 3},
+            "droppedAttributesCount": 0,
+        },
+        "scopeSpans": [{"scope": DEFAULT_SCOPE, "spans": want,
+                        "schemaUrl": ""}],
+        "schemaUrl": "",
+    }]}
+    assert decode(blob, m) == decode(encode(doc, m), m) == \
+        normalize(doc, m)
+
+
 def test_null_str_attribute_raises():
     """A null in a 'str' attr: column must raise, not corrupt (factorize
     maps NaN to code -1, which would silently alias the last pool entry)."""
-    from compress_otel_collector_spark.codec.values import CodecError
-
     pdf = make_pdf(4, with_events=False, with_links=False)
-    pdf = pdf.drop(columns=["attributes"])
     pdf["attr:http.url"] = ["a", "b", None, "d"]
     with pytest.raises(CodecError, match="null value"):
-        encode_span_dataframe(pdf, attributes_spec={"http.url": "str"})
+        encode_span_dataframe(pdf, SPEC, RESOURCE)
 
 
 def test_nul_containing_strings_stay_distinct():
@@ -231,7 +318,7 @@ def test_nul_containing_strings_stay_distinct():
             "trace_id": bytes([i + 1]) * 16, "span_id": bytes([i + 1]) * 8,
             "parent_span_id": b"", "trace_state": ts, "name": nm, "kind": 2,
             "start_ns": 1, "end_ns": 2,
-            "attributes": {"k": av, "k\x002": 1},
+            "attr:k": av, "attr:k\x002": 1,
             "dropped_attributes_count": 0,
             "events": [{"timeUnixNano": 5, "name": nm, "attributes": {},
                         "droppedAttributesCount": 0}],
@@ -239,8 +326,9 @@ def test_nul_containing_strings_stay_distinct():
             "links": [], "dropped_links_count": 0,
             "status_message": sm, "status_code": 0, "lang": "en"})
     pdf = pd.DataFrame(rows)
-    got = decode(encode_span_dataframe(pdf), m)
-    doc = pdf_to_document(pdf)
+    spec = {"k": "str", "k\x002": "int"}
+    got = decode(encode_span_dataframe(pdf, spec, RESOURCE), m)
+    doc = pdf_to_document(pdf, spec)
     assert got == decode(encode(doc, m), m) == normalize(doc, m)
     names = [sp["name"] for rs in got["resourceSpans"]
              for ss in rs["scopeSpans"] for sp in ss["spans"]]
@@ -248,15 +336,13 @@ def test_nul_containing_strings_stay_distinct():
 
 
 def test_nul_strings_in_columnar_attributes():
-    """Same NUL-exactness through the columnar attributes fast path
+    """Same NUL-exactness through the attribute columns' pool dedup
     (attr:<key> columns + attributes_spec)."""
     m = trace_model()
     pdf = make_pdf(4)
-    pdf = pdf.drop(columns=["attributes"])
     pdf["attr:v"] = ["a", "a\x00b", "a\x00", "a"]
     pdf["attr:n"] = [1, 2, 3, 4]
-    blob = encode_span_dataframe(
-        pdf, attributes_spec={"v": "str", "n": "int"})
+    blob = encode_span_dataframe(pdf, {"v": "str", "n": "int"}, RESOURCE)
     got = decode(blob, m)
     vals = [(sp["attributes"]["v"], sp["attributes"]["n"])
             for rs in got["resourceSpans"] for ss in rs["scopeSpans"]
@@ -292,7 +378,7 @@ def test_oversized_string_pool_entry_roundtrips():
     pdf = make_pdf(6, with_events=False, with_links=False)
     long_name = "n" * (_MAX_PAYLOAD_PAD + 7)
     pdf.loc[2, "name"] = long_name
-    blob = encode_span_dataframe(pdf)
+    blob = encode_span_dataframe(pdf, SPEC, RESOURCE)
     got = decode(blob, m)
     names = [sp["name"] for rs in got["resourceSpans"]
              for ss in rs["scopeSpans"] for sp in ss["spans"]]
@@ -378,16 +464,9 @@ def test_len_prefixed_blob_padded_budget_fallback():
 
 
 def test_empty_input_with_attributes_spec_skips_pool():
-    """Empty input with attributes_spec set must emit the same wire bytes
-    as the no-spec empty encode — the never-used-pool skip is uniform
-    across the columnar and generic paths (r7 ADVICE fix)."""
-    pdf = make_pdf(2).iloc[:0]
-    plain = encode_span_dataframe(pdf)
-    specced = pdf.drop(columns=["attributes"]).assign(**{
-        "attr:v": pd.Series([], dtype=object),
-        "attr:n": pd.Series([], dtype=object),
-    })
-    blob = encode_span_dataframe(
-        specced, attributes_spec={"v": "str", "n": "int"})
-    assert blob == plain
+    """Empty input emits the scalar encoder's bytes for an empty document:
+    no string pool, no pools (the attributes pool is skipped, not written
+    with zero entries), resourceSpans null."""
+    blob = encode_span_dataframe(make_pdf(2).iloc[:0], SPEC, RESOURCE)
+    assert blob == encode({"resourceSpans": []}, trace_model())
     assert decode(blob, trace_model()) == {"resourceSpans": None}

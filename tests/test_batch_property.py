@@ -1,6 +1,5 @@
 """Property-based batch↔scalar equivalence over randomized span batches."""
 
-import numpy as np
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
@@ -20,10 +19,23 @@ _attr_value = st.one_of(
     st.none(),
 )
 
+#: span-attribute column values: 'str' mixes in NUL-bearing lookalikes
+#: ('a' vs 'a\x00b', '' vs '\x00') and empties; 'int' the int64 extremes
+_column_value = {
+    "str": st.one_of(st.text(max_size=10),
+                     st.text(alphabet="a\x00b", max_size=4)),
+    "int": st.one_of(st.integers(-(2**63), 2**63 - 1),
+                     st.sampled_from([0, -1, 2**63 - 1, -(2**63)])),
+}
+
 
 @st.composite
-def span_rows(draw):
+def span_batches(draw):
+    """(frame, attributes spec): typed ``attr:<key>`` span-attribute
+    columns, random event and link attribute dicts."""
     n = draw(st.integers(min_value=1, max_value=12))
+    spec = draw(st.dictionaries(st.text(max_size=5),
+                                st.sampled_from(["str", "int"]), max_size=3))
     rows = []
     for i in range(n):
         has_events = draw(st.booleans())
@@ -57,8 +69,7 @@ def span_rows(draw):
             "kind": draw(st.integers(0, 5)),
             "start_ns": T + draw(st.integers(-10**6, 10**6)),
             "end_ns": T + draw(st.integers(-10**6, 10**6)),
-            "attributes": draw(st.dictionaries(
-                st.text(max_size=6), _attr_value, max_size=3)),
+            **{f"attr:{k}": draw(_column_value[t]) for k, t in spec.items()},
             "dropped_attributes_count": draw(st.integers(0, 2)),
             "events": events,
             "dropped_events_count": draw(st.integers(0, 2)),
@@ -66,45 +77,44 @@ def span_rows(draw):
             "dropped_links_count": draw(st.integers(0, 2)),
             "status_message": draw(st.text(max_size=6)),
             "status_code": draw(st.integers(0, 2)),
-            "lang": draw(st.sampled_from(["en", "zh", "de"])),
         })
-    return pd.DataFrame(rows)
+    return pd.DataFrame(rows), spec
 
 
-@settings(max_examples=40, deadline=None)
-@given(pdf=span_rows(), grouped=st.booleans())
-def test_batch_equals_scalar_on_random_batches(pdf, grouped):
-    group_col = "lang" if grouped else None
-    blob = encode_span_dataframe(pdf, group_col=group_col)
-    doc = pdf_to_document(pdf, group_col=group_col)
+@settings(max_examples=60, deadline=None)
+@given(batch=span_batches(), resource=st.dictionaries(
+    st.text(max_size=5), st.text(max_size=5), min_size=1, max_size=2))
+def test_batch_equals_scalar_on_random_batches(batch, resource):
+    """Zero ints and empty strings stay values inside the attribute free
+    map (only an absent key is absent); an empty spec null-coerces."""
+    pdf, spec = batch
+    blob = encode_span_dataframe(pdf, spec, resource)
+    doc = pdf_to_document(pdf, spec, resource)
     m = trace_model()
     assert decode(blob, m) == decode(encode(doc, m), m) == normalize(doc, m)
 
 
 @st.composite
 def typed_attr_columns(draw):
-    """Random typed attribute columns for the columnar fast path."""
+    """Random typed attribute columns for the columnar attributes path."""
     n = draw(st.integers(min_value=1, max_value=10))
     ints = draw(st.lists(st.integers(-(2**63), 2**63 - 1),
                          min_size=n, max_size=n))
     strs = draw(st.lists(st.text(max_size=10), min_size=n, max_size=n))
-    dbls = draw(st.lists(
-        st.floats(allow_nan=False, allow_infinity=False, width=64),
-        min_size=n, max_size=n))
-    bools = draw(st.lists(st.booleans(), min_size=n, max_size=n))
-    return n, ints, strs, dbls, bools
+    return n, ints, strs
 
 
 @settings(max_examples=40, deadline=None)
 @given(cols=typed_attr_columns())
 def test_columnar_attributes_equal_scalar(cols):
-    """The PRODUCTION attributes path (attr:<key> columns + spec) must
-    decode identically to the scalar encoder over the same attribute dicts
-    — including embedded NULs, empty strings, int64 extremes, and zero
-    values (which must NOT null-coerce inside free maps: only None does).
+    """The attributes path (attr:<key> columns + spec) must decode
+    identically to the scalar encoder over the same attribute dicts,
+    built here straight from the drawn values — including embedded NULs,
+    empty strings, int64 extremes, and zero values (which must NOT
+    null-coerce inside free maps: only None does).
     """
-    n, ints, strs, dbls, bools = cols
-    base = {
+    n, ints, strs = cols
+    columnar = pd.DataFrame({
         "trace_id": [bytes([i + 1]) * 16 for i in range(n)],
         "span_id": [bytes([i + 1]) * 8 for i in range(n)],
         "parent_span_id": [b""] * n,
@@ -120,22 +130,15 @@ def test_columnar_attributes_equal_scalar(cols):
         "dropped_links_count": [0] * n,
         "status_message": [""] * n,
         "status_code": [0] * n,
-        "lang": ["en"] * n,
-    }
-    columnar = pd.DataFrame(base)
+    })
     columnar["attr:i"] = pd.Series(ints, dtype=object)
     columnar["attr:s"] = pd.Series(strs, dtype=object)
-    columnar["attr:d"] = pd.Series(dbls, dtype=object)
-    columnar["attr:b"] = pd.Series(bools, dtype=object)
-    blob = encode_span_dataframe(
-        columnar, attributes_spec={"i": "int", "s": "str",
-                                   "d": "double", "b": "bool"})
+    resource = {"service.name": "crawler"}
+    blob = encode_span_dataframe(columnar, {"i": "int", "s": "str"}, resource)
 
-    scalar_pdf = pd.DataFrame(base)
-    scalar_pdf["attributes"] = [
-        {"i": ints[k], "s": strs[k], "d": dbls[k], "b": bools[k]}
-        for k in range(n)
-    ]
-    doc = pdf_to_document(scalar_pdf)
+    doc = pdf_to_document(columnar, {}, resource)
+    spans = doc["resourceSpans"][0]["scopeSpans"][0]["spans"]
+    for k, span in enumerate(spans):
+        span["attributes"] = {"i": ints[k], "s": strs[k]}
     m = trace_model()
     assert decode(blob, m) == decode(encode(doc, m), m)

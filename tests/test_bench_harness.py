@@ -198,11 +198,18 @@ class TestStandingSections:
             assert section in body
 
     def test_rewrite_losing_floor_table_raises(self, tmp_path, monkeypatch):
+        """The check runs before the write: a refused rewrite leaves the
+        existing BASELINE.md byte-identical."""
         monkeypatch.chdir(tmp_path)
+        existing = tmp_path / "BENCH" / "BASELINE.md"
+        existing.parent.mkdir()
+        existing.write_bytes(b"# prior baseline\n## Arms cost floor\n")
         results, ratios = _fake_campaign()
         with pytest.raises(RuntimeError, match="Arms cost floor"):
             bench.write_baseline_md(results, 0.95, 1.0, 100, ratios,
                                     ratios, notes="")
+        assert existing.read_bytes() == \
+            b"# prior baseline\n## Arms cost floor\n"
 
     def test_repo_notes_carry_the_floor_table(self):
         notes = (REPO / "BENCH" / "NOTES.md").read_text()
