@@ -247,7 +247,6 @@ def materialize_pages(spark, n_pages: int, realistic: bool = False) -> str:
 
 def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
                        n_salts: int = 8, realistic: bool = False,
-                       events_every: int = 10,
                        shuffle_partitions: int | None = None):
     """parse→enrich→encode→aggregate over n synthetic pages; returns
     (seconds, pages, ratio dict). Timed from the parquet scan."""
@@ -265,7 +264,6 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
     t0 = time.time()
     enriched = enrich_stage(parse_stage(pages), spark)
     agg = aggregate_stage(encode_pages(enriched, n_salts=n_salts, arms=arms,
-                                       events_every=events_every,
                                        shuffle_partitions=shuffle_partitions))
     row = agg.agg(
         F.sum("blobs").alias("blobs"),

@@ -16,9 +16,13 @@ Common-Crawl-style pages table:
   the repartition on (lang, host_bucket) with a salt column to split the
   mega-host skew across tasks.
 - **route**: fan-out sink partitioned by (lang, host_bucket); each blob row
-  doubles as its own lineage record (n_spans, doc-id range, sha256, sizes) —
-  the partition dir is complete iff its blobs are present, which is what
-  makes reruns resumable without a separate manifest.
+  doubles as its own lineage record (n_spans, doc-id range, sha256, sizes).
+  ``route_stage``, the sink's one writer, commits by dynamic partition
+  overwrite: the commit protocol renames each staged route dir into place
+  whole, so on HDFS or local disk a route dir is absent or complete —
+  reruns resume without a manifest and never append a second copy. Not
+  covered: a file deleted by hand from a committed route, and object
+  stores without atomic directory rename (there the sink is Iceberg).
 - **aggregate**: per-sink counts + compression-ratio metrics (the reference's
   size-comparison arms, trace.go:40-181: custom+zstd vs JSON+zstd vs gzip).
 
@@ -78,6 +82,9 @@ ENCODED_SCHEMA = StructType([
     StructField("blob_sha256", StringType()),
     StructField("blob", BinaryType()),
 ])
+
+#: every LINKS_EVERY-th page (by doc_id) carries one self-trace span link
+LINKS_EVERY = 7
 
 
 def parse_stage(pages: DataFrame) -> DataFrame:
@@ -229,29 +236,26 @@ def _span_events_cells(doc_ids, starts, events_every: int):
     return ev
 
 
-def _span_links_cells(doc_ids, trace_ids, links_every: int = 7):
-    """Vectorized links column: every ``links_every``-th page links back to
+def _span_links_cells(doc_ids, trace_ids):
+    """Vectorized links column: every ``LINKS_EVERY``-th page links back to
     its own trace (spanId = tail 8 bytes of the 16-byte trace id)."""
     import numpy as np
 
     ln = np.full(len(doc_ids), None, dtype=object)
-    if links_every:
-        sel = np.nonzero(doc_ids % links_every == 0)[0]
-        rel = {"rel": "prev"}  # shared (id-cached by the proto arm)
-        for i in sel:
-            t = bytes(trace_ids[i])
-            ln[i] = [{
-                "traceId": t,
-                "spanId": t[8:],
-                "traceState": "",
-                "attributes": rel,
-                "droppedAttributesCount": 0,
-            }]
+    rel = {"rel": "prev"}  # shared (id-cached by the proto arm)
+    for i in np.nonzero(doc_ids % LINKS_EVERY == 0)[0]:
+        t = bytes(trace_ids[i])
+        ln[i] = [{
+            "traceId": t,
+            "spanId": t[8:],
+            "traceState": "",
+            "attributes": rel,
+            "droppedAttributesCount": 0,
+        }]
     return ln
 
 
-def _group_spans_frame(g: pd.DataFrame, lang, bucket,
-                       events_every: int, links_every: int):
+def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
     """One route group → (span frame, attrs spec, resource attributes):
     the arguments of ``codec.batch.encode_span_dataframe``, also read by
     the comparison arms. Its own function so the no-JVM tests can encode
@@ -281,16 +285,18 @@ def _group_spans_frame(g: pd.DataFrame, lang, bucket,
         "http.url": "str", "http.status_code": "int",
         "n_chars": "int",
     }
-    # a null-lang group (unmatched routing key) simply omits the
-    # attribute — free-map entries are absent, never null
+    resource = {"host.bucket": int(bucket)}
+    # a null-lang group (unmatched routing key) simply omits the lang
+    # attribute and service.name — free-map entries are absent, never
+    # null (``expected_roundtrip``'s concat('crawler-', NULL) is NULL)
     if lang is not None and not pd.isna(lang):
         lang_col = np.empty(n, dtype=object)
         lang_col[:] = lang
         cols["attr:lang"] = lang_col
         attrs_spec["lang"] = "str"
+        resource = {"service.name": f"crawler-{lang}", **resource}
     cols["events"] = _span_events_cells(doc_ids, starts, events_every)
-    cols["links"] = _span_links_cells(doc_ids, trace_ids, links_every)
-    resource = {"service.name": f"crawler-{lang}", "host.bucket": int(bucket)}
+    cols["links"] = _span_links_cells(doc_ids, trace_ids)
     # ONE construction (r8): the former build-then-5×__setitem__ shape
     # paid a pandas block-manager consolidation per added column
     return pd.DataFrame(cols, copy=False), attrs_spec, resource
@@ -354,13 +360,12 @@ def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
     return gz, pz, jz, az
 
 
-def _encode_batches(arms: bool, events_every: int = 10,
-                    links_every: int = 7):
+def _encode_batches(arms: bool, events_every: int = 10):
     """Returns the mapInPandas function: Arrow batch → one blob per group.
 
     Every ``events_every``-th page (by doc_id; 0 disables) gets one span
     event ("fetch", 1 ms after start, attributes on every 20th page) and
-    every ``links_every``-th page one self-trace link — so the events and
+    every ``LINKS_EVERY``-th page one self-trace link — so the events and
     links wire paths run at pipeline scale, not only in codec unit tests.
     """
 
@@ -382,7 +387,7 @@ def _encode_batches(arms: bool, events_every: int = 10,
             for (lang, bucket), g in pdf.groupby(["lang", "host_bucket"],
                                                  sort=True, dropna=False):
                 spans, attrs_spec, resource = _group_spans_frame(
-                    g, lang, bucket, events_every, links_every)
+                    g, lang, bucket, events_every)
                 blob = encode_span_dataframe(spans, attrs_spec, resource)
                 blob_z = zstd.compress(blob, asbytes=True)
                 if arms:
@@ -414,7 +419,6 @@ def _encode_batches(arms: bool, events_every: int = 10,
 
 def encode_pages(enriched: DataFrame, n_salts: int = 16,
                  arms: bool = True, events_every: int = 10,
-                 links_every: int = 7,
                  shuffle_partitions: Optional[int] = None) -> DataFrame:
     """Route-aligned repartition with a NARROW shuffle payload, then
     vectorized encode: the pipeline's one encode path.
@@ -441,7 +445,7 @@ def encode_pages(enriched: DataFrame, n_salts: int = 16,
     roundtrip tests and gate (``scripts/roundtrip_gate.py``).
     """
     spans = _pre_encode_frame(enriched, n_salts, shuffle_partitions)
-    return spans.mapInPandas(_encode_batches(arms, events_every, links_every),
+    return spans.mapInPandas(_encode_batches(arms, events_every),
                              schema=ENCODED_SCHEMA)
 
 
@@ -475,15 +479,31 @@ def _pre_encode_frame(enriched: DataFrame, n_salts: int = 16,
         *span_columns_sql("n_chars_pre"))
 
 
-def route_stage(encoded: DataFrame, out_dir: str) -> None:
-    """Fan-out sink: one partition dir per (lang, host_bucket) route.
+def route_stage(encoded: DataFrame, out_dir: str,
+                batch_id: Optional[int] = None) -> None:
+    """Fan-out sink and the only writer of ``routed/``: one partition dir
+    per (lang, host_bucket) route, under a leading ``batch_id=`` dir for a
+    streaming micro-batch.
 
-    Blob rows double as lineage records; a route is complete iff present
-    (``read_routed(...).drop("blob")`` is the lineage view). At cluster
-    scale this would be an Iceberg table (atomic snapshot commit); the
-    layout and semantics are identical.
+    Dynamic partition overwrite: task output is staged under
+    ``routed/.spark-staging-<job>/``, then ``commitJob`` deletes each route
+    dir the write produced and renames its staged twin into place, one
+    whole directory at a time; other routes are untouched. A route dir is
+    thus absent or complete, a rewrite replaces it instead of appending,
+    and a crash before the renames leaves only the dot-prefixed staging
+    dir, which readers skip. Blob rows are the lineage records
+    (``read_routed(...).drop("blob")``). Not covered: a file deleted by
+    hand from a committed route, and object stores without atomic
+    directory rename — there the sink is an Iceberg table, whose
+    ``overwritePartitions`` commit gives the same guarantee.
     """
-    (encoded.write.mode("append").partitionBy("lang", "host_bucket")
+    keys = ("lang", "host_bucket")
+    if batch_id is not None:
+        encoded = encoded.withColumn("batch_id", F.lit(int(batch_id)))
+        keys = ("batch_id",) + keys
+    (encoded.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*keys)
      .parquet(f"{out_dir}/routed"))
 
 
@@ -496,12 +516,15 @@ def completed_sinks(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
     when the sink holds no data files yet (no ``routed/`` dir, or one an
     aborted first write left empty). Any other failure — an unreadable
     file, a permission error — raises: treating it as "no sink" would
-    re-encode and re-append every route."""
+    re-encode every route."""
+    fs, path, _ = _hadoop_fs(spark, f"{out_dir}/routed")
+    if not fs.exists(path):
+        return None
     try:
         return read_routed(spark, out_dir).select(
             "lang", "host_bucket").distinct()
     except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return None
         raise
 
@@ -612,8 +635,7 @@ def roundtrip_check(encoded: DataFrame) -> DataFrame:
     return encoded.mapInPandas(fn, schema=_ROUNDTRIP_SCHEMA)
 
 
-def expected_roundtrip(spans: DataFrame, events_every: int = 10,
-                       links_every: int = 7) -> DataFrame:
+def expected_roundtrip(spans: DataFrame, events_every: int = 10) -> DataFrame:
     """What ``roundtrip_check`` must return, derived pre-encode.
 
     Pure JVM expressions over the span stage applying the codec's documented
@@ -625,7 +647,7 @@ def expected_roundtrip(spans: DataFrame, events_every: int = 10,
     # of driver-side Python per invocation at any data size; the SQL
     # strings build the identical expression tree in a single call.
     ev = (f"(doc_id % {events_every} = 0)" if events_every else "false")
-    lk = (f"(doc_id % {links_every} = 0)" if links_every else "false")
+    lk = f"(doc_id % {LINKS_EVERY} = 0)"
     return spans.selectExpr(
         "url", "lang",
         "md5(url) AS trace_id_hex",
@@ -728,29 +750,37 @@ def roundtrip_counts(decoded: DataFrame, expected: DataFrame,
     )
 
 
-def _read_meta(spark: SparkSession, meta_path_str: str) -> Optional[dict]:
+def pin_bucket_layout(spark: SparkSession, out_dir: str,
+                      n_buckets: int) -> None:
+    """Pin the sink's bucket layout in ``_pipeline_meta.json``: record
+    ``n_buckets`` on the first run, raise ``ValueError`` on a later run
+    with a different value — resuming would silently split routes across
+    two bucketings. Both the batch and the streaming entry point call it."""
     import json
 
-    fs, path, jvm = _hadoop_fs(spark, meta_path_str)
+    fs, path, jvm = _hadoop_fs(
+        spark, f"{out_dir.rstrip('/')}/_pipeline_meta.json")
     if not fs.exists(path):
-        return None
+        out = fs.create(path, True)
+        try:
+            out.write(bytearray(json.dumps(
+                {"n_buckets": n_buckets}).encode("utf-8")))
+        finally:
+            out.close()
+        return
     stream = fs.open(path)
     try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        prior = json.loads(bytes(
+            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)))
     finally:
         stream.close()
-    return json.loads(data.decode("utf-8"))
-
-
-def _write_meta(spark: SparkSession, meta_path_str: str, meta: dict) -> None:
-    import json
-
-    fs, path, _ = _hadoop_fs(spark, meta_path_str)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
+    if prior.get("n_buckets") != n_buckets:
+        raise ValueError(
+            f"sink at {out_dir} was written with n_buckets="
+            f"{prior.get('n_buckets')}; resuming with n_buckets="
+            f"{n_buckets} would mix bucket layouts — pass the original "
+            "value or use a fresh output dir"
+        )
 
 
 def run_pipeline(
@@ -766,24 +796,14 @@ def run_pipeline(
 
     ``resume=True`` skips (lang, host_bucket) routes whose partition dirs
     already exist — rerunning after a partial failure recomputes only the
-    missing routes (per-partition lineage = the blob rows themselves).
-    A ``_pipeline_meta.json`` marker pins the sink's bucket layout:
-    resuming with a different ``n_buckets`` would silently split routes
-    across two bucketings, so it raises instead.
+    missing routes (per-partition lineage = the blob rows themselves). That
+    is sound because ``route_stage`` renames each route dir into place
+    whole, so an existing dir is complete; a file deleted by hand from one
+    is not detected. ``resume=False`` replaces every route the input
+    covers, never appending a copy. ``pin_bucket_layout`` refuses a
+    different ``n_buckets``.
     """
-    meta_path = f"{out_dir.rstrip('/')}/_pipeline_meta.json"
-    prior = _read_meta(spark, meta_path)
-    if prior is not None:
-        if prior.get("n_buckets") != n_buckets:
-            raise ValueError(
-                f"sink at {out_dir} was written with n_buckets="
-                f"{prior.get('n_buckets')}; resuming with n_buckets="
-                f"{n_buckets} would mix bucket layouts — pass the original "
-                "value or use a fresh output dir"
-            )
-    else:
-        _write_meta(spark, meta_path, {"n_buckets": n_buckets})
-
+    pin_bucket_layout(spark, out_dir, n_buckets)
     parsed = parse_stage(pages)
     enriched = enrich_stage(parsed, spark, n_buckets=n_buckets)
     if resume:
@@ -791,7 +811,7 @@ def run_pipeline(
         if done is not None:
             # null-safe: unmatched-lang rows route with lang = NULL; a plain
             # equality anti-join would never match them against completed
-            # routes and re-append them on every resume.
+            # routes and re-encode them on every resume.
             cond = (
                 enriched["lang"].eqNullSafe(done["lang"])
                 & enriched["host_bucket"].eqNullSafe(done["host_bucket"])

@@ -15,11 +15,14 @@ the aggregate stage is recomputed from the routed sink, not kept as
 streaming state.
 
 ``foreachBatch`` is at-least-once: a crash after the sink write but before
-the checkpoint commit replays the batch. The sink is therefore written with
-the batch id as the leading partition column under **dynamic partition
-overwrite** — a replayed batch overwrites exactly its own partitions instead
-of appending duplicates, which makes the routed output effectively
-exactly-once.
+the checkpoint commit replays the batch. Each batch is therefore written by
+the batch path's writer, ``plans.pipeline.route_stage``, with the batch id
+as the leading partition column: its **dynamic partition overwrite** commit
+renames each staged route dir into place whole, so a replayed batch
+replaces exactly its own partitions instead of appending duplicates. That
+makes the routed output effectively exactly-once on HDFS or local disk —
+not against a file deleted by hand from a committed route, nor on object
+stores without atomic directory rename (there the sink is Iceberg).
 """
 
 from __future__ import annotations
@@ -28,32 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import (
-    _read_meta,
-    _write_meta,
     encode_pages,
     enrich_stage,
     parse_stage,
+    pin_bucket_layout,
+    route_stage,
 )
 from ..sources.tables import synthetic_pages
-
-
-def route_stream_batch(encoded: DataFrame, out_dir: str,
-                       batch_id: int) -> None:
-    """Idempotent routed-sink write for one micro-batch.
-
-    ``batch_id`` is the leading partition column and the write uses dynamic
-    partition overwrite, so replaying a batch (foreachBatch's at-least-once
-    contract) replaces its own partitions byte-for-byte instead of appending
-    duplicate blobs. At cluster scale this is the same guarantee an Iceberg
-    ``overwritePartitions`` snapshot commit gives.
-    """
-    (
-        encoded.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "lang", "host_bucket")
-        .parquet(f"{out_dir}/routed")
-    )
 
 
 def pages_stream(spark: SparkSession, input_dir: str,
@@ -80,9 +64,9 @@ def run_streaming_pipeline(
     """Drain the input with availableNow; resumable via checkpoint.
 
     Each micro-batch runs the full stage chain and writes the routed sink
-    idempotently (see ``route_stream_batch``) — rerunning after a crash
-    replays only unprocessed files, and a replayed batch overwrites rather
-    than duplicates. Returns the terminated StreamingQuery.
+    idempotently (``route_stage`` with the batch id) — rerunning after a
+    crash replays only unprocessed files, and a replayed batch overwrites
+    rather than duplicates. Returns the terminated StreamingQuery.
 
     ``dedup_horizon`` (e.g. ``"1 hour"``) inserts the
     :func:`dedup_pages_stream` stage before the encode chain: crawler
@@ -91,20 +75,7 @@ def run_streaming_pipeline(
     same checkpoint as the file-source offsets — a resumed job neither
     re-emits already-kept pages nor forgets which texts it saw.
     """
-    # same bucket-layout guard as the batch path: resuming a sink with a
-    # different n_buckets would silently split routes across two bucketings
-    meta_path = f"{out_dir.rstrip('/')}/_pipeline_meta.json"
-    prior = _read_meta(spark, meta_path)
-    if prior is not None:
-        if prior.get("n_buckets") != n_buckets:
-            raise ValueError(
-                f"sink at {out_dir} was written with n_buckets="
-                f"{prior.get('n_buckets')}; resuming with n_buckets="
-                f"{n_buckets} would mix bucket layouts — pass the original "
-                "value or use a fresh output dir"
-            )
-    else:
-        _write_meta(spark, meta_path, {"n_buckets": n_buckets})
+    pin_bucket_layout(spark, out_dir, n_buckets)
 
     stream = pages_stream(spark, input_dir)
     if dedup_horizon is not None:
@@ -117,7 +88,7 @@ def run_streaming_pipeline(
         enriched = enrich_stage(parse_stage(batch_df), spark,
                                 n_buckets=n_buckets)
         encoded = encode_pages(enriched, n_salts=n_salts, arms=arms)
-        route_stream_batch(encoded, out_dir, batch_id)
+        route_stage(encoded, out_dir, batch_id)
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

@@ -15,7 +15,9 @@ with the catalog configured on the session); locally any parquet directory
 with the pages schema works. ``--streaming`` drains the input with
 ``availableNow`` + checkpoint instead of one batch run — same stages,
 resumable either way (batch resumes from the sink's own lineage, streaming
-from the checkpoint).
+from the checkpoint). Each route directory is committed whole, so a route
+is either absent or complete. ``--no-resume`` re-encodes the whole input and
+replaces every route it covers; it never appends a second copy.
 """
 
 from __future__ import annotations
@@ -47,7 +49,9 @@ def main() -> None:
                     help="skew salt fan-out for the encode repartition")
     ap.add_argument("--arms", action="store_true",
                     help="also measure gzip/JSON comparison arms")
-    ap.add_argument("--no-resume", action="store_true")
+    ap.add_argument("--no-resume", action="store_true",
+                    help="re-encode every page and replace each route the "
+                         "input covers (no copy is appended)")
     ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--checkpoint", default=None,
                     help="checkpoint dir (required with --streaming)")

@@ -248,10 +248,12 @@ def test_production_group_frame_matches_scalar(lang):
         "status_code": doc_ids % 3,
         "n_chars": n_chars,
     })
-    spans, spec, resource = _group_spans_frame(g, lang, 3, 10, 7)
+    spans, spec, resource = _group_spans_frame(g, lang, 3, 10)
     blob = encode_span_dataframe(spans, spec, resource)
 
     lang_attr = {} if pd.isna(lang) else {"lang": lang}
+    # a null-lang group has no service.name, as it has no lang attribute
+    service = {} if pd.isna(lang) else {"service.name": f"crawler-{lang}"}
     want = []
     for i, d in enumerate(doc_ids):
         start = int(starts[i])
@@ -282,9 +284,7 @@ def test_production_group_frame_matches_scalar(lang):
         })
     doc = {"resourceSpans": [{
         "resource": {
-            # a null-lang group's service.name reads "crawler-nan"
-            "attributes": {"service.name": f"crawler-{lang}",
-                           "host.bucket": 3},
+            "attributes": {**service, "host.bucket": 3},
             "droppedAttributesCount": 0,
         },
         "scopeSpans": [{"scope": DEFAULT_SCOPE, "spans": want,

@@ -178,6 +178,44 @@ class TestRunResume:
         after = read_routed(spark, out).count()
         assert after > before  # victim partition re-materialized
 
+        # a crash between staging and rename leaves a route only under the
+        # job's dot-prefixed staging dir: readers skip the leftover, and
+        # resume restores exactly that route's pages
+        victim = sorted(routed.glob("lang=en/host_bucket=*"))[-1]
+        bucket = int(victim.name.split("=")[1])
+
+        def victim_pages():
+            return read_routed(spark, out).where(
+                (F.col("lang") == "en") & (F.col("host_bucket") == bucket)
+            ).agg(F.sum("n_spans")).collect()[0][0]
+
+        pages_before = victim_pages()
+        staged = routed / ".spark-staging-crash" / victim.relative_to(routed)
+        staged.parent.mkdir(parents=True)
+        shutil.move(str(victim), str(staged))
+        assert victim_pages() is None
+        agg4 = run_pipeline(spark, pages, out, arms=False)
+        assert agg4.agg(F.sum("pages")).collect()[0][0] == total1
+        assert victim_pages() == pages_before > 0
+        assert staged.exists()
+
+    def test_rerun_without_resume_never_duplicates_a_route(self, spark, pages,
+                                                           tmp_path):
+        """``resume=False`` re-encodes everything and replaces each route
+        it writes; the sink must not hold a second copy of any route."""
+        out = str(tmp_path / "out_rerun")
+
+        def sink():
+            return read_routed(spark, out).agg(
+                F.sum("n_spans"), F.count("*"),
+                F.sort_array(F.collect_list("blob_sha256"))).collect()[0]
+
+        run_pipeline(spark, pages, out, arms=False, resume=False)
+        first = sink()
+        assert first[0] == pages.count()
+        run_pipeline(spark, pages, out, arms=False, resume=False)
+        assert sink() == first
+
     def test_sink_counts_match_input_groups(self, spark, pages, tmp_path):
         out = str(tmp_path / "out2")
         agg = run_pipeline(spark, pages, out, arms=False)
@@ -229,6 +267,20 @@ def test_resume_with_null_lang_routes(spark, tmp_path):
     nulls = read_routed(spark, out).where(
         F.col("lang").isNull()).agg(F.sum("n_spans")).collect()[0][0]
     assert nulls == 40  # 200/5 null-lang pages, written exactly once
+    # and they decode to what the pre-encode spans predict: a null-lang
+    # resource carries no service.name
+    from compress_otel_collector_spark.plans.pipeline import (
+        expected_roundtrip,
+        roundtrip_counts,
+    )
+
+    row = roundtrip_counts(
+        roundtrip_check(read_routed(spark, out)),
+        expected_roundtrip(span_stage(enrich_stage(parse_stage(pages),
+                                                   spark))),
+    ).collect()[0]
+    assert row["decoded_spans"] == 200
+    assert (row["missing"], row["extra"]) == (0, 0)
 
 
 def test_resume_raises_on_unreadable_sink(spark, tmp_path):

@@ -44,9 +44,7 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
         encode_pages,
         enrich_stage,
         parse_stage,
-    )
-    from compress_otel_collector_spark.streaming.stream import (
-        route_stream_batch,
+        route_stage,
     )
 
     out_dir = str(tmp_path / "out")
@@ -54,14 +52,14 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
     encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
                            n_salts=2, arms=False)
 
-    route_stream_batch(encoded, out_dir, batch_id=0)
+    route_stage(encoded, out_dir, batch_id=0)
     total1 = read_routed(spark, out_dir).agg(F.sum("n_spans")).collect()[0][0]
-    route_stream_batch(encoded, out_dir, batch_id=0)  # simulated replay
+    route_stage(encoded, out_dir, batch_id=0)  # simulated replay
     total2 = read_routed(spark, out_dir).agg(F.sum("n_spans")).collect()[0][0]
     assert total1 == total2 == 120
 
     # a *new* batch id still appends
-    route_stream_batch(encoded, out_dir, batch_id=1)
+    route_stage(encoded, out_dir, batch_id=1)
     total3 = read_routed(spark, out_dir).agg(F.sum("n_spans")).collect()[0][0]
     assert total3 == 240
 
