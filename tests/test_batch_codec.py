@@ -208,30 +208,19 @@ def test_unsupported_attribute_type_raises():
             encode_span_dataframe(pdf, {"http.url": t}, RESOURCE)
 
 
-@pytest.mark.parametrize("lang", ["en", np.nan], ids=["en", "null"])
-def test_production_group_frame_matches_scalar(lang):
-    """batch ≡ scalar on exactly what the pipeline encodes: a frame with
-    ``_pre_encode_frame``'s columns, run through ``_group_spans_frame``
-    for a real-lang and a null-lang route group, with events (doc_id %
-    10), nested event attributes (% 20) and links (% 7) all present. The
-    expected document is written out here from the span-shape rules, not
-    from the pipeline's helpers."""
-    from compress_otel_collector_spark.plans.pipeline import (
-        _group_spans_frame,
-    )
-
-    doc_ids = np.arange(100, 160, dtype=np.int64)  # 100, 105, 140 hit all
+def production_pages(doc_ids, lang, host_bucket=3):
+    """``_pre_encode_frame``'s columns for ``doc_ids``: url, lang,
+    host_bucket, doc_id and the ``span_columns_sql`` span columns, written
+    out here with numpy from the same rules."""
     urls = [f"https://h{d % 3}.example.com/p/{d}" for d in doc_ids]
     md5 = [hashlib.md5(u.encode()).digest() for u in urls]
     starts = T + doc_ids * 1000
     n_chars = 100 + doc_ids % 9
-    m = trace_model()
-    nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
-    # _encode_batches' groupby(dropna=False) keys a null lang as NaN
-    g = pd.DataFrame({
+    return pd.DataFrame({
         "url": urls,
-        "lang": [None if pd.isna(lang) else lang] * len(doc_ids),
-        "host_bucket": np.full(len(doc_ids), 3, dtype=np.int32),
+        "lang": lang,
+        "host_bucket": np.broadcast_to(
+            host_bucket, doc_ids.shape).astype(np.int32),
         "doc_id": doc_ids,
         "trace_id": md5,
         "span_id": [h[:8] for h in md5],
@@ -248,6 +237,27 @@ def test_production_group_frame_matches_scalar(lang):
         "status_code": doc_ids % 3,
         "n_chars": n_chars,
     })
+
+
+@pytest.mark.parametrize("lang", ["en", np.nan], ids=["en", "null"])
+def test_production_group_frame_matches_scalar(lang):
+    """batch ≡ scalar on exactly what the pipeline encodes: a frame with
+    ``_pre_encode_frame``'s columns, run through ``_group_spans_frame``
+    for a real-lang and a null-lang route group, with events (doc_id %
+    10), nested event attributes (% 20) and links (% 7) all present. The
+    expected document is written out here from the span-shape rules, not
+    from the pipeline's helpers."""
+    from compress_otel_collector_spark.plans.pipeline import (
+        _group_spans_frame,
+    )
+
+    doc_ids = np.arange(100, 160, dtype=np.int64)  # 100, 105, 140 hit all
+    # _encode_batches' groupby(dropna=False) keys a null lang as NaN
+    g = production_pages(doc_ids, None if pd.isna(lang) else lang)
+    urls, md5 = list(g["url"]), list(g["trace_id"])
+    starts, n_chars = g["start_ns"].to_numpy(), g["n_chars"].to_numpy()
+    m = trace_model()
+    nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
     spans, spec, resource = _group_spans_frame(g, lang, 3, 10)
     blob = encode_span_dataframe(spans, spec, resource)
 
@@ -293,6 +303,68 @@ def test_production_group_frame_matches_scalar(lang):
     }]}
     assert decode(blob, m) == decode(encode(doc, m), m) == \
         normalize(doc, m)
+
+
+#: ``_encode_batches(arms=True)`` on ``_pinned_pages()``, one tuple per
+#: output row: (lang, host_bucket, blob_sha256, raw_bytes, zstd_bytes,
+#: gzip_bytes, proto_zstd_bytes, sha256 of the proto arm's bytes)
+_ENCODE_BATCHES_PINS = [
+    ("en", 0,
+     "e32897e4ddcbadad306baf7ecb045a3c8bfdedc9d2832b0a1638054ab7b17638",
+     8115, 3246, 3138, 3110,
+     "eed5143094d399115df4b0b97a712a030d2271be99342121cb4f606095ea4e8f"),
+    ("en", 1,
+     "0b40655a708edc12e873f580a80c3b7c668f2f83fcb77ad07fd76887056c8cac",
+     7787, 3081, 3010, 2943,
+     "abde58311abc9cb4afaa68b4f0fbffbb0e2297890d2877c88d07d78b12a8603a"),
+    (None, 0,
+     "2effce9c40547b0556394df5e68a35d36e504be0f2c0779325006cac27acc332",
+     4216, 1734, 1731, 1624,
+     "01f0ffb68436433b89cb5ea1aefdfca0edd3a54d5cb8aaa5bd8ab3a016765674"),
+    (None, 1,
+     "3f1a56d7aeb53ca4b6091cc51e16b00b44ef6bc59a5e00dc5e20d19d629f71cb",
+     3936, 1602, 1610, 1487,
+     "af7df7b7f38dd6c83eb28c1e06e97a2268e4d41c2403283c102e9987f05eadde"),
+]
+
+
+def _pinned_pages():
+    """200 production rows in two routes per lang, en and null lang, with
+    events (doc_id % 10), nested event attributes (% 20), links (% 7) and
+    one page whose crawl time is the epoch-0 sentinel."""
+    doc_ids = np.arange(1000, 1200, dtype=np.int64)
+    lang = np.where(doc_ids % 3 == 0, None, "en").astype(object)
+    pdf = production_pages(doc_ids, lang, host_bucket=doc_ids % 2)
+    zero = pdf["doc_id"] == 1003
+    pdf.loc[zero, "end_ns"] -= pdf.loc[zero, "start_ns"]
+    pdf.loc[zero, "start_ns"] = 0
+    return pdf.sort_values(["lang", "host_bucket", "doc_id"],
+                           na_position="last", ignore_index=True)
+
+
+def test_encode_batches_bytes_pinned(monkeypatch):
+    """The wire bytes of what production encodes, pinned: the codec blob,
+    its zstd and gzip sizes and the proto arm's bytes. The JSON and Arrow
+    arms marshal the frame's own columns, so they are not pinned."""
+    from compress_otel_collector_spark.plans import pipeline
+
+    protos = []
+    marshal = pipeline.spans_columns_to_proto
+
+    def recording(*args, **kwargs):
+        protos.append(marshal(*args, **kwargs))
+        return protos[-1]
+
+    monkeypatch.setattr(pipeline, "spans_columns_to_proto", recording)
+    out = pd.concat(pipeline._encode_batches(arms=True)(
+        iter([_pinned_pages()])))
+    got = [
+        (None if pd.isna(r.lang) else r.lang, r.host_bucket, r.blob_sha256,
+         r.raw_bytes, r.zstd_bytes, r.gzip_bytes, r.proto_zstd_bytes,
+         hashlib.sha256(p).hexdigest())
+        for r, p in zip(out.itertuples(), protos, strict=True)
+    ]
+    assert got == _ENCODE_BATCHES_PINS
 
 
 def test_null_str_attribute_raises():
