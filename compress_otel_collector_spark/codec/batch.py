@@ -1,12 +1,13 @@
 """Vectorized batch encoder: a columnar span batch → one wire-format blob.
 
 This is the hot path that runs inside Spark's ``mapInPandas``: one call per
-route group, zero per-row Python *dispatch*. The heavy lifting is columnar —
-``pandas.factorize`` builds the dictionaries (pool semantics: dedup with
-stable first-occurrence-in-column order), numpy packs all varints
-(``varint.encode_sleb128_array``), ``numpy.diff`` produces the delta series —
-and only the final byte-cell assembly walks rows (cheap bytes joins over
-precomputed pieces).
+route group, zero per-row Python. The work is columnar — ``pandas.factorize``
+builds the dictionaries (pool semantics: dedup with stable
+first-occurrence-in-column order), numpy packs every varint into a padded
+field matrix (``varint.encode_sleb128_matrix``), ``numpy.diff`` produces the
+delta series, and one mask-select flattens the field matrices into the span
+stream. A span's one event and one link are field matrices like the rest;
+only unique pool values (attribute dicts, status dicts) touch Python.
 
 One input shape: the frame ``plans.pipeline._group_spans_frame`` builds —
 ``SPAN_COLUMNS`` plus typed ``attr:<key>`` span-attribute columns, encoded
@@ -47,11 +48,7 @@ from .definition import (
 )
 from .encoder import _encode_payload, _State
 from .values import CodecError, freeze, is_null_value
-from .varint import (
-    encode_sleb128,
-    encode_sleb128_array,
-    encode_sleb128_matrix,
-)
+from .varint import encode_sleb128, encode_sleb128_matrix
 
 _SPANS_PATH = "resourceSpans item scopeSpans item spans item"
 _EVENTS_PATH = _SPANS_PATH + " events item"
@@ -65,11 +62,19 @@ DEFAULT_SCOPE = {
 }
 
 #: pdf columns consumed by :func:`encode_span_dataframe` (span attributes
-#: ride separate ``attr:<key>`` columns named by its ``attributes_spec``)
+#: ride separate ``attr:<key>`` columns named by its ``attributes_spec``).
+#: A span carries at most one event and one link, one column per field. A
+#: span without an event has ``event_name`` None (a present event with no
+#: name has ''), one without a link has ``link_trace_id`` None; there its
+#: other event or link object cells are None and its int64 cells are 0
+#: and ignored.
 SPAN_COLUMNS = [
     "trace_id", "span_id", "parent_span_id", "trace_state", "name", "kind",
     "start_ns", "end_ns", "dropped_attributes_count",
-    "events", "dropped_events_count", "links", "dropped_links_count",
+    "event_time_ns", "event_name", "event_attributes",
+    "event_dropped_attributes_count", "dropped_events_count",
+    "link_trace_id", "link_span_id", "link_trace_state", "link_attributes",
+    "link_dropped_attributes_count", "dropped_links_count",
     "status_message", "status_code",
 ]
 
@@ -86,64 +91,43 @@ class _Pools:
     # to the pool_entries list form (entries are plain concatenation).
     entry_blobs: dict[str, tuple[int, bytes]] = field(default_factory=dict)
 
-    def build(self, pool_id: str, values, scalar: bool = False,
-              keys=None) -> np.ndarray:
-        """Register ``values`` into ``pool_id``; return per-value codes.
+    def build(self, pool_id: str, values, scalar: bool = False) -> np.ndarray:
+        """Register ``values`` into the empty pool ``pool_id`` (the batch
+        encoder builds each pool in ONE call); return per-value codes.
 
-        Nulls (None) get code -1 and are never pooled (the scalar encoder
-        short-circuits on the presence flag before touching pools).
-        ``scalar=True`` skips structural freezing for string/bytes pools
-        (their values are their own keys — a large hot-path win).
-        ``keys`` supplies caller-precomputed hashable keys (must be an
-        injective function of the value; the links-item pool keys each
-        link by the tuple of its child codes and scalars).
+        Nulls (None, and values ``is_null_value`` coerces) get code -1 and
+        are never pooled (the scalar encoder short-circuits on the
+        presence flag before touching pools). ``scalar=True`` is for
+        string/bytes pools, whose values are their own keys: factorize's
+        first-appearance codes ARE the pool indices, and only the uniques
+        touch Python. Other values are keyed by their structural freeze.
         """
-        arr = list(values)
         pool = self.state.pools.setdefault(pool_id, {})
         uniq = self.uniques.setdefault(pool_id, [])
-        if keys is not None:
-            keys = list(keys)
-        elif scalar:
-            if not pool:
-                # vectorized path: each pool is built in ONE call in the
-                # batch encoder, so an empty pool means factorize's
-                # first-appearance codes ARE the pool indices (None → -1,
-                # exactly the null contract). Only uniques touch Python.
-                # _factorize_exact keeps NUL-containing strings distinct.
-                codes, uniques = _factorize_exact(arr)
-                for u in uniques:
-                    pool[u] = len(pool)
-                    uniq.append(u)
-                return codes.astype(np.int64, copy=False)
-            keys = arr
-        else:
-            # id()-keyed freeze memo: pipeline event/link cells share a
-            # handful of attribute dict OBJECTS across all rows of a batch
-            # (plans/pipeline builds one dict per shape), so structural
-            # freezing per row re-walked the same dict tens of thousands
-            # of times per blob. Safe within this call: every value in
-            # ``arr`` stays referenced (ids stable) and is never mutated.
-            memo: dict[int, object] = {}
-            keys = []
-            for v in arr:
-                if v is None:
-                    keys.append(None)
-                    continue
-                k = memo.get(id(v))
-                if k is None:
-                    k = freeze(v)
-                    memo[id(v)] = k
-                keys.append(k)
-        codes = np.empty(len(arr), dtype=np.int64)
-        for i, k in enumerate(keys):
-            if k is None:
+        if scalar:
+            codes, uniques = _factorize_exact(values)
+            for u in uniques:
+                pool[u] = len(pool)
+                uniq.append(u)
+            return codes.astype(np.int64, copy=False)
+        # id()-keyed freeze memo: pipeline event/link columns share a
+        # handful of attribute dict OBJECTS across all rows of a batch, so
+        # structural freezing per row re-walked the same dict tens of
+        # thousands of times per blob. Safe within this call: every value
+        # stays referenced by ``values`` (ids stable), never mutated.
+        memo: dict[int, object] = {}
+        codes = np.empty(len(values), dtype=np.int64)
+        for i, v in enumerate(values):
+            if v is None or is_null_value(v):
                 codes[i] = -1
                 continue
+            k = memo.get(id(v))
+            if k is None:
+                k = memo[id(v)] = freeze(v)
             idx = pool.get(k)
             if idx is None:
-                idx = len(pool)
-                pool[k] = idx
-                uniq.append(arr[i])
+                idx = pool[k] = len(pool)
+                uniq.append(v)
             codes[i] = idx
         return codes
 
@@ -164,9 +148,7 @@ class _Pools:
                 self.entry_blobs[pool_id] = (len(raws), blob)
                 return
             # oversized payloads (very long strings): per-entry pieces
-            len_pieces = _varint_pieces(
-                np.fromiter(map(len, raws), np.int64, len(raws)))
-            entries.extend(lp + r for lp, r in zip(len_pieces, raws))
+            entries.extend(encode_sleb128(len(r)) + r for r in raws)
             return
         sizes_before = {pid: len(p) for pid, p in self.state.pools.items()}
         for value in uniques:
@@ -196,8 +178,12 @@ def _factorize_exact(values) -> tuple[np.ndarray, list]:
     ORIGINAL value objects (str, not the bytes encoding) in
     first-appearance order — pool keys must stay raw values; None maps to
     code -1. Exactness on both paths is pinned by the embedded-NUL pool
-    tests (tests/test_batch_codec.py).
+    tests (tests/test_batch_codec.py). Numeric arrays hold no str, so
+    they go straight to ``pd.factorize``.
     """
+    if getattr(values, "dtype", np.dtype(object)).kind in "biuf":
+        codes, uniques = pd.factorize(values)
+        return codes, uniques.tolist()
     vals = np.asarray(values, dtype=object)
     lst = vals.tolist()
     try:
@@ -294,18 +280,11 @@ def _len_prefixed_blob(raws: list[bytes]) -> Optional[bytes]:
     return _fields_blob([(lmat, llen), (pmat, plens)])
 
 
-def _null_mask(col: np.ndarray) -> np.ndarray:
-    """Nullable-field coercion mask (values.is_null_value, vectorized-ish)."""
-    return np.array(
-        [v is None or is_null_value(v) for v in col], dtype=bool
-    )
-
-
 def _null_mask_text(col) -> np.ndarray:
     """Null mask for str/bytes columns: falsy ⇔ null-coerced (None/''/b'').
 
     Exact for text types only — NOT for ints/bools/doubles (0 coerces but
-    False and 0.0 don't), hence the separate general `_null_mask`.
+    False and 0.0 don't).
     """
     n = len(col)
     return np.fromiter(map(_operator.not_, col), dtype=bool,
@@ -319,35 +298,34 @@ def _int_null_mask(col: np.ndarray) -> np.ndarray:
     return a == 0
 
 
-def _varint_pieces(values: np.ndarray) -> list[bytes]:
-    """sleb128-encode an int64 array; per-value bytes objects."""
-    flat, lengths = encode_sleb128_array(np.asarray(values, dtype=np.int64))
-    out = []
-    pos = 0
-    for ln in lengths:
-        nxt = pos + ln
-        out.append(flat[pos:nxt])
-        pos = nxt
-    return out
+def _dedup_rows(columns: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """First-appearance row dedup over int64 key columns (pool or
+    factorize codes, -1 for null, or raw ints): ``(codes, first)``, where
+    ``codes[i]`` indexes row i's key tuple in first-appearance order and
+    ``first[j]`` is the first row holding key j.
+
+    The columns mix into one int64 key, ``key * radix + value + 1`` per
+    column. A column with values below -1 or too wide for the key is
+    factorized first, and ``pd.factorize`` re-densifies the key whenever
+    the next column could overflow it, so every key width stays exact."""
+    n = len(columns[0])
+    codes = np.zeros(n, dtype=np.int64)
+    bound = 1  # every key < bound
+    for c in columns:
+        if c.min() < -1 or c.max() >= _KEY_LIMIT // (n + 1):
+            c = pd.factorize(c)[0]
+        radix = int(c.max()) + 2
+        if bound > _KEY_LIMIT // radix:
+            codes, uniques = pd.factorize(codes)
+            bound = len(uniques)
+        codes = codes * radix + (c + 1)
+        bound *= radix
+    codes = pd.factorize(codes)[0].astype(np.int64, copy=False)
+    return codes, np.unique(codes, return_index=True)[1]
 
 
-def _nullable_varint_cells(values, null_mask: np.ndarray) -> list[bytes]:
-    """Cells for a nullable integer-ish field: \\x00 or \\x01+varint."""
-    vals = np.where(null_mask, 0, np.asarray(values, dtype=object))
-    pieces = _varint_pieces(vals.astype(np.int64))
-    return [b"\x00" if m else b"\x01" + p for m, p in zip(null_mask, pieces)]
-
-
-def _nullable_code_cells(codes: np.ndarray) -> list[bytes]:
-    """Cells for a nullable pooled field: \\x00 or \\x01+varint(index)."""
-    pieces = _varint_pieces(np.where(codes < 0, 0, codes))
-    return [b"\x00" if c < 0 else b"\x01" + p for c, p in zip(codes, pieces)]
-
-
-def _code_cells(codes: np.ndarray) -> list[bytes]:
-    if len(codes) and codes.min() < 0:
-        raise CodecError("null value in a non-nullable pooled column")
-    return _varint_pieces(codes)
+#: mixed-radix keys of ``_dedup_rows`` stay below this
+_KEY_LIMIT = 1 << 62
 
 
 def _nullable_vcell_matrix(values: np.ndarray,
@@ -364,6 +342,13 @@ def _nullable_vcell_matrix(values: np.ndarray,
     return out, lengths
 
 
+def _nullable_int_matrix(col) -> tuple[np.ndarray, np.ndarray]:
+    """Nullable integer field: 0 (or None) null-coerces."""
+    null = _int_null_mask(col)
+    return _nullable_vcell_matrix(
+        np.where(null, 0, col).astype(np.int64), null)
+
+
 def _nullable_code_matrix(codes: np.ndarray
                           ) -> tuple[np.ndarray, np.ndarray]:
     return _nullable_vcell_matrix(np.maximum(codes, 0), codes < 0)
@@ -374,19 +359,6 @@ def _code_matrix(codes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         raise CodecError("null value in a non-nullable pooled column")
     mat, k = encode_sleb128_matrix(codes)
     return mat, k.astype(np.int64)
-
-
-def _pieces_matrix(cells: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    """Variable-length per-row bytes → padded matrix (mask-scatter)."""
-    n = len(cells)
-    lengths = np.fromiter(map(len, cells), np.int64, n)
-    w = int(lengths.max()) if n else 0
-    out = np.zeros((n, max(w, 1)), dtype=np.uint8)
-    if n:
-        flat = np.frombuffer(b"".join(cells), dtype=np.uint8)
-        sel = np.arange(max(w, 1))[None, :] < lengths[:, None]
-        out[sel] = flat
-    return out, lengths
 
 
 def _diff_series(values: np.ndarray) -> np.ndarray:
@@ -400,27 +372,15 @@ def _diff_series(values: np.ndarray) -> np.ndarray:
     return out
 
 
-def _nullable_diff_cells(values, null_mask: np.ndarray) -> list[bytes]:
-    """Nullable diff-encoded ints: state advances only on non-null values."""
-    vals = np.asarray(
-        [0 if m else int(v) for m, v in zip(null_mask, values)],
-        dtype=np.int64,
-    )
-    present = vals[~null_mask]
-    deltas = _diff_series(present)
-    pieces = iter(_varint_pieces(deltas))
-    return [b"\x00" if m else b"\x01" + next(pieces) for m in null_mask]
-
-
-def _coerce_bytes(col) -> np.ndarray:
-    # Arrow→pandas binary columns already hold plain bytes objects; only
-    # copy when a row is some other buffer type (bytearray, memoryview)
-    for v in col:
-        if v is not None and type(v) is not bytes:
-            return np.array(
-                [None if x is None else bytes(x) for x in col], dtype=object
-            )
-    return np.asarray(col, dtype=object)
+def _one_item(fields: list[tuple[np.ndarray, np.ndarray]],
+              present: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
+    """A nullable array of at most one item: header ``\\x00`` (absent) or
+    ``\\x01`` + varint(1), then the item's fields, zero-length on rows
+    without the item."""
+    (m0, l0), *rest = fields
+    hdr = np.repeat(present.astype(np.uint8)[:, None], 2, axis=1)
+    return [(np.hstack([hdr, m0]), np.where(present, 2 + l0, 1))] + [
+        (m, np.where(present, l, 0)) for m, l in rest]
 
 
 def _string_pool_codes(values, st: _State) -> np.ndarray:
@@ -499,36 +459,26 @@ def encode_span_dataframe(
     ``pdf`` holds the ``SPAN_COLUMNS`` plus one ``attr:<key>`` column per
     ``attributes_spec`` key; together those columns are each span's
     attribute free map (see ``_free_map_columnar_entries`` for the value
-    types). Diff/pool state spans the whole blob in row order.
+    types). Every span field, its one event's and its one link's fields
+    included, is a padded field matrix; one mask-select flattens them.
+    Diff/pool state spans the whole blob in row order.
     """
     definition = trace_model()
     if len(pdf) == 0:
         # no spans → resourceSpans coerces to null; empty string pool, 0 pools
         return b"\x00\x00cprval\x00"
-    for c in SPAN_COLUMNS:
-        if c not in pdf.columns:
-            raise CodecError(f"missing span column {c!r}")
-
+    try:
+        col = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS}
+    except KeyError as e:
+        raise CodecError(f"missing span column {e}") from None
     n = len(pdf)
-    col = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS}
+    has_event = pd.notna(col["event_name"])
+    has_link = pd.notna(col["link_trace_id"])
 
-    trace_id = _coerce_bytes(col["trace_id"])
-    span_id = _coerce_bytes(col["span_id"])
-    parent_span_id = _coerce_bytes(col["parent_span_id"])
-
-    # ---- explode events / links --------------------------------------
-    ev_lists = [
-        None if (v is None or (isinstance(v, float) and pd.isna(v)) or
-                 len(v) == 0) else list(v)
-        for v in col["events"]
-    ]
-    ln_lists = [
-        None if (v is None or (isinstance(v, float) and pd.isna(v)) or
-                 len(v) == 0) else list(v)
-        for v in col["links"]
-    ]
-    flat_events = [e for lst in ev_lists if lst for e in lst]
-    flat_links = [l for lst in ln_lists if lst for l in lst]
+    def text_or_null(c, present=True):
+        # a nullable str/bytes field: '' and b'' null-coerce to None
+        v = col[c]
+        return np.where(present & ~_null_mask_text(v), v, None)
 
     pools = _Pools()
 
@@ -541,171 +491,77 @@ def encode_span_dataframe(
         span_attr_codes = np.full(n, -1, dtype=np.int64)
     else:
         # attributes live in attr:<key> columns; the pool dedup key is the
-        # value tuple. Vectorized get-or-insert: factorize each column,
-        # mix the per-column codes into one int64 (mixed radix), factorize
-        # the mix — same first-appearance pool order as the tuple-dict
-        # loop, no per-row Python.
+        # value tuple, in first-appearance order
         acols = {k: pdf[f"attr:{k}"].to_numpy() for k in keys_sorted}
-        col_codes = []
-        total_bits = 0.0
-        for k in keys_sorted:
-            codes, uniques = _factorize_exact(acols[k])
-            card = len(uniques) + 2  # +1: null code -1 shifts to 0
-            total_bits += np.log2(card)
-            col_codes.append((codes, card))
-        if total_bits < 62:
-            combo = np.zeros(n, dtype=np.int64)
-            for codes, card in col_codes:
-                combo = combo * card + (codes + 1)
-            span_attr_codes, _ = pd.factorize(combo)
-            sel = np.unique(span_attr_codes, return_index=True)[1]
-        else:
-            # mixed-radix key would overflow int64 (many wide columns):
-            # fall back to the tuple-dict walk
-            pool: dict = {}
-            span_attr_codes = np.empty(n, dtype=np.int64)
-            first_rows: list[int] = []
-            for i, key in enumerate(zip(*(acols[k] for k in keys_sorted))):
-                idx = pool.get(key)
-                if idx is None:
-                    idx = len(pool)
-                    pool[key] = idx
-                    first_rows.append(i)
-                span_attr_codes[i] = idx
-            sel = np.asarray(first_rows, dtype=np.int64)
+        span_attr_codes, sel = _dedup_rows(
+            [_factorize_exact(acols[k])[0] for k in keys_sorted])
         pools.entry_blobs[attr_pool_id] = _free_map_columnar_entries(
             attributes_spec, {k: acols[k][sel] for k in keys_sorted},
             pools.state)
 
-    ev_attrs = [e.get("attributes") for e in flat_events]
-    ev_attr_mask = _null_mask(np.array(ev_attrs, dtype=object))
     ev_attr_codes = pools.build(
         _EVENTS_PATH + " attributes",
-        [None if m else v for m, v in zip(ev_attr_mask, ev_attrs)],
-    )
-    ev_names = np.array([e.get("name") for e in flat_events], dtype=object)
-    ev_name_mask = _null_mask_text(ev_names)
+        np.where(has_event, col["event_attributes"], None))
     ev_name_codes = pools.build(
-        _EVENTS_PATH + " name",
-        [None if m else v for m, v in zip(ev_name_mask, ev_names)],
-        scalar=True,
-    )
-
-    ln_attrs = [l.get("attributes") for l in flat_links]
-    ln_attr_mask = _null_mask(np.array(ln_attrs, dtype=object))
+        _EVENTS_PATH + " name", text_or_null("event_name", has_event),
+        scalar=True)
     ln_attr_codes = pools.build(
         _LINKS_ITEM_PATH + " attributes",
-        [None if m else v for m, v in zip(ln_attr_mask, ln_attrs)],
-    )
+        np.where(has_link, col["link_attributes"], None))
 
-    # shared pools: spanId ← parentSpanId + spanId + links.spanId columns
-    parent_mask = _null_mask_text(parent_span_id)
-    span_id_mask = _null_mask_text(span_id)
-    ln_span_ids = _coerce_bytes([l.get("spanId") for l in flat_links])
-    ln_span_mask = _null_mask_text(ln_span_ids)
-    n_parent, n_span = len(parent_span_id), len(span_id)
-    span_pool_codes = pools.build(
-        "spanId",
-        list(np.where(parent_mask, None, parent_span_id))
-        + list(np.where(span_id_mask, None, span_id))
-        + list(np.where(ln_span_mask, None, ln_span_ids)),
-        scalar=True,
-    )
-    parent_codes = span_pool_codes[:n_parent]
-    span_codes = span_pool_codes[n_parent:n_parent + n_span]
-    ln_span_codes = span_pool_codes[n_parent + n_span:]
+    # shared pools: spanId ← parentSpanId + spanId + links.spanId columns,
+    # traceId ← traceId + links.traceId, traceState ← both trace states
+    def shared_pool(pool_id, *columns):
+        codes = pools.build(pool_id, np.concatenate(columns), scalar=True)
+        return np.split(codes, [n * i for i in range(1, len(columns))])
 
-    ln_trace_ids = _coerce_bytes([l.get("traceId") for l in flat_links])
-    trace_pool_codes = pools.build(
-        "traceId", list(trace_id) + list(ln_trace_ids), scalar=True
-    )
-    trace_codes = trace_pool_codes[:n]
-    ln_trace_codes = trace_pool_codes[n:]
+    parent_codes, span_codes, ln_span_codes = shared_pool(
+        "spanId", text_or_null("parent_span_id"), text_or_null("span_id"),
+        text_or_null("link_span_id", has_link))
+    trace_codes, ln_trace_codes = shared_pool(
+        "traceId", np.asarray(col["trace_id"], dtype=object),
+        np.where(has_link, col["link_trace_id"], None))
+    ts_codes, ln_state_codes = shared_pool(
+        "traceState", text_or_null("trace_state"),
+        text_or_null("link_trace_state", has_link))
 
-    ts_col = np.asarray(col["trace_state"], dtype=object)
-    ts_mask = _null_mask_text(ts_col)
-    ln_states = np.array(
-        [l.get("traceState") for l in flat_links], dtype=object
-    )
-    ln_state_mask = _null_mask_text(ln_states)
-    state_pool_codes = pools.build(
-        "traceState",
-        list(np.where(ts_mask, None, ts_col))
-        + list(np.where(ln_state_mask, None, ln_states)),
-        scalar=True,
-    )
-    ts_codes = state_pool_codes[:n]
-    ln_state_codes = state_pool_codes[n:]
+    # links items are themselves pooled objects, keyed by their child
+    # codes and dropped count; the unique entries are assembled columnwise
+    # from those code arrays (no per-entry scalar recursion). Wire layout
+    # per entry = the link object's sorted fields with their usual null
+    # flags (no root flag/pool ref: decode.go:59-67): attributes,
+    # droppedAttributesCount, spanId, traceId, traceState.
+    ln_rows = np.flatnonzero(has_link)
+    ln_item_codes = np.zeros(n, dtype=np.int64)
+    if len(ln_rows):
+        ln_dropped = col["link_dropped_attributes_count"]
+        key = [ln_attr_codes, ln_dropped, ln_span_codes, ln_trace_codes,
+               ln_state_codes]
+        ln_item_codes[ln_rows], sel = _dedup_rows([c[ln_rows] for c in key])
+        sel = ln_rows[sel]
+        pools.entry_blobs[_LINKS_ITEM_PATH] = (len(sel), _fields_blob([
+            _nullable_code_matrix(ln_attr_codes[sel]),
+            _nullable_int_matrix(ln_dropped[sel]),
+            _nullable_code_matrix(ln_span_codes[sel]),
+            _code_matrix(ln_trace_codes[sel]),
+            _nullable_code_matrix(ln_state_codes[sel]),
+        ]))
 
-    # links items are themselves pooled objects. Their dedup key is the
-    # tuple of child codes + scalars (injective: every link field is either
-    # a pool code or the raw int), which skips the structural freeze; the
-    # unique entries are then assembled columnwise from the already-computed
-    # code arrays instead of per-entry scalar recursion — profiling showed
-    # the per-unique-link _encode_payload walk was the single largest
-    # Python cost in the whole encoder (links are ~unique per row).
-    ln_dropped = np.fromiter(
-        ((l.get("droppedAttributesCount") or 0) for l in flat_links),
-        np.int64, len(flat_links))
-    ln_item_codes = pools.build(
-        _LINKS_ITEM_PATH, flat_links,
-        keys=list(zip(ln_attr_codes.tolist(), ln_dropped.tolist(),
-                      ln_span_codes.tolist(), ln_trace_codes.tolist(),
-                      ln_state_codes.tolist())),
-    )
-    if flat_links:
-        # first-occurrence row per pool index, in index order
-        _, sel = np.unique(ln_item_codes, return_index=True)
-        # wire layout per entry = the link object's sorted fields with
-        # their usual null flags (no root flag/pool ref: decode.go:59-67):
-        # attributes, droppedAttributesCount, spanId, traceId, traceState —
-        # assembled as padded matrices + one mask-select (zero per-entry
-        # Python), wire-identical to joining per-entry cells
-        pools.entry_blobs[_LINKS_ITEM_PATH] = (
-            len(sel),
-            _fields_blob([
-                _nullable_code_matrix(ln_attr_codes[sel]),
-                _nullable_vcell_matrix(
-                    np.where(_int_null_mask(ln_dropped[sel]), 0,
-                             ln_dropped[sel]).astype(np.int64),
-                    _int_null_mask(ln_dropped[sel])),
-                _nullable_code_matrix(ln_span_codes[sel]),
-                _code_matrix(ln_trace_codes[sel]),
-                _nullable_code_matrix(ln_state_codes[sel]),
-            ]),
-        )
-        pools.uniques[_LINKS_ITEM_PATH] = []
-
-    name_codes = pools.build(_SPANS_PATH + " name", list(col["name"]),
-                             scalar=True)
-
-    msg_col = np.asarray(col["status_message"], dtype=object)
-    msg_mask = _null_mask_text(msg_col)
-    pools.build(
-        _SPANS_PATH + " status message",
-        list(np.where(msg_mask, None, msg_col)),
-        scalar=True,
-    )
+    name_codes = pools.build(_SPANS_PATH + " name", col["name"], scalar=True)
+    pools.build(_SPANS_PATH + " status message",
+                text_or_null("status_message"), scalar=True)
     # status pool: dedup on the (message, code) key FIRST, then build the
-    # value dicts for the handful of uniques only (statuses have tiny
-    # cardinality — materializing n dicts to keep a few was pure waste)
-    status_keys = np.empty(n, dtype=object)
-    status_keys[:] = list(zip(col["status_message"], col["status_code"]))
-    status_codes, status_uniq_keys = pd.factorize(status_keys)
-    status_codes = status_codes.astype(np.int64, copy=False)
-    status_pool_id = _SPANS_PATH + " status"
-    pools.state.pools[status_pool_id] = {
-        k: i for i, k in enumerate(status_uniq_keys)
-    }
-    pools.uniques[status_pool_id] = [
-        {"message": m, "code": int(c)} for m, c in status_uniq_keys
-    ]
+    # value dicts for the handful of uniques only
+    status_codes, sel = _dedup_rows(
+        [_factorize_exact(col["status_message"])[0], col["status_code"]])
+    pools.uniques[_SPANS_PATH + " status"] = [
+        {"message": col["status_message"][i],
+         "code": int(col["status_code"][i])} for i in sel]
 
     # child pools of the pooled resource/scope objects must be pre-built
     # (topological invariant — encode_entries asserts no late growth);
     # DEFAULT_SCOPE's attributes are empty, so they null-coerce unpooled
-    pools.build("resourceSpans item resource attributes",
-                [resource_attrs or None])
+    pools.build("resourceSpans item resource attributes", [resource_attrs])
     scope_prefix = "resourceSpans item scopeSpans item scope"
     pools.build(scope_prefix + " name", [DEFAULT_SCOPE["name"]], scalar=True)
     pools.build(scope_prefix + " version", [DEFAULT_SCOPE["version"]],
@@ -728,86 +584,34 @@ def encode_span_dataframe(
     # every cell column becomes a (n, w) uint8 matrix + per-row lengths;
     # one hstack + one boolean mask-select flattens the whole span stream
     # row-major with zero per-row Python.
-    fields: list[tuple[np.ndarray, np.ndarray]] = []
-    fields.append(_nullable_code_matrix(span_attr_codes))       # attributes
-    for c in ("dropped_attributes_count", "dropped_events_count",
-              "dropped_links_count"):
-        fields.append(_nullable_vcell_matrix(
-            np.where(_int_null_mask(col[c]), 0,
-                     col[c]).astype(np.int64),
-            _int_null_mask(col[c])))
-    fields.append(
-        encode_sleb128_matrix(_diff_series(col["end_ns"])))     # endTime
-
-    # events cell: per-event item bytes, regrouped per span (sparse path)
-    if flat_events:
-        ev_times = np.array(
-            [e.get("timeUnixNano") for e in flat_events], dtype=object
-        )
-        ev_time_mask = _int_null_mask(ev_times)
-        ev_time_cells = _nullable_diff_cells(
-            [0 if v is None else v for v in ev_times], ev_time_mask
-        )
-        ev_dropped = np.array(
-            [e.get("droppedAttributesCount") or 0 for e in flat_events]
-        )
-        ev_item_bytes = [
-            a + d + nm + t
-            for a, d, nm, t in zip(
-                _nullable_code_cells(ev_attr_codes),
-                _nullable_varint_cells(ev_dropped,
-                                       _int_null_mask(ev_dropped)),
-                _nullable_code_cells(ev_name_codes),
-                ev_time_cells,
-            )
-        ]
-        events_cells, pos = [], 0
-        for lst in ev_lists:
-            if lst is None:
-                events_cells.append(b"\x00")
-            else:
-                k = len(lst)
-                events_cells.append(
-                    b"\x01" + encode_sleb128(k) + b"".join(
-                        ev_item_bytes[pos:pos + k])
-                )
-                pos += k
-        fields.append(_pieces_matrix(events_cells))
-    else:
-        fields.append((np.zeros((n, 1), dtype=np.uint8),
-                       np.ones(n, dtype=np.int64)))             # all null
-
-    fields.append(_nullable_vcell_matrix(
-        np.where(_int_null_mask(col["kind"]), 0, col["kind"])
-        .astype(np.int64),
-        _int_null_mask(col["kind"])))                           # kind
-
-    if flat_links:                                              # links
-        ln_code_pieces = _code_cells(ln_item_codes)
-        links_cells, pos = [], 0
-        for lst in ln_lists:
-            if lst is None:
-                links_cells.append(b"\x00")
-            else:
-                k = len(lst)
-                links_cells.append(
-                    b"\x01" + encode_sleb128(k) + b"".join(
-                        ln_code_pieces[pos:pos + k])
-                )
-                pos += k
-        fields.append(_pieces_matrix(links_cells))
-    else:
-        fields.append((np.zeros((n, 1), dtype=np.uint8),
-                       np.ones(n, dtype=np.int64)))
-
-    fields.append(_code_matrix(name_codes))                     # name
-    fields.append(_nullable_code_matrix(parent_codes))          # parentSpanId
-    fields.append(_nullable_code_matrix(span_codes))            # spanId
-    fields.append(
-        encode_sleb128_matrix(_diff_series(col["start_ns"])))   # startTime
-    fields.append(_code_matrix(status_codes))                   # status
-    fields.append(_code_matrix(trace_codes))                    # traceId
-    fields.append(_nullable_code_matrix(ts_codes))              # traceState
+    # event time: nullable diff — the state advances only on present,
+    # non-zero times
+    ev_time = np.asarray(col["event_time_ns"], dtype=np.int64)
+    ev_time_null = ~has_event | (ev_time == 0)
+    ev_deltas = np.zeros(n, dtype=np.int64)
+    ev_deltas[~ev_time_null] = _diff_series(ev_time[~ev_time_null])
+    fields: list[tuple[np.ndarray, np.ndarray]] = [
+        _nullable_code_matrix(span_attr_codes),                 # attributes
+        _nullable_int_matrix(col["dropped_attributes_count"]),
+        _nullable_int_matrix(col["dropped_events_count"]),
+        _nullable_int_matrix(col["dropped_links_count"]),
+        encode_sleb128_matrix(_diff_series(col["end_ns"])),     # endTime
+        *_one_item([                                            # events
+            _nullable_code_matrix(ev_attr_codes),
+            _nullable_int_matrix(col["event_dropped_attributes_count"]),
+            _nullable_code_matrix(ev_name_codes),
+            _nullable_vcell_matrix(ev_deltas, ev_time_null),
+        ], has_event),
+        _nullable_int_matrix(col["kind"]),                      # kind
+        *_one_item([_code_matrix(ln_item_codes)], has_link),    # links
+        _code_matrix(name_codes),                               # name
+        _nullable_code_matrix(parent_codes),                    # parentSpanId
+        _nullable_code_matrix(span_codes),                      # spanId
+        encode_sleb128_matrix(_diff_series(col["start_ns"])),   # startTime
+        _code_matrix(status_codes),                             # status
+        _code_matrix(trace_codes),                              # traceId
+        _nullable_code_matrix(ts_codes),                        # traceState
+    ]
 
     # ---- data stream: root → the one resourceSpans group -------------
     # resourceSpans item fields sorted: resource, schemaUrl, scopeSpans;

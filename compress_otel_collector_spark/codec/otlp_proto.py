@@ -369,77 +369,74 @@ def _attr_kv_pieces(url, n_chars, const_b: bytes) -> list:
     return [blob[s:e] for s, e in zip(starts.tolist(), ends.tolist())]
 
 
-def spans_columns_to_proto(
-    trace_id, span_id, trace_state, name, kind, start_ns, end_ns,
-    url, n_chars, events, links, dropped_links,
-    status_message, status_code,
-    const_attrs: dict, resource_attrs: dict, scope: dict,
-) -> bytes:
+def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
+                           scope: dict) -> bytes:
     """Column-driven TracesData marshal for the bench comparison arm.
 
-    Same wire bytes as :func:`spans_rows_to_proto` over the pipeline's span
-    shape (pinned by a wire-equality test), but built from the already-
-    columnar numpy arrays: constant/low-cardinality fields come from caches,
-    timestamps are packed with one vectorized ``astype('<u8')`` per column,
-    and only genuinely per-row payloads (the unique url attribute, the
-    sparse events/links) touch Python per row — no intermediate dict per
-    span (r2 verdict: the dict genexp made ``pipeline_arms`` cost 1.4× the
-    production pipeline).
+    Reads the span frame ``plans.pipeline._group_spans_frame`` builds:
+    16-byte ``trace_id`` and 8-byte ``span_id``, ``trace_state``,
+    ``name``, ``kind``, the timestamps, the ``attr:http.url`` and
+    ``attr:n_chars`` attributes, the one-event and one-link columns of
+    ``codec.batch.SPAN_COLUMNS``, ``dropped_links_count`` and the status;
+    its other columns are 0 or empty on that frame. Same wire bytes as
+    :func:`spans_rows_to_proto` over that shape (pinned by a wire-equality
+    test), but built from the columns: constant/low-cardinality fields
+    come from caches, ids and timestamps are packed as fixed-width
+    matrices, and only genuinely per-row payloads (the unique url
+    attribute, the sparse events/links) touch Python per row — no
+    intermediate dict per span (r2 verdict: the dict genexp made
+    ``pipeline_arms`` cost 1.4× the production pipeline).
 
     ``const_attrs`` are attributes identical on every span of the batch
     (status code, lang); their KeyValue bytes are assembled once.
 
-    Contract: the dicts inside ``events``/``links`` cells must not be
-    mutated between rows within one call — the per-row suffix caches are
-    keyed by ``id()`` (cheap, correct for the pipeline's shared
-    never-mutated cell dicts), so an in-place mutation of a reused dict
-    would return the STALE wire bytes from its first encounter.
+    Contract: the attribute dicts of the ``event_attributes`` and
+    ``link_attributes`` columns must not be mutated during the call —
+    the event/link suffix caches are keyed by ``id()``, which the column
+    arrays keep stable by holding the dicts for the whole call.
     """
     import numpy as np
+    import pandas as pd
 
-    n = len(url)
-    # ids: fixed-width -> constant prefixes; when every id has the OTLP
-    # width the whole column assembles as one (n, 28) matrix + slices
-    # (r8 — one bytes concat per row otherwise)
-    p_tid = _tag(1, 2) + _v(16)
-    p_sid = _tag(2, 2) + _v(8)
-    try:
-        tid_buf = b"".join(trace_id)
-        sid_buf = b"".join(span_id)
-    except TypeError:  # non-bytes cells (bytearray/memoryview callers)
-        tid_buf = sid_buf = b""
-    if n and len(tid_buf) == 16 * n and len(sid_buf) == 8 * n:
-        idmat = np.empty((n, 28), dtype=np.uint8)
-        idmat[:, 0:2] = np.frombuffer(p_tid, dtype=np.uint8)
-        idmat[:, 2:18] = np.frombuffer(tid_buf, dtype=np.uint8).reshape(
-            n, 16)
-        idmat[:, 18:20] = np.frombuffer(p_sid, dtype=np.uint8)
-        idmat[:, 20:28] = np.frombuffer(sid_buf, dtype=np.uint8).reshape(
-            n, 8)
-        idb = idmat.tobytes()
-        id_pieces = [idb[28 * i:28 * i + 28] for i in range(n)]
-    else:  # odd-width ids (generic callers): per-row concat
-        id_pieces = [p_tid + bytes(t) + p_sid + bytes(s)
-                     for t, s in zip(trace_id, span_id)]
+    col = {c: spans[c].to_numpy() for c in (
+        "trace_id", "span_id", "trace_state", "name", "kind", "start_ns",
+        "end_ns", "attr:http.url", "attr:n_chars", "event_time_ns",
+        "event_name", "event_attributes", "event_dropped_attributes_count",
+        "link_trace_id", "link_span_id", "link_trace_state",
+        "link_attributes", "link_dropped_attributes_count",
+        "dropped_links_count", "status_message", "status_code")}
+    n = len(spans)
+    # ids: constant prefixes; the whole column assembles as one (n, 28)
+    # matrix + slices (r8 — one bytes concat per row otherwise)
+    idmat = np.empty((n, 28), dtype=np.uint8)
+    idmat[:, 0:2] = np.frombuffer(_tag(1, 2) + _v(16), dtype=np.uint8)
+    idmat[:, 2:18] = np.frombuffer(
+        b"".join(col["trace_id"]), dtype=np.uint8).reshape(n, 16)
+    idmat[:, 18:20] = np.frombuffer(_tag(2, 2) + _v(8), dtype=np.uint8)
+    idmat[:, 20:28] = np.frombuffer(
+        b"".join(col["span_id"]), dtype=np.uint8).reshape(n, 8)
+    idb = idmat.tobytes()
+    id_pieces = [idb[28 * i:28 * i + 28] for i in range(n)]
     # trace_state / name / kind: low-cardinality -> dict caches
     ts_cache = {None: b"", "": b""}
     name_cache: dict = {}
     kind_cache: dict = {}
     ts_pieces = [
         ts_cache.get(t) if t in ts_cache else
-        ts_cache.setdefault(t, _f_str(3, t)) for t in trace_state
+        ts_cache.setdefault(t, _f_str(3, t)) for t in col["trace_state"]
     ]
     name_pieces = [
         name_cache.get(v) if v in name_cache else
-        name_cache.setdefault(v, _f_str(5, v)) for v in name
+        name_cache.setdefault(v, _f_str(5, v)) for v in col["name"]
     ]
     kind_pieces = [
         kind_cache.get(int(v)) if int(v) in kind_cache else
-        kind_cache.setdefault(int(v), _f_varint(6, int(v))) for v in kind
+        kind_cache.setdefault(int(v), _f_varint(6, int(v)))
+        for v in col["kind"]
     ]
     # timestamps: one (n, 18) matrix [tag7 | 8 LE bytes | tag8 | 8 LE bytes]
-    start_arr = np.asarray(start_ns, dtype=np.int64)
-    end_arr = np.asarray(end_ns, dtype=np.int64)
+    start_arr = np.asarray(col["start_ns"], dtype=np.int64)
+    end_arr = np.asarray(col["end_ns"], dtype=np.int64)
     tmat = np.empty((n, 18), dtype=np.uint8)
     tmat[:, 0] = _tag(7, 1)[0]
     tmat[:, 1:9] = start_arr.astype("<u8").view(np.uint8).reshape(n, 8)
@@ -461,71 +458,47 @@ def spans_columns_to_proto(
     const_b = b"".join(
         _kv_cached(9, k, type(v).__name__, v) for k, v in const_attrs.items()
     )
-    attr_pieces = _attr_kv_pieces(url, n_chars, const_b)
-    # events / links: sparse; suffixes (everything but the per-row
-    # time/ids) cached two-level — an id()-keyed fast map first (the
-    # pipeline shares ONE attrs dict across rows, so freezing per row is
-    # pure overhead; ids are stable here because the event/link dicts
-    # stay referenced by the input arrays for the whole call), then the
-    # content-keyed map for callers with per-row dicts
-    t11, t13 = _tag(11, 2), _tag(13, 2)
-    ev_suffix_cache: dict = {}
-    ev_id_cache: dict = {}
-
-    def _events_piece(evs) -> bytes:
-        out = b""
-        for e in evs:
-            a = e.get("attributes")
-            dac = e.get("droppedAttributesCount") or 0
-            nm = e.get("name")
-            ik = (nm, id(a), dac)
-            suffix = ev_id_cache.get(ik)
-            if suffix is None:
-                key = (nm, _freeze_attrs(a), dac)
-                suffix = ev_suffix_cache.get(key)
-                if suffix is None:
-                    suffix = (_f_str(2, nm) + _attributes(3, a)
-                              + _f_varint(4, dac))
-                    ev_suffix_cache[key] = suffix
-                ev_id_cache[ik] = suffix
-            payload = _f_fixed64(1, e.get("timeUnixNano") or 0) + suffix
-            out += t11 + _v(len(payload)) + payload
-        return out
-
-    lk_suffix_cache: dict = {}
-    lk_id_cache: dict = {}
-
-    def _links_piece(lns) -> bytes:
-        out = b""
-        for ln in lns:
-            a = ln.get("attributes")
-            dac = ln.get("droppedAttributesCount") or 0
-            ts = ln.get("traceState")
-            ik = (ts, id(a), dac)
-            suffix = lk_id_cache.get(ik)
-            if suffix is None:
-                key = (ts, _freeze_attrs(a), dac)
-                suffix = lk_suffix_cache.get(key)
-                if suffix is None:
-                    # same field order as _link: state=3 attrs=4 dropped=5
-                    suffix = (_f_str(3, ts) + _attributes(4, a)
-                              + _f_varint(5, dac))
-                    lk_suffix_cache[key] = suffix
-                lk_id_cache[ik] = suffix
-            payload = (_f_bytes(1, ln.get("traceId"))
-                       + _f_bytes(2, ln.get("spanId")) + suffix)
-            out += t13 + _v(len(payload)) + payload
-        return out
-
+    attr_pieces = _attr_kv_pieces(
+        col["attr:http.url"], col["attr:n_chars"], const_b)
+    # events / links: sparse, one per span at most; everything but the
+    # per-row time/ids is a suffix cached by (scalars, id(attributes))
+    ev_pieces = [b""] * n
+    ev_cache: dict = {}
+    rows = np.flatnonzero(pd.notna(col["event_name"]))
+    for i, t, nm, a, dac in zip(
+            rows.tolist(), col["event_time_ns"][rows].tolist(),
+            col["event_name"][rows], col["event_attributes"][rows],
+            col["event_dropped_attributes_count"][rows].tolist()):
+        suffix = ev_cache.get((nm, id(a), dac))
+        if suffix is None:
+            suffix = ev_cache[nm, id(a), dac] = (
+                _f_str(2, nm) + _attributes(3, a) + _f_varint(4, dac))
+        payload = _f_fixed64(1, t) + suffix
+        ev_pieces[i] = _tag(11, 2) + _v(len(payload)) + payload
+    lk_pieces = [b""] * n
+    lk_cache: dict = {}
+    rows = np.flatnonzero(pd.notna(col["link_trace_id"]))
+    for i, tid, sid, ts, a, dac in zip(
+            rows.tolist(), col["link_trace_id"][rows],
+            col["link_span_id"][rows], col["link_trace_state"][rows],
+            col["link_attributes"][rows],
+            col["link_dropped_attributes_count"][rows].tolist()):
+        suffix = lk_cache.get((ts, id(a), dac))
+        if suffix is None:
+            # same field order as _link: state=3 attrs=4 dropped=5
+            suffix = lk_cache[ts, id(a), dac] = (
+                _f_str(3, ts) + _attributes(4, a) + _f_varint(5, dac))
+        payload = _f_bytes(1, tid) + _f_bytes(2, sid) + suffix
+        lk_pieces[i] = _tag(13, 2) + _v(len(payload)) + payload
     dl_cache: dict = {}
     dl_pieces = [
         dl_cache.get(int(d)) if int(d) in dl_cache else
         dl_cache.setdefault(int(d), _f_varint(14, int(d)))
-        for d in dropped_links
+        for d in col["dropped_links_count"]
     ]
     status_pieces = [
         _status_cached(m, int(c))
-        for m, c in zip(status_message, status_code)
+        for m, c in zip(col["status_message"], col["status_code"])
     ]
     # flat-list assembly: one append per piece + ONE join, instead of a
     # 10-way bytes concat per span (which allocated an intermediate
@@ -533,11 +506,9 @@ def spans_columns_to_proto(
     t_span = _tag(2, 2)
     flat: list = []
     ap = flat.append
-    for idp, tsp, nmp, kp, tp, atp, evs, lns, dlp, stp in zip(
+    for idp, tsp, nmp, kp, tp, atp, evp, lkp, dlp, stp in zip(
             id_pieces, ts_pieces, name_pieces, kind_pieces, time_pieces,
-            attr_pieces, events, links, dl_pieces, status_pieces):
-        evp = _events_piece(evs) if evs is not None and len(evs) else b""
-        lkp = _links_piece(lns) if lns is not None and len(lns) else b""
+            attr_pieces, ev_pieces, lk_pieces, dl_pieces, status_pieces):
         ap(t_span)
         ap(_v(len(idp) + len(tsp) + len(nmp) + len(kp) + len(tp)
               + len(atp) + len(evp) + len(lkp) + len(dlp) + len(stp)))
@@ -545,23 +516,3 @@ def spans_columns_to_proto(
         ap(evp); ap(lkp); ap(dlp); ap(stp)
     spans_b = b"".join(flat)
     return _wrap_resource_group(spans_b, resource_attrs, scope)
-
-
-def _freeze_attrs(attrs):
-    """Hashable cache key for a (possibly nested) attribute dict."""
-    if not attrs:
-        return None
-    return tuple((k, _freeze_value(v)) for k, v in attrs.items())
-
-
-def _freeze_value(v):
-    if isinstance(v, dict):
-        return ("map", tuple((k, _freeze_value(x)) for k, x in v.items()))
-    if isinstance(v, (list, tuple)):
-        # recurse — a list of dicts would otherwise stay unhashable
-        return ("arr", tuple(_freeze_value(x) for x in v))
-    # tag scalars with the concrete type: True/1/1.0 hash and compare
-    # equal but marshal to different AnyValue oneofs, so an untagged key
-    # would hand {'f': 1} the cached suffix of {'f': True} (same bug
-    # class _kv_cached fixes with its tname key).
-    return (type(v).__name__, v)

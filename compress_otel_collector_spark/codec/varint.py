@@ -73,17 +73,17 @@ def decode_sleb128(data, pos: int) -> tuple[int, int]:
 # --------------------------------------------------------------------------
 
 # value v needs k groups (k=1..8) iff -(2^(7k-1)) <= v < 2^(7k-1); else 9.
-_THRESHOLDS = [(1 << (7 * k - 1)) for k in range(1, 9)]
+_THRESHOLDS = np.array([(1 << (7 * k - 1)) for k in range(1, 9)],
+                       dtype=np.int64)
 
 
 def sleb128_lengths(values: np.ndarray) -> np.ndarray:
-    """Per-value encoded byte length (int64 array in, uint8 array out)."""
+    """Per-value encoded byte length (int64 array in, uint8 array out):
+    1 + the number of thresholds at or below ``v``, or below ``~v`` for a
+    negative ``v`` (``v ^ (v >> 63)``)."""
     v = np.asarray(values, dtype=np.int64)
-    k = np.full(v.shape, 9, dtype=np.uint8)
-    for g in range(8, 0, -1):
-        hi = _THRESHOLDS[g - 1]
-        k[(v >= -hi) & (v < hi)] = g
-    return k
+    return (1 + np.searchsorted(_THRESHOLDS, v ^ (v >> 63), side="right")
+            ).astype(np.uint8)
 
 
 def encode_sleb128_matrix(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -65,10 +65,11 @@ def warc_day_expr(ts_col: str = "warc_ts") -> Column:
 def span_columns_sql(n_chars_col: str) -> list[str]:
     """The OTel-shaped span columns of a parsed page row, as ``selectExpr``
     strings — the one span-column definition (it changes in lockstep with
-    ``plans.pipeline._encode_batches``, ``plans.pipeline.expected_roundtrip``
-    and ``plans.projector``). SQL strings build the projection in one py4j
-    call; Column-API construction (~50 round trips) was a measurable share
-    of every pipeline query's wall (r8).
+    ``plans.pipeline._group_spans_frame``,
+    ``plans.pipeline.expected_roundtrip`` and ``plans.projector``). SQL
+    strings build the projection in one py4j call; Column-API construction
+    (~50 round trips) was a measurable share of every pipeline query's wall
+    (r8).
 
     Deterministic functions of (url, doc_id, warc_ts, ``n_chars_col``),
     where ``n_chars_col`` names a precomputed ``length(text)`` long column:

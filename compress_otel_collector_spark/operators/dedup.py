@@ -374,6 +374,78 @@ def repetition_ratio(df: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
+#: tokens per chunk of the simhash kernel's (tokens, bits) int32 gather
+_SIMHASH_CHUNK_TOKENS = 200_000
+
+
+def _simhash_fingerprints(texts, bits: int):
+    """The ``simhash`` UDF body: one fingerprint per text of a batch."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    n_digits = bits // 4
+    n_bytes = (n_digits + 1) // 2
+    md5 = hashlib.md5
+    flat: list = []
+    counts = np.empty(len(texts), dtype=np.int64)
+    for row, s in enumerate(texts):
+        toks = [t for t in s.split(" ") if t]
+        counts[row] = len(toks)
+        flat.extend(toks)
+    total = len(flat)
+    if total == 0:
+        return pd.Series(np.zeros(len(texts), dtype=np.int64))
+    # hash each DISTINCT token once (corpora repeat tokens heavily);
+    # codes gather the per-occurrence bit rows back. NUL-exact
+    # factorize (CLAUDE.md): raw pd.factorize truncates str keys at
+    # embedded NULs, which would conflate distinct tokens.
+    from compress_otel_collector_spark.codec.batch import (
+        _factorize_exact,
+    )
+
+    codes, uniques = _factorize_exact(flat)
+    digests = b"".join(
+        md5(t.encode("utf-8")).digest()[:n_bytes] for t in uniques)
+    byt = np.frombuffer(digests, dtype=np.uint8).reshape(
+        len(uniques), n_bytes)
+    # hex digit p: high nibble of byte p//2 when p even, low when odd
+    digits = np.empty((len(uniques), n_digits), dtype=np.uint8)
+    digits[:, 0::2] = byt[:, :(n_digits + 1) // 2] >> 4
+    digits[:, 1::2] = byt[:, :n_digits // 2] & 15
+    # bit i of a token = bit i%4 of digit i//4; int32 so the per-doc
+    # reduceat cannot overflow (uint8 would wrap at 256 same-bit
+    # tokens in one document)
+    uniq_bits = (
+        (digits[:, :, None] >> np.arange(4, dtype=np.uint8)) & 1
+    ).reshape(len(uniques), bits).astype(np.int32)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    ones = np.zeros((len(texts), bits), dtype=np.int64)
+    # chunk the token stream, not the documents, so the gathered
+    # (tokens, bits) int32 matrix stays bounded (~50 MB) at any Arrow
+    # batch size AND any document size: a document straddling a chunk
+    # boundary gets partial sums from each chunk, and bit counts add
+    nz_rows = np.flatnonzero(counts)
+    nz_starts = starts[nz_rows]
+    nz_ends = nz_starts + counts[nz_rows]
+    for t0 in range(0, total, _SIMHASH_CHUNK_TOKENS):
+        t1 = min(t0 + _SIMHASH_CHUNK_TOKENS, total)
+        # the non-empty documents overlapping [t0, t1); only the first
+        # can start before t0, so the clipped offsets stay increasing
+        lo = np.searchsorted(nz_ends, t0, side="right")
+        hi = np.searchsorted(nz_starts, t1, side="left")
+        rows = nz_rows[lo:hi]
+        ones[rows] += np.add.reduceat(
+            uniq_bits[codes[t0:t1]],
+            (np.maximum(nz_starts[lo:hi], t0) - t0).astype(np.intp), axis=0)
+    # ±1 sign-of-sum ≡ majority: sum(±1) = 2·ones − n > 0 ⇔ 2·ones > n
+    maj = (2 * ones) > counts[:, None]
+    pows = (np.uint64(1) << np.arange(bits, dtype=np.uint64))
+    fp = (maj.astype(np.uint64) * pows).sum(axis=1, dtype=np.uint64)
+    return pd.Series(fp.view(np.int64), dtype="int64")
+
+
 def simhash(df: DataFrame, bits: int = 64, text_col: str = "text",
             id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash from token md5 nibbles (engine-portable derivation).
@@ -414,74 +486,7 @@ def simhash(df: DataFrame, bits: int = 64, text_col: str = "text",
 
     @pandas_udf("long")
     def _simhash_batch(texts):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        n_digits = bits // 4
-        n_bytes = (n_digits + 1) // 2
-        md5 = hashlib.md5
-        flat: list = []
-        counts = np.empty(len(texts), dtype=np.int64)
-        for row, s in enumerate(texts):
-            toks = [t for t in s.split(" ") if t]
-            counts[row] = len(toks)
-            flat.extend(toks)
-        total = len(flat)
-        if total == 0:
-            return pd.Series(np.zeros(len(texts), dtype=np.int64))
-        # hash each DISTINCT token once (corpora repeat tokens heavily);
-        # codes gather the per-occurrence bit rows back. NUL-exact
-        # factorize (CLAUDE.md): raw pd.factorize truncates str keys at
-        # embedded NULs, which would conflate distinct tokens.
-        from compress_otel_collector_spark.codec.batch import (
-            _factorize_exact,
-        )
-
-        codes, uniques = _factorize_exact(flat)
-        digests = b"".join(
-            md5(t.encode("utf-8")).digest()[:n_bytes] for t in uniques)
-        byt = np.frombuffer(digests, dtype=np.uint8).reshape(
-            len(uniques), n_bytes)
-        # hex digit p: high nibble of byte p//2 when p even, low when odd
-        digits = np.empty((len(uniques), n_digits), dtype=np.uint8)
-        digits[:, 0::2] = byt[:, :(n_digits + 1) // 2] >> 4
-        digits[:, 1::2] = byt[:, :n_digits // 2] & 15
-        # bit i of a token = bit i%4 of digit i//4; int32 so the per-doc
-        # reduceat cannot overflow (uint8 would wrap at 256 same-bit
-        # tokens in one document)
-        uniq_bits = (
-            (digits[:, :, None] >> np.arange(4, dtype=np.uint8)) & 1
-        ).reshape(len(uniques), bits).astype(np.int32)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        nz = counts > 0
-        ones = np.zeros((len(texts), bits), dtype=np.int64)
-        # chunk by documents so the gathered (tokens, bits) int32 matrix
-        # stays bounded (~50 MB) at any Arrow batch size
-        nz_rows = np.nonzero(nz)[0]
-        if len(nz_rows):
-            budget = 200_000  # tokens per chunk
-            lo = 0
-            while lo < len(nz_rows):
-                hi = lo
-                tok_sum = 0
-                while hi < len(nz_rows) and (hi == lo
-                                             or tok_sum < budget):
-                    tok_sum += counts[nz_rows[hi]]
-                    hi += 1
-                rows = nz_rows[lo:hi]
-                t0 = starts[rows[0]]
-                t1 = starts[rows[-1]] + counts[rows[-1]]
-                ones[rows] = np.add.reduceat(
-                    uniq_bits[codes[t0:t1]],
-                    (starts[rows] - t0).astype(np.intp), axis=0)
-                lo = hi
-        # ±1 sign-of-sum ≡ majority: sum(±1) = 2·ones − n > 0 ⇔ 2·ones > n
-        maj = (2 * ones) > counts[:, None]
-        pows = (np.uint64(1) << np.arange(bits, dtype=np.uint64))
-        fp = (maj.astype(np.uint64) * pows).sum(axis=1, dtype=np.uint64)
-        return pd.Series(fp.view(np.int64), dtype="int64")
+        return _simhash_fingerprints(texts, bits)
 
     # ≥1 non-empty token ⇔ some non-space char ⇔ trim(text) != '' — the
     # split/filter form re-tokenized every document in the JVM just to

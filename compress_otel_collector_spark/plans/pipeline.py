@@ -137,8 +137,6 @@ def _hex_column(vals, width: int):
 
     import numpy as np
 
-    if len(vals) == 0:
-        return []
     return np.frombuffer(
         binascii.hexlify(b"".join(vals)), dtype=f"S{width * 2}"
     ).astype(f"U{width * 2}")
@@ -150,39 +148,48 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     this shape — arm byte counts shift <1% vs the pandas form, both are
     fidelity-equivalent records-JSON); the pandas path is the fallback
     and the semantic reference: hex ids, ``parent_span_id`` always ``""``
-    (empty bytes), links hexed, NaN → null."""
+    (empty bytes), NaN → null, and the ``event_*``/``link_*`` columns as
+    OTLP-style ``events``/``links`` lists (hex link ids, null without)."""
     import numpy as np
 
-    hex_tid = _hex_column(spans["trace_id"].to_numpy(), 16)
-    hex_sid = _hex_column(spans["span_id"].to_numpy(), 8)
-    links_view = [
-        None if lk is None else [
-            {**x, "traceId": x["traceId"].hex(),
-             "spanId": x["spanId"].hex()}
-            for x in lk
-        ]
-        for lk in spans["links"]
-    ]
+    n = len(spans)
+    col = {c: spans[c].to_numpy() for c in spans.columns}
+    nested = {"events": [None] * n, "links": [None] * n}
+    rows = np.flatnonzero(pd.notna(col["event_name"]))
+    for i, t, nm, a, d in zip(
+            rows.tolist(), col["event_time_ns"][rows].tolist(),
+            col["event_name"][rows], col["event_attributes"][rows],
+            col["event_dropped_attributes_count"][rows].tolist()):
+        nested["events"][i] = [{"timeUnixNano": t, "name": nm,
+                                "attributes": a, "droppedAttributesCount": d}]
+    rows = np.flatnonzero(pd.notna(col["link_trace_id"]))
+    for i, t, sp, st, a, d in zip(
+            rows.tolist(),
+            _hex_column(col["link_trace_id"][rows], 16).tolist(),
+            _hex_column(col["link_span_id"][rows], 8).tolist(),
+            col["link_trace_state"][rows], col["link_attributes"][rows],
+            col["link_dropped_attributes_count"][rows].tolist()):
+        nested["links"][i] = [{"traceId": t, "spanId": sp, "traceState": st,
+                               "attributes": a, "droppedAttributesCount": d}]
+    hex_tid = _hex_column(col["trace_id"], 16)
+    hex_sid = _hex_column(col["span_id"], 8)
+    flat = [c for c in spans.columns if not c.startswith(("event_", "link_"))]
     try:
         import orjson
     except ImportError:
-        json_view = spans.assign(
-            trace_id=hex_tid, span_id=hex_sid, parent_span_id="",
-            links=links_view)
+        json_view = spans[flat].assign(
+            trace_id=hex_tid, span_id=hex_sid, parent_span_id="", **nested)
         return json_view.to_json(orient="records").encode()
-    n = len(spans)
     cols: dict = {}
-    for c in spans.columns:
+    for c in flat:
         if c == "trace_id":
             cols[c] = hex_tid.tolist()
         elif c == "span_id":
             cols[c] = hex_sid.tolist()
         elif c == "parent_span_id":
             cols[c] = [""] * n
-        elif c == "links":
-            cols[c] = links_view
         else:
-            a = spans[c].to_numpy()
+            a = col[c]
             if a.dtype.kind == "f":
                 # nullable ints arrive as float64 + NaN; orjson rejects NaN
                 o = a.astype(object)
@@ -190,6 +197,7 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
                 cols[c] = o.tolist()
             else:
                 cols[c] = a.tolist()
+    cols.update(nested)
     # compiled literal-dict row builder: a dict display with constant keys
     # (BUILD_CONST_KEY_MAP) is ~2× dict(zip()) per row, and this listcomp
     # was the arm's single largest component (same generated-code pattern
@@ -203,70 +211,27 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     return orjson.dumps(recs)
 
 
-def _span_events_cells(doc_ids, starts, events_every: int):
-    """Vectorized events column: object array, one 1-event list per selected
-    row (doc_id % events_every == 0), None elsewhere. Selection, times and
-    the attribute mask are numpy; Python touches only rows WITH events.
-
-    Every 20th page's event carries a NESTED attribute value (an object
-    containing an array) so the free-map nested wire path
-    (encode.go:520-597) runs at pipeline scale on every blob, not only in
-    codec unit tests (r2 verdict gap #4).
-    """
-    import numpy as np
-
-    ev = np.full(len(doc_ids), None, dtype=object)
-    if events_every:
-        sel = np.nonzero(doc_ids % events_every == 0)[0]
-        # int64 BEFORE the add: a float64 ns timestamp rounds at 256 ns
-        times = np.asarray(starts, dtype=np.int64)[sel] + 1_000_000
-        with_phase = doc_ids[sel] % 20 == 0
-        # ONE shared dict per attribute shape (never mutated downstream):
-        # the proto arm's id()-keyed suffix cache then hits on every row
-        nested = {"phase": "connect",
-                  "probe": {"ttl": 64, "hops": [1, 2]}}
-        empty: dict = {}
-        for j in range(len(sel)):
-            ev[sel[j]] = [{
-                "timeUnixNano": int(times[j]),
-                "name": "fetch",
-                "attributes": nested if with_phase[j] else empty,
-                "droppedAttributesCount": 0,
-            }]
-    return ev
-
-
-def _span_links_cells(doc_ids, trace_ids):
-    """Vectorized links column: every ``LINKS_EVERY``-th page links back to
-    its own trace (spanId = tail 8 bytes of the 16-byte trace id)."""
-    import numpy as np
-
-    ln = np.full(len(doc_ids), None, dtype=object)
-    rel = {"rel": "prev"}  # shared (id-cached by the proto arm)
-    for i in np.nonzero(doc_ids % LINKS_EVERY == 0)[0]:
-        t = bytes(trace_ids[i])
-        ln[i] = [{
-            "traceId": t,
-            "spanId": t[8:],
-            "traceState": "",
-            "attributes": rel,
-            "droppedAttributesCount": 0,
-        }]
-    return ln
-
-
 def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
     """One route group → (span frame, attrs spec, resource attributes):
     the arguments of ``codec.batch.encode_span_dataframe``, also read by
     the comparison arms. Its own function so the no-JVM tests can encode
     exactly what ``_encode_batches`` encodes. Span-shape lockstep note
     (CLAUDE.md) applies here.
+
+    Event and link columns (numpy, no per-row dicts): every
+    ``events_every``-th page (0: none) has one "fetch" event 1 ms after
+    its start, and every 20th page's event carries a NESTED attribute
+    value (an object containing an array) so the free-map nested wire
+    path (encode.go:520-597) runs at pipeline scale; every
+    ``LINKS_EVERY``-th page links back to its own trace (spanId = tail 8
+    bytes of the 16-byte trace id). Attribute cells share ONE dict per
+    shape, never mutated downstream: the encoder's freeze memo and the
+    proto arm's suffix cache are keyed by ``id()``.
     """
     import numpy as np
 
     n = len(g)
     doc_ids = g["doc_id"].to_numpy()
-    starts = g["start_ns"].to_numpy()
     trace_ids = g["trace_id"].to_numpy()
     cols = {
         c: g[c].to_numpy()
@@ -295,8 +260,22 @@ def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
         cols["attr:lang"] = lang_col
         attrs_spec["lang"] = "str"
         resource = {"service.name": f"crawler-{lang}", **resource}
-    cols["events"] = _span_events_cells(doc_ids, starts, events_every)
-    cols["links"] = _span_links_cells(doc_ids, trace_ids)
+    ev = (doc_ids % events_every == 0) if events_every else np.zeros(n, bool)
+    nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
+    # int64 BEFORE the add: a float64 ns timestamp rounds at 256 ns
+    cols["event_time_ns"] = np.where(
+        ev, cols["start_ns"].astype(np.int64) + 1_000_000, 0)
+    cols["event_name"] = np.where(ev, "fetch", None)
+    cols["event_attributes"] = np.where(
+        ev, np.where(doc_ids % 20 == 0, nested, {}), None)
+    cols["event_dropped_attributes_count"] = np.zeros(n, np.int64)
+    ln = doc_ids % LINKS_EVERY == 0
+    cols["link_trace_id"] = np.where(ln, trace_ids, None)
+    cols["link_span_id"] = np.full(n, None, dtype=object)
+    cols["link_span_id"][ln] = [t[8:] for t in trace_ids[ln]]
+    cols["link_trace_state"] = np.where(ln, "", None)
+    cols["link_attributes"] = np.where(ln, {"rel": "prev"}, None)
+    cols["link_dropped_attributes_count"] = np.zeros(n, np.int64)
     # ONE construction (r8): the former build-then-5×__setitem__ shape
     # paid a pandas block-manager consolidation per added column
     return pd.DataFrame(cols, copy=False), attrs_spec, resource
@@ -318,24 +297,8 @@ def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
         {} if lang is None or pd.isna(lang)
         else {"lang": lang})
     proto = spans_columns_to_proto(
-        spans["trace_id"].to_numpy(),
-        spans["span_id"].to_numpy(),
-        spans["trace_state"].to_numpy(),
-        spans["name"].to_numpy(),
-        spans["kind"].to_numpy(),
-        spans["start_ns"].to_numpy(),
-        spans["end_ns"].to_numpy(),
-        spans["attr:http.url"].to_numpy(),
-        spans["attr:n_chars"].to_numpy(),
-        spans["events"].to_numpy(),
-        spans["links"].to_numpy(),
-        spans["dropped_links_count"].to_numpy(),
-        spans["status_message"].to_numpy(),
-        spans["status_code"].to_numpy(),
-        const_attrs={"http.status_code": 200, **lang_attr},
-        resource_attrs=resource,
-        scope=DEFAULT_SCOPE,
-    )
+        spans, const_attrs={"http.status_code": 200, **lang_attr},
+        resource_attrs=resource, scope=DEFAULT_SCOPE)
     pz = len(zstd.compress(proto, asbytes=True))
     # JSON marshal arm (the reference's JSONMarshaler
     # comparison, trace.go:95-105): OTLP-JSON-style hex ids;
@@ -352,7 +315,7 @@ def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
     tbl = pa.table({
         c: pa.array(spans[c].to_numpy())
         for c in spans.columns
-        if c not in ("events", "links")
+        if not c.startswith(("event_", "link_"))
     })
     with pa.ipc.new_stream(sink, tbl.schema) as w:
         w.write_table(tbl)

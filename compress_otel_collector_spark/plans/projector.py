@@ -17,7 +17,8 @@ span, which is exactly the codec's own dictionary bet.
 
 SPAN-SHAPE LOCKSTEP (CLAUDE.md): the token walk hard-codes the trace
 model's sorted field order — it must change together with
-``functions.columns.span_columns_sql`` / ``plans.pipeline._encode_batches`` /
+``functions.columns.span_columns_sql`` /
+``plans.pipeline._group_spans_frame`` /
 ``plans.pipeline.expected_roundtrip``. Drift is caught by
 ``tests/test_projector.py`` (fast ≡ generic on fuzzed docs) and the
 full-fidelity roundtrip gate.

@@ -14,6 +14,10 @@ Properties over randomized trace documents:
 3. byte-flip corruption surfaces ONLY CodecError (or succeeds) through
    decode AND projection — the r4 campaign found one escape this way (a
    flipped free-value type tag decodes fine but projected as TypeError)
+4. properties 1 and 3 on the blobs production writes: the batch encoder's
+   (column-major pool order) over random production-shaped span frames —
+   typed event/link columns with at most one of each per span, NUL
+   lookalikes in every text field, empty ids and zero times
 
 Usage: ``python scripts/fuzz_codec.py [n_docs] [n_corrupt_blobs]``
 (defaults 1500 / 4; ~5 min). Deterministic seeds — rerun reproduces.
@@ -26,12 +30,16 @@ import numpy as np
 sys.path.insert(0, ".")  # repo root
 
 from compress_otel_collector_spark.codec import encode, trace_model  # noqa: E402
+from compress_otel_collector_spark.codec.batch import (  # noqa: E402
+    encode_span_dataframe,
+)
 from compress_otel_collector_spark.codec import decoder as D  # noqa: E402
 from compress_otel_collector_spark.codec.values import CodecError  # noqa: E402
 from compress_otel_collector_spark.plans.projector import (  # noqa: E402
     project_blob,
     project_doc,
 )
+from tests.test_batch_codec import event_cells, link_cells  # noqa: E402
 from tests.test_tokdecode import _mkdoc  # noqa: E402
 
 MASKS = (0x01, 0x02, 0x40, 0x7F, 0x80, 0xC0, 0xFE, 0xFF)
@@ -59,6 +67,91 @@ def random_doc(rng):
                 "nul": "a\x00b", "neg": -(2 ** 40),
             }
     return doc
+
+
+#: text values that pandas' C-string hashing would conflate
+_NUL_TEXT = ("", "\x00", "a", "a\x00", "a\x00b", "\x00z", "é\x00")
+
+
+def random_frame(rng):
+    """(frame, attributes spec, resource) in the shape
+    ``plans.pipeline._group_spans_frame`` builds, with random values."""
+    import pandas as pd
+
+    def text():
+        if rng.integers(0, 2):
+            return _NUL_TEXT[int(rng.integers(0, len(_NUL_TEXT)))]
+        return f"t{int(rng.integers(0, 4))}"
+
+    def ident(width):
+        return b"" if rng.integers(0, 6) == 0 else rng.bytes(width)
+
+    def time():
+        return 0 if rng.integers(0, 5) == 0 else int(rng.integers(0, 2 ** 62))
+
+    def small():
+        return int(rng.integers(0, 3))
+
+    spec = {"http.url": "str", "http.status_code": "int", "n_chars": "int"}
+    if rng.integers(0, 2):
+        spec["lang"] = "str"
+    rows = []
+    for _ in range(int(rng.integers(1, 25))):
+        event = None
+        if rng.integers(0, 2):
+            attrs = ({}, {"phase": text()},
+                     {"phase": text(), "probe": {
+                         "ttl": int(rng.integers(-(2 ** 63), 2 ** 63 - 1)),
+                         "hops": [small(), small()]}})[int(rng.integers(0, 3))]
+            event = {"timeUnixNano": time(), "name": text(),
+                     "attributes": attrs, "droppedAttributesCount": small()}
+        link = None
+        if rng.integers(0, 3) == 0:
+            link = {"traceId": ident(16), "spanId": ident(8),
+                    "traceState": text(),
+                    "attributes": {"rel": text()} if small() else {},
+                    "droppedAttributesCount": small()}
+        start = time()
+        rows.append({
+            "trace_id": ident(16), "span_id": ident(8),
+            "parent_span_id": ident(8) if small() == 0 else b"",
+            "trace_state": text(), "name": text(), "kind": small(),
+            "start_ns": start, "end_ns": start + small(),
+            "dropped_attributes_count": small(),
+            **event_cells(event),
+            "dropped_events_count": small(),
+            **link_cells(link),
+            "dropped_links_count": small(),
+            "status_message": text(), "status_code": small(),
+            "attr:http.url": text(),
+            "attr:http.status_code": int(rng.choice(
+                [200, 0, -1, 2 ** 63 - 1, -(2 ** 63)])),
+            "attr:n_chars": int(rng.integers(0, 10 ** 6)),
+            "attr:lang": text(),
+        })
+    resource = {"service.name": text(), "host.bucket": small()}
+    return pd.DataFrame(rows), spec, resource
+
+
+def _flip_escapes(blob, m, label) -> tuple[int, int]:
+    """Every byte of ``blob`` × every mask through decode + projection:
+    (mutations, non-CodecError escapes)."""
+    bad = total = 0
+    for pos in range(len(blob)):
+        for mask in MASKS:
+            c = bytearray(blob)
+            c[pos] ^= mask
+            total += 1
+            try:
+                D.decode(bytes(c), m)
+                project_blob(bytes(c), m)
+            except CodecError:
+                pass
+            except Exception as e:  # noqa: BLE001 — the point of the fuzz
+                bad += 1
+                print(f"ESCAPE {label} pos={pos} mask={mask:#x}: "
+                      f"{type(e).__name__}: {e}")
+    return total, bad
 
 
 def _mkbig(rng):
@@ -183,22 +276,29 @@ def main() -> int:
     bad = total = 0
     for t in range(n_blobs):
         blob = encode(_mkdoc(int(crng.integers(3, 15))), m)
-        for pos in range(len(blob)):
-            for mask in MASKS:
-                c = bytearray(blob)
-                c[pos] ^= mask
-                total += 1
-                try:
-                    D.decode(bytes(c), m)
-                    project_blob(bytes(c), m)
-                except CodecError:
-                    pass
-                except Exception as e:  # noqa: BLE001 — the point of the fuzz
-                    bad += 1
-                    print(f"ESCAPE blob={t} pos={pos} mask={mask:#x}: "
-                          f"{type(e).__name__}: {e}")
+        t_n, t_bad = _flip_escapes(blob, m, f"blob={t}")
+        total += t_n
+        bad += t_bad
     print(f"corruption: {total} mutations, non-CodecError escapes: {bad}")
-    return 1 if (bad or pool_mismatch) else 0
+
+    # property 4: the batch encoder's blobs (what production writes)
+    frng = np.random.default_rng(2024)
+    n_frames = max(200, n_docs // 5)
+    blobs = []
+    for trial in range(n_frames):
+        blob = encode_span_dataframe(*random_frame(frng))
+        assert project_blob(blob, m) == project_doc(D.decode(blob, m)), \
+            f"batch projection mismatch at frame {trial}"
+        blobs.append(blob)
+    print(f"batch equality: {n_frames} frames, fused==generic")
+    b_total = b_bad = 0
+    for t, blob in enumerate(blobs[:n_blobs]):
+        t_n, t_bad = _flip_escapes(blob, m, f"batch blob={t}")
+        b_total += t_n
+        b_bad += t_bad
+    print(f"batch corruption: {b_total} mutations, "
+          f"non-CodecError escapes: {b_bad}")
+    return 1 if (bad or b_bad or pool_mismatch) else 0
 
 
 if __name__ == "__main__":

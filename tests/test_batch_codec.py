@@ -34,39 +34,57 @@ SPEC = {"http.url": "str", "http.status_code": "int"}
 RESOURCE = {"service.name": "crawler", "host.bucket": 3}
 
 
+def event_cells(ev=None):
+    """One span's event columns from an event dict; None: no event."""
+    ev = ev or {}
+    return {
+        "event_time_ns": ev.get("timeUnixNano", 0),
+        "event_name": ev.get("name"),
+        "event_attributes": ev.get("attributes"),
+        "event_dropped_attributes_count": ev.get("droppedAttributesCount", 0),
+    }
+
+
+def link_cells(ln=None):
+    """One span's link columns from a link dict; None: no link."""
+    ln = ln or {}
+    return {
+        "link_trace_id": ln.get("traceId"),
+        "link_span_id": ln.get("spanId"),
+        "link_trace_state": ln.get("traceState"),
+        "link_attributes": ln.get("attributes"),
+        "link_dropped_attributes_count": ln.get("droppedAttributesCount", 0),
+    }
+
+
 def make_pdf(n=50, with_events=True, with_links=True, seed=7):
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         tid = bytes([i % 11]) * 16
         sid = bytes([(i + 1) % 7]) * 8
-        events = []
+        event = None
         if with_events and i % 3 == 0:
-            events = [
-                {
-                    "timeUnixNano": T + i * 1000 + 17,
-                    "name": f"ev{i % 2}",
-                    "attributes": {"retry": i % 2 == 0},
-                    "droppedAttributesCount": 0,
-                },
-                {
-                    "timeUnixNano": 0,  # null-coerced
-                    "name": "",
-                    "attributes": {},
-                    "droppedAttributesCount": int(i % 4),
-                },
-            ]
-        links = []
+            event = {
+                "timeUnixNano": T + i * 1000 + 17,
+                "name": f"ev{i % 2}",
+                "attributes": {"retry": i % 2 == 0},
+                "droppedAttributesCount": 0,
+            } if i % 2 == 0 else {
+                "timeUnixNano": 0,  # null-coerced
+                "name": "",
+                "attributes": {},
+                "droppedAttributesCount": int(i % 4),
+            }
+        link = None
         if with_links and i % 5 == 0:
-            links = [
-                {
-                    "traceId": bytes([i % 3]) * 16,
-                    "spanId": bytes([i % 4 + 1]) * 8,
-                    "traceState": "vendor=x" if i % 2 else "",
-                    "attributes": {"rel": "follows"},
-                    "droppedAttributesCount": 0,
-                }
-            ]
+            link = {
+                "traceId": bytes([i % 3]) * 16,
+                "spanId": bytes([i % 4 + 1]) * 8,
+                "traceState": "vendor=x" if i % 2 else "",
+                "attributes": {"rel": "follows"},
+                "droppedAttributesCount": 0,
+            }
         rows.append(
             {
                 "trace_id": tid,
@@ -80,9 +98,9 @@ def make_pdf(n=50, with_events=True, with_links=True, seed=7):
                 "attr:http.url": f"https://h{i % 9}.example.com/p{i}",
                 "attr:http.status_code": 200 if i % 7 else 404,
                 "dropped_attributes_count": 0,
-                "events": events,
+                **event_cells(event),
                 "dropped_events_count": 0,
-                "links": links,
+                **link_cells(link),
                 "dropped_links_count": int(i % 2),
                 "status_message": "" if i % 2 else "OK",
                 "status_code": i % 3,
@@ -108,9 +126,22 @@ def _span(r, spec):
             for k, t in spec.items()
         },
         "droppedAttributesCount": int(r["dropped_attributes_count"]),
-        "events": list(r["events"]),
+        "events": [] if r["event_name"] is None else [{
+            "timeUnixNano": int(r["event_time_ns"]),
+            "name": r["event_name"],
+            "attributes": r["event_attributes"],
+            "droppedAttributesCount": int(
+                r["event_dropped_attributes_count"]),
+        }],
         "droppedEventsCount": int(r["dropped_events_count"]),
-        "links": list(r["links"]),
+        "links": [] if r["link_trace_id"] is None else [{
+            "traceId": r["link_trace_id"],
+            "spanId": r["link_span_id"],
+            "traceState": r["link_trace_state"],
+            "attributes": r["link_attributes"],
+            "droppedAttributesCount": int(
+                r["link_dropped_attributes_count"]),
+        }],
         "droppedLinksCount": int(r["dropped_links_count"]),
         "status": {
             "message": r["status_message"],
@@ -392,10 +423,10 @@ def test_nul_containing_strings_stay_distinct():
             "start_ns": 1, "end_ns": 2,
             "attr:k": av, "attr:k\x002": 1,
             "dropped_attributes_count": 0,
-            "events": [{"timeUnixNano": 5, "name": nm, "attributes": {},
-                        "droppedAttributesCount": 0}],
+            **event_cells({"timeUnixNano": 5, "name": nm, "attributes": {},
+                           "droppedAttributesCount": 0}),
             "dropped_events_count": 0,
-            "links": [], "dropped_links_count": 0,
+            **link_cells(), "dropped_links_count": 0,
             "status_message": sm, "status_code": 0, "lang": "en"})
     pdf = pd.DataFrame(rows)
     spec = {"k": "str", "k\x002": "int"}
@@ -482,7 +513,7 @@ def test_factorize_exact_property_vs_pure_python():
     """_factorize_exact (both its join-scan fast path and the bytes
     re-encode path) against a pure-Python exact dedup over adversarial
     value mixes: NULs, the '\\x01' join separator, empties, None, bytes,
-    and str/bytes lookalikes."""
+    and str/bytes lookalikes; and int64 arrays, which skip the str scan."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -494,10 +525,8 @@ def test_factorize_exact_property_vs_pure_python():
         st.binary(max_size=3),
     )
 
-    @settings(max_examples=300, deadline=None)
-    @given(st.lists(val, max_size=24))
-    def prop(vals):
-        codes, uniq = _factorize_exact(vals)
+    def check(vals, got):
+        codes, uniq = got
         seen: dict = {}
         want_codes, want_uniq = [], []
         for v in vals:
@@ -511,8 +540,23 @@ def test_factorize_exact_property_vs_pure_python():
             want_codes.append(seen[k])
         assert codes.tolist() == want_codes
         assert uniq == want_uniq
+        assert all(type(u) is type(w) for u, w in zip(uniq, want_uniq))
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(val, max_size=24))
+    def prop(vals):
+        check(vals, _factorize_exact(vals))
+
+    # int64 columns (the int attr: columns) take the pd.factorize path
+    @settings(max_examples=100, deadline=None)
+    @given(st.lists(st.one_of(st.integers(-(2**63), 2**63 - 1),
+                              st.sampled_from([0, -1, -(2**63)])),
+                    max_size=24))
+    def prop_int64(vals):
+        check(vals, _factorize_exact(np.array(vals, dtype=np.int64)))
 
     prop()
+    prop_int64()
 
 
 def test_len_prefixed_blob_padded_budget_fallback():

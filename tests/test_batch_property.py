@@ -6,7 +6,8 @@ from hypothesis import given, settings, strategies as st
 from compress_otel_collector_spark.codec import decode, encode, normalize, \
     trace_model
 from compress_otel_collector_spark.codec.batch import encode_span_dataframe
-from tests.test_batch_codec import pdf_to_document
+from tests.test_batch_codec import event_cells, link_cells, \
+    pdf_to_document
 
 T = 1_700_000_000_000_000_000
 
@@ -29,37 +30,35 @@ _column_value = {
 }
 
 
+#: free text plus NUL-bearing lookalikes ('a' vs 'a\x00b', '' vs '\x00')
+_text = st.one_of(st.text(max_size=6), st.text(alphabet="a\x00b", max_size=4))
+
+
 @st.composite
 def span_batches(draw):
     """(frame, attributes spec): typed ``attr:<key>`` span-attribute
+    columns, at most one event and one link per span in their typed
     columns, random event and link attribute dicts."""
     n = draw(st.integers(min_value=1, max_value=12))
     spec = draw(st.dictionaries(st.text(max_size=5),
                                 st.sampled_from(["str", "int"]), max_size=3))
     rows = []
     for i in range(n):
-        has_events = draw(st.booleans())
-        events = []
-        if has_events:
-            for j in range(draw(st.integers(1, 2))):
-                events.append({
-                    "timeUnixNano": draw(st.integers(0, 2**62)),
-                    "name": draw(st.text(max_size=6)),
-                    "attributes": draw(st.dictionaries(
-                        st.text(max_size=5), _attr_value, max_size=2)),
-                    "droppedAttributesCount": draw(st.integers(0, 3)),
-                })
-        links = []
-        if draw(st.booleans()):
-            for _ in range(draw(st.integers(1, 2))):
-                links.append({
-                    "traceId": draw(st.binary(min_size=0, max_size=16)),
-                    "spanId": draw(st.binary(min_size=0, max_size=8)),
-                    "traceState": draw(st.text(max_size=6)),
-                    "attributes": draw(st.dictionaries(
-                        st.text(max_size=5), _attr_value, max_size=2)),
-                    "droppedAttributesCount": draw(st.integers(0, 3)),
-                })
+        event = draw(st.none() | st.fixed_dictionaries({
+            "timeUnixNano": st.integers(0, 2**62),
+            "name": _text,
+            "attributes": st.dictionaries(
+                st.text(max_size=5), _attr_value, max_size=2),
+            "droppedAttributesCount": st.integers(0, 3),
+        }))
+        link = draw(st.none() | st.fixed_dictionaries({
+            "traceId": st.binary(min_size=0, max_size=16),
+            "spanId": st.binary(min_size=0, max_size=8),
+            "traceState": _text,
+            "attributes": st.dictionaries(
+                st.text(max_size=5), _attr_value, max_size=2),
+            "droppedAttributesCount": st.integers(0, 3),
+        }))
         rows.append({
             "trace_id": draw(st.binary(min_size=0, max_size=16)),
             "span_id": draw(st.binary(min_size=0, max_size=8)),
@@ -71,9 +70,9 @@ def span_batches(draw):
             "end_ns": T + draw(st.integers(-10**6, 10**6)),
             **{f"attr:{k}": draw(_column_value[t]) for k, t in spec.items()},
             "dropped_attributes_count": draw(st.integers(0, 2)),
-            "events": events,
+            **event_cells(event),
             "dropped_events_count": draw(st.integers(0, 2)),
-            "links": links,
+            **link_cells(link),
             "dropped_links_count": draw(st.integers(0, 2)),
             "status_message": draw(st.text(max_size=6)),
             "status_code": draw(st.integers(0, 2)),
@@ -124,10 +123,9 @@ def test_columnar_attributes_equal_scalar(cols):
         "start_ns": [T + i for i in range(n)],
         "end_ns": [T + 10 + i for i in range(n)],
         "dropped_attributes_count": [0] * n,
-        "events": [[]] * n,
         "dropped_events_count": [0] * n,
-        "links": [[]] * n,
         "dropped_links_count": [0] * n,
+        **{c: [v] * n for c, v in {**event_cells(), **link_cells()}.items()},
         "status_message": [""] * n,
         "status_code": [0] * n,
     })

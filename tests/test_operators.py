@@ -152,6 +152,27 @@ class TestSimHash:
             simhash_hamming_pairs(docs, max_distance=4)
 
 
+def test_simhash_splits_a_document_longer_than_a_chunk(monkeypatch):
+    """The kernel chunks the token stream, so a document longer than a
+    chunk is split and its partial bit counts add: with a 7-token chunk,
+    57- and 200-token documents (and empty ones between) fingerprint
+    exactly as in one unchunked pass."""
+    import random
+
+    import pandas as pd
+
+    from compress_otel_collector_spark.operators import dedup
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = pd.Series([" ".join(rng.choice(vocab) for _ in range(k))
+                       for k in (0, 3, 57, 1, 200, 0, 7, 31)])
+    whole = dedup._simhash_fingerprints(texts, 64).tolist()
+    monkeypatch.setattr(dedup, "_SIMHASH_CHUNK_TOKENS", 7)
+    assert dedup._simhash_fingerprints(texts, 64).tolist() == whole
+    assert len(set(whole)) == 7  # two empty docs share fingerprint 0
+
+
 class TestSimilarity:
     def test_lsh_recall_against_bruteforce(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")

@@ -192,12 +192,54 @@ def test_attribute_cache_is_type_keyed():
     assert _attributes(9, {"flag": 1}) == b_int
 
 
+def _arm_frame(cols: dict, events: list, links: list):
+    """The proto arm's input frame: span columns plus each span's one
+    event and one link (None: none) in their typed columns."""
+    import pandas as pd
+
+    from tests.test_batch_codec import event_cells, link_cells
+
+    n = len(events)
+    return pd.DataFrame([
+        {**{c: v[i] for c, v in cols.items()},
+         **event_cells(events[i]), **link_cells(links[i])}
+        for i in range(n)
+    ])
+
+
+def _arm_rows(cols: dict, events: list, links: list, lang_attr: dict):
+    """The same spans as the row marshaler's span dicts."""
+    return [
+        {
+            "traceId": cols["trace_id"][i],
+            "spanId": cols["span_id"][i],
+            "parentSpanId": b"",
+            "traceState": cols["trace_state"][i],
+            "name": cols["name"][i],
+            "kind": cols["kind"][i],
+            "startTimeUnixNano": cols["start_ns"][i],
+            "endTimeUnixNano": cols["end_ns"][i],
+            "attributes": {
+                "http.url": cols["attr:http.url"][i],
+                "http.status_code": 200,
+                **lang_attr, "n_chars": cols["attr:n_chars"][i],
+            },
+            "droppedAttributesCount": 0,
+            "events": [events[i]] if events[i] else [],
+            "droppedEventsCount": 0,
+            "links": [links[i]] if links[i] else [],
+            "droppedLinksCount": cols["dropped_links_count"][i],
+            "status": {"message": cols["status_message"][i],
+                       "code": cols["status_code"][i]},
+        }
+        for i in range(len(events))
+    ]
+
+
 def test_columns_marshal_equals_rows_marshal():
     """spans_columns_to_proto (the vectorized bench arm) must emit byte-
     identical wire to the generic row marshaler over the pipeline's span
     shape — events (incl. nested attrs), links, trace state, statuses."""
-    import numpy as np
-
     from compress_otel_collector_spark.codec.batch import DEFAULT_SCOPE
     from compress_otel_collector_spark.codec.otlp_proto import (
         spans_columns_to_proto,
@@ -213,79 +255,42 @@ def test_columns_marshal_equals_rows_marshal():
         "kind": [i % 6 for i in range(n)],
         "start_ns": [1_700_000_000_000_000_000 + i * 1000 for i in range(n)],
         "end_ns": [1_700_000_000_000_000_500 + i * 1000 for i in range(n)],
-        "url": [f"https://h{i % 5}.example.com/p/{i}" for i in range(n)],
-        "n_chars": [100 + i % 9 for i in range(n)],
-        "events": [
-            None if i % 10 else [{
-                "timeUnixNano": 1_700_000_000_000_001_000 + i,
-                "name": "fetch",
-                "attributes": (
-                    {"phase": "connect",
-                     "probe": {"ttl": 64, "hops": [1, 2]},
-                     "steps": [{"n": 1}, {"n": 2}]}  # list-of-dicts too
-                    if i % 20 == 0 else {}),
-                "droppedAttributesCount": 0,
-            }] for i in range(n)
-        ],
-        "links": [
-            None if i % 7 else [{
-                "traceId": bytes([i % 251]) * 16,
-                "spanId": bytes([i % 251]) * 8,
-                "traceState": "",
-                "attributes": {"rel": "prev"},
-                "droppedAttributesCount": 0,
-            }] for i in range(n)
-        ],
-        "dropped_links": [i % 2 for i in range(n)],
+        "attr:http.url": [f"https://h{i % 5}.example.com/p/{i}"
+                          for i in range(n)],
+        "attr:n_chars": [100 + i % 9 for i in range(n)],
+        "dropped_links_count": [i % 2 for i in range(n)],
         "status_message": ["OK" if i % 4 == 0 else "" for i in range(n)],
         "status_code": [i % 3 for i in range(n)],
     }
+    events = [
+        None if i % 10 else {
+            "timeUnixNano": 1_700_000_000_000_001_000 + i,
+            "name": "fetch",
+            "attributes": (
+                {"phase": "connect",
+                 "probe": {"ttl": 64, "hops": [1, 2]},
+                 "steps": [{"n": 1}, {"n": 2}]}  # list-of-dicts too
+                if i % 20 == 0 else {}),
+            "droppedAttributesCount": 0,
+        } for i in range(n)
+    ]
+    links = [
+        None if i % 7 else {
+            "traceId": bytes([i % 251]) * 16,
+            "spanId": bytes([i % 251]) * 8,
+            "traceState": "",
+            "attributes": {"rel": "prev"},
+            "droppedAttributesCount": 0,
+        } for i in range(n)
+    ]
+    spans = _arm_frame(cols, events, links)
     for lang_attr in ({"lang": "en"}, {}):  # matched and null-lang groups
         resource = {"service.name": "crawler-en", "host.bucket": 3}
         got = spans_columns_to_proto(
-            np.array(cols["trace_id"], dtype=object),
-            np.array(cols["span_id"], dtype=object),
-            np.array(cols["trace_state"], dtype=object),
-            np.array(cols["name"], dtype=object),
-            np.array(cols["kind"]),
-            np.array(cols["start_ns"], dtype=np.int64),
-            np.array(cols["end_ns"], dtype=np.int64),
-            np.array(cols["url"], dtype=object),
-            np.array(cols["n_chars"]),
-            np.array(cols["events"], dtype=object),
-            np.array(cols["links"], dtype=object),
-            np.array(cols["dropped_links"]),
-            np.array(cols["status_message"], dtype=object),
-            np.array(cols["status_code"]),
-            const_attrs={"http.status_code": 200, **lang_attr},
-            resource_attrs=resource,
-            scope=DEFAULT_SCOPE,
-        )
-        rows = [
-            {
-                "traceId": cols["trace_id"][i],
-                "spanId": cols["span_id"][i],
-                "parentSpanId": b"",
-                "traceState": cols["trace_state"][i],
-                "name": cols["name"][i],
-                "kind": cols["kind"][i],
-                "startTimeUnixNano": cols["start_ns"][i],
-                "endTimeUnixNano": cols["end_ns"][i],
-                "attributes": {
-                    "http.url": cols["url"][i], "http.status_code": 200,
-                    **lang_attr, "n_chars": cols["n_chars"][i],
-                },
-                "droppedAttributesCount": 0,
-                "events": cols["events"][i] or [],
-                "droppedEventsCount": 0,
-                "links": cols["links"][i] or [],
-                "droppedLinksCount": cols["dropped_links"][i],
-                "status": {"message": cols["status_message"][i],
-                           "code": cols["status_code"][i]},
-            }
-            for i in range(n)
-        ]
-        want = spans_rows_to_proto(rows, resource_attrs=resource,
+            spans, const_attrs={"http.status_code": 200, **lang_attr},
+            resource_attrs=resource, scope=DEFAULT_SCOPE)
+        want = spans_rows_to_proto(_arm_rows(cols, events, links, lang_attr),
+                                   resource_attrs=resource,
                                    scope=DEFAULT_SCOPE)
         assert got == want
 
@@ -293,17 +298,15 @@ def test_columns_marshal_equals_rows_marshal():
 def test_columns_marshal_edge_values_equal_rows_marshal():
     """Edge values the vectorized arm used to get wrong or could get wrong:
 
-    - an event with {'f': 1} after one with {'f': True} (r3 advisor: the
-      ev_suffix_cache key froze values without their concrete type, so
-      True/1/1.0 shared a cache slot and the int event got the bool's
-      cached AnyValue oneof)
+    - an event with {'f': 1} after one with {'f': True} (r3 advisor: a
+      suffix cache keyed by attribute content without the values'
+      concrete types let True/1/1.0 share a slot, so the int event got
+      the bool's cached AnyValue oneof)
     - zero start/end timestamps (proto3 omits zero fixed64s; the fixed
       18-byte block used to be emitted unconditionally)
     - an empty-string url (both paths must agree on whether the KeyValue
       is emitted — they do: _attributes always emits the oneof)
     """
-    import numpy as np
-
     from compress_otel_collector_spark.codec.batch import DEFAULT_SCOPE
     from compress_otel_collector_spark.codec.otlp_proto import (
         spans_columns_to_proto,
@@ -312,65 +315,43 @@ def test_columns_marshal_edge_values_equal_rows_marshal():
 
     n = 6
     events = [
-        [{"timeUnixNano": 1, "name": "e", "attributes": {"f": True},
-          "droppedAttributesCount": 0}],
-        [{"timeUnixNano": 2, "name": "e", "attributes": {"f": 1},
-          "droppedAttributesCount": 0}],
-        [{"timeUnixNano": 3, "name": "e", "attributes": {"f": 1.0},
-          "droppedAttributesCount": 0}],
-        [{"timeUnixNano": 4, "name": "e",
-          "attributes": {"f": [True, 1, {"g": 0}]},
-          "droppedAttributesCount": 0}],
-        [{"timeUnixNano": 5, "name": "e",
-          "attributes": {"f": [1, True, {"g": False}]},
-          "droppedAttributesCount": 0}],
+        {"timeUnixNano": 1, "name": "e", "attributes": {"f": True},
+         "droppedAttributesCount": 0},
+        {"timeUnixNano": 2, "name": "e", "attributes": {"f": 1},
+         "droppedAttributesCount": 0},
+        {"timeUnixNano": 3, "name": "e", "attributes": {"f": 1.0},
+         "droppedAttributesCount": 0},
+        {"timeUnixNano": 4, "name": "e",
+         "attributes": {"f": [True, 1, {"g": 0}]},
+         "droppedAttributesCount": 0},
+        {"timeUnixNano": 5, "name": "e",
+         "attributes": {"f": [1, True, {"g": False}]},
+         "droppedAttributesCount": 0},
         None,
     ]
-    start = [0, 10, 0, 10, 10, 10]
-    end = [0, 0, 20, 20, 20, 20]
-    urls = ["", "https://a.example/x", "", "https://a.example/x",
-            "https://a.example/x", ""]
+    cols = {
+        "trace_id": [bytes([i]) * 16 for i in range(n)],
+        "span_id": [bytes([i]) * 8 for i in range(n)],
+        "trace_state": [""] * n,
+        "name": ["GET /"] * n,
+        "kind": [2] * n,
+        "start_ns": [0, 10, 0, 10, 10, 10],
+        "end_ns": [0, 0, 20, 20, 20, 20],
+        "attr:http.url": ["", "https://a.example/x", "",
+                          "https://a.example/x", "https://a.example/x", ""],
+        "attr:n_chars": [5] * n,
+        "dropped_links_count": [0] * n,
+        "status_message": [""] * n,
+        "status_code": [0] * n,
+    }
     got = spans_columns_to_proto(
-        np.array([bytes([i]) * 16 for i in range(n)], dtype=object),
-        np.array([bytes([i]) * 8 for i in range(n)], dtype=object),
-        np.array([""] * n, dtype=object),
-        np.array(["GET /"] * n, dtype=object),
-        np.array([2] * n),
-        np.array(start, dtype=np.int64),
-        np.array(end, dtype=np.int64),
-        np.array(urls, dtype=object),
-        np.array([5] * n),
-        np.array(events, dtype=object),
-        np.array([None] * n, dtype=object),
-        np.array([0] * n),
-        np.array([""] * n, dtype=object),
-        np.array([0] * n),
+        _arm_frame(cols, events, [None] * n),
         const_attrs={"http.status_code": 200},
         resource_attrs={"service.name": "s"},
         scope=DEFAULT_SCOPE,
     )
-    rows = [
-        {
-            "traceId": bytes([i]) * 16,
-            "spanId": bytes([i]) * 8,
-            "parentSpanId": b"",
-            "traceState": "",
-            "name": "GET /",
-            "kind": 2,
-            "startTimeUnixNano": start[i],
-            "endTimeUnixNano": end[i],
-            "attributes": {"http.url": urls[i], "http.status_code": 200,
-                           "n_chars": 5},
-            "droppedAttributesCount": 0,
-            "events": events[i] or [],
-            "droppedEventsCount": 0,
-            "links": [],
-            "droppedLinksCount": 0,
-            "status": {"message": "", "code": 0},
-        }
-        for i in range(n)
-    ]
-    want = spans_rows_to_proto(rows, resource_attrs={"service.name": "s"},
+    want = spans_rows_to_proto(_arm_rows(cols, events, [None] * n, {}),
+                               resource_attrs={"service.name": "s"},
                                scope=DEFAULT_SCOPE)
     assert got == want
 
@@ -378,7 +359,6 @@ def test_columns_marshal_edge_values_equal_rows_marshal():
 def test_columns_marshal_rejects_negative_n_chars():
     """The n_chars attribute is an unsigned varint in the column marshal;
     a negative value must raise, never ship as one mis-encoded byte."""
-    import numpy as np
     import pytest
 
     from compress_otel_collector_spark.codec.batch import DEFAULT_SCOPE
@@ -388,21 +368,16 @@ def test_columns_marshal_rejects_negative_n_chars():
     from compress_otel_collector_spark.codec.values import CodecError
 
     def marshal(n_chars):
+        cols = {
+            "trace_id": [b"\x01" * 16], "span_id": [b"\x01" * 8],
+            "trace_state": [""], "name": ["GET /"], "kind": [2],
+            "start_ns": [10], "end_ns": [20],
+            "attr:http.url": ["https://a.example/x"],
+            "attr:n_chars": [n_chars], "dropped_links_count": [0],
+            "status_message": [""], "status_code": [0],
+        }
         return spans_columns_to_proto(
-            np.array([b"\x01" * 16], dtype=object),
-            np.array([b"\x01" * 8], dtype=object),
-            np.array([""], dtype=object),
-            np.array(["GET /"], dtype=object),
-            np.array([2]),
-            np.array([10], dtype=np.int64),
-            np.array([20], dtype=np.int64),
-            np.array(["https://a.example/x"], dtype=object),
-            np.array([n_chars]),
-            np.array([None], dtype=object),
-            np.array([None], dtype=object),
-            np.array([0]),
-            np.array([""], dtype=object),
-            np.array([0]),
+            _arm_frame(cols, [None], [None]),
             const_attrs={"http.status_code": 200},
             resource_attrs={"service.name": "s"},
             scope=DEFAULT_SCOPE,

@@ -67,6 +67,9 @@ def test_vectorized_matches_scalar():
     rng = np.random.default_rng(42)
     vals = np.concatenate([
         np.array(EDGES, dtype=np.int64),
+        # both sides of every group-count boundary
+        np.array([s * (1 << (7 * k - 1)) + d for k in range(1, 9)
+                  for s in (1, -1) for d in (-1, 0)], dtype=np.int64),
         rng.integers(INT64_MIN, INT64_MAX, size=5000, dtype=np.int64),
         rng.integers(-1000, 1000, size=5000).astype(np.int64),
     ])
