@@ -81,7 +81,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     enriched = enrich_stage(parse_stage(pages), spark)
-    encoded = encode_pages(enriched, n_salts=4, arms=True)
+    encoded = encode_pages(enriched, arms=True)
     return aggregate_stage(encoded)
 
 
@@ -746,7 +746,7 @@ def _q_codec_roundtrip(spark, sf_dir):
     """
     pages = pages_from_documents(spark, sf_dir)
     enriched = enrich_stage(parse_stage(pages), spark)
-    encoded = encode_pages(enriched, n_salts=4, arms=False)
+    encoded = encode_pages(enriched, arms=False)
     return roundtrip_counts(roundtrip_check(encoded),
                             expected_roundtrip(span_stage(enriched)))
 
@@ -759,7 +759,7 @@ def _q_pipeline_sinks(spark, sf_dir):
     drop nor duplicate pages, and the production md5 bucket is exact."""
     pages = pages_from_documents(spark, sf_dir)
     enriched = enrich_stage(parse_stage(pages), spark)
-    encoded = encode_pages(enriched, n_salts=4, arms=False)
+    encoded = encode_pages(enriched, arms=False)
     return (
         encoded.groupBy("lang", "host_bucket")
         .agg(F.sum("n_spans").alias("pages"))
@@ -777,7 +777,7 @@ def _q_pipeline_arms(spark, sf_dir):
     on blob partitioning, so they are a bench metric, not an oracle row."""
     pages = pages_from_documents(spark, sf_dir)
     enriched = enrich_stage(parse_stage(pages), spark)
-    agg = aggregate_stage(encode_pages(enriched, n_salts=4, arms=True))
+    agg = aggregate_stage(encode_pages(enriched, arms=True))
     return agg.select(
         "lang", "host_bucket",
         F.col("pages").cast("long").alias("pages"),
@@ -813,7 +813,7 @@ def _q_pipeline_resume(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="resume_probe_")
     try:
         pages = pages_from_documents(spark, sf_dir)
-        run_pipeline(spark, pages, out, n_salts=4, arms=False)
+        run_pipeline(spark, pages, out, arms=False)
 
         def snapshot():
             rows = (
@@ -835,7 +835,7 @@ def _q_pipeline_resume(spark, sf_dir):
                       f"/host_bucket={victim[1]}")
         routes_after_delete = len(snapshot())
 
-        run_pipeline(spark, pages, out, n_salts=4, arms=False, resume=True)
+        run_pipeline(spark, pages, out, arms=False, resume=True)
         second = snapshot()
 
         others_changed = sum(

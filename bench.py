@@ -246,7 +246,7 @@ def materialize_pages(spark, n_pages: int, realistic: bool = False) -> str:
 
 
 def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
-                       n_salts: int = 8, realistic: bool = False,
+                       realistic: bool = False,
                        shuffle_partitions: int | None = None):
     """parse→enrich→encode→aggregate over n synthetic pages; returns
     (seconds, pages, ratio dict). Timed from the parquet scan."""
@@ -263,7 +263,7 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
     pages = spark.read.parquet(path)
     t0 = time.time()
     enriched = enrich_stage(parse_stage(pages), spark)
-    agg = aggregate_stage(encode_pages(enriched, n_salts=n_salts, arms=arms,
+    agg = aggregate_stage(encode_pages(enriched, arms=arms,
                                        shuffle_partitions=shuffle_partitions))
     row = agg.agg(
         F.sum("blobs").alias("blobs"),

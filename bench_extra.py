@@ -130,7 +130,7 @@ def write_plans(suffix: str = "before"):
     for name, arms in (("pipeline_synth", False), ("pipeline_arms", True)):
         pages = spark.read.parquet(path)
         agg = aggregate_stage(encode_pages(
-            enrich_stage(parse_stage(pages), spark), n_salts=8, arms=arms))
+            enrich_stage(parse_stage(pages), spark), arms=arms))
         txt = agg._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution
             .ExplainMode.fromString("formatted"))

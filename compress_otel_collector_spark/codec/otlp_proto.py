@@ -374,11 +374,9 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
     """Column-driven TracesData marshal for the bench comparison arm.
 
     Reads the span frame ``plans.pipeline._group_spans_frame`` builds:
-    16-byte ``trace_id`` and 8-byte ``span_id``, ``trace_state``,
-    ``name``, ``kind``, the timestamps, the ``attr:http.url`` and
-    ``attr:n_chars`` attributes, the one-event and one-link columns of
-    ``codec.batch.SPAN_COLUMNS``, ``dropped_links_count`` and the status;
-    its other columns are 0 or empty on that frame. Same wire bytes as
+    every column of ``codec.batch.SPAN_COLUMNS`` (16-byte ``trace_id``,
+    8-byte ``span_id``) plus the ``attr:http.url`` and ``attr:n_chars``
+    attributes. Same wire bytes as
     :func:`spans_rows_to_proto` over that shape (pinned by a wire-equality
     test), but built from the columns: constant/low-cardinality fields
     come from caches, ids and timestamps are packed as fixed-width
@@ -398,13 +396,10 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
     import numpy as np
     import pandas as pd
 
-    col = {c: spans[c].to_numpy() for c in (
-        "trace_id", "span_id", "trace_state", "name", "kind", "start_ns",
-        "end_ns", "attr:http.url", "attr:n_chars", "event_time_ns",
-        "event_name", "event_attributes", "event_dropped_attributes_count",
-        "link_trace_id", "link_span_id", "link_trace_state",
-        "link_attributes", "link_dropped_attributes_count",
-        "dropped_links_count", "status_message", "status_code")}
+    from .batch import SPAN_COLUMNS
+
+    col = {c: spans[c].to_numpy()
+           for c in (*SPAN_COLUMNS, "attr:http.url", "attr:n_chars")}
     n = len(spans)
     # ids: constant prefixes; the whole column assembles as one (n, 28)
     # matrix + slices (r8 — one bytes concat per row otherwise)
@@ -429,6 +424,7 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
         name_cache.get(v) if v in name_cache else
         name_cache.setdefault(v, _f_str(5, v)) for v in col["name"]
     ]
+    parent_pieces = [_f_bytes(4, p) for p in col["parent_span_id"]]
     kind_pieces = [
         kind_cache.get(int(v)) if int(v) in kind_cache else
         kind_cache.setdefault(int(v), _f_varint(6, int(v)))
@@ -490,29 +486,29 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
                 _f_str(3, ts) + _attributes(4, a) + _f_varint(5, dac))
         payload = _f_bytes(1, tid) + _f_bytes(2, sid) + suffix
         lk_pieces[i] = _tag(13, 2) + _v(len(payload)) + payload
-    dl_cache: dict = {}
-    dl_pieces = [
-        dl_cache.get(int(d)) if int(d) in dl_cache else
-        dl_cache.setdefault(int(d), _f_varint(14, int(d)))
-        for d in col["dropped_links_count"]
-    ]
+    # dropped counts: attributes=10, events=12, links=14
+    da_pieces, de_pieces, dl_pieces = (
+        [_varint_field_cached(f, d)
+         for d in np.asarray(col[c], dtype=np.int64).tolist()]
+        for f, c in ((10, "dropped_attributes_count"),
+                     (12, "dropped_events_count"),
+                     (14, "dropped_links_count")))
     status_pieces = [
         _status_cached(m, int(c))
         for m, c in zip(col["status_message"], col["status_code"])
     ]
-    # flat-list assembly: one append per piece + ONE join, instead of a
-    # 10-way bytes concat per span (which allocated an intermediate
+    # flat-list assembly: one extend per span + ONE join, instead of a
+    # 13-way bytes concat per span (which allocated an intermediate
     # ~150 B object per span before the join re-copied it)
     t_span = _tag(2, 2)
     flat: list = []
     ap = flat.append
-    for idp, tsp, nmp, kp, tp, atp, evp, lkp, dlp, stp in zip(
-            id_pieces, ts_pieces, name_pieces, kind_pieces, time_pieces,
-            attr_pieces, ev_pieces, lk_pieces, dl_pieces, status_pieces):
+    for pieces in zip(
+            id_pieces, ts_pieces, parent_pieces, name_pieces, kind_pieces,
+            time_pieces, attr_pieces, da_pieces, ev_pieces, de_pieces,
+            lk_pieces, dl_pieces, status_pieces):
         ap(t_span)
-        ap(_v(len(idp) + len(tsp) + len(nmp) + len(kp) + len(tp)
-              + len(atp) + len(evp) + len(lkp) + len(dlp) + len(stp)))
-        ap(idp); ap(tsp); ap(nmp); ap(kp); ap(tp); ap(atp)
-        ap(evp); ap(lkp); ap(dlp); ap(stp)
+        ap(_v(sum(map(len, pieces))))
+        flat.extend(pieces)
     spans_b = b"".join(flat)
     return _wrap_resource_group(spans_b, resource_attrs, scope)

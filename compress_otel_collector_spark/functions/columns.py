@@ -52,10 +52,10 @@ HOST_BUCKET_SQL = (
 )
 
 
-def salt_expr(url_col: str = "url", n_salts: int = 16) -> Column:
-    """Skew salt: splits a mega-host's route bucket across ``n_salts``
-    shuffle partitions while keeping (lang, host_bucket) routing intact."""
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)).cast("int")
+def salt_expr(url_col: str, n: int) -> Column:
+    """Skew salt: splits a mega-host's route bucket across ``n`` shuffle
+    partitions while keeping (lang, host_bucket) routing intact."""
+    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n)).cast("int")
 
 
 def warc_day_expr(ts_col: str = "warc_ts") -> Column:

@@ -139,89 +139,30 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 8,
     classic split-one-strong-hash-into-k-pieces construction (distinct
     output bits of md5 are independent min-wise hash functions). 8-hex-char
     (32-bit) pieces keep the min-collision probability ≈ Jaccard with
-    negligible ties. num_hashes md5 evaluations per shingle drop to
-    ⌈num_hashes/4⌉, and the md5s are projected BEFORE the aggregate so
-    they are computed once regardless of codegen CSE.
+    negligible ties, at ⌈num_hashes/4⌉ md5 evaluations per shingle.
 
-    Shingles stay non-distinct: ``min`` is duplicate-insensitive, so the
-    signatures are identical and the per-(doc, shingle) dedup shuffle —
-    a full exchange of the exploded shingle stream, the largest cost in
-    the r2 plan — disappears.
-
-    Shape (r8, guide §2.4/§4.2): the whole shingle → md5 → per-doc min
-    runs as ONE Arrow-batched pandas UDF (hashlib md5 + numpy
-    ``minimum.reduceat``), making the operator a narrow projection with
-    NO shuffle — the r2–r7 form exploded shingles and ran an
-    8-aggregate ``groupBy(doc_id)``, a full exchange of the (partially
-    aggregated) signature stream. Lexicographic min over equal-length
+    Shape (guide §2.4/§4.2): shingle → md5 → per-doc min runs as ONE
+    Arrow-batched pandas UDF (``_minhash_signatures``), a narrow
+    projection with NO shuffle. Shingles stay non-distinct: ``min`` is
+    duplicate-insensitive. Lexicographic min over equal-length
     lowercase-hex substrings ≡ numeric min over the big-endian 32-bit
     words of the digest, so the uint32 kernel reproduces the SQL min
-    bit-for-bit (pinned by the unchanged DuckDB twin). The
-    ≥ n-token filter is a JVM predicate BELOW the UDF (guide §4.4:
-    never filter on a UDF output column).
+    bit-for-bit (pinned by the DuckDB twin). The ≥ n-token filter is a
+    JVM predicate BELOW the UDF (guide §4.4: never filter on a UDF output
+    column).
 
     Precondition: ``doc_id`` is unique in ``df``. The UDF emits one row
     per input row, while the DuckDB twin aggregates by ``doc_id``, so a
     repeated ``doc_id`` yields one signature row per copy here and one
     merged row there.
     """
-    n_md5 = (num_hashes + 3) // 4
     from pyspark.sql.functions import pandas_udf
 
     ret_type = ", ".join(f"sig{s} string" for s in range(num_hashes))
 
     @pandas_udf(ret_type)
     def _sigs_batch(texts):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        md5 = hashlib.md5
-        salts = [f"#{g}".encode() for g in range(n_md5)]
-        counts = np.empty(len(texts), dtype=np.int64)
-        flat: list = []
-        for row, s in enumerate(texts):
-            toks = [t for t in s.split(" ") if t]
-            m = len(toks) - (n - 1)
-            if m <= 0:
-                counts[row] = 0
-                continue
-            counts[row] = m
-            join = " ".join
-            flat.extend(join(toks[i:i + n]) for i in range(m))
-        total = len(flat)
-        out = {f"sig{s}": [""] * len(texts) for s in range(num_hashes)}
-        if total:
-            # hash each DISTINCT shingle once (duplicate shingles are the
-            # whole reason minhash works); NUL-exact factorize per
-            # CLAUDE.md, codes gather the word rows back per occurrence
-            from compress_otel_collector_spark.codec.batch import (
-                _factorize_exact,
-            )
-
-            codes, uniq = _factorize_exact(flat)
-            digests = b"".join(
-                md5(u8 + salt).digest()
-                for sh in uniq
-                for u8 in (sh.encode("utf-8"),)
-                for salt in salts
-            )
-            # (U, n_md5·4) big-endian 32-bit words; component s = word
-            # (s%4) of digest (s//4) = hex chars [8·(s%4), 8·(s%4)+8)
-            words = np.frombuffer(digests, dtype=">u4").reshape(
-                len(uniq), n_md5 * 4)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            nz = counts > 0
-            mins = np.minimum.reduceat(
-                words[codes], starts[nz].astype(np.intp), axis=0)
-            rows_nz = np.nonzero(nz)[0]
-            for s in range(num_hashes):
-                colmin = mins[:, (s // 4) * 4 + (s % 4)]
-                col = out[f"sig{s}"]
-                for j, row in enumerate(rows_nz):
-                    col[row] = f"{colmin[j]:08x}"
-        return pd.DataFrame(out)
+        return _minhash_signatures(texts, num_hashes, n)
 
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     return (
@@ -229,6 +170,60 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 8,
         .select(F.col("doc_id"), _sigs_batch(F.col("text")).alias("_s"))
         .select("doc_id", "_s.*")
     )
+
+
+#: shingles per chunk of the minhash kernel's shingle stream
+_MINHASH_CHUNK_SHINGLES = 200_000
+
+
+def _minhash_signatures(texts, num_hashes: int, n: int):
+    """The ``minhash_signatures`` UDF body: one row of hex signature
+    components per text of a batch ("" for a text under ``n`` tokens)."""
+    import hashlib
+    from itertools import islice
+
+    import numpy as np
+    import pandas as pd
+
+    # NUL-exact factorize (CLAUDE.md): raw pd.factorize truncates str
+    # keys at embedded NULs, which would conflate distinct shingles
+    from compress_otel_collector_spark.codec.batch import _factorize_exact
+
+    n_md5 = (num_hashes + 3) // 4
+    salts = [f"#{g}".encode() for g in range(n_md5)]
+    join = " ".join
+    stream = ((row, join(toks[i:i + n]))
+              for row, toks in enumerate(
+                  [t for t in s.split(" ") if t] for s in texts)
+              for i in range(len(toks) - (n - 1)))
+    # chunk the shingle stream, not the documents, so the live shingle
+    # strings and the gathered (shingles, words) matrix stay bounded at
+    # any Arrow batch size AND any document size: a document straddling
+    # a chunk boundary gets a partial min from each chunk, and mins fold
+    mins = np.full((len(texts), n_md5 * 4), 0xFFFFFFFF, dtype=np.uint32)
+    seen = np.zeros(len(texts), dtype=bool)
+    while chunk := list(islice(stream, _MINHASH_CHUNK_SHINGLES)):
+        rows, flat = zip(*chunk)
+        # hash each DISTINCT shingle once (duplicate shingles are the
+        # whole reason minhash works); codes gather them per occurrence
+        codes, uniq = _factorize_exact(list(flat))
+        digests = b"".join(hashlib.md5(sh.encode("utf-8") + salt).digest()
+                           for sh in uniq for salt in salts)
+        # (U, n_md5·4) big-endian 32-bit words; component s = word
+        # (s%4) of digest (s//4) = hex chars [8·(s%4), 8·(s%4)+8)
+        words = np.frombuffer(digests, dtype=">u4").reshape(
+            len(uniq), n_md5 * 4)
+        rows = np.asarray(rows)
+        starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+        docs = rows[starts]
+        mins[docs] = np.minimum(mins[docs], np.minimum.reduceat(
+            words[codes], starts, axis=0))
+        seen[docs] = True
+    seen = seen.tolist()
+    return pd.DataFrame({
+        f"sig{s}": [f"{v:08x}" if hit else ""
+                    for v, hit in zip(mins[:, s].tolist(), seen)]
+        for s in range(num_hashes)})
 
 
 def _lsh_stacked(df: DataFrame, num_hashes: int, bands: int,

@@ -30,8 +30,8 @@ Scale notes (100 TB / 1000 executors): the only wide exchange is the single
 ``repartition(lang, host_bucket, salt)`` before encode — everything upstream
 is narrow, the lookup join is broadcast, and the sink write is
 partition-aligned with the shuffle so no second exchange happens. AQE can
-coalesce small route partitions; the salt bounds the largest task at
-(mega-host rows / n_salts).
+coalesce small route partitions; the salt splits a route across
+ceil(P / n_buckets) of the P shuffle partitions (``encode_pages``).
 """
 
 from __future__ import annotations
@@ -380,7 +380,7 @@ def _encode_batches(arms: bool, events_every: int = 10):
     return fn
 
 
-def encode_pages(enriched: DataFrame, n_salts: int = 16,
+def encode_pages(enriched: DataFrame, n_buckets: int = 8,
                  arms: bool = True, events_every: int = 10,
                  shuffle_partitions: Optional[int] = None) -> DataFrame:
     """Route-aligned repartition with a NARROW shuffle payload, then
@@ -396,9 +396,11 @@ def encode_pages(enriched: DataFrame, n_salts: int = 16,
     single keyed exchange is the job's dominant IO, so payload width is
     the first-order lever; re-evaluating cheap hash/arithmetic
     expressions on the reduce side is strictly better at any cluster
-    size. The salt splits skewed (lang, host_bucket) groups across up to
-    ``n_salts`` tasks; each task still emits per-group blobs, so routing
-    purity is preserved while the mega host can't serialize the stage.
+    size. The salt splits a route across ceil(P / ``n_buckets``) tasks
+    (P: ``shuffle_partitions`` or the session's shuffle partitions;
+    ``n_buckets``: ``enrich_stage``'s): one task per route while P ≤
+    ``n_buckets``, so a route's pages meet in one blob per Arrow batch,
+    and a mega host still cannot serialize the stage on a large cluster.
     The partition-local (lang, bucket, doc_id) sort below keeps groups
     contiguous and blobs deterministic; measured against the former
     wide-exchange path at 1M pages: −44% blobs, −17% compressed bytes on
@@ -407,21 +409,23 @@ def encode_pages(enriched: DataFrame, n_salts: int = 16,
     (derivation above the exchange, one shuffle) and the full-fidelity
     roundtrip tests and gate (``scripts/roundtrip_gate.py``).
     """
-    spans = _pre_encode_frame(enriched, n_salts, shuffle_partitions)
+    spans = _pre_encode_frame(enriched, n_buckets, shuffle_partitions)
     return spans.mapInPandas(_encode_batches(arms, events_every),
                              schema=ENCODED_SCHEMA)
 
 
-def _pre_encode_frame(enriched: DataFrame, n_salts: int = 16,
+def _pre_encode_frame(enriched: DataFrame, n_buckets: int = 8,
                       shuffle_partitions: Optional[int] = None) -> DataFrame:
     """The frame ``encode_pages`` feeds to ``_encode_batches``: narrow
     exchange, group-cohesion sort, span derivation. Its columns (url,
     lang, host_bucket, doc_id and the ``span_columns_sql`` spans) are
     what ``_group_spans_frame`` reads per route group."""
+    p = shuffle_partitions or int(
+        enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     narrow = enriched.select(
         "url", "lang", "host_bucket", "doc_id", "warc_ts",
         F.length(F.col("text_extracted")).cast("long").alias("n_chars_pre"),
-        salt_expr("url", n_salts).alias("salt"),
+        salt_expr("url", -(-p // n_buckets)).alias("salt"),
     )
     if shuffle_partitions:
         routed = narrow.repartition(shuffle_partitions,
@@ -751,7 +755,6 @@ def run_pipeline(
     pages: DataFrame,
     out_dir: str,
     n_buckets: int = 8,
-    n_salts: int = 16,
     arms: bool = True,
     resume: bool = True,
 ) -> DataFrame:
@@ -780,6 +783,6 @@ def run_pipeline(
                 & enriched["host_bucket"].eqNullSafe(done["host_bucket"])
             )
             enriched = enriched.join(F.broadcast(done), cond, "left_anti")
-    encoded = encode_pages(enriched, n_salts=n_salts, arms=arms)
+    encoded = encode_pages(enriched, n_buckets=n_buckets, arms=arms)
     route_stage(encoded, out_dir)
     return aggregate_stage(read_routed(spark, out_dir))

@@ -57,7 +57,6 @@ def run_streaming_pipeline(
     out_dir: str,
     checkpoint_dir: str,
     n_buckets: int = 8,
-    n_salts: int = 4,
     arms: bool = False,
     dedup_horizon: str | None = None,
 ):
@@ -87,7 +86,7 @@ def run_streaming_pipeline(
             return
         enriched = enrich_stage(parse_stage(batch_df), spark,
                                 n_buckets=n_buckets)
-        encoded = encode_pages(enriched, n_salts=n_salts, arms=arms)
+        encoded = encode_pages(enriched, n_buckets=n_buckets, arms=arms)
         route_stage(encoded, out_dir, batch_id)
 
     query = (

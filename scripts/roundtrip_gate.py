@@ -60,7 +60,7 @@ def main() -> None:
 
     def gate():
         enriched = enrich_stage(parse_stage(pages), spark)
-        encoded = encode_pages(enriched, n_salts=8)
+        encoded = encode_pages(enriched)
         return roundtrip_counts(
             roundtrip_check(encoded), expected_roundtrip(span_stage(enriched))
         ).collect()[0]

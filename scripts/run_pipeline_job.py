@@ -8,7 +8,7 @@ Submission shape (north_rule)::
         scripts/run_pipeline_job.py \\
         --input s3://bucket/pages_iceberg_or_parquet \\
         --output s3://bucket/routed \\
-        --format parquet --buckets 64 --salts 64
+        --format parquet --buckets 64
 
 On a real cluster the input is an Iceberg table (``--format iceberg``
 with the catalog configured on the session); locally any parquet directory
@@ -45,8 +45,6 @@ def main() -> None:
                     choices=["parquet", "iceberg"])
     ap.add_argument("--buckets", type=int, default=64,
                     help="host route buckets")
-    ap.add_argument("--salts", type=int, default=64,
-                    help="skew salt fan-out for the encode repartition")
     ap.add_argument("--arms", action="store_true",
                     help="also measure gzip/JSON comparison arms")
     ap.add_argument("--no-resume", action="store_true",
@@ -95,7 +93,7 @@ def main() -> None:
 
         run_streaming_pipeline(
             spark, args.input, args.output, args.checkpoint,
-            n_buckets=args.buckets, n_salts=args.salts, arms=args.arms,
+            n_buckets=args.buckets, arms=args.arms,
             dedup_horizon=args.dedup_horizon)
         from compress_otel_collector_spark.plans.pipeline import (
             aggregate_stage,
@@ -108,8 +106,7 @@ def main() -> None:
 
         agg = run_pipeline(
             spark, pages, args.output, n_buckets=args.buckets,
-            n_salts=args.salts, arms=args.arms,
-            resume=not args.no_resume)
+            arms=args.arms, resume=not args.no_resume)
 
     rows = [r.asDict() for r in agg.collect()]
     print(json.dumps({"sinks": len(rows),

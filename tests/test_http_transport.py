@@ -22,7 +22,7 @@ from compress_otel_collector_spark.sources.tables import synthetic_pages
 def test_post_sink_delivers_every_frame(spark):
     pages = synthetic_pages(spark, 300, partitions=3)
     encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
-                           n_salts=2, arms=False).cache()
+                           arms=False).cache()
     n_frames = encoded.count()
     n_spans = encoded.agg(F.sum("n_spans")).collect()[0][0]
 
@@ -39,7 +39,7 @@ def test_post_sink_delivers_every_frame(spark):
 def test_post_sink_raises_on_dead_endpoint(spark):
     pages = synthetic_pages(spark, 50, partitions=1)
     encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
-                           n_salts=1, arms=False)
+                           arms=False)
     import pytest
 
     with pytest.raises(Exception):

@@ -173,6 +173,40 @@ def test_simhash_splits_a_document_longer_than_a_chunk(monkeypatch):
     assert len(set(whole)) == 7  # two empty docs share fingerprint 0
 
 
+def test_minhash_splits_a_document_longer_than_a_chunk(monkeypatch):
+    """The minhash kernel chunks the shingle stream, so a document longer
+    than a chunk is split and its partial mins fold: with a 7-shingle
+    chunk, 57- and 200-token documents (and too-short ones between) sign
+    exactly as in one unchunked pass, and as the definition says
+    (component s = min over shingles of hex chars [8·(s%4), 8·(s%4)+8)
+    of md5(shingle || '#' || s//4))."""
+    import hashlib
+    import random
+
+    import pandas as pd
+
+    from compress_otel_collector_spark.operators import dedup
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = pd.Series([" ".join(rng.choice(vocab) for _ in range(k))
+                       for k in (0, 3, 57, 2, 200, 0, 7, 31)])
+    whole = dedup._minhash_signatures(texts, 8, 3)
+    monkeypatch.setattr(dedup, "_MINHASH_CHUNK_SHINGLES", 7)
+    assert dedup._minhash_signatures(texts, 8, 3).equals(whole)
+
+    def sign(text):
+        toks = text.split()
+        shingles = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+        if not shingles:
+            return [""] * 8
+        return [min(hashlib.md5(f"{sh}#{s // 4}".encode()).hexdigest()
+                    [8 * (s % 4):8 * (s % 4) + 8] for sh in shingles)
+                for s in range(8)]
+
+    assert whole.values.tolist() == [sign(t) for t in texts]
+
+
 class TestSimilarity:
     def test_lsh_recall_against_bruteforce(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")

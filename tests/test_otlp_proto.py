@@ -192,6 +192,13 @@ def test_attribute_cache_is_type_keyed():
     assert _attributes(9, {"flag": 1}) == b_int
 
 
+def _with_defaults(cols: dict, n: int) -> dict:
+    """``cols`` with the parent id and the dropped attribute/event counts
+    empty unless it sets them."""
+    return {"parent_span_id": [b""] * n, "dropped_attributes_count": [0] * n,
+            "dropped_events_count": [0] * n, **cols}
+
+
 def _arm_frame(cols: dict, events: list, links: list):
     """The proto arm's input frame: span columns plus each span's one
     event and one link (None: none) in their typed columns."""
@@ -200,6 +207,7 @@ def _arm_frame(cols: dict, events: list, links: list):
     from tests.test_batch_codec import event_cells, link_cells
 
     n = len(events)
+    cols = _with_defaults(cols, n)
     return pd.DataFrame([
         {**{c: v[i] for c, v in cols.items()},
          **event_cells(events[i]), **link_cells(links[i])}
@@ -209,11 +217,12 @@ def _arm_frame(cols: dict, events: list, links: list):
 
 def _arm_rows(cols: dict, events: list, links: list, lang_attr: dict):
     """The same spans as the row marshaler's span dicts."""
+    cols = _with_defaults(cols, len(events))
     return [
         {
             "traceId": cols["trace_id"][i],
             "spanId": cols["span_id"][i],
-            "parentSpanId": b"",
+            "parentSpanId": cols["parent_span_id"][i],
             "traceState": cols["trace_state"][i],
             "name": cols["name"][i],
             "kind": cols["kind"][i],
@@ -224,9 +233,9 @@ def _arm_rows(cols: dict, events: list, links: list, lang_attr: dict):
                 "http.status_code": 200,
                 **lang_attr, "n_chars": cols["attr:n_chars"][i],
             },
-            "droppedAttributesCount": 0,
+            "droppedAttributesCount": cols["dropped_attributes_count"][i],
             "events": [events[i]] if events[i] else [],
-            "droppedEventsCount": 0,
+            "droppedEventsCount": cols["dropped_events_count"][i],
             "links": [links[i]] if links[i] else [],
             "droppedLinksCount": cols["dropped_links_count"][i],
             "status": {"message": cols["status_message"][i],
@@ -306,6 +315,8 @@ def test_columns_marshal_edge_values_equal_rows_marshal():
       18-byte block used to be emitted unconditionally)
     - an empty-string url (both paths must agree on whether the KeyValue
       is emitted — they do: _attributes always emits the oneof)
+    - 8-byte parent ids and non-zero dropped attribute/event counts
+      (fields 4, 10 and 12: the column marshal used to drop all three)
     """
     from compress_otel_collector_spark.codec.batch import DEFAULT_SCOPE
     from compress_otel_collector_spark.codec.otlp_proto import (
@@ -343,6 +354,10 @@ def test_columns_marshal_edge_values_equal_rows_marshal():
         "dropped_links_count": [0] * n,
         "status_message": [""] * n,
         "status_code": [0] * n,
+        "parent_span_id": [b"", bytes([7]) * 8, b"", bytes([9]) * 8,
+                           b"", b""],
+        "dropped_attributes_count": [0, 3, 0, 0, 1, 0],
+        "dropped_events_count": [0, 5, 0, 2, 0, 0],
     }
     got = spans_columns_to_proto(
         _arm_frame(cols, events, [None] * n),

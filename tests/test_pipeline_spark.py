@@ -64,7 +64,7 @@ class TestEncodeRoute:
     @pytest.fixture(scope="class")
     def encoded(self, spark, pages):
         enriched = enrich_stage(parse_stage(pages), spark)
-        return encode_pages(enriched, n_salts=4).cache()
+        return encode_pages(enriched).cache()
 
     def test_span_counts_preserved(self, pages, encoded):
         assert (
@@ -239,13 +239,55 @@ def test_dense_events_roundtrip(spark):
 
     pages = synthetic_pages(spark, 400, partitions=2)
     enriched = enrich_stage(parse_stage(pages), spark)
-    encoded = encode_pages(enriched, n_salts=2, arms=False, events_every=1)
+    encoded = encode_pages(enriched, arms=False, events_every=1)
     row = roundtrip_counts(
         roundtrip_check(encoded),
         expected_roundtrip(span_stage(enriched), events_every=1),
     ).collect()[0]
     assert row["decoded_spans"] == 400
     assert row["missing"] == 0 and row["extra"] == 0
+
+
+class TestRouteAffineLayout:
+    """The salt fan-out is ceil(P / n_buckets): at the session's P=8 with
+    8 buckets every route meets in one task, at P=32 in at most four."""
+
+    @pytest.fixture(scope="class")
+    def enriched(self, spark):
+        pages = synthetic_pages(spark, 4000, partitions=8)
+        return enrich_stage(parse_stage(pages), spark)
+
+    @staticmethod
+    def per_route(encoded):
+        return {
+            (r["lang"], r["host_bucket"]): (r["blobs"], r["parts"])
+            for r in encoded.groupBy("lang", "host_bucket").agg(
+                F.count("*").alias("blobs"),
+                F.countDistinct("part_id").alias("parts")).collect()
+        }
+
+    @pytest.mark.parametrize("p", [None, 8])
+    def test_one_blob_and_one_task_per_route(self, enriched, p):
+        # p=None reads P from the session (AQE may coalesce); an explicit
+        # count is never coalesced, so there only the salt keeps a route
+        # in one task
+        routes = enriched.select("lang", "host_bucket").distinct().count()
+        got = self.per_route(
+            encode_pages(enriched, arms=False, shuffle_partitions=p))
+        assert len(got) == routes
+        assert set(got.values()) == {(1, 1)}
+
+    def test_fan_out_follows_shuffle_partitions(self, enriched):
+        got = self.per_route(
+            encode_pages(enriched, arms=False, shuffle_partitions=32))
+        assert max(parts for _, parts in got.values()) == 4
+
+    def test_blobs_are_reproducible(self, enriched):
+        def shas():
+            return sorted(r["blob_sha256"] for r in encode_pages(
+                enriched, arms=False).select("blob_sha256").collect())
+
+        assert shas() == shas()
 
 
 def test_resume_with_null_lang_routes(spark, tmp_path):
@@ -393,7 +435,7 @@ class TestMalformedUtf8Pages:
         enriched = parse_stage(enriched.drop("text_extracted")
                                if "text_extracted" in enriched.columns
                                else enriched)
-        encoded = encode_pages(enriched, n_salts=2, arms=False)
+        encoded = encode_pages(enriched, arms=False)
         decoded = roundtrip_check(encoded)
         row = roundtrip_counts(
             decoded,
@@ -430,7 +472,7 @@ class TestDirtyDataGuards:
         enriched = enrich_stage(parse_stage(pages), spark)
         kept = [r["doc_id"] for r in enriched.select("doc_id").collect()]
         assert sorted(kept) == [1, 2]
-        encoded = encode_pages(enriched, n_salts=2, arms=False)
+        encoded = encode_pages(enriched, arms=False)
         row = roundtrip_counts(
             roundtrip_check(encoded),
             expected_roundtrip(span_stage(enriched))).collect()[0]

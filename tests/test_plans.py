@@ -142,7 +142,7 @@ def test_encode_pages_shuffles_narrow_payload(spark, sf_dir):
     join."""
     enriched = enrich_stage(parse_stage(pages_from_documents(spark, sf_dir)),
                             spark)
-    plan = plan_of(encode_pages(enriched, n_salts=4, arms=False))
+    plan = plan_of(encode_pages(enriched, arms=False))
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert shuffles == 1, f"want exactly 1 shuffle, plan:\n{plan}"
     assert "SortMergeJoin" not in plan

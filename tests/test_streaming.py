@@ -50,7 +50,7 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     pages = synthetic_pages(spark, 120, partitions=2)
     encoded = encode_pages(enrich_stage(parse_stage(pages), spark),
-                           n_salts=2, arms=False)
+                           arms=False)
 
     route_stage(encoded, out_dir, batch_id=0)
     total1 = read_routed(spark, out_dir).agg(F.sum("n_spans")).collect()[0][0]
