@@ -424,7 +424,6 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
         name_cache.get(v) if v in name_cache else
         name_cache.setdefault(v, _f_str(5, v)) for v in col["name"]
     ]
-    parent_pieces = [_f_bytes(4, p) for p in col["parent_span_id"]]
     kind_pieces = [
         kind_cache.get(int(v)) if int(v) in kind_cache else
         kind_cache.setdefault(int(v), _f_varint(6, int(v)))
@@ -486,29 +485,41 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
                 _f_str(3, ts) + _attributes(4, a) + _f_varint(5, dac))
         payload = _f_bytes(1, tid) + _f_bytes(2, sid) + suffix
         lk_pieces[i] = _tag(13, 2) + _v(len(payload)) + payload
-    # dropped counts: attributes=10, events=12, links=14
-    da_pieces, de_pieces, dl_pieces = (
-        [_varint_field_cached(f, d)
-         for d in np.asarray(col[c], dtype=np.int64).tolist()]
-        for f, c in ((10, "dropped_attributes_count"),
-                     (12, "dropped_events_count"),
-                     (14, "dropped_links_count")))
+    # parent id, dropped attribute and event counts (fields 4, 10, 12):
+    # empty and 0 on production frames, so a pass over them runs only
+    # when one is set; each joins the piece that follows it on the wire
+    if any(col["parent_span_id"]):
+        name_pieces = [_f_bytes(4, p) + nm for p, nm in zip(
+            col["parent_span_id"], name_pieces)]
+    for f, c, pieces in ((10, "dropped_attributes_count", ev_pieces),
+                         (12, "dropped_events_count", lk_pieces)):
+        counts = np.asarray(col[c], dtype=np.int64)
+        if counts.any():
+            pieces[:] = [_varint_field_cached(f, d) + p
+                         for d, p in zip(counts.tolist(), pieces)]
+    dl_cache: dict = {}
+    dl_pieces = [
+        dl_cache.get(int(d)) if int(d) in dl_cache else
+        dl_cache.setdefault(int(d), _f_varint(14, int(d)))
+        for d in col["dropped_links_count"]
+    ]
     status_pieces = [
         _status_cached(m, int(c))
         for m, c in zip(col["status_message"], col["status_code"])
     ]
-    # flat-list assembly: one extend per span + ONE join, instead of a
-    # 13-way bytes concat per span (which allocated an intermediate
+    # flat-list assembly: one append per piece + ONE join, instead of a
+    # 10-way bytes concat per span (which allocated an intermediate
     # ~150 B object per span before the join re-copied it)
     t_span = _tag(2, 2)
     flat: list = []
     ap = flat.append
-    for pieces in zip(
-            id_pieces, ts_pieces, parent_pieces, name_pieces, kind_pieces,
-            time_pieces, attr_pieces, da_pieces, ev_pieces, de_pieces,
-            lk_pieces, dl_pieces, status_pieces):
+    for idp, tsp, nmp, kp, tp, atp, evp, lkp, dlp, stp in zip(
+            id_pieces, ts_pieces, name_pieces, kind_pieces, time_pieces,
+            attr_pieces, ev_pieces, lk_pieces, dl_pieces, status_pieces):
         ap(t_span)
-        ap(_v(sum(map(len, pieces))))
-        flat.extend(pieces)
+        ap(_v(len(idp) + len(tsp) + len(nmp) + len(kp) + len(tp)
+              + len(atp) + len(evp) + len(lkp) + len(dlp) + len(stp)))
+        ap(idp); ap(tsp); ap(nmp); ap(kp); ap(tp); ap(atp)
+        ap(evp); ap(lkp); ap(dlp); ap(stp)
     spans_b = b"".join(flat)
     return _wrap_resource_group(spans_b, resource_attrs, scope)

@@ -180,7 +180,6 @@ def _minhash_signatures(texts, num_hashes: int, n: int):
     """The ``minhash_signatures`` UDF body: one row of hex signature
     components per text of a batch ("" for a text under ``n`` tokens)."""
     import hashlib
-    from itertools import islice
 
     import numpy as np
     import pandas as pd
@@ -191,34 +190,46 @@ def _minhash_signatures(texts, num_hashes: int, n: int):
 
     n_md5 = (num_hashes + 3) // 4
     salts = [f"#{g}".encode() for g in range(n_md5)]
-    join = " ".join
-    stream = ((row, join(toks[i:i + n]))
-              for row, toks in enumerate(
-                  [t for t in s.split(" ") if t] for s in texts)
-              for i in range(len(toks) - (n - 1)))
-    # chunk the shingle stream, not the documents, so the live shingle
-    # strings and the gathered (shingles, words) matrix stay bounded at
-    # any Arrow batch size AND any document size: a document straddling
-    # a chunk boundary gets a partial min from each chunk, and mins fold
     mins = np.full((len(texts), n_md5 * 4), 0xFFFFFFFF, dtype=np.uint32)
     seen = np.zeros(len(texts), dtype=bool)
-    while chunk := list(islice(stream, _MINHASH_CHUNK_SHINGLES)):
-        rows, flat = zip(*chunk)
+    flat: list = []  # the chunk's shingles, document after document
+    rows: list = []  # (row, offset in flat) of each document piece in it
+
+    def fold():
         # hash each DISTINCT shingle once (duplicate shingles are the
         # whole reason minhash works); codes gather them per occurrence
-        codes, uniq = _factorize_exact(list(flat))
-        digests = b"".join(hashlib.md5(sh.encode("utf-8") + salt).digest()
-                           for sh in uniq for salt in salts)
+        codes, uniq = _factorize_exact(flat)
+        digests = b"".join(hashlib.md5(u8 + salt).digest()
+                           for sh in uniq for u8 in (sh.encode("utf-8"),)
+                           for salt in salts)
         # (U, n_md5·4) big-endian 32-bit words; component s = word
         # (s%4) of digest (s//4) = hex chars [8·(s%4), 8·(s%4)+8)
         words = np.frombuffer(digests, dtype=">u4").reshape(
             len(uniq), n_md5 * 4)
-        rows = np.asarray(rows)
-        starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
-        docs = rows[starts]
+        docs, starts = np.array(rows, dtype=np.intp).T
         mins[docs] = np.minimum(mins[docs], np.minimum.reduceat(
             words[codes], starts, axis=0))
         seen[docs] = True
+        flat.clear()
+        rows.clear()
+
+    # chunk the shingle stream, not the documents, so the live shingle
+    # strings and the gathered (shingles, words) matrix stay bounded at
+    # any Arrow batch size AND any document size: a document straddling
+    # a chunk boundary gets a partial min from each chunk, and mins fold
+    join = " ".join
+    for row, s in enumerate(texts):
+        toks = [t for t in s.split(" ") if t]
+        i, m = 0, len(toks) - (n - 1)
+        while i < m:
+            take = min(m - i, _MINHASH_CHUNK_SHINGLES - len(flat))
+            rows.append((row, len(flat)))
+            flat.extend(join(toks[j:j + n]) for j in range(i, i + take))
+            i += take
+            if len(flat) == _MINHASH_CHUNK_SHINGLES:
+                fold()
+    if flat:
+        fold()
     seen = seen.tolist()
     return pd.DataFrame({
         f"sig{s}": [f"{v:08x}" if hit else ""

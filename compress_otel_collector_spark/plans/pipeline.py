@@ -30,8 +30,8 @@ Scale notes (100 TB / 1000 executors): the only wide exchange is the single
 ``repartition(lang, host_bucket, salt)`` before encode — everything upstream
 is narrow, the lookup join is broadcast, and the sink write is
 partition-aligned with the shuffle so no second exchange happens. AQE can
-coalesce small route partitions; the salt splits a route across
-ceil(P / n_buckets) of the P shuffle partitions (``encode_pages``).
+coalesce small route partitions; the salt spreads a mega host over most
+tasks once P > n_buckets (``encode_pages``).
 """
 
 from __future__ import annotations
@@ -105,12 +105,14 @@ def parse_stage(pages: DataFrame) -> DataFrame:
 
 def enrich_stage(df: DataFrame, spark: SparkSession,
                  n_buckets: int = 8) -> DataFrame:
-    """Broadcast lookup enrich + routing keys. Unmatched langs keep nulls."""
+    """Broadcast lookup enrich + routing keys. Unmatched langs keep nulls.
+    ``host_bucket`` carries ``n_buckets`` as metadata for ``encode_pages``."""
     dim = F.broadcast(lang_lookup(spark))
     return (
         df.join(dim, on="lang", how="left")
         .withColumn("host", host_of_url_expr("url"))
-        .withColumn("host_bucket", host_bucket_expr("host", n_buckets))
+        .withColumn("host_bucket", host_bucket_expr("host", n_buckets).alias(
+            "host_bucket", metadata={"n_buckets": n_buckets}))
         .withColumn("warc_day", warc_day_expr("warc_ts"))
     )
 
@@ -380,41 +382,33 @@ def _encode_batches(arms: bool, events_every: int = 10):
     return fn
 
 
-def encode_pages(enriched: DataFrame, n_buckets: int = 8,
-                 arms: bool = True, events_every: int = 10,
+def encode_pages(enriched: DataFrame, arms: bool = True,
+                 events_every: int = 10,
                  shuffle_partitions: Optional[int] = None) -> DataFrame:
     """Route-aligned repartition with a NARROW shuffle payload, then
     vectorized encode: the pipeline's one encode path.
 
-    The spans are those of ``span_stage(enriched)`` — the span columns
-    are deterministic expressions of (url, doc_id, warc_ts,
-    length(text)) — but the exchange ships only
-    ``(url, lang, host_bucket, doc_id, warc_ts, n_chars, salt)``:
-    measured 31.4 B/row vs 99.0 B/row shuffle-write for the derived span
-    row (3.16×, 1M-page run, stage metrics). The derivation runs AFTER
-    the exchange, where it pipelines into the encode task. At 100 TB the
-    single keyed exchange is the job's dominant IO, so payload width is
-    the first-order lever; re-evaluating cheap hash/arithmetic
-    expressions on the reduce side is strictly better at any cluster
-    size. The salt splits a route across ceil(P / ``n_buckets``) tasks
-    (P: ``shuffle_partitions`` or the session's shuffle partitions;
-    ``n_buckets``: ``enrich_stage``'s): one task per route while P ≤
-    ``n_buckets``, so a route's pages meet in one blob per Arrow batch,
-    and a mega host still cannot serialize the stage on a large cluster.
-    The partition-local (lang, bucket, doc_id) sort below keeps groups
-    contiguous and blobs deterministic; measured against the former
-    wide-exchange path at 1M pages: −44% blobs, −17% compressed bytes on
-    the telemetry-repeats shape (monotone diff deltas + better pool
-    amortization), equal wall. Pinned by ``tests/test_plans.py``
-    (derivation above the exchange, one shuffle) and the full-fidelity
-    roundtrip tests and gate (``scripts/roundtrip_gate.py``).
+    The exchange ships only ``(url, lang, host_bucket, doc_id, warc_ts,
+    n_chars, salt)``, 31.4 B/row against 99.0 B/row for the derived span
+    row (1M pages, stage metrics); the span columns are deterministic
+    expressions of those and are derived after it, in the encode task.
+    At 100 TB the single keyed exchange is the job's dominant IO.
+
+    Salts: one while P (``shuffle_partitions`` or the session's shuffle
+    partitions) ≤ the n_buckets ``enrich_stage`` recorded on
+    ``host_bucket``, so a route's pages meet in one task, in one blob per
+    Arrow batch; P beyond that, so a mega host spreads over most tasks.
+    With many buckets and P at or under n_buckets a mega host's route is
+    one task (ARCHITECTURE.md §exchange has the measurements). Pinned by
+    ``tests/test_plans.py`` (derivation above the exchange, one shuffle)
+    and the roundtrip tests and gate (``scripts/roundtrip_gate.py``).
     """
-    spans = _pre_encode_frame(enriched, n_buckets, shuffle_partitions)
+    spans = _pre_encode_frame(enriched, shuffle_partitions)
     return spans.mapInPandas(_encode_batches(arms, events_every),
                              schema=ENCODED_SCHEMA)
 
 
-def _pre_encode_frame(enriched: DataFrame, n_buckets: int = 8,
+def _pre_encode_frame(enriched: DataFrame,
                       shuffle_partitions: Optional[int] = None) -> DataFrame:
     """The frame ``encode_pages`` feeds to ``_encode_batches``: narrow
     exchange, group-cohesion sort, span derivation. Its columns (url,
@@ -422,10 +416,11 @@ def _pre_encode_frame(enriched: DataFrame, n_buckets: int = 8,
     what ``_group_spans_frame`` reads per route group."""
     p = shuffle_partitions or int(
         enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = enriched.schema["host_bucket"].metadata["n_buckets"]
     narrow = enriched.select(
         "url", "lang", "host_bucket", "doc_id", "warc_ts",
         F.length(F.col("text_extracted")).cast("long").alias("n_chars_pre"),
-        salt_expr("url", -(-p // n_buckets)).alias("salt"),
+        salt_expr("url", 1 if p <= n_buckets else p).alias("salt"),
     )
     if shuffle_partitions:
         routed = narrow.repartition(shuffle_partitions,
@@ -783,6 +778,6 @@ def run_pipeline(
                 & enriched["host_bucket"].eqNullSafe(done["host_bucket"])
             )
             enriched = enriched.join(F.broadcast(done), cond, "left_anti")
-    encoded = encode_pages(enriched, n_buckets=n_buckets, arms=arms)
+    encoded = encode_pages(enriched, arms=arms)
     route_stage(encoded, out_dir)
     return aggregate_stage(read_routed(spark, out_dir))

@@ -86,7 +86,7 @@ def run_streaming_pipeline(
             return
         enriched = enrich_stage(parse_stage(batch_df), spark,
                                 n_buckets=n_buckets)
-        encoded = encode_pages(enriched, n_buckets=n_buckets, arms=arms)
+        encoded = encode_pages(enriched, arms=arms)
         route_stage(encoded, out_dir, batch_id)
 
     query = (

@@ -249,13 +249,17 @@ def test_dense_events_roundtrip(spark):
 
 
 class TestRouteAffineLayout:
-    """The salt fan-out is ceil(P / n_buckets): at the session's P=8 with
-    8 buckets every route meets in one task, at P=32 in at most four."""
+    """The salt fan-out follows P and the bucket count ``enrich_stage``
+    recorded: one salt while P ≤ n_buckets (at the session's P=8 with 8
+    buckets every route meets in one task), P salts beyond that."""
 
     @pytest.fixture(scope="class")
-    def enriched(self, spark):
-        pages = synthetic_pages(spark, 4000, partitions=8)
-        return enrich_stage(parse_stage(pages), spark)
+    def pages(self, spark):
+        return parse_stage(synthetic_pages(spark, 4000, partitions=8))
+
+    @pytest.fixture(scope="class")
+    def enriched(self, spark, pages):
+        return enrich_stage(pages, spark)
 
     @staticmethod
     def per_route(encoded):
@@ -277,10 +281,22 @@ class TestRouteAffineLayout:
         assert len(got) == routes
         assert set(got.values()) == {(1, 1)}
 
-    def test_fan_out_follows_shuffle_partitions(self, enriched):
-        got = self.per_route(
-            encode_pages(enriched, arms=False, shuffle_partitions=32))
-        assert max(parts for _, parts in got.values()) == 4
+    def test_bucket_count_comes_from_enrich(self, spark, pages):
+        got = self.per_route(encode_pages(
+            enrich_stage(pages, spark, n_buckets=32), arms=False,
+            shuffle_partitions=32))
+        assert set(got.values()) == {(1, 1)}
+
+    def test_mega_host_spreads_beyond_n_buckets(self, enriched):
+        # the fixture's mega host is ~30% of rows, so its en route alone
+        # is ~15%: one salt would put that on one of 32 tasks (4.8x the
+        # mean); 32 salts spread it over most of them
+        got = encode_pages(enriched, arms=False, shuffle_partitions=32)
+        loads = [r["rows"] for r in got.groupBy("part_id").agg(
+            F.sum("n_spans").alias("rows")).collect()]
+        assert sum(loads) == 4000
+        assert max(loads) < 2 * 4000 / 32
+        assert max(parts for _, parts in self.per_route(got).values()) > 16
 
     def test_blobs_are_reproducible(self, enriched):
         def shas():
