@@ -15,6 +15,18 @@ levels (local[8] vs local[32], the sandbox proxy for N vs 4N executors) with
 the scaling efficiency BASELINE.json demands (≥0.8).
 
 ``--scaling`` also rewrites ``BENCH/BASELINE.md`` with the measured table.
+
+``--gate [n]``: the ``$SPARK_GRAFT_BENCH_PAGES``-page (default 1M)
+encode → zstd → decode → 31-field multiset-equality gate, one untimed
+warm-up then ``n`` (default 3) timed runs; prints ONE JSON line whose
+``missing`` and ``extra`` must both be 0 (``roundtrip_gate``).
+
+``--sweep``: every ``queries()`` entry at ``$SPARK_GRAFT_SF_DIR``, one warm
+pass then two runs through ``time_query``; prints the per-query medians and
+attribution dicts.
+
+Every timed region goes through ``attributed``; the layer split of the
+pipeline comes from ``python3 perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -196,8 +208,33 @@ def cpu_window(c0: dict | None, c1: dict | None, wall: float) -> dict:
     }
 
 
+def attributed(region):
+    """Run ``region()`` once as a measured run; returns (its result, the
+    attribution record ``{wall, stall, probe, busy, steal}``).
+
+    ``probe`` is taken just before the window opens; the wall, the stall
+    overlap and the /proc/stat busy/steal fractions all cover the one
+    window [t0, t1] around ``region()`` and nothing else."""
+    probe = throttle_probe()
+    c0 = host_cpu_sample()
+    t0 = time.monotonic()
+    out = region()
+    t1 = time.monotonic()
+    c1 = host_cpu_sample()
+    rec = {"wall": round(t1 - t0, 3),
+           "stall": round(_monitor().stall_between(t0, t1), 3),
+           "probe": round(probe, 4)}
+    rec.update(cpu_window(c0, c1, t1 - t0))
+    return out, rec
+
+
 def make_spark(cores: int, task_cpus: int = 1,
                shuffle_partitions: int | None = None):
+    """A ``local[cores]`` bench session. ``shuffle_partitions`` pins the
+    layout: that many reduce partitions, never coalesced by AQE (the rule
+    perfbench's session follows), so every exchange of the session —
+    the encode exchange included — has exactly P tasks. Without it P is
+    cores × 4 / task_cpus (at least 4) and AQE may coalesce."""
     from pyspark.sql import SparkSession
 
     return (
@@ -207,6 +244,8 @@ def make_spark(cores: int, task_cpus: int = 1,
                 str(shuffle_partitions
                     if shuffle_partitions else
                     max(cores * 4 // task_cpus, 4)))
+        .config("spark.sql.adaptive.coalescePartitions.enabled",
+                "false" if shuffle_partitions else "true")
         .config("spark.task.cpus", str(task_cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -246,10 +285,10 @@ def materialize_pages(spark, n_pages: int, realistic: bool = False) -> str:
 
 
 def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
-                       realistic: bool = False,
-                       shuffle_partitions: int | None = None):
+                       realistic: bool = False):
     """parse→enrich→encode→aggregate over n synthetic pages; returns
-    (seconds, pages, ratio dict). Timed from the parquet scan."""
+    (attribution record, pages, ratio dict). Timed from the parquet scan;
+    the layout is the session's (``make_spark``)."""
     from pyspark.sql import functions as F
 
     from compress_otel_collector_spark.plans.pipeline import (
@@ -261,21 +300,22 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
 
     path = materialize_pages(spark, n_pages, realistic=realistic)
     pages = spark.read.parquet(path)
-    t0 = time.time()
-    enriched = enrich_stage(parse_stage(pages), spark)
-    agg = aggregate_stage(encode_pages(enriched, arms=arms,
-                                       shuffle_partitions=shuffle_partitions))
-    row = agg.agg(
-        F.sum("blobs").alias("blobs"),
-        F.sum("pages").alias("pages"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("zstd_bytes").alias("zstd"),
-        F.sum("gzip_bytes").alias("gzip"),
-        F.sum("json_zstd_bytes").alias("json_zstd"),
-        F.sum("proto_zstd_bytes").alias("proto_zstd"),
-        F.sum("arrow_zstd_bytes").alias("arrow_zstd"),
-    ).collect()[0]
-    dt = time.time() - t0
+
+    def run():
+        enriched = enrich_stage(parse_stage(pages), spark)
+        agg = aggregate_stage(encode_pages(enriched, arms=arms))
+        return agg.agg(
+            F.sum("blobs").alias("blobs"),
+            F.sum("pages").alias("pages"),
+            F.sum("raw_bytes").alias("raw"),
+            F.sum("zstd_bytes").alias("zstd"),
+            F.sum("gzip_bytes").alias("gzip"),
+            F.sum("json_zstd_bytes").alias("json_zstd"),
+            F.sum("proto_zstd_bytes").alias("proto_zstd"),
+            F.sum("arrow_zstd_bytes").alias("arrow_zstd"),
+        ).collect()[0]
+
+    row, rec = attributed(run)
     ratios = {
         "blobs": int(row["blobs"]),
         "raw_bytes": int(row["raw"]),
@@ -298,17 +338,15 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
         ),
         "zstd_per_page": round(row["zstd"] / row["pages"], 2),
     }
-    return dt, int(row["pages"]), ratios
+    return rec, int(row["pages"]), ratios
 
 
-def run_headline_queries(spark, sf_dir: str):
-    """Per-query wall times, steady-state: a generic untimed warm-up first
-    (JVM codegen + parquet reader + Python worker spin-up), so the first
-    timed query doesn't carry ~6 s of one-time JIT cost that no production
-    deployment pays per query. The warm-up is NOT the queries themselves —
-    nothing query-specific is pre-cached."""
-    import __spark_entry__ as entrymod
-
+def warm_up(spark, sf_dir: str):
+    """A generic untimed warm-up (JVM codegen + parquet reader + Python
+    worker spin-up), so the first timed query doesn't carry ~6 s of
+    one-time JIT cost that no production deployment pays per query. It
+    is NOT the queries themselves — nothing query-specific is
+    pre-cached."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
@@ -324,6 +362,10 @@ def run_headline_queries(spark, sf_dir: str):
      .mapInPandas(_ident, "id long")
      .write.format("noop").mode("overwrite").save())
 
+
+def run_headline_queries(spark, sf_dir: str):
+    """Per-query wall times, steady-state, after ``warm_up``."""
+    warm_up(spark, sf_dir)
     names = [
         "tpch_q1", "revenue_by_nation", "dedup_exact", "dedup_minhash_lsh",
         "dedup_simhash_hamming", "embedding_topk", "token_count",
@@ -412,19 +454,84 @@ def time_query(spark, sf_dir: str, name: str) -> dict:
     stolen by the hypervisor DURING the run (/proc/stat delta)."""
     import __spark_entry__ as entrymod
 
-    mon = _monitor()
-    probe = throttle_probe()
-    c0 = host_cpu_sample()
-    t0 = time.monotonic()
-    entrymod.queries()[name](spark, sf_dir).write.format("noop") \
-        .mode("overwrite").save()
-    t1 = time.monotonic()
-    wall = t1 - t0
-    rec = {"wall": round(wall, 3),
-           "stall": round(mon.stall_between(t0, t1), 3),
-           "probe": round(probe, 4)}
-    rec.update(cpu_window(c0, host_cpu_sample(), wall))
+    query = entrymod.queries()[name]
+    _, rec = attributed(lambda: query(spark, sf_dir).write.format("noop")
+                        .mode("overwrite").save())
     return rec
+
+
+def sweep_queries(spark, sf_dir: str, runs: int = 2) -> dict:
+    """Every ``queries()`` entry after ``warm_up``: one untimed warm pass,
+    then ``runs`` measured runs through ``time_query``. A query that
+    raises is reported as an ``ERR`` string, not a crash, so one broken
+    entry does not hide the other timings."""
+    import statistics
+
+    import __spark_entry__ as entrymod
+
+    warm_up(spark, sf_dir)
+    medians: dict[str, float | str] = {}
+    query_runs: dict[str, list[dict]] = {}
+    for name in entrymod.queries():
+        try:
+            time_query(spark, sf_dir, name)
+            query_runs[name] = [time_query(spark, sf_dir, name)
+                                for _ in range(runs)]
+            medians[name] = round(statistics.median(
+                r["wall"] for r in query_runs[name]), 3)
+        except Exception as ex:  # noqa: BLE001 - reported per query
+            medians[name] = f"ERR {type(ex).__name__}: {ex}"[:120]
+    return {"queries": medians, "query_runs": query_runs,
+            "stalls": _monitor().summary()}
+
+
+def roundtrip_gate(spark, pages, n_runs: int = 3) -> dict:
+    """The full-fidelity roundtrip gate over the ``pages`` frame:
+    ``encode_pages`` (the production encode path) → zstd → decode →
+    31-field multiset equality against
+    ``expected_roundtrip(span_stage(...))``. One untimed warm-up (JIT,
+    Python workers, parquet footers), then ``n_runs`` measured runs.
+    ``missing`` and ``extra`` must both be 0."""
+    import statistics
+
+    from compress_otel_collector_spark.plans.pipeline import (
+        encode_pages,
+        enrich_stage,
+        expected_roundtrip,
+        parse_stage,
+        roundtrip_check,
+        roundtrip_counts,
+        span_stage,
+    )
+
+    def gate():
+        enriched = enrich_stage(parse_stage(pages), spark)
+        return roundtrip_counts(
+            roundtrip_check(encode_pages(enriched)),
+            expected_roundtrip(span_stage(enriched))).collect()[0]
+
+    if n_runs < 1:
+        raise ValueError(f"n_runs must be at least 1, got {n_runs}")
+    n_pages = pages.count()
+    gate()
+    runs: list[dict] = []
+    for _ in range(n_runs):
+        row, rec = attributed(gate)
+        runs.append(rec)
+    walls = [r["wall"] for r in runs]
+    return {
+        "pages": n_pages,
+        "cores": spark.sparkContext.defaultParallelism,
+        "runs": runs,
+        "median_sec": round(statistics.median(walls), 3),
+        "best_sec": round(min(walls), 3),
+        "best_stall_corrected_sec": round(
+            min(r["wall"] - r["stall"] for r in runs), 3),
+        "stalls": _monitor().summary(),
+        "decoded_spans": int(row["decoded_spans"]),
+        "missing": int(row["missing"]),
+        "extra": int(row["extra"]),
+    }
 
 
 def _memory_metrics(spark) -> dict:
@@ -504,12 +611,13 @@ def scaling_runs(n_pages: int, visits: int = 5):
     a 2-thread job borrows idle host cores for GC/IO/Python, inflating the
     small-N number — the slot model removes that.)
 
-    Both levels run the identical physical plan: the keyed exchange is
-    pinned to ``SCALING_PARTITIONS`` reduce partitions (data-sized, as AQE
-    would size it at 100 TB — see the constant's note), so every task at
-    both levels processes the same partitions and emits byte-identical
-    blobs; only how many run concurrently differs. 16 partitions = 16
-    waves of 1 at the small level, 4 waves of 4 at the large one.
+    Both levels run the identical physical plan: each visit's session
+    (``make_spark``) pins ``SCALING_PARTITIONS`` uncoalesced reduce
+    partitions (data-sized, as AQE would size it at 100 TB — see the
+    constant's note), so every task at both levels processes the same
+    partitions and emits byte-identical blobs; only how many run
+    concurrently differs. 16 partitions = 16 waves of 1 at the small
+    level, 4 waves of 4 at the large one.
 
     Host thermal/throttle drift dominated the r1 measurement (sequential
     blocks → the later level ran on a slower host). This version runs the
@@ -543,18 +651,16 @@ def scaling_runs(n_pages: int, visits: int = 5):
             # warm-up covers the one-time costs (JIT, Python worker fork,
             # parquet footers); a quarter-size pass is enough for that and
             # keeps the 1-slot visits affordable at 4M pages
-            run_pipeline_synth(spark, max(n_pages // 4, 1), arms=False,
-                               shuffle_partitions=parts)
+            run_pipeline_synth(spark, max(n_pages // 4, 1), arms=False)
+            rec, pages, _ = run_pipeline_synth(spark, n_pages, arms=False)
             if probe_sink is not None:
                 # host CPU speed at this visit: levels compared under
                 # similar probes = a fair ratio; a probe spike on one
                 # level's visit explains an outlier run without an A/B
-                probe_sink.append(round(throttle_probe(), 4))
-            dt, pages, _ = run_pipeline_synth(spark, n_pages, arms=False,
-                                              shuffle_partitions=parts)
+                probe_sink.append(rec["probe"])
             if mem_sink is not None:
                 mem_sink.append(_memory_metrics(spark))
-            return pages / dt
+            return pages / rec["wall"]
         finally:
             spark.stop()
 
@@ -606,34 +712,6 @@ def scaling_runs(n_pages: int, visits: int = 5):
     return results, eff
 
 
-def partition_mechanism(n_pages: int = 1_000_000):
-    """Measure the round-4 scaling artifact directly: the SAME pipeline at
-    the SAME parallelism (local[32]) with the keyed exchange pinned to 4
-    vs 16 reduce partitions — the layouts the r4 harness gave the 1-slot
-    and 4-slot levels. Reports blobs + compressed bytes per layout: fewer
-    partitions ⇒ more route groups per reduce task ⇒ fewer, larger blobs
-    (per-blob header/pool overhead amortizes further). That is a workload
-    difference between the levels, not a scalability property, and it is
-    what depressed the r4 efficiency reading.
-    """
-    out = {}
-    spark = make_spark(CPUS)
-    try:
-        materialize_pages(spark, n_pages)
-        run_pipeline_synth(spark, n_pages, arms=False)  # warm
-        for parts in (4, 16):
-            dt, pages, ratios = run_pipeline_synth(
-                spark, n_pages, arms=False, shuffle_partitions=parts)
-            out[parts] = {
-                "blobs": ratios["blobs"],
-                "zstd_bytes": ratios["zstd_bytes"],
-                "sec": round(dt, 2),
-            }
-    finally:
-        spark.stop()
-    return out
-
-
 def _arms_table(ratios, pages):
     rows = [
         ("custom codec (raw)", "raw_bytes"),
@@ -648,29 +726,6 @@ def _arms_table(ratios, pages):
         lines.append(
             f"| {label} | {ratios[key]} | {ratios[key] / pages:.1f} |")
     return "\n".join(lines)
-
-
-def _mechanism_md(mech):
-    """Markdown paragraph quantifying the r4 partition-layout artifact
-    (``partition_mechanism``); empty string when not measured."""
-    if not mech:
-        return ""
-    m4, m16 = mech[4], mech[16]
-    return f"""### Why round 4 read 0.815: the partition-layout artifact, measured
-
-Round 4 let the reduce-partition count track core count (4 partitions at
-the 1-slot level vs 16 at 4 slots), so the two levels ran different
-physical plans. Measured at the SAME parallelism (local[{CPUS}], 1M
-pages, one session): 4 partitions → **{m4['blobs']} blobs /
-{m4['zstd_bytes']:,} zstd bytes**, 16 partitions → **{m16['blobs']} blobs
-/ {m16['zstd_bytes']:,} zstd bytes**. Fewer partitions concentrate more
-route groups per reduce task, so blobs grow larger and per-blob
-header/pool overhead amortizes further — a workload advantage the r4
-harness handed only to the small level, depressing the ratio. With the
-layout pinned (table above) both levels emit byte-identical blobs and the
-artifact is gone; this is also the faithful 100 TB model, where partition
-count is data-sized, not cluster-sized.
-"""
 
 
 def _mem_cells(r):
@@ -716,7 +771,7 @@ STANDING_SECTIONS = (
 
 
 def write_baseline_md(results, eff, pipeline_sec, pages, ratios,
-                      ratios_real, mech=None, notes: str = ""):
+                      ratios_real, notes: str = ""):
     """Regenerates BENCH/BASELINE.md in full. ``notes`` is extra markdown
     (e.g. a measurement-anomaly disclosure) appended after the scaling
     table — pass it when re-emitting the file so hand annotations are not
@@ -750,9 +805,9 @@ layout, and session discipline — which is the whole spread.
 | 4 executor slots (scaling level 4N) | {_sat_row(results, '4_executors')} |
 
 The pinned layout is per-page cheaper than the plain one (fewer reduce
-partitions ⇒ fewer, larger blobs ⇒ better header/pool amortization — the
-mechanism section below measures it); both are published rather than
-cherry-picking either. The comparison arms marshal every span three
+partitions ⇒ fewer, larger blobs ⇒ better header/pool amortization);
+both are published rather than cherry-picking either. The comparison
+arms marshal every span three
 extra ways — JSON, OTLP protobuf, Arrow IPC — and are timed separately
 as `pipeline_arms` in the bench JSON; they are measurement diagnostics,
 not pipeline stages.
@@ -849,8 +904,7 @@ layout holds with headroom — the partitions-fit-in-memory premise of the
     " closing the r4 finding that 0.815 was a small-input layout artifact"
     " rather than a scalability property." if eff >= 0.9 else ""}
 
-{notes.rstrip() + chr(10) + chr(10) if notes else ''}{_mechanism_md(mech)}
-Why this holds at 1000 executors: the job is a narrow scan → one keyed
+{notes.rstrip() + chr(10) + chr(10) if notes else ''}Why this holds at 1000 executors: the job is a narrow scan → one keyed
 exchange (salted against the mega-host skew) → partition-local encode →
 partition-aligned write; there is no global state, no driver-side loop, and
 the only serial work is job scheduling + the final count aggregation.
@@ -871,6 +925,17 @@ def main():
     scaling = "--scaling" in sys.argv
     mon = _monitor()  # start the heartbeat before any measurement
     spark = make_spark(CPUS)
+    if "--gate" in sys.argv or "--sweep" in sys.argv:
+        if "--sweep" in sys.argv:
+            out = sweep_queries(spark, SF_DIR)
+        else:
+            i = sys.argv.index("--gate") + 1
+            n_runs = int(sys.argv[i]) if i < len(sys.argv) else 3
+            pages = spark.read.parquet(materialize_pages(spark, N_SYNTH))
+            out = roundtrip_gate(spark, pages, n_runs)
+        spark.stop()
+        print(json.dumps(out))
+        return
     queries, query_runs, sentinel_first = run_headline_queries(spark, SF_DIR)
     import statistics
 
@@ -889,23 +954,12 @@ def main():
     # the record self-attributing.
     n_pipe_runs = 6 if sentinel_first["wall"] > 0.7 else 3
 
-    def _timed_pipeline(**kw):
-        probe = throttle_probe()
-        c0 = host_cpu_sample()
-        t0 = time.monotonic()
-        dt, n_pages, r = run_pipeline_synth(spark, N_SYNTH, **kw)
-        rec = {"wall": round(dt, 3),
-               "stall": round(mon.stall_between(t0, time.monotonic()), 3),
-               "probe": round(probe, 4)}
-        rec.update(cpu_window(c0, host_cpu_sample(), dt))
-        return rec, n_pages, r
-
     pipe_runs, arms_runs = [], []
     pages, ratios = 0, None
     for _ in range(n_pipe_runs):
-        rec, pages, _r = _timed_pipeline(arms=False)
+        rec, pages, _r = run_pipeline_synth(spark, N_SYNTH, arms=False)
         pipe_runs.append(rec)
-        rec, _, ratios = _timed_pipeline(arms=True)
+        rec, _, ratios = run_pipeline_synth(spark, N_SYNTH, arms=True)
         arms_runs.append(rec)
     pipe_sec = statistics.median([r["wall"] for r in pipe_runs])
     arms_sec = statistics.median([r["wall"] for r in arms_runs])
@@ -971,12 +1025,9 @@ def main():
         # larger input for scaling (4M pages): amortizes the ~2.5 s of
         # per-run serial work (job setup, footer reads, final agg) that
         # otherwise caps measured efficiency via Amdahl at small inputs
-        mech = partition_mechanism(N_SYNTH)
         results, eff = scaling_runs(max(4 * N_SYNTH, 4_000_000))
         result["scaling"] = {str(k): v for k, v in results.items()}
         result["scaling_efficiency_n_to_4n"] = eff  # N=2 cores vs 4N=8
-        result["scaling_partition_mechanism"] = {
-            str(k): v for k, v in mech.items()}
         # standing annotations survive regeneration: BENCH/NOTES.md is
         # appended verbatim after the scaling table on every rewrite
         notes = ""
@@ -984,7 +1035,7 @@ def main():
             with open("BENCH/NOTES.md") as nf:
                 notes = nf.read()
         write_baseline_md(results, eff, pipe_sec, pages, ratios,
-                          ratios_real, mech, notes=notes)
+                          ratios_real, notes=notes)
     print(json.dumps(result))
 
 

@@ -68,7 +68,7 @@ def decode_sleb128(data, pos: int) -> tuple[int, int]:
 
 
 # --------------------------------------------------------------------------
-# Vectorized encoder: int64 ndarray -> (flat bytes, per-value lengths).
+# Vectorized encoder: int64 ndarray -> (padded byte matrix, lengths).
 # Used by the batch codec so varint packing never runs per-row Python.
 # --------------------------------------------------------------------------
 
@@ -115,16 +115,3 @@ def encode_sleb128_matrix(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     cont = cols[None, :] < (np.minimum(k, 9) - 1)[:, None]
     mat[:, :min(w, 8)] |= cont.astype(np.uint8) << 7
     return mat, k
-
-
-def encode_sleb128_array(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Encode an int64 array; returns (concatenated bytes, lengths).
-
-    Byte-identical to calling :func:`encode_sleb128` per value.
-    """
-    mat, k = encode_sleb128_matrix(values)
-    if mat.shape[0] == 0:
-        return b"", k
-    sel = np.arange(mat.shape[1], dtype=np.uint8)[None, :] < k[:, None]
-    flat = mat.reshape(-1)[sel.reshape(-1)]
-    return flat.tobytes(), k

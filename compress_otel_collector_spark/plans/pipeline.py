@@ -149,8 +149,8 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     trace.go:95-105). orjson when available (~1.4× pandas ``to_json`` on
     this shape — arm byte counts shift <1% vs the pandas form, both are
     fidelity-equivalent records-JSON); the pandas path is the fallback
-    and the semantic reference: hex ids, ``parent_span_id`` always ``""``
-    (empty bytes), NaN → null, and the ``event_*``/``link_*`` columns as
+    and the semantic reference: hex ids (``""`` for an empty parent),
+    NaN → null, and the ``event_*``/``link_*`` columns as
     OTLP-style ``events``/``links`` lists (hex link ids, null without)."""
     import numpy as np
 
@@ -175,12 +175,16 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
                                "attributes": a, "droppedAttributesCount": d}]
     hex_tid = _hex_column(col["trace_id"], 16)
     hex_sid = _hex_column(col["span_id"], 8)
+    # per row, not _hex_column: a root's parent is b"" and a child's is 8
+    # bytes, so the joined buffer has no fixed width to split on
+    hex_parent = [p.hex() if p else "" for p in col["parent_span_id"]]
     flat = [c for c in spans.columns if not c.startswith(("event_", "link_"))]
     try:
         import orjson
     except ImportError:
         json_view = spans[flat].assign(
-            trace_id=hex_tid, span_id=hex_sid, parent_span_id="", **nested)
+            trace_id=hex_tid, span_id=hex_sid, parent_span_id=hex_parent,
+            **nested)
         return json_view.to_json(orient="records").encode()
     cols: dict = {}
     for c in flat:
@@ -189,7 +193,7 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
         elif c == "span_id":
             cols[c] = hex_sid.tolist()
         elif c == "parent_span_id":
-            cols[c] = [""] * n
+            cols[c] = hex_parent
         else:
             a = col[c]
             if a.dtype.kind == "f":
@@ -383,8 +387,7 @@ def _encode_batches(arms: bool, events_every: int = 10):
 
 
 def encode_pages(enriched: DataFrame, arms: bool = True,
-                 events_every: int = 10,
-                 shuffle_partitions: Optional[int] = None) -> DataFrame:
+                 events_every: int = 10) -> DataFrame:
     """Route-aligned repartition with a NARROW shuffle payload, then
     vectorized encode: the pipeline's one encode path.
 
@@ -394,39 +397,36 @@ def encode_pages(enriched: DataFrame, arms: bool = True,
     expressions of those and are derived after it, in the encode task.
     At 100 TB the single keyed exchange is the job's dominant IO.
 
-    Salts: one while P (``shuffle_partitions`` or the session's shuffle
-    partitions) ≤ the n_buckets ``enrich_stage`` recorded on
-    ``host_bucket``, so a route's pages meet in one task, in one blob per
-    Arrow batch; P beyond that, so a mega host spreads over most tasks.
-    With many buckets and P at or under n_buckets a mega host's route is
-    one task (ARCHITECTURE.md §exchange has the measurements). Pinned by
+    Salts: one while P (the session's ``spark.sql.shuffle.partitions``)
+    ≤ the n_buckets ``enrich_stage`` recorded on ``host_bucket``, so a
+    route's pages meet in one task, in one blob per Arrow batch; P beyond
+    that, so a mega host spreads over most tasks. With many buckets and P
+    at or under n_buckets a mega host's route is one task (ARCHITECTURE.md
+    §exchange has the measurements). The layout is the session's: with
+    AQE coalescing on it may merge the P partitions; a caller that pins
+    the layout sets P with ``spark.sql.adaptive.coalescePartitions.enabled
+    =false`` (``bench.make_spark``, perfbench's session). Pinned by
     ``tests/test_plans.py`` (derivation above the exchange, one shuffle)
-    and the roundtrip tests and gate (``scripts/roundtrip_gate.py``).
+    and the roundtrip tests and gate (``bench.py --gate``).
     """
-    spans = _pre_encode_frame(enriched, shuffle_partitions)
+    spans = _pre_encode_frame(enriched)
     return spans.mapInPandas(_encode_batches(arms, events_every),
                              schema=ENCODED_SCHEMA)
 
 
-def _pre_encode_frame(enriched: DataFrame,
-                      shuffle_partitions: Optional[int] = None) -> DataFrame:
+def _pre_encode_frame(enriched: DataFrame) -> DataFrame:
     """The frame ``encode_pages`` feeds to ``_encode_batches``: narrow
     exchange, group-cohesion sort, span derivation. Its columns (url,
     lang, host_bucket, doc_id and the ``span_columns_sql`` spans) are
     what ``_group_spans_frame`` reads per route group."""
-    p = shuffle_partitions or int(
-        enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    p = int(enriched.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_buckets = enriched.schema["host_bucket"].metadata["n_buckets"]
     narrow = enriched.select(
         "url", "lang", "host_bucket", "doc_id", "warc_ts",
         F.length(F.col("text_extracted")).cast("long").alias("n_chars_pre"),
         salt_expr("url", 1 if p <= n_buckets else p).alias("salt"),
     )
-    if shuffle_partitions:
-        routed = narrow.repartition(shuffle_partitions,
-                                    "lang", "host_bucket", "salt")
-    else:
-        routed = narrow.repartition("lang", "host_bucket", "salt")
+    routed = narrow.repartition("lang", "host_bucket", "salt")
     # group cohesion under AQE coalescing: the narrow payload makes map
     # output small enough that AQE merges many (lang,bucket,salt) hash
     # partitions into one reduce partition, interleaving groups across the

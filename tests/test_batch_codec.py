@@ -336,6 +336,36 @@ def test_production_group_frame_matches_scalar(lang):
         normalize(doc, m)
 
 
+@pytest.mark.parametrize("marshal", ["orjson", "pandas"])
+def test_json_arm_writes_parent_ids(marshal, monkeypatch):
+    """The JSON arm marshals each span's own parent: hex for an 8-byte
+    parent, ``""`` for a root's empty one, on both marshal paths. A frame
+    of roots and children therefore gives other bytes than the same
+    frame with every parent empty."""
+    import json
+    import sys
+
+    from compress_otel_collector_spark.plans.pipeline import (
+        _group_spans_frame,
+        _json_arm_bytes,
+    )
+
+    if marshal == "pandas":
+        monkeypatch.setitem(sys.modules, "orjson", None)  # import fails
+    doc_ids = np.arange(100, 130, dtype=np.int64)
+    roots = production_pages(doc_ids, "en")
+    parents = [t[8:] if d % 2 else b""
+               for d, t in zip(doc_ids, roots["trace_id"])]
+    mixed = roots.assign(parent_span_id=parents)
+
+    def marshal_group(g):
+        return _json_arm_bytes(_group_spans_frame(g, "en", 3, 10)[0])
+
+    got = [r["parent_span_id"] for r in json.loads(marshal_group(mixed))]
+    assert got == [p.hex() for p in parents]
+    assert marshal_group(mixed) != marshal_group(roots)
+
+
 #: ``_encode_batches(arms=True)`` on ``_pinned_pages()``, one tuple per
 #: output row: (lang, host_bucket, blob_sha256, raw_bytes, zstd_bytes,
 #: gzip_bytes, proto_zstd_bytes, sha256 of the proto arm's bytes)

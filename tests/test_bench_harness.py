@@ -6,6 +6,8 @@ and the SIGSTOP/CONT test below synthesizes one and checks it is
 correctly attributed to the frozen window.
 #2: BENCH/BASELINE.md regeneration must refuse to destroy standing
 sections (the r5 "Arms cost floor" table died this way at 6f4a415).
+Every timed run goes through ``bench.attributed``, pinned below with a
+fake clock; ``bench.roundtrip_gate`` runs on the fixture session.
 """
 
 import json
@@ -165,6 +167,72 @@ class TestHostCPU:
         assert bench.cpu_window(None, {"busy": 1}, 1.0) == {}
         assert bench.cpu_window({"busy": 1}, None, 1.0) == {}
         assert bench.cpu_window({"busy": 1}, {"busy": 2}, 0.0) == {}
+
+
+class TestAttributionWindow:
+    """``attributed`` is the one timing window: the wall, the stall
+    overlap and the busy/steal fractions all cover [t0, t1] around the
+    region, and the probe runs before it opens."""
+
+    def test_wall_cpu_and_stall_cover_one_interval(self, monkeypatch):
+        import threading
+        import types
+
+        ncpu = os.cpu_count() or 1
+        main = threading.get_ident()
+        host = {"t": 100.0, "busy": 0.0, "steal": 0.0}
+
+        def run(sec, busy, steal):
+            host["t"] += sec
+            host["busy"] += sec * ncpu * busy
+            host["steal"] += sec * ncpu * steal
+
+        def probe():  # 1 s of an all-busy host, just before the window
+            run(1.0, 1.0, 0.0)
+            return 0.01
+
+        def region():  # 10 s at half busy, a tenth stolen
+            run(10.0, 0.5, 0.1)
+            return "done"
+
+        # only this thread sees the fake clock: a live monitor thread
+        # from another test keeps reading the real one
+        monkeypatch.setattr(bench, "time", types.SimpleNamespace(
+            sleep=time.sleep,
+            monotonic=lambda: host["t"] if threading.get_ident() == main
+            else time.monotonic()))
+        monkeypatch.setattr(bench, "throttle_probe", probe)
+        monkeypatch.setattr(bench, "host_cpu_sample", lambda: {
+            "busy": host["busy"], "idle": 0.0, "iowait": 0.0,
+            "steal": host["steal"]})
+        mon = bench.StallMonitor()
+        # a 2 s freeze from the probe's second half into the region
+        # (detected 1 s after the window opens at 101.0)
+        mon._events = [(102.0, 2.0)]
+        monkeypatch.setattr(bench, "_MONITOR", mon)
+
+        out, rec = bench.attributed(region)
+        assert out == "done"
+        # a wall, stall or /proc/stat window opened before the probe
+        # reads wall 11, stall 2 or busy 0.6
+        assert rec == {"wall": 10.0, "stall": 1.0, "probe": 0.01,
+                       "busy": 0.5, "steal": 0.1}
+
+
+def test_roundtrip_gate_on_the_fixture_session(spark):
+    """``bench.py --gate`` on 2,000 synthetic pages: the 1M gate's JSON
+    keys, every span decoded, nothing missing or extra."""
+    from compress_otel_collector_spark.sources.tables import synthetic_pages
+
+    out = bench.roundtrip_gate(
+        spark, synthetic_pages(spark, 2000, partitions=4), n_runs=1)
+    assert set(out) == {
+        "pages", "cores", "runs", "median_sec", "best_sec",
+        "best_stall_corrected_sec", "stalls", "decoded_spans", "missing",
+        "extra"}
+    assert out["pages"] == out["decoded_spans"] == 2000
+    assert out["missing"] == out["extra"] == 0
+    assert {"wall", "stall", "probe"} <= set(out["runs"][0])
 
 
 def _fake_campaign():

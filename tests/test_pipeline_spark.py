@@ -1,5 +1,7 @@
 """End-to-end Spark tests for the flagship pipeline (FIXTURES.md F5)."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -248,6 +250,24 @@ def test_dense_events_roundtrip(spark):
     assert row["missing"] == 0 and row["extra"] == 0
 
 
+@contextlib.contextmanager
+def pinned_layout(spark, p):
+    """``p`` shuffle partitions that AQE may not coalesce (the layout
+    ``bench.make_spark(shuffle_partitions=p)`` pins), restoring the
+    session's own settings on exit; ``p=None`` keeps the session's."""
+    keys = {"spark.sql.shuffle.partitions": str(p),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        if p is not None:
+            for k, v in keys.items():
+                spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 class TestRouteAffineLayout:
     """The salt fan-out follows P and the bucket count ``enrich_stage``
     recorded: one salt while P ≤ n_buckets (at the session's P=8 with 8
@@ -271,32 +291,33 @@ class TestRouteAffineLayout:
         }
 
     @pytest.mark.parametrize("p", [None, 8])
-    def test_one_blob_and_one_task_per_route(self, enriched, p):
-        # p=None reads P from the session (AQE may coalesce); an explicit
-        # count is never coalesced, so there only the salt keeps a route
-        # in one task
+    def test_one_blob_and_one_task_per_route(self, spark, enriched, p):
+        # p=None: the session's P, which AQE may coalesce; p=8 pinned,
+        # never coalesced, so there only the salt keeps a route in one task
         routes = enriched.select("lang", "host_bucket").distinct().count()
-        got = self.per_route(
-            encode_pages(enriched, arms=False, shuffle_partitions=p))
+        with pinned_layout(spark, p):
+            got = self.per_route(encode_pages(enriched, arms=False))
         assert len(got) == routes
         assert set(got.values()) == {(1, 1)}
 
     def test_bucket_count_comes_from_enrich(self, spark, pages):
-        got = self.per_route(encode_pages(
-            enrich_stage(pages, spark, n_buckets=32), arms=False,
-            shuffle_partitions=32))
+        with pinned_layout(spark, 32):
+            got = self.per_route(encode_pages(
+                enrich_stage(pages, spark, n_buckets=32), arms=False))
         assert set(got.values()) == {(1, 1)}
 
-    def test_mega_host_spreads_beyond_n_buckets(self, enriched):
+    def test_mega_host_spreads_beyond_n_buckets(self, spark, enriched):
         # the fixture's mega host is ~30% of rows, so its en route alone
         # is ~15%: one salt would put that on one of 32 tasks (4.8x the
         # mean); 32 salts spread it over most of them
-        got = encode_pages(enriched, arms=False, shuffle_partitions=32)
-        loads = [r["rows"] for r in got.groupBy("part_id").agg(
-            F.sum("n_spans").alias("rows")).collect()]
+        with pinned_layout(spark, 32):
+            got = encode_pages(enriched, arms=False)
+            loads = [r["rows"] for r in got.groupBy("part_id").agg(
+                F.sum("n_spans").alias("rows")).collect()]
+            parts = max(n for _, n in self.per_route(got).values())
         assert sum(loads) == 4000
         assert max(loads) < 2 * 4000 / 32
-        assert max(parts for _, parts in self.per_route(got).values()) > 16
+        assert parts > 16
 
     def test_blobs_are_reproducible(self, enriched):
         def shas():

@@ -9,7 +9,7 @@ from compress_otel_collector_spark.codec.varint import (
     INT64_MIN,
     decode_sleb128,
     encode_sleb128,
-    encode_sleb128_array,
+    encode_sleb128_matrix,
     sleb128_lengths,
 )
 
@@ -63,6 +63,15 @@ def test_roundtrip_property(v):
     assert out == v
 
 
+def _flat(vals):
+    """The padded matrix flattened the way the batch codec flattens it
+    (``batch._fields_blob``), plus the per-value lengths."""
+    from compress_otel_collector_spark.codec.batch import _fields_blob
+
+    mat, lengths = encode_sleb128_matrix(vals)
+    return _fields_blob([(mat, lengths)]), lengths
+
+
 def test_vectorized_matches_scalar():
     rng = np.random.default_rng(42)
     vals = np.concatenate([
@@ -73,7 +82,7 @@ def test_vectorized_matches_scalar():
         rng.integers(INT64_MIN, INT64_MAX, size=5000, dtype=np.int64),
         rng.integers(-1000, 1000, size=5000).astype(np.int64),
     ])
-    flat, lengths = encode_sleb128_array(vals)
+    flat, lengths = _flat(vals)
     expected = b"".join(encode_sleb128(int(v)) for v in vals)
     assert flat == expected
     assert lengths.tolist() == [len(encode_sleb128(int(v))) for v in vals]
@@ -81,5 +90,5 @@ def test_vectorized_matches_scalar():
 
 
 def test_vectorized_empty():
-    flat, lengths = encode_sleb128_array(np.array([], dtype=np.int64))
+    flat, lengths = _flat(np.array([], dtype=np.int64))
     assert flat == b"" and len(lengths) == 0
