@@ -31,6 +31,7 @@ pipeline comes from ``python3 perfbench/run.py --trace 1``.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import sys
@@ -257,6 +258,16 @@ def make_spark(cores: int, task_cpus: int = 1,
 
 
 _PAGES_CACHE: dict[tuple[int, bool], str] = {}
+
+
+@atexit.register
+def _remove_pages_cache() -> None:
+    """Delete every input dir ``materialize_pages`` wrote when the process
+    exits (about 74 MB per run at 1M pages of both shapes)."""
+    import shutil
+
+    while _PAGES_CACHE:
+        shutil.rmtree(_PAGES_CACHE.popitem()[1], ignore_errors=True)
 
 
 def materialize_pages(spark, n_pages: int, realistic: bool = False) -> str:
@@ -878,8 +889,8 @@ emits byte-identical blobs at both levels and only the concurrency
 differs. The two levels run **interleaved ABAB across
 {len(results['1_executor']['runs'])} fresh sessions each** (one warm-up +
 one measured run per session) so host thermal/throttle drift hits both
-equally; medians of the measured runs, all runs shown. local[32] (plain)
-is the saturated-host headline, measured last under the same session
+equally; medians of the measured runs, all runs shown.
+local[{results['local32_saturated']['cores']}] (plain) is the saturated-host headline, measured last under the same session
 discipline. Input: {results['1_executor'].get('pages', 'see table'):,} pages —
 4× round 4's, per the r4 re-proof requirement.
 
@@ -887,7 +898,7 @@ discipline. Input: {results['1_executor'].get('pages', 'see table'):,} pages —
 |---|---|---|---|---|---|---|---|
 | 1 executor | {results['1_executor']['cores']} | 1 | {results['1_executor']['sec']} | {results['1_executor']['pages_per_sec']:,} | {_mem_cells(results['1_executor'])} | {results['1_executor']['runs']} |
 | 4 executors | {results['4_executors']['cores']} | 4 | {results['4_executors']['sec']} | {results['4_executors']['pages_per_sec']:,} | {_mem_cells(results['4_executors'])} | {results['4_executors']['runs']} |
-| saturated host | 32 | 32 | {results['local32_saturated']['sec']} | {results['local32_saturated']['pages_per_sec']:,} | {_mem_cells(results['local32_saturated'])} | {results['local32_saturated']['runs']} |
+| saturated host | {results['local32_saturated']['cores']} | {results['local32_saturated']['slots']} | {results['local32_saturated']['sec']} | {results['local32_saturated']['pages_per_sec']:,} | {_mem_cells(results['local32_saturated'])} | {results['local32_saturated']['runs']} |
 
 Memory discipline (r7): "shuffle spill" sums memory+disk
 `BytesSpilled` over every stage of a level's sessions (max across

@@ -25,6 +25,9 @@ Common-Crawl-style pages table:
   stores without atomic directory rename (there the sink is Iceberg).
 - **aggregate**: per-sink counts + compression-ratio metrics (the reference's
   size-comparison arms, trace.go:40-181: custom+zstd vs JSON+zstd vs gzip).
+  ``run_pipeline`` sums the lineage rows its route write observed, on the
+  driver, like the reference reports the batch it just sent; it never
+  re-reads the sink it wrote.
 
 Scale notes (100 TB / 1000 executors): the only wide exchange is the single
 ``repartition(lang, host_bucket, salt)`` before encode — everything upstream
@@ -41,11 +44,12 @@ from typing import Iterator, Optional
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -473,45 +477,92 @@ def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/routed")
 
 
-def completed_sinks(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    """Distinct (lang, host_bucket) routes already materialized, or None
-    when the sink holds no data files yet (no ``routed/`` dir, or one an
-    aborted first write left empty). Any other failure — an unreadable
-    file, a permission error — raises: treating it as "no sink" would
-    re-encode every route."""
+#: one blob row's lineage record: every ``ENCODED_SCHEMA`` column but the
+#: blob (``route_stage``'s docstring)
+LINEAGE_SCHEMA = StructType(
+    [f for f in ENCODED_SCHEMA.fields if f.name != "blob"])
+LINEAGE_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
+
+#: the per-route sums, (output column, lineage column), that
+#: ``aggregate_stage`` and ``run_pipeline``'s driver totals both build.
+#: A sum counts only values ≥ 0: an arms-off blob carries −1 in every arm
+#: column, so a route with no arm sums, and divides, to NULL.
+ROUTE_SUMS = (
+    ("pages", "n_spans"),
+    ("raw_bytes", "raw_bytes"),
+    ("zstd_bytes", "zstd_bytes"),
+    ("gzip_bytes", "gzip_bytes"),
+    ("json_zstd_bytes", "json_zstd_bytes"),
+    ("proto_zstd_bytes", "proto_zstd_bytes"),
+    ("arrow_zstd_bytes", "arrow_zstd_bytes"),
+)
+#: (output column, summed arm): ``zstd_bytes`` over that arm's bytes
+ROUTE_RATIOS = (
+    ("zstd_vs_json_ratio", "json_zstd_bytes"),
+    ("zstd_vs_proto_ratio", "proto_zstd_bytes"),
+)
+ROUTE_KEYS = ["lang", "host_bucket"]
+
+#: what ``aggregate_stage`` returns, one row per route
+AGGREGATE_SCHEMA = StructType(
+    [LINEAGE_SCHEMA[k] for k in ROUTE_KEYS]
+    + [StructField("pages", LongType()),
+       StructField("blobs", LongType(), nullable=False)]
+    + [StructField(out, LongType()) for out, _ in ROUTE_SUMS[1:]]
+    + [StructField(out, DoubleType()) for out, _ in ROUTE_RATIOS])
+
+
+def prior_lineage(spark: SparkSession, out_dir: str) -> Optional[pa.Table]:
+    """The lineage rows of every blob already in the sink, or None when
+    there is no ``routed/`` dir. Read with the schema given, so a dir an
+    aborted first write left empty reads as no rows. Any other failure —
+    an unreadable file, a permission error — raises: treating it as "no
+    sink" would re-encode every route."""
     fs, path, _ = _hadoop_fs(spark, f"{out_dir}/routed")
     if not fs.exists(path):
         return None
-    try:
-        return read_routed(spark, out_dir).select(
-            "lang", "host_bucket").distinct()
-    except AnalysisException as e:
-        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
-            return None
-        raise
+    return (spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/routed")
+            .select(*LINEAGE_SCHEMA.fieldNames()).toArrow()
+            .cast(LINEAGE_ARROW_SCHEMA))
 
 
 def aggregate_stage(encoded_or_routed: DataFrame) -> DataFrame:
     """Per-sink counts + compression-ratio metrics (the reference's
     size-comparison artifacts, trace.go:49-181, as one aggregation)."""
+    def summed(c):
+        return F.sum(F.when(F.col(c) >= 0, F.col(c)))
+
+    sums = [summed(src).alias(out) for out, src in ROUTE_SUMS]
     return (
-        encoded_or_routed.groupBy("lang", "host_bucket")
-        .agg(
-            F.sum("n_spans").alias("pages"),
-            F.count("*").alias("blobs"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("zstd_bytes").alias("zstd_bytes"),
-            F.sum("gzip_bytes").alias("gzip_bytes"),
-            F.sum("json_zstd_bytes").alias("json_zstd_bytes"),
-            F.sum("proto_zstd_bytes").alias("proto_zstd_bytes"),
-            F.sum("arrow_zstd_bytes").alias("arrow_zstd_bytes"),
-            (F.sum("zstd_bytes") / F.sum("json_zstd_bytes"))
-            .alias("zstd_vs_json_ratio"),
-            (F.sum("zstd_bytes") / F.sum("proto_zstd_bytes"))
-            .alias("zstd_vs_proto_ratio"),
-        )
-        .orderBy("lang", "host_bucket")
+        encoded_or_routed.groupBy(*ROUTE_KEYS)
+        .agg(sums[0], F.count("*").alias("blobs"), *sums[1:],
+             *[(summed("zstd_bytes") / summed(arm)).alias(out)
+               for out, arm in ROUTE_RATIOS])
+        .orderBy(*ROUTE_KEYS)
     )
+
+
+def route_totals(lineage: pa.Table) -> pa.Table:
+    """``aggregate_stage`` on the driver: lineage rows → one row per
+    route in ``AGGREGATE_SCHEMA``, sorted like it (nulls first)."""
+    import pyarrow.compute as pc
+
+    cols = {k: lineage[k] for k in ROUTE_KEYS}
+    for out, src in ROUTE_SUMS:
+        c = lineage[src]
+        cols[out] = pc.if_else(pc.greater_equal(c, 0), c, None)
+    g = pa.table(cols).group_by(ROUTE_KEYS).aggregate(
+        [(out, "sum") for out, _ in ROUTE_SUMS] + [([], "count_all")])
+    out = {k: g[k] for k in ROUTE_KEYS}
+    out["pages"] = g["pages_sum"]
+    out["blobs"] = g["count_all"]
+    for name, _ in ROUTE_SUMS[1:]:
+        out[name] = g[f"{name}_sum"]
+    for name, arm in ROUTE_RATIOS:
+        out[name] = pc.divide(pc.cast(g["zstd_bytes_sum"], pa.float64()),
+                              pc.cast(g[f"{arm}_sum"], pa.float64()))
+    return pa.table(out).sort_by([(k, "ascending") for k in ROUTE_KEYS],
+                                 null_placement="at_start")
 
 
 #: every span field the reference's receiver rebuilds
@@ -763,21 +814,47 @@ def run_pipeline(
     is not detected. ``resume=False`` replaces every route the input
     covers, never appending a copy. ``pin_bucket_layout`` refuses a
     different ``n_buckets``.
+
+    The totals are ``aggregate_stage`` of the sink as the run leaves it,
+    computed without reading it back: the route write observes each
+    blob's lineage row, and the driver sums those per route
+    (``route_totals``), together with the rows of prior routes this run
+    did not rewrite. Those come from the one read of the prior sink's
+    lineage that also gives resume its completed routes; on a fresh sink
+    no Spark job runs after the write. The result is a snapshot of
+    values (a local relation), not a scan of the sink. Driver memory
+    grows with blobs, not pages: about 150 B per lineage row, 273 rows
+    at 1M pages.
     """
     pin_bucket_layout(spark, out_dir, n_buckets)
     parsed = parse_stage(pages)
     enriched = enrich_stage(parsed, spark, n_buckets=n_buckets)
-    if resume:
-        done = completed_sinks(spark, out_dir)
-        if done is not None:
-            # null-safe: unmatched-lang rows route with lang = NULL; a plain
-            # equality anti-join would never match them against completed
-            # routes and re-encode them on every resume.
-            cond = (
-                enriched["lang"].eqNullSafe(done["lang"])
-                & enriched["host_bucket"].eqNullSafe(done["host_bucket"])
-            )
-            enriched = enriched.join(F.broadcast(done), cond, "left_anti")
-    encoded = encode_pages(enriched, arms=arms)
-    route_stage(encoded, out_dir)
-    return aggregate_stage(read_routed(spark, out_dir))
+    prior = prior_lineage(spark, out_dir)
+    if resume and prior is not None and prior.num_rows:
+        done = spark.createDataFrame(
+            prior.group_by(ROUTE_KEYS).aggregate([]),
+            StructType([LINEAGE_SCHEMA[k] for k in ROUTE_KEYS]))
+        # null-safe: unmatched-lang rows route with lang = NULL; a plain
+        # equality anti-join would never match them against completed
+        # routes and re-encode them on every resume.
+        cond = (
+            enriched["lang"].eqNullSafe(done["lang"])
+            & enriched["host_bucket"].eqNullSafe(done["host_bucket"])
+        )
+        enriched = enriched.join(F.broadcast(done), cond, "left_anti")
+    seen = Observation()
+    route_stage(encode_pages(enriched, arms=arms).observe(
+        seen, F.collect_list(F.struct(*LINEAGE_SCHEMA.fieldNames()))
+        .alias("lineage")), out_dir)
+    rows = pa.Table.from_pylist(
+        [r.asDict() for r in seen.get["lineage"]],
+        schema=LINEAGE_ARROW_SCHEMA)
+    if prior is not None:
+        def routes(t):
+            return zip(t["lang"].to_pylist(), t["host_bucket"].to_pylist())
+
+        rewritten = set(routes(rows))
+        kept = pa.array([r not in rewritten for r in routes(prior)],
+                        pa.bool_())
+        rows = pa.concat_tables([rows, prior.filter(kept)])
+    return spark.createDataFrame(route_totals(rows), AGGREGATE_SCHEMA)

@@ -235,14 +235,26 @@ def test_roundtrip_gate_on_the_fixture_session(spark):
     assert {"wall", "stall", "probe"} <= set(out["runs"][0])
 
 
-def _fake_campaign():
+def test_exit_removes_materialized_inputs(tmp_path):
+    """Every input dir ``materialize_pages`` registered is gone once the
+    process that wrote it exits."""
+    pages = tmp_path / "bench_pages_adv_10_x"
+    pages.mkdir()
+    (pages / "part-00000.parquet").write_bytes(b"pages")
+    code = f"import bench; bench._PAGES_CACHE[(10, False)] = {str(pages)!r}"
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)
+    assert not pages.exists()
+
+
+def _fake_campaign(cores=32):
+    """A ``--scaling`` result whose saturated levels ran on ``cores``."""
     lvl = {"cores": 2, "slots": 1, "pages": 100, "sec": 1.0,
            "pages_per_sec": 100.0, "runs": [100.0]}
     results = {"1_executor": dict(lvl),
                "4_executors": dict(lvl, cores=8, slots=4,
                                    pages_per_sec=380.0),
-               "local32_saturated": dict(lvl, cores=32, slots=32),
-               "local32_pinned": dict(lvl, cores=32, slots=32)}
+               "local32_saturated": dict(lvl, cores=cores, slots=cores),
+               "local32_pinned": dict(lvl, cores=cores, slots=cores)}
     ratios = {k: 1000 for k in (
         "blobs", "raw_bytes", "zstd_bytes", "gzip_bytes",
         "json_zstd_bytes", "proto_zstd_bytes", "arrow_zstd_bytes")}
@@ -264,6 +276,18 @@ class TestStandingSections:
         body = (tmp_path / "BENCH" / "BASELINE.md").read_text()
         for section in bench.STANDING_SECTIONS:
             assert section in body
+
+    def test_saturated_row_reports_the_measured_cores(self, tmp_path,
+                                                      monkeypatch):
+        notes = (REPO / "BENCH" / "NOTES.md").read_text()
+        monkeypatch.chdir(tmp_path)
+        results, ratios = _fake_campaign(cores=4)
+        bench.write_baseline_md(results, 0.95, 1.0, 100, ratios, ratios,
+                                notes=notes)
+        body = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+        assert "| saturated host | 4 | 4 |" in body
+        assert "local[4] (plain) is the saturated-host headline" in body
+        assert "| saturated host | 32 |" not in body
 
     def test_rewrite_losing_floor_table_raises(self, tmp_path, monkeypatch):
         """The check runs before the write: a refused rewrite leaves the

@@ -411,6 +411,142 @@ def test_pipeline_resume_probe_restores_only_victim(spark, sf_dir):
     assert row["other_routes_changed"] == 0
 
 
+class TestDriverTotals:
+    """``run_pipeline`` sums the lineage its route write observed instead
+    of reading the sink back; the totals must equal that read-back."""
+
+    @pytest.fixture(scope="class")
+    def pages(self, spark):
+        # null-lang routes beside real and unmatched ones
+        return synthetic_pages(spark, 400, partitions=2).withColumn(
+            "lang", F.when(F.col("doc_id") % 5 == 0,
+                           F.lit(None).cast("string"))
+            .otherwise(F.col("lang"))).cache()
+
+    @staticmethod
+    def assert_read_back(spark, agg, out):
+        want = aggregate_stage(read_routed(spark, out))
+        assert agg.schema == want.schema
+        assert agg.collect() == want.collect()
+
+    @pytest.mark.parametrize("arms", [False, True])
+    def test_fresh_run_equals_read_back(self, spark, pages, tmp_path, arms):
+        out = str(tmp_path / "out")
+        agg = run_pipeline(spark, pages, out, arms=arms)
+        self.assert_read_back(spark, agg, out)
+        rows = agg.collect()
+        assert sum(r["pages"] for r in rows) == 400
+        assert any(r["lang"] is None for r in rows)
+        arm_sums = {r[c] is None for r in rows
+                    for c in ("gzip_bytes", "json_zstd_bytes",
+                              "proto_zstd_bytes", "arrow_zstd_bytes",
+                              "zstd_vs_json_ratio", "zstd_vs_proto_ratio")}
+        # arms off: no arm ran, so no sum — never −blobs
+        assert arm_sums == {not arms}
+
+    def test_resume_after_a_route_is_deleted(self, spark, pages, tmp_path):
+        import shutil
+        from pathlib import Path
+
+        out = str(tmp_path / "out")
+        first = run_pipeline(spark, pages, out, arms=False).collect()
+        victim = sorted((Path(out) / "routed").glob("lang=en/host_bucket=*"))
+        shutil.rmtree(victim[0])
+        agg = run_pipeline(spark, pages, out, arms=False)
+        self.assert_read_back(spark, agg, out)
+        assert agg.collect() == first
+
+    def test_rerun_without_resume_keeps_uncovered_routes(self, spark, pages,
+                                                         tmp_path):
+        out = str(tmp_path / "out")
+        first = run_pipeline(spark, pages, out, arms=True).collect()
+        agg = run_pipeline(spark, pages.where(F.col("lang") == "en"), out,
+                           arms=False, resume=False)
+        self.assert_read_back(spark, agg, out)
+        rows = agg.collect()
+        # en routes were rewritten without arms; the rest are the first
+        # run's rows, arms and all
+        assert [r for r in rows if r["lang"] != "en"] == [
+            r for r in first if r["lang"] != "en"]
+        assert {r["gzip_bytes"] for r in rows if r["lang"] == "en"} == {None}
+        assert sum(r["pages"] for r in rows) == 400
+
+    def test_totals_are_a_snapshot(self, spark, pages, tmp_path):
+        import shutil
+
+        out = str(tmp_path / "out")
+        agg = run_pipeline(spark, pages, out, arms=False)
+        want = aggregate_stage(read_routed(spark, out)).collect()
+        shutil.rmtree(f"{out}/routed")
+        assert agg.collect() == want
+
+    def test_no_job_after_the_route_write(self, spark, pages, tmp_path,
+                                          monkeypatch):
+        from compress_otel_collector_spark.plans import pipeline
+
+        sc = spark.sparkContext
+        write = pipeline.route_stage
+
+        def route_then_tag(*args, **kwargs):
+            write(*args, **kwargs)
+            sc.setJobGroup("after-route-write", "jobs after the write")
+
+        monkeypatch.setattr(pipeline, "route_stage", route_then_tag)
+        try:
+            agg = run_pipeline(spark, pages, str(tmp_path / "out"),
+                               arms=False)
+            assert len(agg.collect()) > 0
+            assert sc.statusTracker().getJobIdsForGroup(
+                "after-route-write") == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def test_empty_input(self, spark, tmp_path):
+        from compress_otel_collector_spark.plans.pipeline import (
+            ENCODED_SCHEMA,
+        )
+
+        agg = run_pipeline(
+            spark, synthetic_pages(spark, 40).where("doc_id < 0"),
+            str(tmp_path / "out"), arms=False)
+        assert agg.schema == aggregate_stage(
+            spark.createDataFrame([], ENCODED_SCHEMA)).schema
+        assert agg.collect() == []
+
+
+def test_route_totals_sum_only_arms_that_ran():
+    """Arms-off blobs carry −1 per arm: those sum and divide to NULL, and
+    a route where some blobs ran an arm sums only those."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from compress_otel_collector_spark.plans.pipeline import (
+        LINEAGE_SCHEMA,
+        route_totals,
+    )
+
+    def blob(lang, bucket, n, zstd, arm):
+        return {"lang": lang, "host_bucket": bucket, "part_id": 0,
+                "n_spans": n, "min_doc_id": 0, "max_doc_id": n,
+                "raw_bytes": 2 * zstd, "zstd_bytes": zstd,
+                "gzip_bytes": arm, "json_zstd_bytes": arm,
+                "proto_zstd_bytes": arm, "arrow_zstd_bytes": arm,
+                "blob_sha256": "0" * 64}
+
+    rows = [blob("en", 1, 5, 30, -1), blob(None, 0, 2, 10, 40),
+            blob("en", 1, 3, 20, -1), blob(None, 0, 1, 10, -1),
+            blob("de", 0, 4, 8, 16)]
+    got = route_totals(pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(LINEAGE_SCHEMA))).to_pylist()
+    assert [(r["lang"], r["host_bucket"], r["pages"], r["blobs"],
+             r["zstd_bytes"], r["proto_zstd_bytes"], r["zstd_vs_proto_ratio"])
+            for r in got] == [
+        (None, 0, 3, 2, 20, 40, 0.5),
+        ("de", 0, 4, 1, 8, 16, 0.5),
+        ("en", 1, 8, 2, 50, None, None),
+    ]
+
+
 def test_load_table_rereads_schema_after_rewrite(spark, tmp_path):
     """A table rewritten in the same process with a new column is read with
     the new schema: the schema cache must not null-fill the column."""
