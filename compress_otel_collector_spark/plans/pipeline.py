@@ -40,6 +40,9 @@ tasks once P > n_buckets (``encode_pages``).
 from __future__ import annotations
 
 import hashlib
+import os
+import sys
+import zipimport
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -333,6 +336,38 @@ def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
     return gz, pz, jz, az
 
 
+def _share_zip_directory_reads() -> None:
+    """Idempotent, process-wide: pyspark's worker runs
+    ``importlib.invalidate_caches()`` before every task, and before Python
+    3.13 each of the 14–16 zipimporters over ``pyspark.zip`` and the py4j
+    zip then re-parses its archive (150–270 ms of worker CPU per task).
+    Patched, an archive whose (mtime_ns, size, inode) equals the last
+    read's keeps its cached directory; a changed one (a new ``--py-files``
+    zip) is re-read, the stdlib ``FileFinder``'s mtime convention. Delete
+    once executors run 3.13, whose ``invalidate_caches`` only drops the
+    cache entry."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(reread, "shares_reads"):
+        return
+    last_read: dict = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+        cache = zipimport._zip_directory_cache
+        if last_read.get(self.archive) == sig and self.archive in cache:
+            self._files = cache[self.archive]
+        else:
+            reread(self)
+            last_read[self.archive] = sig
+
+    invalidate_caches.shares_reads = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def _encode_batches(arms: bool, events_every: int = 10):
     """Returns the mapInPandas function: Arrow batch → one blob per group.
 
@@ -343,6 +378,7 @@ def _encode_batches(arms: bool, events_every: int = 10):
     """
 
     def fn(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _share_zip_directory_reads()
         import pyarrow as pa
         from pyspark import TaskContext
 
@@ -615,6 +651,7 @@ def roundtrip_check(encoded: DataFrame) -> DataFrame:
     model = trace_model()
 
     def fn(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _share_zip_directory_reads()
         import numpy as np
         import pyarrow as pa
 

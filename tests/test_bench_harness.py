@@ -289,6 +289,23 @@ class TestStandingSections:
         assert "local[4] (plain) is the saturated-host headline" in body
         assert "| saturated host | 32 |" not in body
 
+    def test_scaling_prose_says_when_the_host_is_oversubscribed(
+            self, tmp_path, monkeypatch):
+        notes = (REPO / "BENCH" / "NOTES.md").read_text()
+        monkeypatch.chdir(tmp_path)
+        bodies = {}
+        for cores in (4, 32):
+            results, ratios = _fake_campaign(cores=cores)
+            bench.write_baseline_md(results, 0.95, 1.0, 100, ratios, ratios,
+                                    notes=notes)
+            body = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+            bodies[cores] = " ".join(body.split())
+        assert "32-core host unsaturated" not in bodies[4]
+        assert "asks for 8 cores (slots × `spark.task.cpus`) but the host " \
+            "measured 4, so that level oversubscribes it" in bodies[4]
+        assert "Both levels fit the 32-core host" in bodies[32]
+        assert "oversubscribes" not in bodies[32]
+
     def test_rewrite_losing_floor_table_raises(self, tmp_path, monkeypatch):
         """The check runs before the write: a refused rewrite leaves the
         existing BASELINE.md byte-identical."""

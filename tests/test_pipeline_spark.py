@@ -368,9 +368,9 @@ def test_resume_raises_on_unreadable_sink(spark, tmp_path):
     route, and the sink's blobs must stay as they were."""
     from pathlib import Path
 
-    # one lang, and a file name that sorts before Spark's part-files: the
-    # garbage is the first file in path order, the one schema inference
-    # reads, so the sink read itself fails (not only the later scan)
+    # prior_lineage scans the sink with its schema given (no schema
+    # inference) and reads every file's footer, this one's too, so the
+    # rerun raises before anything is written
     pages = synthetic_pages(spark, 200, partitions=2).withColumn(
         "lang", F.lit("en"))
     out = str(tmp_path / "out_garbage")
