@@ -31,7 +31,6 @@ from .textstats import (  # noqa: F401
     quality_score,
     token_stats,
 )
-from .lm import lm_perplexity  # noqa: F401
 from .multimodal import (  # noqa: F401
     extract_features,
     synthesize_media,

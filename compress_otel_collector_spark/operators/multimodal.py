@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
@@ -27,16 +26,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),        # image | audio | video
-    StructField("mime", StringType()),
-    StructField("payload", BinaryType()),      # opaque encoded bytes
-    StructField("width", IntegerType()),       # typed metadata
-    StructField("height", IntegerType()),
-    StructField("duration_ms", IntegerType()),
-])
 
 FEATURE_SCHEMA = StructType([
     StructField("media_id", LongType()),

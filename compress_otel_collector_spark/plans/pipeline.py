@@ -153,13 +153,13 @@ def _hex_column(vals, width: int):
 
 def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     """records-JSON marshal of the span frame (the JSON comparison arm,
-    trace.go:95-105). orjson when available (~1.4× pandas ``to_json`` on
-    this shape — arm byte counts shift <1% vs the pandas form, both are
-    fidelity-equivalent records-JSON); the pandas path is the fallback
-    and the semantic reference: hex ids (``""`` for an empty parent),
-    NaN → null, and the ``event_*``/``link_*`` columns as
-    OTLP-style ``events``/``links`` lists (hex link ids, null without)."""
+    trace.go:95-105), one orjson ``dumps`` of per-row dicts: hex ids
+    (``""`` for an empty parent), NaN → null, and the
+    ``event_*``/``link_*`` columns as OTLP-style ``events``/``links``
+    lists (hex link ids, null without). orjson is a hard dependency, so
+    ``json_zstd_bytes`` is the same wherever the arm runs."""
     import numpy as np
+    import orjson
 
     n = len(spans)
     col = {c: spans[c].to_numpy() for c in spans.columns}
@@ -186,13 +186,6 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     # bytes, so the joined buffer has no fixed width to split on
     hex_parent = [p.hex() if p else "" for p in col["parent_span_id"]]
     flat = [c for c in spans.columns if not c.startswith(("event_", "link_"))]
-    try:
-        import orjson
-    except ImportError:
-        json_view = spans[flat].assign(
-            trace_id=hex_tid, span_id=hex_sid, parent_span_id=hex_parent,
-            **nested)
-        return json_view.to_json(orient="records").encode()
     cols: dict = {}
     for c in flat:
         if c == "trace_id":

@@ -12,7 +12,7 @@ Submission shape (north_rule)::
 
 On a real cluster the input is an Iceberg table (``--format iceberg``
 with the catalog configured on the session); locally any parquet directory
-with the pages schema works. ``--streaming`` drains the input with
+with the pages schema works. ``--streaming`` drains a parquet input with
 ``availableNow`` + checkpoint instead of one batch run — same stages,
 resumable either way (batch resumes from the sink's own lineage, streaming
 from the checkpoint). Each route directory is committed whole, so a route
@@ -46,7 +46,8 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64,
                     help="host route buckets")
     ap.add_argument("--arms", action="store_true",
-                    help="also measure gzip/JSON comparison arms")
+                    help="also measure the gzip, OTLP proto, JSON and "
+                         "Arrow comparison arms")
     ap.add_argument("--no-resume", action="store_true",
                     help="re-encode every page and replace each route the "
                          "input covers (no copy is appended)")
@@ -64,6 +65,11 @@ def main() -> None:
     if args.dedup_horizon and not args.streaming:
         ap.error("--dedup-horizon requires --streaming (batch dedup is "
                  "operators.dedup.dedup_keep_first, a separate pass)")
+    if args.streaming and not args.checkpoint:
+        ap.error("--streaming requires --checkpoint")
+    if args.streaming and args.format == "iceberg":
+        ap.error("--streaming reads --input as a parquet directory; "
+                 "--format iceberg is batch only")
 
     from pyspark.sql import SparkSession
 
@@ -79,14 +85,7 @@ def main() -> None:
                                  str(args.shuffle_partitions))
     spark = builder.getOrCreate()
 
-    if args.format == "iceberg":
-        pages = spark.read.format("iceberg").load(args.input)
-    else:
-        pages = spark.read.parquet(args.input)
-
     if args.streaming:
-        if not args.checkpoint:
-            ap.error("--streaming requires --checkpoint")
         from compress_otel_collector_spark.streaming.stream import (
             run_streaming_pipeline,
         )
@@ -104,6 +103,10 @@ def main() -> None:
     else:
         from compress_otel_collector_spark.plans.pipeline import run_pipeline
 
+        if args.format == "iceberg":
+            pages = spark.read.format("iceberg").load(args.input)
+        else:
+            pages = spark.read.parquet(args.input)
         agg = run_pipeline(
             spark, pages, args.output, n_buckets=args.buckets,
             arms=args.arms, resume=not args.no_resume)

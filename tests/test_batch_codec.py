@@ -336,22 +336,18 @@ def test_production_group_frame_matches_scalar(lang):
         normalize(doc, m)
 
 
-@pytest.mark.parametrize("marshal", ["orjson", "pandas"])
-def test_json_arm_writes_parent_ids(marshal, monkeypatch):
+def test_json_arm_writes_parent_ids():
     """The JSON arm marshals each span's own parent: hex for an 8-byte
-    parent, ``""`` for a root's empty one, on both marshal paths. A frame
-    of roots and children therefore gives other bytes than the same
-    frame with every parent empty."""
+    parent, ``""`` for a root's empty one. A frame of roots and children
+    therefore gives other bytes than the same frame with every parent
+    empty."""
     import json
-    import sys
 
     from compress_otel_collector_spark.plans.pipeline import (
         _group_spans_frame,
         _json_arm_bytes,
     )
 
-    if marshal == "pandas":
-        monkeypatch.setitem(sys.modules, "orjson", None)  # import fails
     doc_ids = np.arange(100, 130, dtype=np.int64)
     roots = production_pages(doc_ids, "en")
     parents = [t[8:] if d % 2 else b""
