@@ -769,7 +769,7 @@ def _q_pipeline_sinks(spark, sf_dir):
 def _q_pipeline_arms(spark, sf_dir):
     """Compression-arm pipeline, oracle-checked (r4, sketch_stats
     pattern): the full arms path (custom codec + gzip + JSON + OTLP-proto
-    + Arrow-IPC marshal per blob) runs end-to-end; the ledger row carries
+    marshal per blob) runs end-to-end; the ledger row carries
     per-route page counts — recomputed exactly by the DuckDB twin from
     documents, so the arms path is verified to neither drop nor duplicate
     pages — plus per-route byte invariants as booleans (TRUE-literal
@@ -783,8 +783,8 @@ def _q_pipeline_arms(spark, sf_dir):
         F.col("pages").cast("long").alias("pages"),
         (F.col("zstd_bytes") < F.col("raw_bytes")).alias("zstd_lt_raw"),
         (F.col("gzip_bytes") < F.col("raw_bytes")).alias("gzip_lt_raw"),
-        ((F.col("json_zstd_bytes") > 0) & (F.col("proto_zstd_bytes") > 0)
-         & (F.col("arrow_zstd_bytes") > 0)).alias("arms_present"),
+        ((F.col("json_zstd_bytes") > 0)
+         & (F.col("proto_zstd_bytes") > 0)).alias("arms_present"),
         ((F.col("zstd_vs_json_ratio") > 0.05)
          & (F.col("zstd_vs_json_ratio") < 2.5)).alias("ratio_in_band"),
     ).orderBy("lang", "host_bucket")

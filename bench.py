@@ -323,7 +323,6 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
             F.sum("gzip_bytes").alias("gzip"),
             F.sum("json_zstd_bytes").alias("json_zstd"),
             F.sum("proto_zstd_bytes").alias("proto_zstd"),
-            F.sum("arrow_zstd_bytes").alias("arrow_zstd"),
         ).collect()[0]
 
     row, rec = attributed(run)
@@ -334,7 +333,6 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
         "gzip_bytes": int(row["gzip"] or -1),
         "json_zstd_bytes": int(row["json_zstd"] or -1),
         "proto_zstd_bytes": int(row["proto_zstd"] or -1),
-        "arrow_zstd_bytes": int(row["arrow_zstd"] or -1),
         "zstd_vs_json_zstd_ratio": (
             round(row["zstd"] / row["json_zstd"], 4)
             if arms and row["json_zstd"] else None
@@ -342,10 +340,6 @@ def run_pipeline_synth(spark, n_pages: int, arms: bool = True,
         "zstd_vs_proto_zstd_ratio": (
             round(row["zstd"] / row["proto_zstd"], 4)
             if arms and row["proto_zstd"] else None
-        ),
-        "zstd_vs_arrow_zstd_ratio": (
-            round(row["zstd"] / row["arrow_zstd"], 4)
-            if arms and row["arrow_zstd"] else None
         ),
         "zstd_per_page": round(row["zstd"] / row["pages"], 2),
     }
@@ -732,7 +726,6 @@ def _arms_table(ratios, pages):
         ("custom + gzip", "gzip_bytes"),
         ("JSON + zstd", "json_zstd_bytes"),
         ("OTLP protobuf + zstd", "proto_zstd_bytes"),
-        ("Arrow IPC + zstd", "arrow_zstd_bytes"),
     ]
     lines = ["| arm | bytes | per page |", "|---|---|---|"]
     for label, key in rows:
@@ -835,8 +828,8 @@ layout, and session discipline — which is the whole spread.
 The pinned layout is per-page cheaper than the plain one (fewer reduce
 partitions ⇒ fewer, larger blobs ⇒ better header/pool amortization);
 both are published rather than cherry-picking either. The comparison
-arms marshal every span three
-extra ways — JSON, OTLP protobuf, Arrow IPC — and are timed separately
+arms marshal every span two
+extra ways — JSON and OTLP protobuf — and are timed separately
 as `pipeline_arms` in the bench JSON; they are measurement diagnostics,
 not pipeline stages.
 
@@ -878,16 +871,14 @@ reference codec exists for (encode.go:180-196).
 {_arms_table(ratios, pages)}
 
 custom+zstd / proto+zstd = **{ratios['zstd_vs_proto_zstd_ratio']}**;
-custom+zstd / JSON+zstd = **{ratios['zstd_vs_json_zstd_ratio']}**;
-custom+zstd / ArrowIPC+zstd = **{ratios['zstd_vs_arrow_zstd_ratio']}**
+custom+zstd / JSON+zstd = **{ratios['zstd_vs_json_zstd_ratio']}**
 
 ### Realistic shape (telemetry repeats)
 
 {_arms_table(ratios_real, pages)}
 
 custom+zstd / proto+zstd = **{ratios_real['zstd_vs_proto_zstd_ratio']}**;
-custom+zstd / JSON+zstd = **{ratios_real['zstd_vs_json_zstd_ratio']}**;
-custom+zstd / ArrowIPC+zstd = **{ratios_real['zstd_vs_arrow_zstd_ratio']}**
+custom+zstd / JSON+zstd = **{ratios_real['zstd_vs_json_zstd_ratio']}**
 
 ## Scaling efficiency (north_rule: ≥0.8 between N and 4N)
 
@@ -966,9 +957,12 @@ def main():
     queries, query_runs, sentinel_first = run_headline_queries(spark, SF_DIR)
     import statistics
 
-    run_pipeline_synth(spark, N_SYNTH, arms=False)  # warm (JIT + workers)
+    # warm (JIT + workers) with four untimed runs: at 20k pages the wall
+    # was still falling after two
+    for _ in range(4):
+        run_pipeline_synth(spark, N_SYNTH, arms=False)
     # throughput headline = the PRODUCTION pipeline (no comparison arms —
-    # they are bench-only diagnostics that marshal every span 3 extra ways).
+    # they are bench-only diagnostics that marshal every span 2 extra ways).
     # Median-of-3, interleaved synth/arms (same discipline as the headline
     # queries): the host throttles in multi-second bursts (documented in
     # BENCH/BASELINE.md); interleaving lands a burst on different runs and

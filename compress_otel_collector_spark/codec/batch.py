@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import operator as _operator
 from dataclasses import dataclass, field
-from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -46,7 +45,7 @@ from .definition import (
     topological_pool_order,
     trace_model,
 )
-from .encoder import _encode_payload, _State
+from .encoder import _encode_payload, _State, frame, len_prefixed
 from .values import CodecError, freeze, is_null_value
 from .varint import encode_sleb128, encode_sleb128_matrix
 
@@ -85,10 +84,7 @@ class _Pools:
     state: _State = field(default_factory=_State)
     # pool_id -> list of raw (unfrozen) unique values in index order
     uniques: dict[str, list] = field(default_factory=dict)
-    # pool_id -> (entry_count, all entries pre-joined) for pools whose
-    # entries were assembled vectorized — the meta block consumes the blob
-    # directly, skipping per-entry bytes objects entirely. Wire-identical
-    # to the pool_entries list form (entries are plain concatenation).
+    # pool_id -> (entry_count, all entries joined): what encoder.frame takes
     entry_blobs: dict[str, tuple[int, bytes]] = field(default_factory=dict)
 
     def build(self, pool_id: str, values, scalar: bool = False) -> np.ndarray:
@@ -134,27 +130,19 @@ class _Pools:
     def encode_entries(self, pool_id: str, definition: Definition) -> None:
         """Encode this pool's unique payloads (children pools must already
         be fully built — call in topological order)."""
-        entries = self.state.pool_entries.setdefault(pool_id, [])
         uniques = self.uniques.get(pool_id, [])
-        if definition.type in (BYTES_T, STRING_T) and uniques and not entries:
-            # vectorized fast path: entry = varint(len) + raw payload,
-            # all entries assembled into ONE blob (no per-entry bytes)
+        if definition.type in (BYTES_T, STRING_T):
             raws = [
                 v.encode("utf-8") if definition.type == STRING_T else bytes(v)
                 for v in uniques
             ]
-            blob = _len_prefixed_blob(raws)
-            if blob is not None:
-                self.entry_blobs[pool_id] = (len(raws), blob)
-                return
-            # oversized payloads (very long strings): per-entry pieces
-            entries.extend(encode_sleb128(len(r)) + r for r in raws)
+            self.entry_blobs[pool_id] = (len(raws), len_prefixed(raws))
             return
         sizes_before = {pid: len(p) for pid, p in self.state.pools.items()}
+        payload = bytearray()
         for value in uniques:
-            payload = bytearray()
             _encode_payload(value, definition, pool_id, self.state, payload)
-            entries.append(bytes(payload))
+        self.entry_blobs[pool_id] = (len(uniques), bytes(payload))
         for pid, p in self.state.pools.items():
             if pid != pool_id and len(p) != sizes_before.get(pid, 0):
                 raise CodecError(
@@ -243,41 +231,6 @@ def _const_field(piece: bytes, n: int) -> tuple[np.ndarray, np.ndarray]:
     mat = np.broadcast_to(
         np.frombuffer(piece, dtype=np.uint8), (n, len(piece)))
     return mat, np.full(n, len(piece), dtype=np.int64)
-
-
-#: max padded payload width for vectorized length-prefixed pool blobs;
-#: beyond it the padded matrix would waste memory → per-entry fallback
-_MAX_PAYLOAD_PAD = 4096
-
-#: padded-matrix waste guards: fall back to per-entry pieces when the
-#: padded size blows past BOTH a relative bound (8× the actual payload —
-#: one near-cap entry among many short ones) and an absolute budget
-#: (the transient working set is ~3-4× m*w across pmat + sel + the
-#: _fields_blob hstack, so 64 MiB of padding caps it at ~a quarter GiB)
-_PAD_WASTE_FACTOR = 8
-_PAD_BYTE_BUDGET = 64 << 20
-
-
-def _len_prefixed_blob(raws: list[bytes]) -> Optional[bytes]:
-    """All ``varint(len) + payload`` entries joined, assembled via padded
-    matrices (zero per-entry bytes objects). None when a payload exceeds
-    ``_MAX_PAYLOAD_PAD``, or when padding would waste > ``_PAD_WASTE_FACTOR``×
-    the payload AND exceed ``_PAD_BYTE_BUDGET`` (a ~1M-unique pool with one
-    near-cap entry would otherwise allocate multi-GB transients) — caller
-    falls back to per-entry pieces."""
-    m = len(raws)
-    plens = np.fromiter(map(len, raws), np.int64, m)
-    w = int(plens.max()) if m else 0
-    if w > _MAX_PAYLOAD_PAD:
-        return None
-    padded = m * w
-    if padded > _PAD_BYTE_BUDGET and padded > _PAD_WASTE_FACTOR * int(plens.sum()):
-        return None
-    lmat, llen = encode_sleb128_matrix(plens)
-    pmat = np.zeros((m, max(w, 1)), dtype=np.uint8)
-    sel = np.arange(max(w, 1))[None, :] < plens[:, None]
-    pmat[sel] = np.frombuffer(b"".join(raws), dtype=np.uint8)
-    return _fields_blob([(lmat, llen), (pmat, plens)])
 
 
 def _null_mask_text(col) -> np.ndarray:
@@ -466,7 +419,7 @@ def encode_span_dataframe(
     definition = trace_model()
     if len(pdf) == 0:
         # no spans → resourceSpans coerces to null; empty string pool, 0 pools
-        return b"\x00\x00cprval\x00"
+        return frame([], {}, definition, b"\x00")
     try:
         col = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS}
     except KeyError as e:
@@ -627,39 +580,4 @@ def encode_span_dataframe(
     data += encode_sleb128(n)
     data += _fields_blob(fields)
 
-    # ---- meta block + frame (same layout as encoder.encode) -----------
-    st = pools.state
-    meta = bytearray()
-    meta += encode_sleb128(len(st.string_pool))
-    if st.string_pool:
-        # string pool block: varint(len)+utf8 per entry, assembled in one
-        # matrix pass (the per-entry loop was ~1 append pair per unique)
-        sp_raws = [s.encode("utf-8") for s in st.string_pool]
-        sp_blob = _len_prefixed_blob(sp_raws)
-        if sp_blob is not None:
-            meta += sp_blob
-        else:  # an oversized string: plain loop, identical wire
-            for raw in sp_raws:
-                meta += encode_sleb128(len(raw))
-                meta += raw
-    present_pools = [
-        pid for pid in topological_pool_order(definition)
-        # skip never-used (all-null) pools, as the scalar encoder does
-        if st.pool_entries.get(pid) or pid in pools.entry_blobs
-    ]
-    meta += encode_sleb128(len(present_pools))
-    for pool_id in present_pools:
-        raw = pool_id.encode("utf-8")
-        meta += encode_sleb128(len(raw))
-        meta += raw
-        eb = pools.entry_blobs.get(pool_id)
-        if eb is not None:
-            cnt, blob = eb
-            meta += encode_sleb128(cnt)
-            meta += blob
-        else:
-            entries = st.pool_entries[pool_id]
-            meta += encode_sleb128(len(entries))
-            for entry in entries:
-                meta += entry
-    return bytes(meta) + b"cprval" + bytes(data)
+    return frame(pools.state.string_pool, pools.entry_blobs, definition, data)

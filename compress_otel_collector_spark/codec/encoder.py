@@ -12,6 +12,10 @@ Blob layout (encode.go:50-115)::
              )*                                            -- topological order
     frame := meta ++ "cprval" ++ data
 
+:func:`frame` is the one writer of this layout: the scalar :func:`encode`
+and the vectorized ``batch.encode_span_dataframe`` both hand it their
+string pool, their pool entries and their data region.
+
 Pool entries are encoded **without** their own null flag and **without** pool
 indirection at their root (the decoder passes ``use_pool=False`` for them,
 decode.go:59-67), but their children do resolve pools — hence the
@@ -77,25 +81,47 @@ def encode(value, definition: Definition) -> bytes:
     st = _State()
     data = bytearray()
     _inner_encode(value, definition, "", st, data)
+    return frame(
+        st.string_pool,
+        {pid: (len(e), b"".join(e)) for pid, e in st.pool_entries.items()},
+        definition, data)
 
-    meta = bytearray()
-    meta += encode_sleb128(len(st.string_pool))
-    for s in st.string_pool:  # dict preserves first-use insertion order
-        raw = s.encode("utf-8")
-        meta += encode_sleb128(len(raw))
-        meta += raw
-    meta += encode_sleb128(len(st.pools))
-    for pool_id in topological_pool_order(definition):
-        entries = st.pool_entries.get(pool_id)
-        if entries is None:
-            continue
-        raw = pool_id.encode("utf-8")
-        meta += encode_sleb128(len(raw))
-        meta += raw
-        meta += encode_sleb128(len(entries))
-        for entry in entries:
-            meta += entry
-    return bytes(meta) + _MAGIC + bytes(data)
+
+#: ``encode_sleb128(n)`` for every length with a 1- or 2-byte prefix
+_LEN_PREFIX = [encode_sleb128(n) for n in range(8192)]
+
+
+def len_prefixed(raws: list[bytes]) -> bytes:
+    """``varint(len(r)) + r`` for every ``r`` in ``raws``, joined: one
+    ``b"".join`` over table-cached prefixes, no per-entry varint call."""
+    parts = [b""] * (2 * len(raws))
+    parts[1::2] = raws
+    try:
+        parts[::2] = map(_LEN_PREFIX.__getitem__, map(len, raws))
+    except IndexError:  # an entry of 8192 bytes or more
+        parts[::2] = [encode_sleb128(len(r)) for r in raws]
+    return b"".join(parts)
+
+
+def frame(strings, pools: dict[str, tuple[int, bytes]],
+          definition: Definition, data) -> bytes:
+    """The framed blob (layout in the module docstring).
+
+    ``strings`` is the string pool in index order; ``pools`` maps a pool id
+    to ``(entry count, its entries joined)``. Pools with no entries are
+    left out; the rest are written in ``topological_pool_order``.
+    """
+    present = [pid for pid in topological_pool_order(definition)
+               if pools.get(pid, (0,))[0]]
+    parts = [encode_sleb128(len(strings)),
+             len_prefixed([s.encode("utf-8") for s in strings]),
+             encode_sleb128(len(present))]
+    for pid in present:
+        count, entries = pools[pid]
+        parts += (len_prefixed([pid.encode("utf-8")]), encode_sleb128(count),
+                  entries)
+    parts += (_MAGIC, data)
+    return b"".join(parts)
 
 
 def _type_check(value, d: Definition) -> None:

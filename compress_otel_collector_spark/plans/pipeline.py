@@ -85,7 +85,6 @@ ENCODED_SCHEMA = StructType([
     StructField("gzip_bytes", LongType()),
     StructField("json_zstd_bytes", LongType()),
     StructField("proto_zstd_bytes", LongType()),
-    StructField("arrow_zstd_bytes", LongType()),
     StructField("blob_sha256", StringType()),
     StructField("blob", BinaryType()),
 ])
@@ -290,9 +289,7 @@ def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
 def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
                zstd, gzip):
     """Comparison-arm byte counts for one group: (gzip, proto+zstd,
-    json+zstd, arrow+zstd)."""
-    import pyarrow as pa
-
+    json+zstd)."""
     gz = len(gzip.compress(blob, asbytes=True))
     # protobuf arm — the reference's REAL comparison
     # (trace.go:41-67: ptrace ProtoMarshaler + zstd), full
@@ -312,21 +309,7 @@ def _arm_sizes(spans: pd.DataFrame, lang, resource: dict, blob: bytes,
     # links serialize too (full fidelity, like the codec)
     js = _json_arm_bytes(spans)
     jz = len(zstd.compress(js, asbytes=True))
-    # binary columnar arm (stand-in for the proto arm,
-    # trace.go:41-47): Arrow IPC stream + zstd. Direct
-    # pa.array construction — from_pandas pays index and
-    # pandas-metadata handling per group (measured 2.3× on
-    # the table build, ~2× on the whole arm)
-    sink = pa.BufferOutputStream()
-    tbl = pa.table({
-        c: pa.array(spans[c].to_numpy())
-        for c in spans.columns
-        if not c.startswith(("event_", "link_"))
-    })
-    with pa.ipc.new_stream(sink, tbl.schema) as w:
-        w.write_table(tbl)
-    az = len(zstd.compress(sink.getvalue(), asbytes=True))
-    return gz, pz, jz, az
+    return gz, pz, jz
 
 
 def _share_zip_directory_reads() -> None:
@@ -393,10 +376,10 @@ def _encode_batches(arms: bool, events_every: int = 10):
                 blob = encode_span_dataframe(spans, attrs_spec, resource)
                 blob_z = zstd.compress(blob, asbytes=True)
                 if arms:
-                    gz, pz, jz, az = _arm_sizes(
+                    gz, pz, jz = _arm_sizes(
                         spans, lang, resource, blob, zstd, gzip)
                 else:
-                    gz, jz, az, pz = -1, -1, -1, -1
+                    gz, pz, jz = -1, -1, -1
                 out.append({
                     "lang": lang,
                     "host_bucket": int(bucket),
@@ -409,7 +392,6 @@ def _encode_batches(arms: bool, events_every: int = 10):
                     "gzip_bytes": gz,
                     "json_zstd_bytes": jz,
                     "proto_zstd_bytes": pz,
-                    "arrow_zstd_bytes": az,
                     "blob_sha256": hashlib.sha256(blob).hexdigest(),
                     "blob": blob_z,
                 })
@@ -523,7 +505,6 @@ ROUTE_SUMS = (
     ("gzip_bytes", "gzip_bytes"),
     ("json_zstd_bytes", "json_zstd_bytes"),
     ("proto_zstd_bytes", "proto_zstd_bytes"),
-    ("arrow_zstd_bytes", "arrow_zstd_bytes"),
 )
 #: (output column, summed arm): ``zstd_bytes`` over that arm's bytes
 ROUTE_RATIOS = (

@@ -46,8 +46,8 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64,
                     help="host route buckets")
     ap.add_argument("--arms", action="store_true",
-                    help="also measure the gzip, OTLP proto, JSON and "
-                         "Arrow comparison arms")
+                    help="also measure the gzip, OTLP proto and JSON "
+                         "comparison arms")
     ap.add_argument("--no-resume", action="store_true",
                     help="re-encode every page and replace each route the "
                          "input covers (no copy is appended)")

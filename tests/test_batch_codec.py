@@ -401,8 +401,8 @@ def _pinned_pages():
 
 def test_encode_batches_bytes_pinned(monkeypatch):
     """The wire bytes of what production encodes, pinned: the codec blob,
-    its zstd and gzip sizes and the proto arm's bytes. The JSON and Arrow
-    arms marshal the frame's own columns, so they are not pinned."""
+    its zstd and gzip sizes and the proto arm's bytes. The JSON arm
+    marshals the frame's own columns, so it is not pinned."""
     from compress_otel_collector_spark.plans import pipeline
 
     protos = []
@@ -497,15 +497,12 @@ def test_factorize_fast_and_nul_paths_agree():
 
 
 def test_oversized_string_pool_entry_roundtrips():
-    """A pooled string larger than the vectorized padded-matrix cap
-    (_MAX_PAYLOAD_PAD) must take the per-entry fallback and still decode
-    byte-exactly (r6: pool entries are pre-joined into one blob when the
-    padded assembly applies)."""
-    from compress_otel_collector_spark.codec.batch import _MAX_PAYLOAD_PAD
-
+    """A pooled string too long for the cached 1- and 2-byte length
+    prefixes (9,000 bytes needs a 3-byte prefix) still decodes
+    byte-exactly."""
     m = trace_model()
     pdf = make_pdf(6, with_events=False, with_links=False)
-    long_name = "n" * (_MAX_PAYLOAD_PAD + 7)
+    long_name = "n" * 9000
     pdf.loc[2, "name"] = long_name
     blob = encode_span_dataframe(pdf, SPEC, RESOURCE)
     got = decode(blob, m)
@@ -516,11 +513,12 @@ def test_oversized_string_pool_entry_roundtrips():
 
 
 def test_len_prefixed_blob_matches_naive_join():
-    """The vectorized length-prefixed pool assembly must be byte-equal to
-    the naive per-entry form for arbitrary payloads (r6 entry_blobs)."""
+    """``encoder.len_prefixed`` must be byte-equal to the naive per-entry
+    join for arbitrary payloads, across 1-, 2- and 3-byte length prefixes
+    (lengths from 8192 on are past the cached prefix table)."""
     import random
 
-    from compress_otel_collector_spark.codec.batch import _len_prefixed_blob
+    from compress_otel_collector_spark.codec.encoder import len_prefixed
     from compress_otel_collector_spark.codec.varint import encode_sleb128
 
     rng = random.Random(11)
@@ -528,11 +526,14 @@ def test_len_prefixed_blob_matches_naive_join():
         raws = [bytes(rng.randrange(256) for _ in range(rng.choice(
             [0, 1, 2, 7, 63, 64, 127, 128, 300]))) for _ in range(
             rng.randrange(1, 40))]
-        got = _len_prefixed_blob(raws)
+        got = len_prefixed(raws)
         want = b"".join(encode_sleb128(len(r)) + r for r in raws)
         assert got == want, f"trial {trial}"
-    # over-cap payload falls back to None
-    assert _len_prefixed_blob([b"x" * 5000]) is None
+    for size in (8191, 8192, 16384, 70000):
+        raws = [b"a", b"x" * size, b""]
+        want = b"".join(encode_sleb128(len(r)) + r for r in raws)
+        assert len_prefixed(raws) == want, size
+    assert len_prefixed([]) == b""
 
 
 def test_factorize_exact_property_vs_pure_python():
@@ -583,26 +584,6 @@ def test_factorize_exact_property_vs_pure_python():
 
     prop()
     prop_int64()
-
-
-def test_len_prefixed_blob_padded_budget_fallback():
-    """One near-cap payload among many tiny ones must NOT take the padded
-    path (r7: the m*w transient would be multi-GB for a ~1M-unique pool) —
-    and the per-entry fallback it triggers stays wire-identical."""
-    from compress_otel_collector_spark.codec.batch import (
-        _PAD_BYTE_BUDGET,
-        _len_prefixed_blob,
-    )
-    from compress_otel_collector_spark.codec.varint import encode_sleb128
-
-    w = 4096
-    m = _PAD_BYTE_BUDGET // w + 2  # padded just over budget, payload ~w
-    raws = [b"y" * w] + [b""] * (m - 1)
-    assert _len_prefixed_blob(raws) is None
-    # under-budget padding still vectorizes, byte-equal to naive
-    small = [b"y" * 64] + [b""] * 100
-    assert _len_prefixed_blob(small) == b"".join(
-        encode_sleb128(len(r)) + r for r in small)
 
 
 def test_empty_input_with_attributes_spec_skips_pool():

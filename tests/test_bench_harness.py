@@ -257,10 +257,9 @@ def _fake_campaign(cores=32):
                "local32_pinned": dict(lvl, cores=cores, slots=cores)}
     ratios = {k: 1000 for k in (
         "blobs", "raw_bytes", "zstd_bytes", "gzip_bytes",
-        "json_zstd_bytes", "proto_zstd_bytes", "arrow_zstd_bytes")}
+        "json_zstd_bytes", "proto_zstd_bytes")}
     ratios.update({"zstd_vs_json_zstd_ratio": 0.5,
                    "zstd_vs_proto_zstd_ratio": 0.5,
-                   "zstd_vs_arrow_zstd_ratio": 0.5,
                    "zstd_per_page": 10.0})
     return results, ratios
 

@@ -439,8 +439,8 @@ class TestDriverTotals:
         assert any(r["lang"] is None for r in rows)
         arm_sums = {r[c] is None for r in rows
                     for c in ("gzip_bytes", "json_zstd_bytes",
-                              "proto_zstd_bytes", "arrow_zstd_bytes",
-                              "zstd_vs_json_ratio", "zstd_vs_proto_ratio")}
+                              "proto_zstd_bytes", "zstd_vs_json_ratio",
+                              "zstd_vs_proto_ratio")}
         # arms off: no arm ran, so no sum — never −blobs
         assert arm_sums == {not arms}
 
@@ -530,7 +530,7 @@ def test_route_totals_sum_only_arms_that_ran():
                 "n_spans": n, "min_doc_id": 0, "max_doc_id": n,
                 "raw_bytes": 2 * zstd, "zstd_bytes": zstd,
                 "gzip_bytes": arm, "json_zstd_bytes": arm,
-                "proto_zstd_bytes": arm, "arrow_zstd_bytes": arm,
+                "proto_zstd_bytes": arm,
                 "blob_sha256": "0" * 64}
 
     rows = [blob("en", 1, 5, 30, -1), blob(None, 0, 2, 10, 40),
