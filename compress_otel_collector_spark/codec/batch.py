@@ -9,7 +9,8 @@ delta series, and one mask-select flattens the field matrices into the span
 stream. A span's one event and one link are field matrices like the rest;
 only unique pool values (attribute dicts, status dicts) touch Python.
 
-One input shape: the frame ``plans.pipeline._group_spans_frame`` builds —
+One input shape: the span frame the pipeline derives from
+``functions.columns.SPAN_SHAPE`` (``plans.pipeline._group_spans_frame``) —
 ``SPAN_COLUMNS`` plus typed ``attr:<key>`` span-attribute columns, encoded
 as ONE resourceSpans group under ``DEFAULT_SCOPE`` with no schemaUrl.
 General OTLP documents (several resources, other scopes, schemaUrls,

@@ -373,7 +373,8 @@ def spans_columns_to_proto(spans, const_attrs: dict, resource_attrs: dict,
                            scope: dict) -> bytes:
     """Column-driven TracesData marshal for the bench comparison arm.
 
-    Reads the span frame ``plans.pipeline._group_spans_frame`` builds:
+    Reads the span frame the pipeline derives from
+    ``functions.columns.SPAN_SHAPE`` (``plans.pipeline._group_spans_frame``):
     every column of ``codec.batch.SPAN_COLUMNS`` (16-byte ``trace_id``,
     8-byte ``span_id``) plus the ``attr:http.url`` and ``attr:n_chars``
     attributes. Same wire bytes as

@@ -1,4 +1,7 @@
-"""Reusable Column expressions for the pages pipeline.
+"""Reusable Column expressions for the pages pipeline, and ``SPAN_SHAPE``,
+the one statement of the span shape: the span frame the encoder reads and
+the values the round-trip gate expects are both generated from it, so it
+changes in lockstep with ``plans.projector`` alone.
 
 Everything here is JVM-side (``pyspark.sql.functions`` or SQL strings) so
 Catalyst keeps whole-stage codegen and pushdown.
@@ -8,6 +11,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..codec.definition import (
+    BYTES,
+    INTEGER,
+    STRING,
+    field_path_to_definition,
+    trace_model,
+)
 
 #: the grok/regex that recovers the page text from the html bytes.
 #: (?s) lets the text span newlines; non-greedy up to the closing tag.
@@ -62,40 +73,93 @@ def warc_day_expr(ts_col: str = "warc_ts") -> Column:
     return F.date_trunc("day", F.col(ts_col)).cast("date")
 
 
-def span_columns_sql(n_chars_col: str) -> list[str]:
-    """The OTel-shaped span columns of a parsed page row, as ``selectExpr``
-    strings — the one span-column definition (it changes in lockstep with
-    ``plans.pipeline._group_spans_frame``,
-    ``plans.pipeline.expected_roundtrip`` and ``plans.projector``). SQL
-    strings build the projection in one py4j call; Column-API construction
-    (~50 round trips) was a measurable share of every pipeline query's wall
-    (r8).
+#: every EVENTS_EVERY-th page (by doc_id) has one "fetch" event 1 ms after
+#: its start; every LINKS_EVERY-th page links back to its own trace
+EVENTS_EVERY = 10
+LINKS_EVERY = 7
 
-    Deterministic functions of (url, doc_id, warc_ts, ``n_chars_col``),
-    where ``n_chars_col`` names a precomputed ``length(text)`` long column:
-    trace_id = md5(url) (16B), span_id = first 8B, parent empty (→ null-
-    coerced), timestamps in unix-nanos (reference keeps them as integers,
-    model/trace.json:108-117). Dirty-data guards (10^12-page corpus): a
-    null warc_ts or null n_chars must not surface as a null in the codec's
-    NON-nullable startTimeUnixNano/endTimeUnixNano/n_chars fields — that
-    fails the whole task in the encoder's type check. Epoch 0 / length 0
-    are the explicit "unknown" sentinels.
-    """
-    nc = f"coalesce({n_chars_col}, CAST(0 AS BIGINT))"
-    start = "coalesce(unix_micros(warc_ts) * 1000, CAST(0 AS BIGINT))"
-    return [
-        "unhex(md5(url)) AS trace_id",
-        "unhex(substring(md5(url), 1, 16)) AS span_id",
-        "unhex('') AS parent_span_id",
-        "CASE WHEN doc_id % 10 = 0 THEN 'cc=1' ELSE '' END AS trace_state",
-        "concat('GET /p', CAST(doc_id % 20 AS STRING)) AS name",
-        "CAST(doc_id % 6 AS BIGINT) AS kind",
-        f"{start} AS start_ns",
-        f"{start} + {nc} * 1000000 AS end_ns",
-        "CAST(0 AS BIGINT) AS dropped_attributes_count",
-        "CAST(0 AS BIGINT) AS dropped_events_count",
-        "CAST(doc_id % 2 AS BIGINT) AS dropped_links_count",
-        "CASE WHEN doc_id % 4 = 0 THEN 'OK' ELSE '' END AS status_message",
-        "CAST(doc_id % 3 AS BIGINT) AS status_code",
-        f"{nc} AS n_chars",
-    ]
+#: the event and link attribute maps, indexed by the frame's
+#: ``event_attributes`` / ``link_attributes`` code (0: no event, no link).
+#: Every 20th page's event carries a NESTED value (an object holding an
+#: array), so the free-map nested wire path (encode.go:520-597) runs at
+#: pipeline scale. One object per map, never mutated: the codec's freeze
+#: memo and the proto arm's suffix cache key them by ``id()``.
+EVENT_ATTRIBUTES = (
+    None, {}, {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}})
+LINK_ATTRIBUTES = (None, {"rel": "prev"})
+
+_ZERO = "CAST(0 AS BIGINT)"
+_START = f"coalesce(unix_micros(warc_ts) * 1000, {_ZERO})"
+_N_CHARS = f"coalesce({{n_chars}}, {_ZERO})"
+_EVENT = f"doc_id % {EVENTS_EVERY} = 0"
+_LINK = f"doc_id % {LINKS_EVERY} = 0"
+
+#: The span shape: span-frame column → (SQL over the page row, the
+#: trace-model field under a span whose flags give its ``roundtrip_sql``;
+#: None for the ``attr:n_chars`` attribute value). Dirty-data guards
+#: (10^12-page corpus): a null warc_ts or n_chars must not reach the
+#: codec's NON-nullable start/end/n_chars fields, whose type check would
+#: fail the whole task, so epoch 0 and length 0 mean unknown.
+SPAN_SHAPE = {
+    "trace_id": ("unhex(md5(url))", "traceId"),
+    "span_id": ("unhex(substring(md5(url), 1, 16))", "spanId"),
+    "parent_span_id": ("unhex('')", "parentSpanId"),
+    "trace_state": ("CASE WHEN doc_id % 10 = 0 THEN 'cc=1' ELSE '' END",
+                    "traceState"),
+    "name": ("concat('GET /p', CAST(doc_id % 20 AS STRING))", "name"),
+    "kind": ("CAST(doc_id % 6 AS BIGINT)", "kind"),
+    "start_ns": (_START, "startTimeUnixNano"),
+    "end_ns": (f"{_START} + {_N_CHARS} * 1000000", "endTimeUnixNano"),
+    "dropped_attributes_count": (_ZERO, "droppedAttributesCount"),
+    "dropped_events_count": (_ZERO, "droppedEventsCount"),
+    "dropped_links_count": ("CAST(doc_id % 2 AS BIGINT)", "droppedLinksCount"),
+    "status_message": ("CASE WHEN doc_id % 4 = 0 THEN 'OK' ELSE '' END",
+                       "status message"),
+    "status_code": ("CAST(doc_id % 3 AS BIGINT)", "status code"),
+    "n_chars": (_N_CHARS, None),
+    "event_time_ns": (
+        f"CASE WHEN {_EVENT} THEN {_START} + 1000000 ELSE {_ZERO} END",
+        "events item timeUnixNano"),
+    "event_name": (f"CASE WHEN {_EVENT} THEN 'fetch' END",
+                   "events item name"),
+    "event_attributes": (
+        f"CASE WHEN {_EVENT} THEN IF(doc_id % 20 = 0, 2, 1) ELSE 0 END",
+        "events item attributes"),
+    "event_dropped_attributes_count": (
+        _ZERO, "events item droppedAttributesCount"),
+    "link_trace_id": (f"CASE WHEN {_LINK} THEN unhex(md5(url)) END",
+                      "links item traceId"),
+    "link_span_id": (
+        f"CASE WHEN {_LINK} THEN unhex(substring(md5(url), 17, 16)) END",
+        "links item spanId"),
+    "link_trace_state": (f"CASE WHEN {_LINK} THEN '' END",
+                         "links item traceState"),
+    "link_attributes": (f"CASE WHEN {_LINK} THEN 1 ELSE 0 END",
+                        "links item attributes"),
+    "link_dropped_attributes_count": (
+        _ZERO, "links item droppedAttributesCount"),
+}
+
+
+def span_columns_sql(n_chars_col: str) -> list[str]:
+    """``SPAN_SHAPE`` as ``selectExpr`` strings (one py4j call; building
+    Column objects cost ~50 round trips per query, r8), ``n_chars_col``
+    naming a precomputed ``length(text)`` long column. The attribute codes
+    are never null: a nullable int would reach pandas as float64."""
+    return [f"{sql.format(n_chars=n_chars_col)} AS {col}"
+            for col, (sql, _) in SPAN_SHAPE.items()]
+
+
+def roundtrip_sql(column: str) -> tuple[str, str]:
+    """(SQL type, SQL) of the value ``column`` decodes to, over a
+    ``SPAN_SHAPE`` row: its field's null coercion (encode.go:600-614), and
+    ids in the projector's lower-case hex."""
+    _, field = SPAN_SHAPE[column]
+    d = field_path_to_definition(
+        f"resourceSpans item scopeSpans item spans item {field}",
+        trace_model())
+    if d.type == BYTES:
+        return "string", f"NULLIF(lower(hex({column})), '')"
+    sql_type, zero = {STRING: ("string", "''"), INTEGER: ("bigint", "0")}[
+        d.type]
+    return sql_type, f"NULLIF({column}, {zero})" if d.nullable else column

@@ -45,6 +45,7 @@ import sys
 import zipimport
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -60,13 +61,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..codec.batch import DEFAULT_SCOPE, encode_span_dataframe
+from ..codec.batch import DEFAULT_SCOPE, SPAN_COLUMNS, encode_span_dataframe
 from ..codec.definition import trace_model
 from ..codec.otlp_proto import spans_columns_to_proto
 from ..functions.columns import (
+    EVENT_ATTRIBUTES,
+    LINK_ATTRIBUTES,
     extract_text_expr,
     host_bucket_expr,
     host_of_url_expr,
+    roundtrip_sql,
     salt_expr,
     span_columns_sql,
     warc_day_expr,
@@ -88,9 +92,6 @@ ENCODED_SCHEMA = StructType([
     StructField("blob_sha256", StringType()),
     StructField("blob", BinaryType()),
 ])
-
-#: every LINKS_EVERY-th page (by doc_id) carries one self-trace span link
-LINKS_EVERY = 7
 
 
 def parse_stage(pages: DataFrame) -> DataFrame:
@@ -143,8 +144,6 @@ def _hex_column(vals, width: int):
     arm's per-row hexing)."""
     import binascii
 
-    import numpy as np
-
     return np.frombuffer(
         binascii.hexlify(b"".join(vals)), dtype=f"S{width * 2}"
     ).astype(f"U{width * 2}")
@@ -157,7 +156,6 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     ``event_*``/``link_*`` columns as OTLP-style ``events``/``links``
     lists (hex link ids, null without). orjson is a hard dependency, so
     ``json_zstd_bytes`` is the same wherever the arm runs."""
-    import numpy as np
     import orjson
 
     n = len(spans)
@@ -184,7 +182,7 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     # per row, not _hex_column: a root's parent is b"" and a child's is 8
     # bytes, so the joined buffer has no fixed width to split on
     hex_parent = [p.hex() if p else "" for p in col["parent_span_id"]]
-    flat = [c for c in spans.columns if not c.startswith(("event_", "link_"))]
+    flat = [c for c in spans.columns if c not in _NESTED]
     cols: dict = {}
     for c in flat:
         if c == "trace_id":
@@ -216,36 +214,24 @@ def _json_arm_bytes(spans: pd.DataFrame) -> bytes:
     return orjson.dumps(recs)
 
 
-def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
+_EVENT_MAPS = np.array(EVENT_ATTRIBUTES, dtype=object)
+_LINK_MAPS = np.array(LINK_ATTRIBUTES, dtype=object)
+_NESTED = tuple(c for c in SPAN_COLUMNS if c.startswith(("event_", "link_")))
+
+
+def _group_spans_frame(g: pd.DataFrame, lang, bucket):
     """One route group → (span frame, attrs spec, resource attributes):
     the arguments of ``codec.batch.encode_span_dataframe``, also read by
     the comparison arms. Its own function so the no-JVM tests can encode
-    exactly what ``_encode_batches`` encodes. Span-shape lockstep note
-    (CLAUDE.md) applies here.
+    exactly what ``_encode_batches`` encodes.
 
-    Event and link columns (numpy, no per-row dicts): every
-    ``events_every``-th page (0: none) has one "fetch" event 1 ms after
-    its start, and every 20th page's event carries a NESTED attribute
-    value (an object containing an array) so the free-map nested wire
-    path (encode.go:520-597) runs at pipeline scale; every
-    ``LINKS_EVERY``-th page links back to its own trace (spanId = tail 8
-    bytes of the 16-byte trace id). Attribute cells share ONE dict per
-    shape, never mutated downstream: the encoder's freeze memo and the
-    proto arm's suffix cache are keyed by ``id()``.
+    The span columns arrive derived (``functions.columns.SPAN_SHAPE``);
+    one take turns each attribute code into its shared map, the one object
+    the ``id()``-keyed freeze memo and proto suffix cache expect. The
+    column order is the JSON arm's record layout, which its bytes follow.
     """
-    import numpy as np
-
     n = len(g)
-    doc_ids = g["doc_id"].to_numpy()
-    trace_ids = g["trace_id"].to_numpy()
-    cols = {
-        c: g[c].to_numpy()
-        for c in ("trace_id", "span_id", "parent_span_id",
-                  "trace_state", "name", "kind", "start_ns",
-                  "end_ns", "dropped_attributes_count",
-                  "dropped_events_count", "dropped_links_count",
-                  "status_message", "status_code")
-    }
+    cols = {c: g[c].to_numpy() for c in SPAN_COLUMNS if c not in _NESTED}
     # columnar attributes (no per-row dict building): the codec
     # encodes the free-map pool entries columnwise
     cols["attr:http.url"] = g["url"].to_numpy()
@@ -265,22 +251,9 @@ def _group_spans_frame(g: pd.DataFrame, lang, bucket, events_every: int):
         cols["attr:lang"] = lang_col
         attrs_spec["lang"] = "str"
         resource = {"service.name": f"crawler-{lang}", **resource}
-    ev = (doc_ids % events_every == 0) if events_every else np.zeros(n, bool)
-    nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
-    # int64 BEFORE the add: a float64 ns timestamp rounds at 256 ns
-    cols["event_time_ns"] = np.where(
-        ev, cols["start_ns"].astype(np.int64) + 1_000_000, 0)
-    cols["event_name"] = np.where(ev, "fetch", None)
-    cols["event_attributes"] = np.where(
-        ev, np.where(doc_ids % 20 == 0, nested, {}), None)
-    cols["event_dropped_attributes_count"] = np.zeros(n, np.int64)
-    ln = doc_ids % LINKS_EVERY == 0
-    cols["link_trace_id"] = np.where(ln, trace_ids, None)
-    cols["link_span_id"] = np.full(n, None, dtype=object)
-    cols["link_span_id"][ln] = [t[8:] for t in trace_ids[ln]]
-    cols["link_trace_state"] = np.where(ln, "", None)
-    cols["link_attributes"] = np.where(ln, {"rel": "prev"}, None)
-    cols["link_dropped_attributes_count"] = np.zeros(n, np.int64)
+    cols.update((c, g[c].to_numpy()) for c in _NESTED)
+    cols["event_attributes"] = _EVENT_MAPS.take(cols["event_attributes"])
+    cols["link_attributes"] = _LINK_MAPS.take(cols["link_attributes"])
     # ONE construction (r8): the former build-then-5×__setitem__ shape
     # paid a pandas block-manager consolidation per added column
     return pd.DataFrame(cols, copy=False), attrs_spec, resource
@@ -344,14 +317,10 @@ def _share_zip_directory_reads() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def _encode_batches(arms: bool, events_every: int = 10):
+def _encode_batches(arms: bool):
     """Returns the mapInPandas function: Arrow batch → one blob per group.
-
-    Every ``events_every``-th page (by doc_id; 0 disables) gets one span
-    event ("fetch", 1 ms after start, attributes on every 20th page) and
-    every ``LINKS_EVERY``-th page one self-trace link — so the events and
-    links wire paths run at pipeline scale, not only in codec unit tests.
-    """
+    The frame carries ``SPAN_SHAPE``'s events and links, so those wire
+    paths run at pipeline scale, not only in codec unit tests."""
 
     def fn(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _share_zip_directory_reads()
@@ -372,7 +341,7 @@ def _encode_batches(arms: bool, events_every: int = 10):
             for (lang, bucket), g in pdf.groupby(["lang", "host_bucket"],
                                                  sort=True, dropna=False):
                 spans, attrs_spec, resource = _group_spans_frame(
-                    g, lang, bucket, events_every)
+                    g, lang, bucket)
                 blob = encode_span_dataframe(spans, attrs_spec, resource)
                 blob_z = zstd.compress(blob, asbytes=True)
                 if arms:
@@ -401,8 +370,7 @@ def _encode_batches(arms: bool, events_every: int = 10):
     return fn
 
 
-def encode_pages(enriched: DataFrame, arms: bool = True,
-                 events_every: int = 10) -> DataFrame:
+def encode_pages(enriched: DataFrame, arms: bool = True) -> DataFrame:
     """Route-aligned repartition with a NARROW shuffle payload, then
     vectorized encode: the pipeline's one encode path.
 
@@ -425,8 +393,7 @@ def encode_pages(enriched: DataFrame, arms: bool = True,
     and the roundtrip tests and gate (``bench.py --gate``).
     """
     spans = _pre_encode_frame(enriched)
-    return spans.mapInPandas(_encode_batches(arms, events_every),
-                             schema=ENCODED_SCHEMA)
+    return spans.mapInPandas(_encode_batches(arms), schema=ENCODED_SCHEMA)
 
 
 def _pre_encode_frame(enriched: DataFrame) -> DataFrame:
@@ -575,44 +542,58 @@ def route_totals(lineage: pa.Table) -> pa.Table:
                                  null_placement="at_start")
 
 
-#: every span field the reference's receiver rebuilds
-#: (compress-otel-receiver/trace.go:61-187): ids, trace state, name/kind,
-#: timestamps, status (message+code), dropped counts, attributes, events
-#: (time/name/attributes), links (traceId/spanId/attributes), plus resource
-#: attributes and scope name/version from the enclosing groups.
+def _by_code(column: str, maps, *path) -> str:
+    """SQL: the value at ``path`` in the map ``column``'s code picks, NULL
+    where there is none; a list as its items joined by ',' (as the
+    projector joins them). A str's or int's ``repr`` is its SQL literal."""
+    whens = []
+    for code, v in enumerate(maps):
+        for key in path:
+            v = (v or {}).get(key)
+        if isinstance(v, list):
+            v = ",".join(map(str, v))
+        if v is not None:
+            whens.append(f"WHEN {code} THEN {v!r}")
+    return f"CASE {column} {' '.join(whens)} END"
+
+
+_EV = ("event_attributes", EVENT_ATTRIBUTES)
+
+#: every span field the reference's receiver rebuilds (trace.go:61-187),
+#: in ``plans.projector``'s tuple order: (column, SQL type, value over a
+#: ``span_stage`` row). A span-frame column's value is its
+#: ``roundtrip_sql``; the rest come from the page's attributes, the
+#: shared attribute maps, and the group's resource and scope.
+_ROUNDTRIP = (
+    ("url", "string", "url"),
+    ("lang", "string", "lang"),
+    *((f"{c}_hex", *roundtrip_sql(c))
+      for c in ("trace_id", "span_id", "parent_span_id")),
+    *((c, *roundtrip_sql(c)) for c in (
+        "trace_state", "name", "kind", "start_ns", "end_ns",
+        "status_message", "status_code", "dropped_attributes_count",
+        "dropped_events_count", "dropped_links_count")),
+    ("http_status", "bigint", "200"),
+    ("n_chars", "bigint", "n_chars"),
+    ("n_events", "bigint", "event_name IS NOT NULL"),
+    *((c, *roundtrip_sql(c)) for c in ("event_name", "event_time_ns")),
+    ("event_phase", "string", _by_code(*_EV, "phase")),
+    ("event_probe_ttl", "bigint", _by_code(*_EV, "probe", "ttl")),
+    ("event_probe_hops", "string", _by_code(*_EV, "probe", "hops")),
+    ("n_links", "bigint", "link_trace_id IS NOT NULL"),
+    ("link_trace_hex", *roundtrip_sql("link_trace_id")),
+    ("link_span_hex", *roundtrip_sql("link_span_id")),
+    ("link_rel", "string",
+     _by_code("link_attributes", LINK_ATTRIBUTES, "rel")),
+    # a null-lang group has no service.name: concat(.., NULL) is NULL
+    ("service_name", "string", "concat('crawler-', lang)"),
+    ("host_bucket_attr", "bigint", "host_bucket"),
+    ("scope_name", "string", repr(DEFAULT_SCOPE["name"])),
+    ("scope_version", "string", repr(DEFAULT_SCOPE["version"])),
+)
 _ROUNDTRIP_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("lang", StringType()),
-    StructField("trace_id_hex", StringType()),
-    StructField("span_id_hex", StringType()),
-    StructField("parent_span_id_hex", StringType()),
-    StructField("trace_state", StringType()),
-    StructField("name", StringType()),
-    StructField("kind", LongType()),
-    StructField("start_ns", LongType()),
-    StructField("end_ns", LongType()),
-    StructField("status_message", StringType()),
-    StructField("status_code", LongType()),
-    StructField("dropped_attributes_count", LongType()),
-    StructField("dropped_events_count", LongType()),
-    StructField("dropped_links_count", LongType()),
-    StructField("http_status", LongType()),
-    StructField("n_chars", LongType()),
-    StructField("n_events", LongType()),
-    StructField("event_name", StringType()),
-    StructField("event_time_ns", LongType()),
-    StructField("event_phase", StringType()),
-    StructField("event_probe_ttl", LongType()),
-    StructField("event_probe_hops", StringType()),
-    StructField("n_links", LongType()),
-    StructField("link_trace_hex", StringType()),
-    StructField("link_span_hex", StringType()),
-    StructField("link_rel", StringType()),
-    StructField("service_name", StringType()),
-    StructField("host_bucket_attr", LongType()),
-    StructField("scope_name", StringType()),
-    StructField("scope_version", StringType()),
-])
+    StructField(c, {"string": StringType(), "bigint": LongType()}[t])
+    for c, t, _ in _ROUNDTRIP])
 
 
 def roundtrip_check(encoded: DataFrame) -> DataFrame:
@@ -659,59 +640,13 @@ def roundtrip_check(encoded: DataFrame) -> DataFrame:
     return encoded.mapInPandas(fn, schema=_ROUNDTRIP_SCHEMA)
 
 
-def expected_roundtrip(spans: DataFrame, events_every: int = 10) -> DataFrame:
-    """What ``roundtrip_check`` must return, derived pre-encode.
-
-    Pure JVM expressions over the span stage applying the codec's documented
-    null coercion (encode.go:600-614): nullable int 0 → null, nullable empty
-    string → null. Column-for-column aligned with ``_ROUNDTRIP_SCHEMA``.
-    """
-    # ONE selectExpr call (r8): the Column-API form issued several
-    # hundred py4j round trips to assemble these 31 expressions, ~0.5 s
-    # of driver-side Python per invocation at any data size; the SQL
-    # strings build the identical expression tree in a single call.
-    ev = (f"(doc_id % {events_every} = 0)" if events_every else "false")
-    lk = f"(doc_id % {LINKS_EVERY} = 0)"
+def expected_roundtrip(spans: DataFrame) -> DataFrame:
+    """What ``roundtrip_check`` must return, derived pre-encode:
+    ``_ROUNDTRIP`` over the span stage, each value cast to its schema
+    type, in one ``selectExpr`` (the Column-API form cost ~0.5 s of py4j
+    calls, r8)."""
     return spans.selectExpr(
-        "url", "lang",
-        "md5(url) AS trace_id_hex",
-        "substring(md5(url), 1, 16) AS span_id_hex",
-        "CAST(NULL AS STRING) AS parent_span_id_hex",  # empty bytes → null
-        "CASE WHEN doc_id % 10 = 0 THEN 'cc=1' END AS trace_state",
-        "name",
-        "CASE WHEN doc_id % 6 = 0 THEN CAST(NULL AS BIGINT) "
-        "ELSE CAST(doc_id % 6 AS BIGINT) END AS kind",
-        "start_ns", "end_ns",
-        "CASE WHEN doc_id % 4 = 0 THEN 'OK' END AS status_message",
-        # non-nullable: 0 kept
-        "CAST(doc_id % 3 AS BIGINT) AS status_code",
-        "CAST(NULL AS BIGINT) AS dropped_attributes_count",
-        "CAST(NULL AS BIGINT) AS dropped_events_count",
-        "CASE WHEN doc_id % 2 = 1 THEN CAST(1 AS BIGINT) END "
-        "AS dropped_links_count",
-        "CAST(200 AS BIGINT) AS http_status",
-        "n_chars",
-        f"CAST(CASE WHEN {ev} THEN 1 ELSE 0 END AS BIGINT) AS n_events",
-        f"CASE WHEN {ev} THEN 'fetch' END AS event_name",
-        f"CASE WHEN {ev} THEN start_ns + 1000000 END AS event_time_ns",
-        f"CASE WHEN {ev} AND doc_id % 20 = 0 THEN 'connect' END "
-        "AS event_phase",
-        # the nested free-map attribute (object-in-map with an int + an
-        # int array): ttl and the joined hops list must survive the wire
-        f"CASE WHEN {ev} AND doc_id % 20 = 0 THEN CAST(64 AS BIGINT) END "
-        "AS event_probe_ttl",
-        f"CASE WHEN {ev} AND doc_id % 20 = 0 THEN '1,2' END "
-        "AS event_probe_hops",
-        f"CAST(CASE WHEN {lk} THEN 1 ELSE 0 END AS BIGINT) AS n_links",
-        f"CASE WHEN {lk} THEN md5(url) END AS link_trace_hex",
-        f"CASE WHEN {lk} THEN substring(md5(url), 17, 16) END "
-        "AS link_span_hex",
-        f"CASE WHEN {lk} THEN 'prev' END AS link_rel",
-        "concat('crawler-', lang) AS service_name",
-        "CAST(host_bucket AS BIGINT) AS host_bucket_attr",
-        "'compress-otel-collector-spark' AS scope_name",
-        "'0.1.0' AS scope_version",
-    )
+        *(f"CAST({sql} AS {t}) AS {c}" for c, t, sql in _ROUNDTRIP))
 
 
 def roundtrip_counts(decoded: DataFrame, expected: DataFrame,

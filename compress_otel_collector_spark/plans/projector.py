@@ -16,12 +16,11 @@ free-map ``.get`` run once per *distinct* pool entry instead of once per
 span, which is exactly the codec's own dictionary bet.
 
 SPAN-SHAPE LOCKSTEP (CLAUDE.md): the token walk hard-codes the trace
-model's sorted field order — it must change together with
-``functions.columns.span_columns_sql`` /
-``plans.pipeline._group_spans_frame`` /
-``plans.pipeline.expected_roundtrip``. Drift is caught by
-``tests/test_projector.py`` (fast ≡ generic on fuzzed docs) and the
-full-fidelity roundtrip gate.
+model's sorted field order and the attribute slices it projects — it must
+change together with ``functions.columns.SPAN_SHAPE``, the table the span
+frame, ``plans.pipeline.expected_roundtrip`` and ``_ROUNDTRIP_SCHEMA`` are
+generated from. Drift is caught by ``tests/test_projector.py`` (fast ≡
+generic on fuzzed docs) and the full-fidelity roundtrip gate.
 
 ``tokenize`` is total since r5 (bit-63 diff deltas and corrupt runs are
 scalar-parsed segment-locally inside the tokenizer), so there is no

@@ -82,8 +82,7 @@ def run_streaming_pipeline(
             .drop("text_hash")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty batch routes no rows, so its write changes nothing
         enriched = enrich_stage(parse_stage(batch_df), spark,
                                 n_buckets=n_buckets)
         encoded = encode_pages(enriched, arms=arms)

@@ -74,8 +74,9 @@ _NUL_TEXT = ("", "\x00", "a", "a\x00", "a\x00b", "\x00z", "é\x00")
 
 
 def random_frame(rng):
-    """(frame, attributes spec, resource) in the shape
-    ``plans.pipeline._group_spans_frame`` builds, with random values."""
+    """(frame, attributes spec, resource) in the shape of the span frame
+    (``functions.columns.SPAN_SHAPE`` through
+    ``plans.pipeline._group_spans_frame``), with random values."""
     import pandas as pd
 
     def text():

@@ -239,14 +239,20 @@ def test_unsupported_attribute_type_raises():
             encode_span_dataframe(pdf, {"http.url": t}, RESOURCE)
 
 
-def production_pages(doc_ids, lang, host_bucket=3):
+def production_pages(doc_ids, lang, host_bucket=3, events_every=10,
+                     links_every=7):
     """``_pre_encode_frame``'s columns for ``doc_ids``: url, lang,
     host_bucket, doc_id and the ``span_columns_sql`` span columns, written
-    out here with numpy from the same rules."""
+    out here with numpy from the same rules: an event on every
+    ``events_every``-th page (attribute code 2, the nested map, on every
+    20th, else 1) and a self-trace link on every ``links_every``-th."""
     urls = [f"https://h{d % 3}.example.com/p/{d}" for d in doc_ids]
     md5 = [hashlib.md5(u.encode()).digest() for u in urls]
     starts = T + doc_ids * 1000
     n_chars = 100 + doc_ids % 9
+    zeros = np.zeros(len(doc_ids), np.int64)
+    ev = doc_ids % events_every == 0
+    ln = doc_ids % links_every == 0
     return pd.DataFrame({
         "url": urls,
         "lang": lang,
@@ -261,35 +267,55 @@ def production_pages(doc_ids, lang, host_bucket=3):
         "kind": doc_ids % 6,
         "start_ns": starts,
         "end_ns": starts + n_chars * 1_000_000,
-        "dropped_attributes_count": np.zeros(len(doc_ids), np.int64),
-        "dropped_events_count": np.zeros(len(doc_ids), np.int64),
+        "dropped_attributes_count": zeros,
+        "dropped_events_count": zeros,
         "dropped_links_count": doc_ids % 2,
         "status_message": ["OK" if d % 4 == 0 else "" for d in doc_ids],
         "status_code": doc_ids % 3,
         "n_chars": n_chars,
+        "event_time_ns": np.where(ev, starts + 1_000_000, 0),
+        "event_name": ["fetch" if e else None for e in ev],
+        "event_attributes": np.where(ev, np.where(doc_ids % 20 == 0, 2, 1),
+                                     0).astype(np.int32),
+        "event_dropped_attributes_count": zeros,
+        "link_trace_id": [h if k else None for h, k in zip(md5, ln)],
+        "link_span_id": [h[8:] if k else None for h, k in zip(md5, ln)],
+        "link_trace_state": ["" if k else None for k in ln],
+        "link_attributes": ln.astype(np.int32),
+        "link_dropped_attributes_count": zeros,
     })
 
 
-@pytest.mark.parametrize("lang", ["en", np.nan], ids=["en", "null"])
-def test_production_group_frame_matches_scalar(lang):
+@pytest.mark.parametrize("lang,every", [("en", (10, 7)), (np.nan, (10, 7)),
+                                        ("en", (1, 1))],
+                         ids=["en", "null", "dense"])
+def test_production_group_frame_matches_scalar(lang, every):
     """batch ≡ scalar on exactly what the pipeline encodes: a frame with
     ``_pre_encode_frame``'s columns, run through ``_group_spans_frame``
     for a real-lang and a null-lang route group, with events (doc_id %
-    10), nested event attributes (% 20) and links (% 7) all present. The
-    expected document is written out here from the span-shape rules, not
-    from the pipeline's helpers."""
+    10), nested event attributes (% 20) and links (% 7) all present, and
+    a dense group where every span has an event and a link. The expected
+    document is written out here from the span-shape rules, not from the
+    pipeline's helpers; the fused projection must equal the generic one
+    on the blob."""
     from compress_otel_collector_spark.plans.pipeline import (
         _group_spans_frame,
     )
+    from compress_otel_collector_spark.plans.projector import (
+        project_blob,
+        project_doc,
+    )
 
+    events_every, links_every = every
     doc_ids = np.arange(100, 160, dtype=np.int64)  # 100, 105, 140 hit all
     # _encode_batches' groupby(dropna=False) keys a null lang as NaN
-    g = production_pages(doc_ids, None if pd.isna(lang) else lang)
+    g = production_pages(doc_ids, None if pd.isna(lang) else lang,
+                         events_every=events_every, links_every=links_every)
     urls, md5 = list(g["url"]), list(g["trace_id"])
     starts, n_chars = g["start_ns"].to_numpy(), g["n_chars"].to_numpy()
     m = trace_model()
     nested = {"phase": "connect", "probe": {"ttl": 64, "hops": [1, 2]}}
-    spans, spec, resource = _group_spans_frame(g, lang, 3, 10)
+    spans, spec, resource = _group_spans_frame(g, lang, 3)
     blob = encode_span_dataframe(spans, spec, resource)
 
     lang_attr = {} if pd.isna(lang) else {"lang": lang}
@@ -312,13 +338,13 @@ def test_production_group_frame_matches_scalar(lang):
                 "timeUnixNano": start + 1_000_000, "name": "fetch",
                 "attributes": nested if d % 20 == 0 else {},
                 "droppedAttributesCount": 0,
-            }] if d % 10 == 0 else [],
+            }] if d % events_every == 0 else [],
             "droppedEventsCount": 0,
             "links": [{
                 "traceId": md5[i], "spanId": md5[i][8:],
                 "traceState": "", "attributes": {"rel": "prev"},
                 "droppedAttributesCount": 0,
-            }] if d % 7 == 0 else [],
+            }] if d % links_every == 0 else [],
             "droppedLinksCount": int(d % 2),
             "status": {"message": "OK" if d % 4 == 0 else "",
                        "code": int(d % 3)},
@@ -334,6 +360,7 @@ def test_production_group_frame_matches_scalar(lang):
     }]}
     assert decode(blob, m) == decode(encode(doc, m), m) == \
         normalize(doc, m)
+    assert project_blob(blob, m) == project_doc(decode(blob, m))
 
 
 def test_json_arm_writes_parent_ids():
@@ -355,7 +382,7 @@ def test_json_arm_writes_parent_ids():
     mixed = roots.assign(parent_span_id=parents)
 
     def marshal_group(g):
-        return _json_arm_bytes(_group_spans_frame(g, "en", 3, 10)[0])
+        return _json_arm_bytes(_group_spans_frame(g, "en", 3)[0])
 
     got = [r["parent_span_id"] for r in json.loads(marshal_group(mixed))]
     assert got == [p.hex() for p in parents]

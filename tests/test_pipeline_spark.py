@@ -2,6 +2,7 @@
 
 import contextlib
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -230,24 +231,27 @@ class TestRunResume:
         assert expected.exceptAll(got).count() == 0
 
 
-def test_dense_events_roundtrip(spark):
-    """events_every=1: EVERY span carries an event — the dense-events wire
-    path must stay correct (and is pinned fast by the vectorized cell
-    builder; bench criterion: within 1.5x of sparse)."""
-    from compress_otel_collector_spark.plans.pipeline import (
-        expected_roundtrip,
-        roundtrip_counts,
-    )
+def test_span_stage_equals_the_no_jvm_production_frame(spark):
+    """``span_stage`` over the pages behind ``_pinned_pages`` (whose epoch-0
+    page is a NULL crawl time here) returns its columns field for field,
+    events and links included: the frame the no-JVM batch ≡ scalar tests
+    and byte pins encode is the one production derives."""
+    import numpy as np
+    from test_batch_codec import T, _pinned_pages
 
-    pages = synthetic_pages(spark, 400, partitions=2)
-    enriched = enrich_stage(parse_stage(pages), spark)
-    encoded = encode_pages(enriched, arms=False, events_every=1)
-    row = roundtrip_counts(
-        roundtrip_check(encoded),
-        expected_roundtrip(span_stage(enriched), events_every=1),
-    ).collect()[0]
-    assert row["decoded_spans"] == 400
-    assert row["missing"] == 0 and row["extra"] == 0
+    want = _pinned_pages().sort_values("doc_id", ignore_index=True)
+    doc_ids = want["doc_id"].to_numpy()
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": want["url"], "lang": want["lang"],
+        "host": "h", "host_bucket": want["host_bucket"],
+        "warc_day": "d", "doc_id": doc_ids,
+        "warc_us": np.where(doc_ids == 1003, -1, T // 1000 + doc_ids),
+        "text_extracted": ["x" * n for n in want["n_chars"]],
+    })).selectExpr(
+        "*", "timestamp_micros(NULLIF(warc_us, -1)) AS warc_ts")
+    got = span_stage(pages).orderBy("doc_id").toPandas()
+    for c in want.columns:
+        assert got[c].tolist() == want[c].tolist(), c
 
 
 @contextlib.contextmanager

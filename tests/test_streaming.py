@@ -64,6 +64,35 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
     assert total3 == 240
 
 
+def test_empty_batch_leaves_the_sink_untouched(spark, tmp_path):
+    """An empty micro-batch writes nothing: routing an empty encode into a
+    sink leaves every prior lineage row and adds no ``batch_id=`` dir, so
+    ``process_batch`` needs no separate emptiness job."""
+    import os
+
+    from compress_otel_collector_spark.plans.pipeline import (
+        encode_pages,
+        enrich_stage,
+        parse_stage,
+        prior_lineage,
+        route_stage,
+    )
+
+    out_dir = str(tmp_path / "out")
+
+    def encoded(n):
+        pages = synthetic_pages(spark, n, partitions=2)
+        return encode_pages(enrich_stage(parse_stage(pages), spark),
+                            arms=False)
+
+    route_stage(encoded(60), out_dir, batch_id=0)
+    before = prior_lineage(spark, out_dir)
+    route_stage(encoded(0), out_dir, batch_id=1)
+    assert prior_lineage(spark, out_dir).equals(before)
+    assert before.num_rows > 0
+    assert not os.path.exists(os.path.join(out_dir, "routed", "batch_id=1"))
+
+
 def test_streaming_refuses_bucket_layout_mismatch(spark, tmp_path):
     """The streaming path honors the same bucket-layout meta marker as the
     batch path: resuming a sink with a different n_buckets must refuse."""
