@@ -734,8 +734,11 @@ def _q_codec_roundtrip(spark, sf_dir):
     Full-fidelity: every span field the reference receiver rebuilds
     (trace.go:61-187) — ids, trace state, status message, dropped counts,
     events (time/name/attributes), links, resource attrs, scope — crosses
-    the equality gate, in ONE Spark job (r1 verdict: the old shape ran 3
-    actions over an unpersisted lineage and re-encoded everything 3×).
+    the equality gate. ``roundtrip_counts`` runs one aggregate of signed
+    row-fingerprint sums when this is called and returns a literal row
+    when they are 0; only a mismatch runs the row-level diff (r1 verdict:
+    the old shape ran 3 actions over an unpersisted lineage and
+    re-encoded everything 3×).
 
     The union reads ``enriched`` on both branches; the narrow
     scan+parse+enrich recomputes rather than persisting — measured ~7%

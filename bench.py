@@ -494,7 +494,9 @@ def roundtrip_gate(spark, pages, n_runs: int = 3) -> dict:
     """The full-fidelity roundtrip gate over the ``pages`` frame:
     ``encode_pages`` (the production encode path) → zstd → decode →
     31-field multiset equality against
-    ``expected_roundtrip(span_stage(...))``. One untimed warm-up (JIT,
+    ``expected_roundtrip(span_stage(...))``: ``roundtrip_counts``' one
+    aggregate of signed row-fingerprint sums, and the row-level diff only
+    if those differ. One untimed warm-up (JIT,
     Python workers, parquet footers), then ``n_runs`` measured runs.
     ``missing`` and ``extra`` must both be 0."""
     import statistics

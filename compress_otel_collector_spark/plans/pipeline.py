@@ -452,7 +452,12 @@ def route_stage(encoded: DataFrame, out_dir: str,
 
 
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/routed")
+    """The sink's blob rows, read with ``ENCODED_SCHEMA`` given, so no job
+    reads parquet footers to infer it. Partition discovery still finds the
+    route keys and a streaming sink's ``batch_id``; the columns and their
+    order are those of an inferring read. An empty ``routed/`` dir reads
+    as no rows."""
+    return spark.read.schema(ENCODED_SCHEMA).parquet(f"{out_dir}/routed")
 
 
 #: one blob row's lineage record: every ``ENCODED_SCHEMA`` column but the
@@ -594,50 +599,46 @@ _ROUNDTRIP = (
 _ROUNDTRIP_SCHEMA = StructType([
     StructField(c, {"string": StringType(), "bigint": LongType()}[t])
     for c, t, _ in _ROUNDTRIP])
+_ROUNDTRIP_ARROW_SCHEMA = to_arrow_schema(_ROUNDTRIP_SCHEMA)
 
 
 def roundtrip_check(encoded: DataFrame) -> DataFrame:
     """Decode every blob back to full-fidelity span rows.
 
     Projects every field the reference receiver reconstructs
-    (trace.go:61-187) — used by the one-job equality gate in
-    ``roundtrip_counts`` and by tests via exceptAll.
+    (trace.go:61-187) — used by the equality gate in ``roundtrip_counts``
+    and by tests via exceptAll. Only ``blob`` and ``raw_bytes`` cross to
+    Python, and the rows come back as Arrow record batches built column
+    by column; int64 columns keep ns timestamps exact.
     """
     model = trace_model()
 
-    def fn(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _share_zip_directory_reads()
-        import numpy as np
         import pyarrow as pa
 
         from .projector import project_blob
 
         zstd = pa.Codec("zstd")
-        for pdf in iterator:
+        for batch in batches:
             rows: list[tuple] = []
-            for blob_z, raw_len in zip(pdf["blob"], pdf["raw_bytes"]):
+            for blob_z, raw_len in zip(batch.column(0).to_pylist(),
+                                       batch.column(1).to_pylist()):
                 # fused token-walk projection with pre-projected pools
                 # (plans/projector.py; generic tree path = project_doc,
                 # equality pinned by tests/test_projector.py)
                 rows.extend(project_blob(
-                    zstd.decompress(bytes(blob_z),
-                                    decompressed_size=int(raw_len)),
+                    zstd.decompress(blob_z, decompressed_size=raw_len),
                     model,
                 ))
             if rows:
-                # column-wise with dtype=object: pd.DataFrame(rows) would
-                # turn an int+None column into float64, rounding ns
-                # timestamps at 256 ns (ints > 2^53)
-                cols = tuple(zip(*rows))
-                n = len(rows)
-                out = {}
-                for i, f in enumerate(_ROUNDTRIP_SCHEMA.fields):
-                    a = np.empty(n, dtype=object)
-                    a[:] = cols[i]
-                    out[f.name] = a
-                yield pd.DataFrame(out, copy=False)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, type=f.type)
+                     for col, f in zip(zip(*rows), _ROUNDTRIP_ARROW_SCHEMA)],
+                    schema=_ROUNDTRIP_ARROW_SCHEMA)
 
-    return encoded.mapInPandas(fn, schema=_ROUNDTRIP_SCHEMA)
+    return encoded.select("blob", "raw_bytes").mapInArrow(
+        fn, schema=_ROUNDTRIP_SCHEMA)
 
 
 def expected_roundtrip(spans: DataFrame) -> DataFrame:
@@ -651,51 +652,62 @@ def expected_roundtrip(spans: DataFrame) -> DataFrame:
 
 def roundtrip_counts(decoded: DataFrame, expected: DataFrame,
                      exact: bool = False) -> DataFrame:
-    """(decoded_spans, missing, extra) in ONE Spark job.
+    """(decoded_spans, missing, extra) as a one-row frame. Eager: the
+    phase-1 job runs when this is called.
 
-    Tag-union multiset difference: expected rows weigh +1, decoded rows -1;
-    grouping on a per-row key and summing gives per-row-value imbalance, so
-    missing = Σ max(d,0), extra = Σ max(-d,0), and the decoded count rides
-    along in the same aggregate. Replaces the r1 shape (3 actions over an
-    unpersisted encode lineage → the pipeline re-encoded 3×) — at 100 TB an
-    unpersisted multi-action verification stage re-encodes the planet twice.
+    Expected rows weigh +1 and decoded rows −1. Each row gets a 128-bit
+    fingerprint: two independent ``xxhash64`` streams over every column,
+    each value prefixed with its null flag so a value sliding between
+    adjacent columns changes the hash (Spark's hash functions skip nulls,
+    which would otherwise make ``(x, null)`` collide with ``(null, x)``).
 
-    Default key: a 128-bit row fingerprint (two independent ``xxhash64``
-    streams over every column, each value prefixed with its null flag so a
-    value sliding between adjacent columns changes the hash — Spark's hash
-    functions skip nulls, which would otherwise make ``(x, null)`` collide
-    with ``(null, x)``). Shuffling two longs instead of ~31 wide columns
-    cut the 1M-page gate's compare stage from ~26 s to a few seconds, and
-    at 100 TB a full-row verification shuffle is a non-starter. A false
-    match needs a 128-bit collision between a specific wrong row and a
-    specific expected row (~2⁻¹²⁸·pairs ≈ 10⁻²⁶ at 10¹² rows).
-    ``exact=True`` keeps the full-column groupBy (the byte-for-byte form;
-    tests pin that both modes agree on clean and corrupted inputs).
+    Phase 1 is one global aggregate: the decoded count, Σw, and Σw·h for
+    both streams, each hash cast to ``DECIMAL(38,0)`` so the sums are
+    exact (Spark 4 runs ANSI mode, where a long sum raises on overflow;
+    38 digits hold 10¹⁹ rows of 2⁶³). Partial aggregation runs map-side,
+    so the shuffle is one row per task. When all three sums are 0 the
+    multisets agree, and the result is a literal frame on the JVM side.
+    A false "equal" needs Σ cᵢ·h(xᵢ) = 0 in ℤ for both independent 64-bit
+    streams at once (cᵢ the imbalance of row value xᵢ): about 2⁻¹²⁸ for
+    any corruption.
+
+    Phase 2 runs only when phase 1 differs: ``_row_diff``, the tag-union
+    multiset diff grouped on the fingerprint, gives exact ``missing`` and
+    ``extra``. There a false match needs a 128-bit collision between a
+    specific wrong row and a specific expected row (~2⁻¹²⁸·pairs ≈ 10⁻²⁶
+    at 10¹² rows). ``exact=True`` skips phase 1 and groups on the full
+    columns (the byte-for-byte form; tests pin that both modes agree on
+    clean and corrupted inputs).
     """
     cols = decoded.columns
     if exact:
-        key_cols = cols
-
-        def tag(df):
-            return df.select(*cols)
+        keys = cols
     else:
-        # one selectExpr call (r8): the Column-API form built 124 input
-        # expressions × 2 hashes via individual py4j round trips
-        parts = ", ".join(
-            f"CAST(isnull({c}) AS INT), {c}" for c in cols)
-        key_cols = ["_h1", "_h2"]
+        # one selectExpr per side (r8): the Column-API form built 124
+        # input expressions × 2 hashes via individual py4j round trips
+        parts = ", ".join(f"CAST(isnull({c}) AS INT), {c}" for c in cols)
+        keys = [f"xxhash64({parts}) AS _h1", f"xxhash64(-7, {parts}) AS _h2"]
+    tagged = (expected.selectExpr(*keys, "1 AS _w")
+              .unionByName(decoded.selectExpr(*keys, "-1 AS _w")))
+    if not exact:
+        n, *sums = tagged.agg(
+            F.expr("count_if(_w < 0)"), F.sum("_w"),
+            *(F.expr(f"sum(CAST({h} AS DECIMAL(38,0)) * _w)")
+              for h in ("_h1", "_h2"))).first()
+        if not any(sums):
+            return decoded.sparkSession.sql(
+                f"SELECT CAST({n} AS BIGINT) AS decoded_spans, "
+                "CAST(0 AS BIGINT) AS missing, CAST(0 AS BIGINT) AS extra")
+    return _row_diff(tagged)
 
-        def tag(df):
-            return df.selectExpr(
-                f"xxhash64({parts}) AS _h1",
-                f"xxhash64(-7, {parts}) AS _h2",
-            )
 
-    tagged = (
-        tag(expected).withColumn("_w", F.lit(1))
-        .unionByName(tag(decoded).withColumn("_w", F.lit(-1)))
-    )
-    per_value = tagged.groupBy(*key_cols).agg(
+def _row_diff(tagged: DataFrame) -> DataFrame:
+    """(decoded_spans, missing, extra) of rows tagged ``_w`` = +1
+    (expected) or −1 (decoded): grouped on every other column, a row
+    value's imbalance d gives missing = Σ max(d, 0) and
+    extra = Σ max(−d, 0)."""
+    per_value = tagged.groupBy(
+        *[c for c in tagged.columns if c != "_w"]).agg(
         F.sum("_w").alias("_d"),
         F.sum(F.when(F.col("_w") < 0, 1).otherwise(0)).alias("_dec"),
     )

@@ -13,6 +13,7 @@ from compress_otel_collector_spark.plans.pipeline import (
     parse_stage,
     read_routed,
     roundtrip_check,
+    route_stage,
     run_pipeline,
     span_stage,
 )
@@ -25,6 +26,16 @@ from compress_otel_collector_spark.sources.tables import (
 @pytest.fixture(scope="module")
 def pages(spark, sf_dir):
     return pages_from_documents(spark, sf_dir).cache()
+
+
+def _same_count_swap(rows):
+    """``rows`` with its lowest-span-id row dropped and its second-lowest
+    duplicated: the row count holds, one row goes missing, one is extra."""
+    low = [r[0] for r in rows.select("span_id_hex").distinct()
+           .orderBy("span_id_hex").limit(2).collect()]
+    assert rows.where(F.col("span_id_hex").isin(low)).count() == 2
+    return (rows.where(F.col("span_id_hex") != low[0])
+            .unionByName(rows.where(F.col("span_id_hex") == low[1])))
 
 
 class TestParse:
@@ -143,10 +154,46 @@ class TestEncodeRoute:
             expected_roundtrip(spans)
             .withColumn("event_phase", F.col("event_name"))
             .withColumn("event_name", F.lit(None).cast("string")),
+            # same count: one row duplicated, another dropped
+            _same_count_swap(expected_roundtrip(spans)),
         ):
             h = roundtrip_counts(decoded, expected).collect()[0]
             e = roundtrip_counts(decoded, expected, exact=True).collect()[0]
             assert h.asDict() == e.asDict()
+
+    def test_roundtrip_gate_detects_same_count_swap(self, spark, pages,
+                                                    encoded):
+        """A corruption that keeps the row count (one decoded row
+        duplicated, another dropped) is reported exactly: the fingerprint
+        sums differ although the counts agree."""
+        from compress_otel_collector_spark.plans.pipeline import (
+            expected_roundtrip,
+            roundtrip_counts,
+        )
+
+        spans = span_stage(enrich_stage(parse_stage(pages), spark))
+        row = roundtrip_counts(_same_count_swap(roundtrip_check(encoded)),
+                               expected_roundtrip(spans)).collect()[0]
+        assert row.asDict() == {"decoded_spans": pages.count(),
+                                "missing": 1, "extra": 1}
+
+    def test_clean_verify_skips_the_row_diff(self, spark, pages, encoded,
+                                             monkeypatch):
+        """A clean verify is one aggregate: the row-level diff runs only
+        when the fingerprint sums differ."""
+        from compress_otel_collector_spark.plans import pipeline
+
+        diff, calls = pipeline._row_diff, []
+        monkeypatch.setattr(pipeline, "_row_diff",
+                            lambda tagged: calls.append(1) or diff(tagged))
+        decoded = roundtrip_check(encoded)
+        expected = pipeline.expected_roundtrip(
+            span_stage(enrich_stage(parse_stage(pages), spark)))
+        row = pipeline.roundtrip_counts(decoded, expected).collect()[0]
+        assert (row["missing"], row["extra"], calls) == (0, 0, [])
+        row = pipeline.roundtrip_counts(
+            decoded, _same_count_swap(expected)).collect()[0]
+        assert (row["missing"], row["extra"], calls) == (1, 1, [1])
 
     def test_blob_is_decodable_magic(self, encoded):
         import pyarrow as pa
@@ -329,6 +376,25 @@ class TestRouteAffineLayout:
                 enriched, arms=False).select("blob_sha256").collect())
 
         assert shas() == shas()
+
+
+def test_read_routed_columns_match_an_inferring_read(spark, tmp_path):
+    """``read_routed`` gives ``ENCODED_SCHEMA`` instead of inferring it;
+    on a batch sink and on a streaming (``batch_id``) sink its columns,
+    their order and types equal those of an inferring read. An empty
+    ``routed/`` dir reads as no rows."""
+    enriched = enrich_stage(parse_stage(synthetic_pages(spark, 200)), spark)
+    encoded = encode_pages(enriched, arms=False).cache()
+    for name, batch_id in (("batch", None), ("stream", 3)):
+        out = str(tmp_path / name)
+        route_stage(encoded, out, batch_id)
+        inferred = spark.read.parquet(f"{out}/routed")
+        assert read_routed(spark, out).dtypes == inferred.dtypes
+        assert ("batch_id" in inferred.columns) == (batch_id is not None)
+        assert read_routed(spark, out).count() == encoded.count()
+    encoded.unpersist()
+    (tmp_path / "empty" / "routed").mkdir(parents=True)
+    assert read_routed(spark, str(tmp_path / "empty")).count() == 0
 
 
 def test_resume_with_null_lang_routes(spark, tmp_path):
